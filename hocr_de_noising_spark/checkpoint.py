@@ -101,20 +101,20 @@ class ManifestCheckpoint:
         return {r.bucket for r in rows}
 
 
-def _bucket_metric_exprs(group_buckets: list[int], spans_expr):
+def _bucket_metric_exprs(group_buckets: list[int], spans_sql: str):
     """Per-bucket conditional aggregates for df.observe: (n_docs_b,
     n_spans_b) for each bucket of the group. observe cannot groupBy, so
     group-local buckets become |group| conditional sums — 32 buckets per
     group at production defaults, well within aggregate-expression
-    limits — evaluated DURING the write action (zero extra scans)."""
+    limits — evaluated DURING the write action (zero extra scans). Each
+    is one SQL string, so it costs one py4j call to build; composing
+    it from Column functions takes several per expression, about 0.3 s
+    per observe at 32 buckets."""
     exprs = []
     for b in group_buckets:
-        cond = F.col("bucket") == b
+        exprs.append(F.expr(f"coalesce(sum(CASE WHEN bucket = {b} THEN 1 END), 0) AS docs_{b}"))
         exprs.append(
-            F.coalesce(F.sum(F.when(cond, 1)), F.lit(0)).alias(f"docs_{b}")
-        )
-        exprs.append(
-            F.coalesce(F.sum(F.when(cond, spans_expr)), F.lit(0)).alias(f"spans_{b}")
+            F.expr(f"coalesce(sum(CASE WHEN bucket = {b} THEN {spans_sql} END), 0) AS spans_{b}")
         )
     return exprs
 
@@ -176,7 +176,9 @@ def run_denoise_job(
         # ship the lexicon as a broadcast variable, not a task closure:
         # one torrent distribution per job instead of re-serializing the
         # token list into every task (VERDICT r2 item 7)
-        tokens = [r.token for r in lexicon_df.select("token").distinct().collect()]
+        # no distinct(): Lexicon dedups on construction, and a distinct
+        # costs a shuffle job
+        tokens = [r.token for r in lexicon_df.select("token").collect()]
         lex_tokens = spark.sparkContext.broadcast(tokens)
 
     if "bucket" in docs.columns:
@@ -205,7 +207,8 @@ def run_denoise_job(
     else:
         docs_b = docs.withColumn("bucket", bucket_col("doc_id", p))
     group_of = F.col("bucket") % n_groups
-    n_spans_in_expr = F.coalesce(F.size("spans"), F.lit(0))
+    n_spans_in_sql = "coalesce(size(spans), 0)"
+    n_spans_in_expr = F.expr(n_spans_in_sql)
 
     giant_groups: set[int] = set(range(n_groups))
     if variant == "hybrid":
@@ -251,7 +254,7 @@ def run_denoise_job(
         def observed(df: DataFrame) -> DataFrame:
             o = Observation()
             in_obs.append(o)
-            return df.observe(o, *_bucket_metric_exprs(pending, n_spans_in_expr))
+            return df.observe(o, *_bucket_metric_exprs(pending, n_spans_in_sql))
 
         if variant == "fused":
             out = denoise_fused(observed(part).drop("bucket"), lex_tokens, p)
@@ -268,7 +271,7 @@ def run_denoise_job(
 
         out_obs = Observation()
         out = out.withColumn("bucket", bucket_col("doc_id", p)).observe(
-            out_obs, *_bucket_metric_exprs(pending, F.size("spans"))
+            out_obs, *_bucket_metric_exprs(pending, "size(spans)")
         )
         (
             out.repartition(F.col("bucket"))

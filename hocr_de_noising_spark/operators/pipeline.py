@@ -129,12 +129,14 @@ def denoise_fused(
     params: Params | None = None,
     vectorized: bool = True,
 ) -> DataFrame:
-    """Single-pass mapInPandas variant of the frozen rule.
+    """Single-pass variant of the frozen rule, one Python map stage.
 
-    ``vectorized=True`` (default) runs the pandas/numpy batch engine
-    (rules_vec — one regex extract and groupby-quantile per Arrow
-    batch); ``vectorized=False`` runs the doc-at-a-time reference
-    implementation (rules_np). Identical semantics, property-tested.
+    ``vectorized=True`` (default) is a ``mapInArrow`` stage running the
+    Arrow/numpy batch engine (rules_vec.denoise_arrow_batch — one RE2
+    extract, code-point string flags and one groupby-quantile per Arrow
+    batch); ``vectorized=False`` is a ``mapInPandas`` stage running the
+    doc-at-a-time reference implementation (rules_np). Identical
+    semantics, property-tested.
 
     ``lexicon_tokens`` may be a plain list (broadcast here, once per
     plan) or a pre-made ``sparkContext.broadcast`` shared across calls —

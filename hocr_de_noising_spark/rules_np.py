@@ -6,9 +6,10 @@ This module is the single source of truth for the de-noising semantics
 1. ``fixtures/spans.py`` derives the constructive golden outputs from it
    at generation time (the reference repo's own fixtures are
    unavailable — SURVEY.md §0 — so golden = this rule, by construction).
-2. ``operators/pipeline.py:denoise_fused`` runs it inside
-   ``mapInPandas`` (Arrow-batched, doc-at-a-time — the vectorized
-   single-pass variant of SURVEY.md §4.3).
+2. ``rules_vec`` vectorizes it over Arrow batches for
+   ``operators/pipeline.py:denoise_fused`` and is property-tested
+   against it; ``denoise_fused(vectorized=False)`` runs it directly
+   inside ``mapInPandas``, doc-at-a-time.
 3. The exploded-relational Spark variant (pure Catalyst expressions) is
    cross-validated against it by the golden tests — two independent
    implementations of the same frozen rule.

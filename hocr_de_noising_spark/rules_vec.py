@@ -1,17 +1,24 @@
-"""Vectorized (pandas/numpy) batch implementation of the frozen rule.
+"""Vectorized (Arrow/numpy) batch implementation of the frozen rule.
 
 Semantically identical to rules_np.denoise_doc applied to every doc of
-a batch, but vectorized across the whole Arrow batch: one regex extract
-for all spans, vectorized flag arithmetic, groupby-quantile page stats,
-and groupby-cumcount/ffill reading order + anchoring. This is what
-``denoise_fused`` executes per mapInPandas batch; equality with
-rules_np is property-tested (tests/test_vectorized.py) and both are
-held to the constructive goldens.
+a batch, but vectorized across the whole Arrow batch: one RE2 extract
+for all spans, code-point arithmetic for the string flags, one
+groupby-quantile for the page stats, and numpy sorts for reading order
+and anchoring. This is what ``denoise_fused`` executes per
+``mapInArrow`` batch; equality with rules_np is property-tested
+(tests/test_vectorized.py) and both are held to the constructive
+goldens.
 
 Parity notes (verified by tests):
-- pandas ``.str.extract`` on the anchored payload regex == re.match;
-- letter counting uses ``[^\\W\\d_]`` (≡ str.isalpha over the corpus
-  alphabet: letters incl. ſ/ligatures in, digits/symbols out);
+- the payload is parsed by ``pc.extract_regex`` with an RE2 form of
+  ``_PAYLOAD_RE`` (``[0-9]`` digits, ``$`` at end of text only). It
+  accepts a strict subset of what ``_PAYLOAD_RE`` accepts, with the
+  same groups, so only the text rows it rejects are matched again by
+  ``_PAYLOAD_RE`` itself: Unicode digits and a trailing newline parse
+  exactly as in rules_np;
+- letters are counted through a per-batch code-point table built from
+  ``str.isalpha``, rules_np's own predicate; token lengths are
+  code-point counts, i.e. Python ``len``;
 - pandas ``groupby.quantile(interpolation='linear')`` == numpy
   percentile 'linear' == Spark ``percentile``.
 """
@@ -20,70 +27,81 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import (
-    LIGATURES,
-    LONG_S,
     Lexicon,
     _PAYLOAD_RE,
+    _rewrite_payload,
+    normalize_token,
 )
 
-_ALPHA_COUNT_RE = r"[^\W\d_]"
+_PAYLOAD_RE2 = _PAYLOAD_RE.pattern.replace(r"\d", "[0-9]")
+
+_OUT_SPAN = pa.struct(
+    [
+        ("kind", pa.string()),
+        ("text", pa.string()),
+        ("media_ref", pa.string()),
+        ("offset", pa.int32()),
+    ]
+)
 
 
-def has_repeat_run(tokens: pd.Series, k: int) -> np.ndarray:
-    """Vectorized equivalent of the backref regex ``(.)\\1{k-1,}``
-    (>= k identical consecutive chars), which pandas can only evaluate
-    per-row through Python's re engine (pyarrow strings / RE2 reject
-    backrefs — the slowest string op in the fused hot path per r1).
+def code_points(strings: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """The code points of every row of a string array, concatenated,
+    and the ``len + 1`` row offsets into them. One UTF-8 decode for the
+    whole array; a null row spans its (normally empty) byte range."""
+    off_type = np.int64 if pa.types.is_large_string(strings.type) else np.int32
+    _, off_buf, data_buf = strings.buffers()
+    boffs = np.frombuffer(off_buf, off_type)[
+        strings.offset : strings.offset + len(strings) + 1
+    ].astype(np.int64)
+    lo, hi = int(boffs[0]), int(boffs[-1])
+    raw = np.frombuffer(data_buf, np.uint8)[lo:hi] if hi > lo else np.zeros(0, np.uint8)
+    # every byte that is not a UTF-8 continuation byte starts a code point
+    cp_at = np.zeros(hi - lo + 1, dtype=np.int64)
+    np.cumsum((raw & 0xC0) != 0x80, out=cp_at[1:])
+    cps = np.frombuffer(raw.tobytes().decode("utf-8").encode("utf-32-le"), np.uint32)
+    return cps, cp_at[boffs - lo]
 
-    Batch trick: join all tokens with a NUL separator, view the UTF-32
-    encoding as a uint32 array, AND together k-1 shifted equality masks
-    — one C pass over the batch's characters. The separator (code 0)
-    breaks cross-token runs and is masked so empty tokens can never
-    produce a separator run."""
-    n = len(tokens)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    vals = tokens.fillna("").to_numpy(dtype=object)
-    lens = np.fromiter((len(t) for t in vals), dtype=np.int64, count=n)
-    out = np.zeros(n, dtype=bool)
-    if int(lens.max(initial=0)) < k:
-        return out
-    joined = "\x00".join(vals)
-    if joined.count("\x00") != n - 1:
-        # a token contains a literal NUL (never happens in OCR text,
-        # but correctness first): fall back to the per-row regex
-        import re
 
-        rx = re.compile(r"(.)\1{%d,}" % (k - 1))
-        return np.fromiter(
-            (bool(rx.search(t)) for t in vals), dtype=bool, count=n
-        )
-    arr = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32)
-    eq = arr[1:] == arr[:-1]
+def letter_counts(cps: np.ndarray, offs: np.ndarray) -> np.ndarray:
+    """Per row of ``code_points`` output: how many characters are
+    letters by ``str.isalpha``, rules_np's predicate, asked once per
+    distinct code point of the batch."""
+    seen = np.zeros(int(cps.max(initial=0)) + 1, dtype=bool)
+    seen[cps] = True
+    present = np.flatnonzero(seen)
+    is_letter = np.zeros(len(seen), dtype=bool)
+    is_letter[present] = [chr(c).isalpha() for c in present.tolist()]
+    before = np.zeros(len(cps) + 1, dtype=np.int64)
+    np.cumsum(is_letter[cps], out=before[1:])
+    return before[offs[1:]] - before[offs[:-1]]
+
+
+def has_repeat_run(cps: np.ndarray, offs: np.ndarray, k: int) -> np.ndarray:
+    """Per row of ``code_points`` output: does it hold >= k identical
+    consecutive characters, the backref regex ``(.)\\1{k-1,}`` that
+    RE2 cannot express? One pass over the batch's code points: AND
+    together k-1 shifted equality masks, with the pairs that straddle
+    two rows cleared."""
+    out = np.zeros(len(offs) - 1, dtype=bool)
     w = k - 1  # run of k chars == k-1 consecutive equal-neighbor pairs
-    if len(eq) < w:
+    if len(cps) <= w:
         return out
+    eq = cps[1:] == cps[:-1]
+    bounds = offs[1:-1]
+    eq[bounds[(bounds > 0) & (bounds < len(cps))] - 1] = False
     run = eq[: len(eq) - w + 1].copy()
     for j in range(1, w):
         run &= eq[j : len(eq) - w + 1 + j]
-    run &= arr[: len(run)] != 0  # never start a run on the separator
-    hits = np.flatnonzero(run)
-    if len(hits):
-        # char index -> token index: token i ends (exclusive, incl its
-        # separator) at cumsum(lens+1)[i]; a hit can never sit on a
-        # separator, so right-bisect gives its owning token directly
-        offsets = np.cumsum(lens + 1)
-        out[np.searchsorted(offsets, hits, side="right")] = True
+    # a hit belongs to the last row starting at or before it (empty
+    # rows share their start with the next row)
+    out[np.searchsorted(offs, np.flatnonzero(run), side="right") - 1] = True
     return out
-
-
-def normalize_series(s: pd.Series) -> pd.Series:
-    for lig, exp in LIGATURES.items():
-        s = s.str.replace(lig, exp, regex=False)
-    return s.str.replace(LONG_S, "s", regex=False)
 
 
 def denoise_batch(
@@ -101,34 +119,25 @@ def denoise_batch(
             kind.append(s["kind"])
             text.append(s["text"])
             media_ref.append(s["media_ref"])
+    results: list[list[dict]] = [[] for _ in range(n_docs)]
     if not didx:
-        return [[] for _ in range(n_docs)]
+        return results
 
-    out_df = _denoise_flat(
+    out_didx, kinds, texts, refs = _denoise_flat(
         np.asarray(didx, dtype=np.int64),
         np.asarray(pos, dtype=np.int64),
-        kind,
-        text,
-        media_ref,
+        pa.array(kind, type=pa.string()),
+        pa.array(text, type=pa.string()),
+        pa.array(media_ref, type=pa.string()),
         params,
         lexicon,
     )
-
-    results: list[list[dict]] = [[] for _ in range(n_docs)]
     for d, kd, txt, mref in zip(
-        out_df["didx"].to_numpy(),
-        out_df["kind"].to_numpy(),
-        out_df["text"].to_numpy(),
-        out_df["media_ref"].to_numpy(),
+        out_didx.tolist(), kinds.to_pylist(), texts.to_pylist(), refs.to_pylist()
     ):
         spans_out = results[d]
         spans_out.append(
-            {
-                "kind": kd,
-                "text": None if txt is None or txt != txt else txt,
-                "media_ref": None if mref is None or mref != mref else mref,
-                "offset": len(spans_out),
-            }
+            {"kind": kd, "text": txt, "media_ref": mref, "offset": len(spans_out)}
         )
     return results
 
@@ -136,16 +145,12 @@ def denoise_batch(
 def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     """De-noise one Arrow record batch of (doc_id, spans) rows and
     return the output record batch — the zero-dict boundary the fused
-    operator runs per ``mapInArrow`` batch (r8, guide §4.2 shape).
+    operator runs per ``mapInArrow`` batch.
 
     The span columns are read FLAT off the list array's offsets/values
-    buffers (no per-span Python dicts on ingest) and the output list
-    array is rebuilt from the flat survivor columns + a bincount of
-    per-doc lengths (no per-span dict building on emit); the vectorized
-    rule itself (:func:`_denoise_flat`) is byte-identical to the
-    mapInPandas form (property-tested vs rules_np and the goldens)."""
-    import pyarrow as pa
-
+    buffers and the output list array is rebuilt from the flat survivor
+    columns + a bincount of per-doc lengths: no per-span Python object
+    in either direction."""
     doc_arr = rb.column(rb.schema.get_field_index("doc_id"))
     spans_arr = rb.column(rb.schema.get_field_index("spans"))
     n_docs = len(doc_arr)
@@ -154,52 +159,37 @@ def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     # cover this batch's lists contiguously (offsets are monotone)
     vals = spans_arr.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
     offs = offs - offs[0]
-    starts = offs[:-1]
     lengths = np.diff(offs)
     total = int(offs[-1])
 
-    out_type = pa.struct(
-        [
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("offset", pa.int32()),
-        ]
-    )
     if total == 0:
         spans_out = pa.ListArray.from_arrays(
             pa.array(np.zeros(n_docs + 1, dtype=np.int32), type=pa.int32()),
-            pa.array([], type=out_type),
+            pa.array([], type=_OUT_SPAN),
         )
         return pa.RecordBatch.from_arrays(
             [doc_arr, spans_out], names=["doc_id", "spans"]
         )
 
     didx = np.repeat(np.arange(n_docs, dtype=np.int64), lengths)
-    pos = np.arange(total, dtype=np.int64) - starts[didx]
-    out_df = _denoise_flat(
+    pos = np.arange(total, dtype=np.int64) - offs[:-1][didx]
+    out_didx, kinds, texts, refs = _denoise_flat(
         didx,
         pos,
-        vals.field("kind").to_pandas(),
-        vals.field("text").to_pandas(),
-        vals.field("media_ref").to_pandas(),
+        vals.field("kind"),
+        vals.field("text"),
+        vals.field("media_ref"),
         params,
         lexicon,
     )
 
-    out_didx = out_df["didx"].to_numpy()  # ascending (sorted by didx)
     counts = np.bincount(out_didx, minlength=n_docs)
     out_offs = np.zeros(n_docs + 1, dtype=np.int64)
     np.cumsum(counts, out=out_offs[1:])
     within = np.arange(len(out_didx), dtype=np.int64) - out_offs[:-1][out_didx]
     struct_out = pa.StructArray.from_arrays(
-        [
-            pa.Array.from_pandas(out_df["kind"], type=pa.string()),
-            pa.Array.from_pandas(out_df["text"], type=pa.string()),
-            pa.Array.from_pandas(out_df["media_ref"], type=pa.string()),
-            pa.array(within.astype(np.int32), type=pa.int32()),
-        ],
-        names=["kind", "text", "media_ref", "offset"],
+        [kinds, texts, refs, pa.array(within.astype(np.int32), type=pa.int32())],
+        fields=list(_OUT_SPAN),
     )
     spans_out = pa.ListArray.from_arrays(
         pa.array(out_offs.astype(np.int32), type=pa.int32()), struct_out
@@ -209,85 +199,97 @@ def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     )
 
 
+def _page_stat(didx: np.ndarray, per_doc: pd.Series) -> np.ndarray:
+    """Broadcast a per-doc statistic (indexed by didx) back to the rows;
+    NaN for docs without any parseable span."""
+    full = np.full(int(didx[-1]) + 1, np.nan)
+    full[per_doc.index.to_numpy()] = per_doc.to_numpy(dtype=np.float64)
+    return full[didx]
+
+
 def _denoise_flat(
     didx: np.ndarray,
     pos: np.ndarray,
-    kind,
-    text,
-    media_ref,
+    kind: pa.Array,
+    text: pa.Array,
+    media_ref: pa.Array,
     params: Params,
     lexicon: Lexicon | None,
-) -> pd.DataFrame:
-    """The vectorized rule over flat span columns. Returns the SURVIVING
-    spans as a DataFrame (didx, kind, text, media_ref) sorted in final
-    emission order — (didx, anchor, text-before-media, input pos) — so
-    callers assign contiguous offsets by enumeration order."""
+) -> tuple[np.ndarray, pa.Array, pa.Array, pa.Array]:
+    """The vectorized rule over flat span columns whose rows are in
+    (didx, pos) order. Returns the SURVIVING spans as (didx, kind, text,
+    media_ref) in final emission order — (didx, anchor,
+    text-before-media, input pos) — so callers assign contiguous
+    offsets by enumeration order."""
     p = params
-    df = pd.DataFrame(
-        {
-            "didx": didx,
-            "pos": pos,
-            "kind": kind,
-            "text": text,
-            "media_ref": media_ref,
-        }
-    )
-    is_text = (df["kind"] == "text").to_numpy()
-    text_s = df["text"].where(pd.Series(is_text, index=df.index), None)
+    n = len(didx)
+    is_text_a = pc.fill_null(pc.equal(kind, "text"), False)
+    is_text = is_text_a.to_numpy(zero_copy_only=False)
 
-    ext = text_s.str.extract(_PAYLOAD_RE)
-    parse_ok = (ext["token"].notna() & pd.Series(is_text, index=df.index)).to_numpy()
-    token = ext["token"]
-    geom = {}
-    for c in ("x0", "y0", "x1", "y1", "w", "li", "ci"):
-        geom[c] = pd.to_numeric(ext[c], errors="coerce").to_numpy(dtype=np.float64)
+    # media spans emit no text and text spans no media_ref (rules_np).
+    # The null side is an array: against a null scalar, pyarrow 16's
+    # if_else corrupts the offsets of a sliced string array.
+    out_text = pc.if_else(is_text_a, text, pa.nulls(n, text.type))
+    out_ref = pc.if_else(is_text_a, pa.nulls(n, media_ref.type), media_ref)
+
+    parsed = pc.extract_regex(out_text, _PAYLOAD_RE2)
+    groups = dict(zip((f.name for f in parsed.type), parsed.flatten()))
+    token = groups.pop("token")
+    parse_ok = token.is_valid().to_numpy(zero_copy_only=False)
+    geom = {
+        c: pc.cast(a, pa.float64()).to_numpy(zero_copy_only=False, writable=True)
+        for c, a in groups.items()
+    }
+    retry = np.flatnonzero(is_text & ~parse_ok)
+    if len(retry):
+        found = [
+            (i, m)
+            for i, t in zip(retry.tolist(), text.take(retry).to_pylist())
+            if t is not None and (m := _PAYLOAD_RE.match(t))
+        ]
+        if found:
+            rows = np.array([i for i, _ in found], dtype=np.int64)
+            mask = np.zeros(n, dtype=bool)
+            mask[rows] = True
+            token = pc.replace_with_mask(
+                token, mask, pa.array([m["token"] for _, m in found], token.type)
+            )
+            for c in geom:
+                geom[c][rows] = [int(m[c]) for _, m in found]
+            parse_ok = parse_ok | mask
     x0, y0, x1, y1 = geom["x0"], geom["y0"], geom["x1"], geom["y1"]
-    wconf, line_i, col_i = geom["w"], geom["li"], geom["ci"]
     h = y1 - y0
     w_px = x1 - x0
 
     # --- page-adaptive stats over parse_ok rows ---
     ok_idx = np.flatnonzero(parse_ok)
-    sdf = pd.DataFrame(
+    g = pd.DataFrame(
         {
-            "didx": df["didx"].to_numpy()[ok_idx],
+            "didx": didx[ok_idx],
             "h": h[ok_idx],
             "x0": x0[ok_idx],
             "x1": x1[ok_idx],
             "y0": y0[ok_idx],
             "y1": y1[ok_idx],
         }
-    )
-    g = sdf.groupby("didx")
+    ).groupby("didx")
     lo, hi = p.envelope_lo_pct, p.envelope_hi_pct
-    stats = pd.DataFrame(
-        {
-            "med_h": g["h"].quantile(0.5),
-            "p_lo_x0": g["x0"].quantile(lo),
-            "p_hi_x1": g["x1"].quantile(hi),
-            "p_lo_y0": g["y0"].quantile(lo),
-            "p_hi_y1": g["y1"].quantile(hi),
-        }
-    )
-    med_h = df["didx"].map(stats["med_h"]).to_numpy(dtype=np.float64)
-    p_lo_x0 = df["didx"].map(stats["p_lo_x0"]).to_numpy(dtype=np.float64)
-    p_hi_x1 = df["didx"].map(stats["p_hi_x1"]).to_numpy(dtype=np.float64)
-    p_lo_y0 = df["didx"].map(stats["p_lo_y0"]).to_numpy(dtype=np.float64)
-    p_hi_y1 = df["didx"].map(stats["p_hi_y1"]).to_numpy(dtype=np.float64)
+    med_h = _page_stat(didx, g["h"].quantile(0.5))
+    p_lo_x0 = _page_stat(didx, g["x0"].quantile(lo))
+    p_hi_x1 = _page_stat(didx, g["x1"].quantile(hi))
+    p_lo_y0 = _page_stat(didx, g["y0"].quantile(lo))
+    p_hi_y1 = _page_stat(didx, g["y1"].quantile(hi))
 
     # --- garbage-string flags ---
-    tok_len = token.str.len()
-    n_letters = token.str.count(_ALPHA_COUNT_RE)
+    cps, cp_offs = code_points(token)
+    tok_len = np.diff(cp_offs)
+    n_letters = letter_counts(cps, cp_offs)
     with np.errstate(invalid="ignore", divide="ignore"):
-        nonalpha_ratio = np.where(
-            tok_len.to_numpy(dtype=np.float64) == 0,
-            1.0,
-            1.0 - n_letters.to_numpy(dtype=np.float64) / tok_len.to_numpy(dtype=np.float64),
-        )
-    f_wconf = parse_ok & (wconf < p.tau_wconf)
+        nonalpha_ratio = np.where(tok_len == 0, 1.0, 1.0 - n_letters / tok_len)
+    f_wconf = parse_ok & (geom["w"] < p.tau_wconf)
     f_nonalpha = parse_ok & (nonalpha_ratio > p.max_nonalpha_ratio)
-    f_repeat = parse_ok & has_repeat_run(token, p.repeat_run_len)
-    f_toolong = parse_ok & (tok_len.fillna(0).to_numpy() > p.max_token_len)
+    f_repeat = parse_ok & has_repeat_run(cps, cp_offs, p.repeat_run_len)
+    f_toolong = parse_ok & (tok_len > p.max_token_len)
     with np.errstate(invalid="ignore", divide="ignore"):
         aspect_bad = (h > 0) & (w_px / h > p.max_aspect)
     f_geom = parse_ok & (
@@ -301,19 +303,19 @@ def _denoise_flat(
         | (y1 > p_hi_y1 + tol)
     )
 
-    # --- dictionary ---
-    norm = normalize_series(token)
+    # --- dictionary: normalize and look up once per distinct token ---
     if lexicon is not None and p.use_dictionary:
-        uniq = norm[parse_ok].unique()
-        if p.max_edit_distance >= 1:
-            hits = {t for t in uniq if lexicon.within_one(t)}
-        else:
-            hits = {t for t in uniq if lexicon.contains_exact(t)}
-        dict_hit = norm.isin(hits).to_numpy(dtype=bool) & parse_ok
+        enc = pc.dictionary_encode(token)
+        norms = [normalize_token(t) for t in enc.dictionary.to_pylist()]
+        lookup = lexicon.within_one if p.max_edit_distance >= 1 else lexicon.contains_exact
+        # a null token (parse failure) takes the trailing miss entry
+        hit_of = np.array([lookup(t) for t in norms] + [False], dtype=bool)
+        codes = pc.fill_null(enc.indices, len(norms)).to_numpy(zero_copy_only=False)
+        dict_hit = hit_of[codes]
         f_dict_miss = parse_ok & ~dict_hit
     else:
-        dict_hit = np.zeros(len(df), dtype=bool)
-        f_dict_miss = np.zeros(len(df), dtype=bool)
+        dict_hit = np.zeros(n, dtype=bool)
+        f_dict_miss = np.zeros(n, dtype=bool)
 
     is_noise = is_text & (
         ~parse_ok | f_wconf | f_nonalpha | f_repeat | f_toolong | f_geom | f_margin | f_dict_miss
@@ -328,52 +330,36 @@ def _denoise_flat(
         )
         rewritten = is_noise & only_wconf & dict_hit
     else:
-        rewritten = np.zeros(len(df), dtype=bool)
-    drop = is_text & is_noise & ~rewritten
-    survives = ~drop
+        rewritten = np.zeros(n, dtype=bool)
+    drop = is_noise & ~rewritten
 
-    emitted = df["text"].copy()
     if rewritten.any():
-        rest = text_s.str.split(";", n=1).str[1]
-        emitted = emitted.where(
-            ~pd.Series(rewritten, index=df.index), norm + ";" + rest
-        )
+        rows = np.flatnonzero(rewritten)
+        new = [
+            _rewrite_payload(t, norms[c])
+            for t, c in zip(text.take(rows).to_pylist(), codes[rows].tolist())
+        ]
+        out_text = pc.replace_with_mask(out_text, rewritten, pa.array(new, out_text.type))
 
     # --- reading order among surviving text spans ---
-    surv_text = is_text & survives & parse_ok
     # (a noise-free text span always has parse_ok; keep the conjunction
     # explicit so unparseable rows can never enter the order)
-    order_keys = pd.DataFrame(
-        {
-            "didx": df["didx"],
-            "ci": col_i,
-            "li": line_i,
-            "x0": x0,
-            "y0": y0,
-            "pos": df["pos"],
-        }
-    )[pd.Series(surv_text, index=df.index)]
-    order_sorted = order_keys.sort_values(["didx", "ci", "li", "x0", "y0", "pos"])
-    rank = order_sorted.groupby("didx").cumcount()
-    rank_full = pd.Series(np.nan, index=df.index, dtype="float64")
-    rank_full.loc[order_sorted.index] = rank.to_numpy(dtype=np.float64)
+    t_idx = np.flatnonzero(is_text & ~drop & parse_ok)
+    t_idx = t_idx[
+        np.lexsort(
+            tuple(a[t_idx] for a in (pos, y0, x0, geom["li"], geom["ci"], didx))
+        )
+    ]
+    d_sorted = didx[t_idx]
+    rank = np.full(n, -1, dtype=np.int64)
+    rank[t_idx] = np.arange(len(t_idx)) - np.searchsorted(d_sorted, d_sorted)
 
-    # --- media anchoring: ffill of preceding surviving-text rank in
-    # input order (rows are already (didx, pos)-ordered by construction)
-    anchor = rank_full.groupby(df["didx"]).ffill().fillna(-1.0)
+    # --- media anchoring: the rank of the nearest preceding surviving
+    # text span of the same doc, in input order, else -1 ---
+    last = np.maximum.accumulate(np.where(rank >= 0, np.arange(n), 0))
+    anchor = np.where(didx[last] == didx, rank[last], -1)
 
-    k1 = anchor.to_numpy(dtype=np.float64)
-    k2 = np.where(is_text, 0, 1)
-
-    out_df = pd.DataFrame(
-        {
-            "didx": df["didx"],
-            "k1": k1,
-            "k2": k2,
-            "pos": df["pos"],
-            "kind": df["kind"],
-            "text": emitted.where(pd.Series(is_text, index=df.index), None),
-            "media_ref": df["media_ref"],
-        }
-    )[pd.Series(survives & df["kind"].notna().to_numpy(), index=df.index)]
-    return out_df.sort_values(["didx", "k1", "k2", "pos"])
+    keep = np.flatnonzero(~drop & kind.is_valid().to_numpy(zero_copy_only=False))
+    order = keep[np.lexsort((pos[keep], ~is_text[keep], anchor[keep], didx[keep]))]
+    idx = pa.array(order)
+    return didx[order], kind.take(idx), out_text.take(idx), out_ref.take(idx)

@@ -9,7 +9,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.checkpoint import ManifestCheckpoint, run_denoise_job
+from hocr_de_noising_spark.checkpoint import (
+    ManifestCheckpoint,
+    bucket_col,
+    run_denoise_job,
+)
 from hocr_de_noising_spark.params import Params, params_hash
 
 
@@ -46,6 +50,35 @@ def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
     assert all(r.n_noise_dropped == r.n_spans_in - r.n_spans_out for r in rows)
     rates = [r.denoise_rate for r in rows if r.n_spans_in]
     assert all(0.0 <= x <= 1.0 for x in rates) and any(x > 0 for x in rates)
+
+
+def test_manifest_rows_exact_per_bucket_at_production_layout(spark, loaded, tmp_path):
+    """At Params() defaults (256 buckets in 8 groups, so 32 buckets per
+    observe) every bucket's manifest row equals the counts taken
+    straight from the input and the golden, bucketed by bucket_col."""
+    docs, lexicon, golden = loaded
+    p = Params()
+    run_denoise_job(
+        spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
+        params=p, run_id="r1",
+    )
+
+    def per_bucket(df):
+        rows = (
+            df.withColumn("bucket", bucket_col("doc_id", p))
+            .groupBy("bucket")
+            .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
+            .collect()
+        )
+        return {r.bucket: (r.n, r.s) for r in rows}
+
+    want_in, want_out = per_bucket(docs), per_bucket(golden)
+    rows = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
+    assert sorted(r.bucket for r in rows) == list(range(p.n_buckets))
+    for r in rows:
+        n_docs, n_in = want_in.get(r.bucket, (0, 0))
+        n_out = want_out.get(r.bucket, (0, 0))[1]
+        assert (r.n_docs, r.n_spans_in, r.n_spans_out) == (n_docs, n_in, n_out), r.bucket
 
 
 def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
