@@ -78,8 +78,7 @@ _LAST_GREEN = dict.fromkeys(
         "join_range", "lag_lead", "lang_id", "quality_repetition",
         "quality_score", "sample_split", "scalar_math",
         "set_except", "set_union", "sort_multikey",
-        "stream_session", "stream_tumbling", "text_scrub",
-        "token_count", "topk_noisy", "tpch_q1", "window_ntile",
+        "text_scrub", "token_count", "topk_noisy", "tpch_q1", "window_ntile",
         "window_rank", "window_running_sum",
     ],
     6,

@@ -289,8 +289,15 @@ def run_denoise_job(
         # r2), and a single bounded read can race the ASYNC listener
         # bus under load, so observation_metrics polls boundedly and
         # distinguishes late delivery from a pruned node (r3 review).
-        in_vals = [observation_metrics(o) or {} for o in in_obs]
-        out_vals = observation_metrics(out_obs) or {}
+        # A read that timed out leaves the counts unknown: commit
+        # nothing for this group, so a resume recomputes it.
+        in_vals = [observation_metrics(o) for o in in_obs]
+        out_vals = observation_metrics(out_obs)
+        if out_vals is None or any(v is None for v in in_vals):
+            raise RuntimeError(
+                f"group {g}: observed metrics never arrived; "
+                "no manifest rows committed"
+            )
         now = int(time.time() * 1e6)
         rows = []
         for b in pending:

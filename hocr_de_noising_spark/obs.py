@@ -8,7 +8,12 @@ bounded read can also race a late-but-real delivery under a loaded
 driver. ``observation_metrics`` polls the bounded read for up to
 ``timeout_s`` seconds (the action has already finished when callers
 invoke it, so real metrics land within milliseconds ordinarily) and
-only then treats the node as never-reported.
+only then gives up.
+
+Two outcomes must stay apart: a node that reported an empty row (a
+pruned branch: every count is a true zero) reads as ``{}``, and a node
+that never reported within the deadline (the count is unknown) reads
+as ``None``.
 """
 
 from __future__ import annotations
@@ -19,11 +24,12 @@ from pyspark.sql import Observation
 
 
 def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
-    """Metrics dict of a finished action's Observation, or None if the
-    node never reported (pruned branch / empty plan) within timeout_s.
+    """Metrics dict of a finished action's Observation; ``{}`` if the
+    node reported an empty row (pruned branch), None if it never
+    reported within timeout_s.
 
-    Never blocks indefinitely. A schema-less empty Row (how a pruned
-    node surfaces) is treated the same as no row.
+    Never blocks indefinitely. Callers that commit counts must treat
+    None as unknown, never as zero.
 
     The bounded JVM read needs the classic API's ``Observation._jo``;
     under Spark Connect ``Observation.__new__`` returns a
@@ -48,7 +54,7 @@ def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
         def _get():
             # capture, don't swallow (ADVICE r4): a real error from the
             # Connect query (network failure, cancelled query) must
-            # surface to the caller, not masquerade as a pruned-node None
+            # surface to the caller, not masquerade as a timed-out None
             try:
                 box["row"] = o.get
             except Exception as exc:  # noqa: BLE001 — re-raised on join
@@ -68,7 +74,7 @@ def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
             if jopt.get().size() == 0:
                 # definitive: the execution-end event arrived and this
                 # node reported nothing (pruned / empty branch)
-                return None
+                return {}
             utils = getattr(o._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
             return CPickleSerializer().loads(utils.toPyRow(jopt.get())).asDict()
         # undefined = the async listener bus has not delivered yet —

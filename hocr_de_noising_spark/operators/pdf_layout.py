@@ -1,11 +1,10 @@
 """PDF / layout parse — the north-rule's "PDF/layout parse" clause as
-a first-class operator in the sandbox's stubbed-codec pattern
-(operators/multimodal.py precedent: no real codec libraries in this
-container, so the byte-level decode is a deterministic fake container
-behind ``strict=True`` (NotImplementedError where pdfminer/PyMuPDF
-would run), while ALL the Spark-side plumbing — schema, Arrow binary
-transfer, mapInPandas batch shape, the layout heuristics downstream of
-the decode — is real and tested).
+a first-class operator with a stubbed codec. No PDF library is a
+dependency, so the byte-level decode reads a deterministic fake
+container format, and ``strict=True`` raises NotImplementedError where
+pdfminer/PyMuPDF would run. ALL the Spark-side plumbing — schema, Arrow
+binary transfer, mapInPandas batch shape, the layout heuristics
+downstream of the decode — is real and tested.
 
 Fake PDF container (deterministic, for fixtures):
 
@@ -89,8 +88,8 @@ def parse_pdf_layout(df: DataFrame, strict: bool = False) -> DataFrame:
     parse_ok=false row so corrupt inputs are countable, not silent.
 
     ``strict=True`` marks where a real PDF library (pdfminer /
-    PyMuPDF) would run — intentionally NotImplementedError in this
-    container (multimodal.decode_media precedent)."""
+    PyMuPDF) would run — intentionally NotImplementedError, since no
+    PDF library is a dependency."""
     if strict:
         raise NotImplementedError(
             "real PDF parsing libraries are not available in this "

@@ -19,6 +19,5 @@ from hocr_de_noising_spark.queries import media_near  # noqa: F401,E402
 from hocr_de_noising_spark.queries import web_extract  # noqa: F401,E402
 from hocr_de_noising_spark.queries import corpus_stats  # noqa: F401,E402
 from hocr_de_noising_spark.queries import interleaved  # noqa: F401,E402
-from hocr_de_noising_spark.queries import streaming_batch  # noqa: F401,E402
 
 __all__ = ["QUERIES", "register"]

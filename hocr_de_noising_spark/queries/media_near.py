@@ -47,7 +47,7 @@ on the standard tables; ``jobs/run_trainprep.media_stage`` applies the
 SAME core to real decoded binary payloads via the ``psig`` column that
 ``operators/multimodal.decode_media`` computes byte-wise.
 
-Precision note (measured, scripts/bench_trainprep_scale.py): like every
+Precision note (measured at the 20k and 50k scale runs): like every
 aHash-family method, the signature assumes DECODED media is locally
 structured (pixel rows, PCM windows). On adversarially UNSTRUCTURED
 payloads (band values drawn uniform-random from content hashes)

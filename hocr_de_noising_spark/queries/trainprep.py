@@ -134,8 +134,8 @@ def dedup_minhash_lsh(spark, sf):
     hash → 16 multiply-shift minhashes mod 2^31-1 (pairwise-independent
     Carter-Wegman family, ADVICE r5 — the previous xor-mixings shared
     one base ordering, correlating band collisions near the jaccard
-    threshold; scripts/bench_lsh_threshold.py measures both families
-    against the analytic 1-(1-s^2)^8 curve) → 2-row bands → star
+    threshold, measured for both families against the analytic
+    1-(1-s^2)^8 curve) → 2-row bands → star
     pairing within each band bucket. conv + exact int64 arithmetic
     keep signatures engine-portable.
 
@@ -1062,8 +1062,8 @@ def _observed_checkpoint(df, metric_col: str) -> tuple:
     SAME materialization action (VERDICT r2: fold the convergence count
     into the iteration's own action instead of a second count() job).
     Returns (checkpointed_df, changed_count_or_None); None means the
-    metrics node did not report through this action type — callers fall
-    back to an explicit count."""
+    metrics node reported no row (empty or timed out) through this
+    action type — callers fall back to an explicit count."""
     from pyspark.sql import Observation
 
     from hocr_de_noising_spark.obs import observation_metrics
@@ -1071,7 +1071,7 @@ def _observed_checkpoint(df, metric_col: str) -> tuple:
     o = Observation()
     ck = df.observe(o, F.sum(F.col(metric_col).cast("long")).alias("changed")).localCheckpoint()
     row = observation_metrics(o, timeout_s=5.0)
-    if row is None:
+    if not row:
         return ck, None
     val = row.get("changed")
     return ck, int(val) if val is not None else 0

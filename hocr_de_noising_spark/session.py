@@ -8,6 +8,9 @@ Spark configuration:
   pathologically large document cannot blow up one Arrow batch.
 - AQE on (partition coalescing, runtime join switching, skew joins).
 - Shuffle partitions sized to parallelism (caller passes cores).
+- The package's parent directory on the Python workers' PYTHONPATH, so
+  pickled references to this package resolve from any working
+  directory (the JVM merges it with the inherited PYTHONPATH).
 """
 
 from __future__ import annotations
@@ -15,6 +18,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding hocr_de_noising_spark/, for the Python workers
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -58,6 +64,7 @@ def get_spark(
             arrow_max_bytes_per_batch,
         )
         .config("spark.python.worker.reuse", "true")
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         # sandbox-sized input splits so scan-stage parallelism tracks
         # core count even on tens-of-MB fixture files; a real cluster
         # run overrides these back to 128m+ via extra_conf

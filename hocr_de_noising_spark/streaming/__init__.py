@@ -1,17 +1,8 @@
-"""Structured Streaming parity surface (SURVEY.md §2.9)."""
+"""Structured Streaming surface (SURVEY.md §2.9)."""
 
 from hocr_de_noising_spark.streaming.incremental import (
     incremental_denoise_stream,
     make_denoise_sink,
-    sessionized_events_stream,
-    windowed_events_stream,
 )
-from hocr_de_noising_spark.streaming.stateful import stateful_user_totals_stream
 
-__all__ = [
-    "incremental_denoise_stream",
-    "make_denoise_sink",
-    "windowed_events_stream",
-    "sessionized_events_stream",
-    "stateful_user_totals_stream",
-]
+__all__ = ["incremental_denoise_stream", "make_denoise_sink"]

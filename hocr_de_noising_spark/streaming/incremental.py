@@ -1,14 +1,13 @@
-"""ST1–ST6 — incremental / streaming processing (SURVEY.md §2.9).
+"""ST1, ST5, ST6 — incremental / streaming processing (SURVEY.md §2.9).
 
 The production resumability story is the checkpoint manifest
 (checkpoint.py); this module provides the Structured Streaming parity
-path: file-source incremental ingest of new span documents, windowed
-and sessionized event aggregation with watermarks for late data,
-stateful streaming dedup, and an atomic foreachBatch sink.
+path: file-source incremental ingest of new span documents into an
+idempotent foreachBatch sink.
 
-All demos use Trigger.AvailableNow (process-everything-then-stop) so
-they are testable in batch-style pytest runs while exercising the real
-streaming engine (offset tracking, state store, watermarks).
+The stream uses Trigger.AvailableNow (process-everything-then-stop),
+so each call drains the new files and returns while exercising the
+real streaming engine (offset tracking, checkpointed file source).
 """
 
 from __future__ import annotations
@@ -17,18 +16,13 @@ import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.operators.pipeline import OUT_SCHEMA, denoise_fused
+from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from hocr_de_noising_spark.params import Params
 
 DOCS_DDL = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
-EVENTS_DDL = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
 )
 
 
@@ -79,71 +73,3 @@ def incremental_denoise_stream(
     q.awaitTermination()
     return q
 
-
-def windowed_events_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-):
-    """ST2+ST4: tumbling-window count with a watermark dropping events
-    later than the allowed lateness. Append-mode windowed aggregation —
-    windows emit once finalized by the watermark."""
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("w_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def sessionized_events_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-):
-    """ST3: session windows (30-min gap) over the stream, with state
-    managed by the streaming engine."""
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .parquet(input_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("w.start")).alias("session_start"),
-            "n_events",
-        )
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

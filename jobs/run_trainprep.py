@@ -519,9 +519,8 @@ def run_trainprep_job(
             )
             # semantic_nlist: None = the 8-cell oracle quantizer (fine
             # for small corpora); at scale size it so cells stay under
-            # EMBED_BLOCK_CAP (bench_semantic_recall: recall 0.80 at
-            # overflowing cells vs 0.996 at nlist=n/24 with top-2
-            # assignment)
+            # EMBED_BLOCK_CAP (measured recall 0.80 at overflowing
+            # cells vs 0.996 at nlist=n/24 with top-2 assignment)
             prune = semantic_prune(
                 emb,
                 nlist=semantic_nlist,

@@ -1,8 +1,8 @@
 """Scale-OUT evidence: 1 executor vs 4 executors of the SAME size.
 
 The north rule's two-cluster-size criterion means MORE executors, not
-bigger ones. `bench_scaling.py`'s local[4] vs local[16] comparison
-conflates cluster scale-out with single-JVM scale-up — one JVM's
+bigger ones. A local[4] vs local[16] comparison in one JVM conflates
+cluster scale-out with single-JVM scale-up — one JVM's
 shared heap/GC and memory bus lose ~20% going 4→16 threads (measured:
 two wave-parity pinned sessions at 0.795/0.801), which a real cluster
 of fixed-size executors does not pay. This script models the cluster
@@ -22,7 +22,7 @@ executors on one cluster node share.
 Honest limitation: this model is faithful ONLY for the fused variant
 it runs, because fused is map-only (no exchange) — per-executor
 independence is exactly its cluster behavior. A shuffling job
-(denoise_exploded, the dedup joins) would see its shuffle become
+(denoise_exploded) would see its shuffle become
 executor-LOCAL under quartering, hiding the network cost a real
 cluster pays; scale-out numbers for those must come from a real
 multi-node run, so this script deliberately does not produce them.
@@ -61,9 +61,10 @@ CACHE = os.path.join(REPO, "tests", "fixtures", "cache")
 _WORKER = r"""
 import os, sys, time
 sys.path.insert(0, {repo!r})
+sys.path.insert(0, os.path.join({repo!r}, "scripts"))
 from hocr_de_noising_spark.session import get_spark
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
-from bench import calibrate_mpb
+from bench_scaleout import calibrate_mpb
 docs_path, lex_path, cores = sys.argv[1], sys.argv[2], int(sys.argv[3])
 barrier_dir, worker_id = sys.argv[4], sys.argv[5]
 spark = get_spark("scaleout-%d" % os.getpid(), cores=cores,
@@ -88,6 +89,32 @@ denoise_fused(docs, lex_tokens).write.format("noop").mode("overwrite").save()
 print("WORKER_SEC %.3f" % (time.time() - t0), flush=True)
 spark.stop()
 """
+
+
+def calibrate_mpb(spark, path: str, cpus: int, waves: int = 2) -> tuple[int, int]:
+    """Binary-search ``spark.sql.files.maxPartitionBytes`` until the
+    scan of ``path`` plans EXACTLY ``waves * cpus`` partitions, so the
+    map stage runs an integer number of task waves.
+    Monotone: larger split bytes → fewer partitions. Planning-only
+    (getNumPartitions runs no job). Falls back to the nearest achieved
+    count if file-packing granularity can't hit the target exactly."""
+    target = waves * cpus
+    lo, hi = 1 << 16, 1 << 31
+    best_mpb, best_n = None, None
+    for _ in range(26):
+        mid = (lo + hi) // 2
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(mid))
+        n = spark.read.parquet(path).rdd.getNumPartitions()
+        if best_n is None or abs(n - target) < abs(best_n - target):
+            best_mpb, best_n = mid, n
+        if n == target:
+            break
+        if n > target:
+            lo = mid + 1
+        else:
+            hi = mid - 1
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(best_mpb))
+    return best_mpb, best_n
 
 
 def quarter_corpus(bench_dir: str, n: int) -> list[str]:

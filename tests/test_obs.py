@@ -28,6 +28,20 @@ def test_no_action_times_out_quickly(spark):
     assert time.time() - t0 < 5  # bounded — never blocks like Observation.get
 
 
+def test_empty_row_reads_as_zero_not_timeout():
+    """A node that reported an empty row (pruned branch) reads as {} —
+    every count a true zero — while a node that never reports reads as
+    None, so callers can refuse to commit unknown counts."""
+    from types import SimpleNamespace as NS
+
+    def classic(row_size):  # Observation shape: bounded JVM read via _jo
+        opt = NS(isDefined=lambda: row_size is not None, get=lambda: NS(size=lambda: row_size))
+        return NS(_jo=NS(getRowOrEmpty=lambda: opt))
+
+    assert observation_metrics(classic(0), timeout_s=0.5) == {}
+    assert observation_metrics(classic(None), timeout_s=0.2) is None
+
+
 def test_connect_shaped_observation_fallback():
     """ADVICE r3: under Spark Connect, Observation has no ``_jo`` —
     the reader must fall back to a deadline-bounded ``.get`` read

@@ -64,7 +64,7 @@ def test_exploded_pipeline_has_single_wide_exchange(spark, unit_dir):
 def test_denoise_patterns_keep_whole_stage_codegen(spark):
     # the flag/filter/project stages compile to whole-stage codegen
     # (windows themselves never codegen; the surrounding stages must)
-    df = QUERIES["scan_lineitem"]["fn"](spark, SF)
+    df = QUERIES["wconf_filter"]["fn"](spark, SF)
     p = formatted(df)
     assert "WholeStageCodegen" in p or "codegen id" in p, p
 
@@ -132,14 +132,14 @@ def test_trainprep_gate_stage_is_join_free(spark):
 
 
 def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):
-    """bench.calibrate_mpb must land the scan on EXACTLY waves*cores
-    partitions — the rounding-free wave count the r4 scaling evidence
-    relies on (uses the 5000-doc corpus: multi-file layout with the
-    giants part, like the bench corpus)."""
+    """bench_scaleout.calibrate_mpb must land the scan on EXACTLY
+    waves*cores partitions — the rounding-free wave count the r4 scaling
+    evidence relies on (uses the 5000-doc corpus: multi-file layout with
+    the giants part, like the bench corpus)."""
     import sys
 
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-    from bench import calibrate_mpb
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+    from bench_scaleout import calibrate_mpb
 
     # NB: pins the CURRENT fixture layout (multi-file, 500-row groups).
     # calibrate_mpb's contract allows a nearest-count fallback when

@@ -105,6 +105,46 @@ def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
 
+def test_observation_timeout_commits_no_manifest_rows(spark, loaded, tmp_path, monkeypatch):
+    """A metrics read that times out leaves the group's counts unknown.
+    The job must raise before committing that group, never commit
+    zero-count 'done' rows for it, and a resume must recompute it."""
+    import hocr_de_noising_spark.checkpoint as checkpoint
+
+    docs, lexicon, golden = loaded
+    p = Params(n_buckets=16)
+    out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    real = checkpoint.observation_metrics
+    reads = []
+
+    def times_out_on_group_1_output(o, *args, **kwargs):
+        # the fused job reads each group's input then its output
+        # observation: the 4th read is group 1's output side
+        reads.append(o)
+        return None if len(reads) == 4 else real(o, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "observation_metrics", times_out_on_group_1_output)
+    with pytest.raises(RuntimeError, match="group 1: observed metrics never arrived"):
+        run_denoise_job(
+            spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
+        )
+    ckpt = ManifestCheckpoint(m_dir)
+    assert ckpt.completed_buckets(spark, "r1", params_hash(p)) == {0, 4, 8, 12}
+    assert ckpt.read(spark).count() == 4  # group 0's rows only
+
+    monkeypatch.setattr(checkpoint, "observation_metrics", real)
+    summary = run_denoise_job(
+        spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
+    )
+    assert (summary["groups_skipped"], summary["groups_run"]) == (1, 3)
+    rows = ckpt.read(spark).collect()
+    assert sorted(r.bucket for r in rows) == list(range(16))
+    assert sum(r.n_docs for r in rows) == docs.count()
+    out = _read_all(spark, out_dir)
+    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
 def test_params_change_invalidates_resume(spark, loaded, tmp_path):
     docs, lexicon, _ = loaded
     out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")

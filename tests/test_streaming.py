@@ -1,5 +1,7 @@
-"""Structured Streaming parity tests (ST1–ST6): incremental ingest is
-exactly-once across restarts, windows match their batch twins."""
+"""Structured Streaming parity tests (ST1, ST5, ST6): incremental
+ingest is exactly-once across restarts and sink retries, re-delivered
+events are dropped within the watermark, and streamed gates match
+their batch twins."""
 
 from __future__ import annotations
 
@@ -7,14 +9,10 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
-from hocr_de_noising_spark.streaming import (
-    incremental_denoise_stream,
-    windowed_events_stream,
-)
+from hocr_de_noising_spark.streaming import incremental_denoise_stream
 
 
 @pytest.fixture()
@@ -58,32 +56,6 @@ def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
     batch = denoise_fused(docs, tokens)
     j = out.alias("o").join(batch.alias("b"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("b.spans"))).count() == 0
-
-
-def test_windowed_stream_matches_batch_window(spark, sf001_dir, stream_dirs):
-    events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
-    events.write.mode("append").parquet(stream_dirs["in"])
-    windowed_events_stream(
-        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"]
-    )
-    streamed = spark.read.parquet(stream_dirs["out"])
-    batch = (
-        events.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("w_start"),
-            "event_type",
-            "n_events",
-        )
-    )
-    # watermark may hold back the final (unclosed) windows: everything
-    # the stream emitted must match the batch result exactly
-    assert streamed.exceptAll(batch).count() == 0
-    missing = batch.exceptAll(streamed)
-    max_ts = events.agg(F.max(F.unix_timestamp("ts"))).collect()[0][0]
-    # only windows near the end of the stream (inside the watermark
-    # horizon) may be missing
-    assert missing.filter(F.col("w_start") < max_ts - 900).count() == 0
 
 
 def test_stateful_streaming_dedup(spark, sf001_dir, stream_dirs):
@@ -135,47 +107,6 @@ def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     assert out.select("doc_id").distinct().count() == 20
     sink(docs, 1)  # a new batch appends alongside
     assert spark.read.parquet(stream_dirs["out"]).count() == 40
-
-
-def test_custom_stateful_operator_matches_batch(spark, sf001_dir, stream_dirs):
-    """applyInPandasWithState custom operator: per-user running totals
-    across TWO restarts must end exactly at the batch groupBy answer,
-    with state carried between micro-batches (n_batches > 1 for users
-    seen in both halves)."""
-    from hocr_de_noising_spark.streaming.stateful import stateful_user_totals_stream
-
-    events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet"))
-    first = events.filter(F.col("event_id") % 2 == 0)
-    second = events.filter(F.col("event_id") % 2 == 1)
-
-    first.write.mode("append").parquet(stream_dirs["in"])
-    stateful_user_totals_stream(
-        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"]
-    )
-    second.write.mode("append").parquet(stream_dirs["in"])
-    stateful_user_totals_stream(
-        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"]
-    )
-
-    # last emission per user = final running totals
-    out = spark.read.parquet(stream_dirs["out"])
-    w = Window.partitionBy("user_id").orderBy(F.col("n_batches").desc())
-    final = (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .select("user_id", "n_events", "total_value", "n_batches")
-    )
-    batch = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum(F.coalesce("value", F.lit(0.0))), 4).alias("total_value"),
-    )
-    j = final.alias("s").join(batch.alias("b"), "user_id", "full_outer")
-    assert j.filter(
-        (F.col("s.n_events") != F.col("b.n_events"))
-        | (F.abs(F.col("s.total_value") - F.col("b.total_value")) > 1e-6)
-    ).count() == 0
-    # state really persisted across the restart
-    assert final.filter("n_batches >= 2").count() > 0
 
 
 def test_streaming_gate_stage_matches_batch(spark, stream_dirs):
