@@ -129,7 +129,6 @@ def run_denoise_job(
     run_id: str = "run-0",
     n_groups: int = 8,
     input_lineage: str = "",
-    variant: str = "fused",
     fail_after_group: int | None = None,
 ) -> dict:
     """The resumable batch job (SURVEY.md §3.2 bucket loop).
@@ -153,33 +152,17 @@ def run_denoise_job(
       prunes at the parquet scan (PartitionFilters) instead of scanning
       the full input n_groups times. Otherwise the bucket is computed
       on the fly and each group pass scans the input once;
-    - ``variant="hybrid"`` probes ONCE, job-level, which groups contain
-      giant documents and plans the exploded branch only there — a
-      giant-free group runs a single fused branch (VERDICT r2 item 1);
-    - the production default is ``fused`` (see README rationale):
-      the vectorized batch engine digests giants in-line, so hybrid's
-      second input scan only pays off when giants exceed worker memory.
+    - every group runs ``denoise_fused``: the vectorized batch engine
+      digests giant documents in-line (README scaling notes).
     """
     from pyspark.sql import Observation
 
-    from hocr_de_noising_spark.operators.pipeline import (
-        denoise_exploded,
-        denoise_fused,
-    )
+    from hocr_de_noising_spark.operators.pipeline import denoise_fused
 
     p = params or Params()
     ph = params_hash(p)
     ckpt = ManifestCheckpoint(manifest_dir)
     done = ckpt.completed_buckets(spark, run_id, ph)
-    lex_tokens = None
-    if variant in ("fused", "hybrid"):
-        # ship the lexicon as a broadcast variable, not a task closure:
-        # one torrent distribution per job instead of re-serializing the
-        # token list into every task (VERDICT r2 item 7)
-        # no distinct(): Lexicon dedups on construction, and a distinct
-        # costs a shuffle job
-        tokens = [r.token for r in lexicon_df.select("token").collect()]
-        lex_tokens = spark.sparkContext.broadcast(tokens)
 
     if "bucket" in docs.columns:
         # bucketed at rest → scan-time partition pruning; but never
@@ -207,123 +190,95 @@ def run_denoise_job(
     else:
         docs_b = docs.withColumn("bucket", bucket_col("doc_id", p))
     group_of = F.col("bucket") % n_groups
-    n_spans_in_sql = "coalesce(size(spans), 0)"
-    n_spans_in_expr = F.expr(n_spans_in_sql)
-
-    giant_groups: set[int] = set(range(n_groups))
-    if variant == "hybrid":
-        # ONE job-level probe of which groups contain giants, so a
-        # giant-free group plans a single fused branch instead of
-        # always paying the exploded branch's shuffle/setup machinery
-        # (VERDICT r2 item 1). Deliberately computed from size(spans)
-        # — the same expression the branch split uses — never from an
-        # at-rest stats column that could be stale and route a true
-        # giant through the Python worker (r3 review).
-        giant = n_spans_in_expr > p.max_spans_per_doc
-        giant_groups = {
-            r.g
-            for r in docs_b.filter(giant)
-            .select((F.col("bucket") % n_groups).alias("g"))
-            .distinct()
-            .collect()
-        }
     summary = {"groups_run": 0, "groups_skipped": 0, "n_docs": 0}
-    if variant == "hybrid":
-        summary["giant_groups"] = len(giant_groups)
+    # ship the lexicon as a broadcast variable, not a task closure:
+    # one torrent distribution per job instead of re-serializing the
+    # token list into every task (VERDICT r2 item 7)
+    # no distinct(): Lexicon dedups on construction, and a distinct
+    # costs a shuffle job
+    tokens = [r.token for r in lexicon_df.select("token").collect()]
+    lex_tokens = spark.sparkContext.broadcast(tokens)
+    try:
+        for g in range(n_groups):
+            group_buckets = [b for b in range(p.n_buckets) if b % n_groups == g]
+            # only the buckets NOT yet committed: re-running a partial group
+            # must neither recompute nor re-append manifest rows for its
+            # already-done buckets (ADVICE r2 — double-count on resume with
+            # a different n_groups)
+            pending = [b for b in group_buckets if b not in done]
+            if not pending:
+                summary["groups_skipped"] += 1
+                continue
 
-    for g in range(n_groups):
-        group_buckets = [b for b in range(p.n_buckets) if b % n_groups == g]
-        # only the buckets NOT yet committed: re-running a partial group
-        # must neither recompute nor re-append manifest rows for its
-        # already-done buckets (ADVICE r2 — double-count on resume with
-        # a different n_groups)
-        pending = [b for b in group_buckets if b not in done]
-        if not pending:
-            summary["groups_skipped"] += 1
-            continue
+            part = docs_b.filter(group_of == g)
+            if len(pending) < len(group_buckets):
+                part = part.filter(F.col("bucket").isin(pending))
 
-        part = docs_b.filter(group_of == g)
-        if len(pending) < len(group_buckets):
-            part = part.filter(F.col("bucket").isin(pending))
+            in_obs = Observation()
+            observed = part.observe(
+                in_obs, *_bucket_metric_exprs(pending, "coalesce(size(spans), 0)")
+            )
+            out = denoise_fused(observed.drop("bucket"), lex_tokens, p)
 
-        # input-side observations: one per pipeline branch (a single
-        # observe node consumed by two union branches would be evaluated
-        # twice), merged by summation below
-        in_obs: list[Observation] = []
-
-        def observed(df: DataFrame) -> DataFrame:
-            o = Observation()
-            in_obs.append(o)
-            return df.observe(o, *_bucket_metric_exprs(pending, n_spans_in_sql))
-
-        if variant == "fused":
-            out = denoise_fused(observed(part).drop("bucket"), lex_tokens, p)
-        elif variant == "exploded":
-            out = denoise_exploded(observed(part).drop("bucket"), lexicon_df, p)
-        elif g not in giant_groups:  # hybrid, giant-free group: fused only
-            out = denoise_fused(observed(part).drop("bucket"), lex_tokens, p)
-        else:  # hybrid: python path for normal docs, JVM path for giants
-            small = observed(part.filter(n_spans_in_expr <= p.max_spans_per_doc))
-            big = observed(part.filter(n_spans_in_expr > p.max_spans_per_doc))
-            out = denoise_fused(small.drop("bucket"), lex_tokens, p).unionByName(
-                denoise_exploded(big.drop("bucket"), lexicon_df, p)
+            out_obs = Observation()
+            out = out.withColumn("bucket", bucket_col("doc_id", p)).observe(
+                out_obs, *_bucket_metric_exprs(pending, "size(spans)")
+            )
+            (
+                out.repartition(F.col("bucket"))
+                .sortWithinPartitions("bucket", "doc_id")
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(out_dir)
             )
 
-        out_obs = Observation()
-        out = out.withColumn("bucket", bucket_col("doc_id", p)).observe(
-            out_obs, *_bucket_metric_exprs(pending, "size(spans)")
-        )
-        (
-            out.repartition(F.col("bucket"))
-            .sortWithinPartitions("bucket", "doc_id")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(out_dir)
-        )
+            # observation values are available once the write action above
+            # finishes — the ONLY job this group runs. A branch AQE proved
+            # empty reports a definitive empty metrics row (= all-zero);
+            # pyspark's blocking Observation.get would HANG on that (ADVICE
+            # r2), and a single bounded read can race the ASYNC listener
+            # bus under load, so observation_metrics polls boundedly and
+            # distinguishes late delivery from a pruned node (r3 review).
+            # A read that timed out leaves the counts unknown: commit
+            # nothing for this group, so a resume recomputes it.
+            in_vals = observation_metrics(in_obs)
+            out_vals = observation_metrics(out_obs)
+            if in_vals is None or out_vals is None:
+                raise RuntimeError(
+                    f"group {g}: observed metrics never arrived; "
+                    "no manifest rows committed"
+                )
+            now = int(time.time() * 1e6)
+            rows = []
+            for b in pending:
+                n_docs = int(in_vals.get(f"docs_{b}", 0))
+                n_in = int(in_vals.get(f"spans_{b}", 0))
+                n_out = int(out_vals.get(f"spans_{b}", 0))
+                rows.append(
+                    {
+                        "run_id": run_id,
+                        "bucket": b,
+                        "n_docs": n_docs,
+                        "n_spans_in": n_in,
+                        "n_spans_out": n_out,
+                        "n_noise_dropped": n_in - n_out,
+                        "denoise_rate": (n_in - n_out) / n_in if n_in else 0.0,
+                        "input_lineage": input_lineage,
+                        "params_hash": ph,
+                        "status": "done",
+                        "committed_at": now,
+                    }
+                )
+            ckpt.append_rows(rows)
+            summary["groups_run"] += 1
+            summary["n_docs"] += sum(r["n_docs"] for r in rows)
 
-        # observation values are available once the write action above
-        # finishes — the ONLY job this group runs. A branch AQE proved
-        # empty reports a definitive empty metrics row (= all-zero);
-        # pyspark's blocking Observation.get would HANG on that (ADVICE
-        # r2), and a single bounded read can race the ASYNC listener
-        # bus under load, so observation_metrics polls boundedly and
-        # distinguishes late delivery from a pruned node (r3 review).
-        # A read that timed out leaves the counts unknown: commit
-        # nothing for this group, so a resume recomputes it.
-        in_vals = [observation_metrics(o) for o in in_obs]
-        out_vals = observation_metrics(out_obs)
-        if out_vals is None or any(v is None for v in in_vals):
-            raise RuntimeError(
-                f"group {g}: observed metrics never arrived; "
-                "no manifest rows committed"
-            )
-        now = int(time.time() * 1e6)
-        rows = []
-        for b in pending:
-            n_docs = sum(int(v.get(f"docs_{b}", 0)) for v in in_vals)
-            n_in = sum(int(v.get(f"spans_{b}", 0)) for v in in_vals)
-            n_out = int(out_vals.get(f"spans_{b}", 0))
-            rows.append(
-                {
-                    "run_id": run_id,
-                    "bucket": b,
-                    "n_docs": n_docs,
-                    "n_spans_in": n_in,
-                    "n_spans_out": n_out,
-                    "n_noise_dropped": n_in - n_out,
-                    "denoise_rate": (n_in - n_out) / n_in if n_in else 0.0,
-                    "input_lineage": input_lineage,
-                    "params_hash": ph,
-                    "status": "done",
-                    "committed_at": now,
-                }
-            )
-        ckpt.append_rows(rows)
-        summary["groups_run"] += 1
-        summary["n_docs"] += sum(r["n_docs"] for r in rows)
+            if fail_after_group is not None and g >= fail_after_group:
+                raise RuntimeError(f"injected failure after group {g}")
 
-        if fail_after_group is not None and g >= fail_after_group:
-            raise RuntimeError(f"injected failure after group {g}")
-
-    return summary
+        return summary
+    finally:
+        # the driver keeps each broadcast's pickled value in a file
+        # under the SparkContext's temp dir until destroy()
+        lex_tokens.destroy()

@@ -21,7 +21,7 @@ import pyarrow.parquet as pq
 
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
 from hocr_de_noising_spark.params import DEFAULT_PARAMS, Params
-from hocr_de_noising_spark.rules_np import LIGATURES, Lexicon, denoise_doc, noise_class, parse_payload, doc_flags
+from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc, noise_class, parse_payload, doc_flags
 
 PAGE_W, PAGE_H = 2480, 3508
 COLS = [(200, 1150), (1330, 2280)]

@@ -3,7 +3,6 @@
 from hocr_de_noising_spark.operators.pipeline import (
     denoise_exploded,
     denoise_fused,
-    denoise_hybrid,
 )
 
-__all__ = ["denoise_exploded", "denoise_fused", "denoise_hybrid"]
+__all__ = ["denoise_exploded", "denoise_fused"]

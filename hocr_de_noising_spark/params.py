@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -63,10 +63,7 @@ class Params:
     # J5 / S5 — scale machinery.
     n_buckets: int = 256
     salt: int = 42
-    max_spans_per_doc: int = 50_000   # pre-split threshold for giant docs
-
-    # Arrow batching (big docs ⇒ few rows per batch).
-    arrow_max_records_per_batch: int = 128
+    max_spans_per_doc: int = 50_000   # spans above which a doc is a giant
 
     def to_dict(self) -> dict:
         return asdict(self)

@@ -40,6 +40,5 @@ def let_sql(value_sql: str, var: str, body_sql: str) -> str:
     characters per document. Binding the value as a 1-element array's
     lambda variable introduces a NamedLambdaVariable the optimizer
     cannot inline through, so the value is computed exactly once per
-    row (measured 3.6x on the 3-gram shingle expression at sf0.1;
-    same trick as ``operators/hocr.parse_hocr_jvm``'s ``let``)."""
+    row (measured 3.6x on the 3-gram shingle expression at sf0.1)."""
     return f"element_at(transform(array({value_sql}), {var} -> {body_sql}), 1)"

@@ -8,8 +8,7 @@ This module is the single source of truth for the de-noising semantics
    unavailable — SURVEY.md §0 — so golden = this rule, by construction).
 2. ``rules_vec`` vectorizes it over Arrow batches for
    ``operators/pipeline.py:denoise_fused`` and is property-tested
-   against it; ``denoise_fused(vectorized=False)`` runs it directly
-   inside ``mapInPandas``, doc-at-a-time.
+   against it (tests/test_vectorized.py).
 3. The exploded-relational Spark variant (pure Catalyst expressions) is
    cross-validated against it by the golden tests — two independent
    implementations of the same frozen rule.

@@ -15,6 +15,7 @@ from __future__ import annotations
 import os
 from typing import Callable
 
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
@@ -27,14 +28,17 @@ DOCS_DDL = (
 
 
 def make_denoise_sink(
-    output_dir: str, lexicon_tokens: list[str], params: Params
+    output_dir: str, lexicon_tokens: "list[str] | Broadcast", params: Params
 ) -> Callable[[DataFrame, int], None]:
     """Idempotent foreachBatch sink: each micro-batch overwrites its own
     ``batch_id=N`` directory, so a batch retried after a partial write
     replaces its output instead of appending duplicates — this is what
     upgrades foreachBatch's at-least-once re-delivery to exactly-once
     OUTPUT (the offset log in the checkpoint already makes the input
-    side exactly-once). Readers see batch_id as a partition column."""
+    side exactly-once). Readers see batch_id as a partition column.
+    ``lexicon_tokens`` is passed to ``denoise_fused`` as is: a
+    ``Broadcast`` is shared by every micro-batch, a list is broadcast
+    again on each one."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out = denoise_fused(batch_df, lexicon_tokens, params)
@@ -59,17 +63,23 @@ def incremental_denoise_stream(
     incrementally (offset log in ``checkpoint_dir`` — the streaming
     twin of the S7 manifest anti-join); each micro-batch is de-noised
     with the same frozen rule and appended atomically via foreachBatch.
-    Returns the finished StreamingQuery.
+    The lexicon is broadcast once per call and destroyed when the
+    stream ends. Returns the finished StreamingQuery.
     """
     p = params or Params()
     stream = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
-    sink = make_denoise_sink(output_dir, lexicon_tokens, p)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    bc = spark.sparkContext.broadcast(list(lexicon_tokens))
+    try:
+        q = (
+            stream.writeStream.foreachBatch(make_denoise_sink(output_dir, bc, p))
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        # the driver keeps each broadcast's pickled value in a file
+        # under the SparkContext's temp dir until destroy()
+        bc.destroy()
 

@@ -3,7 +3,7 @@
     spark-submit --py-files dist/hocr_de_noising_spark.zip \
         jobs/run_denoise.py --input <path|table> --output <path|table> \
         --manifest <dir> --lexicon <path> [--buckets 256] [--salt 42] \
-        [--groups 8] [--variant fused] [--mode drop] [--catalog parquet]
+        [--groups 8] [--mode drop] [--catalog parquet]
 
 Resumable: re-running with the same run-id + params skips committed
 bucket groups via the manifest (S7).
@@ -65,7 +65,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--groups", type=int, default=8)
     ap.add_argument("--tau-wconf", type=int, default=35)
     ap.add_argument("--mode", choices=("drop", "rewrite"), default="drop")
-    ap.add_argument("--variant", choices=("hybrid", "fused", "exploded"), default="fused")
     ap.add_argument("--catalog", choices=("parquet", "iceberg"), default="parquet")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument(
@@ -78,12 +77,6 @@ def main(argv: list[str] | None = None) -> None:
         ".parquet — one extra pass over the (smaller) cleaned output,"
         " map-side + one bounded-frame window",
     )
-    ap.add_argument(
-        "--approx-stats",
-        action="store_true",
-        help="sketch-based page percentiles (X2/X3) — the 100 TB default;"
-        " exact interpolation is the golden-exact default here",
-    )
     args = ap.parse_args(argv)
 
     params = Params(
@@ -91,7 +84,6 @@ def main(argv: list[str] | None = None) -> None:
         mode=args.mode,
         n_buckets=args.buckets,
         salt=args.salt,
-        approx_stats=args.approx_stats,
     )
     spark = get_spark("hocr-denoise-job", cores=args.cores)
     catalog = Catalog(args.catalog)
@@ -109,7 +101,6 @@ def main(argv: list[str] | None = None) -> None:
         run_id=run_id,
         n_groups=args.groups,
         input_lineage=catalog.lineage(spark, args.input),
-        variant=args.variant,
     )
     print(
         f"run_id={run_id} params_hash={params_hash(params)} "

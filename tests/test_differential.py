@@ -1,5 +1,5 @@
 """Cross-variant differential testing: exploded (Catalyst) vs fused
-(vectorized pandas) on corpora generated with seeds the goldens never
+(``mapInArrow``) on corpora generated with seeds the goldens never
 used — any divergence between the two independent implementations is a
 bug even where no golden exists."""
 

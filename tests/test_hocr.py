@@ -69,259 +69,3 @@ def test_hocr_to_spans_feeds_pipeline(spark, unit_dir):
     # cleaned docs only contain parseable payloads (all spans text kind)
     kinds = out.select(F.explode("spans").alias("s")).select("s.kind").distinct().collect()
     assert {r.kind for r in kinds} <= {"text"}
-
-
-def test_jvm_fast_path_matches_python_parser(spark):
-    """parse_hocr_jvm (pure JVM: split + regexp_extract_all + windows)
-    must produce EXACTLY the Python parser's records on well-formed
-    Tesseract pages — same schema, same values, same order fields."""
-    from hocr_de_noising_spark.fixtures.hocr import gen_hocr_corpus
-    from hocr_de_noising_spark.operators.hocr import parse_hocr, parse_hocr_jvm
-
-    pages, _ = gen_hocr_corpus(20, seed=7)
-    good = [(d, h) for d, h in pages if not d.startswith("hbad")]
-    df = spark.createDataFrame(good, "doc_id string, hocr string")
-    cols = ["doc_id", "carea_id", "par_id", "line_id", "word_id", "order"]
-    py = parse_hocr(df).orderBy(*cols).collect()
-    jvm = parse_hocr_jvm(df).orderBy(*cols).collect()
-    assert len(py) == len(jvm) and len(py) > 0
-    for a, b in zip(py, jvm):
-        assert a.asDict() == b.asDict(), (a, b)
-
-
-def test_auto_router_handles_mixed_corpus(spark):
-    """parse_hocr_auto: well-formed pages take the JVM path, malformed
-    take the tolerant Python path; the union equals a pure-Python parse
-    of the whole corpus."""
-    from hocr_de_noising_spark.fixtures.hocr import gen_hocr_corpus
-    from hocr_de_noising_spark.operators.hocr import parse_hocr, parse_hocr_auto
-
-    pages, _ = gen_hocr_corpus(15, seed=11)
-    df = spark.createDataFrame(pages, "doc_id string, hocr string")
-    cols = ["doc_id", "order"]
-    py = parse_hocr(df).orderBy(*cols).collect()
-    auto = parse_hocr_auto(df).orderBy(*cols).collect()
-    assert len(py) == len(auto) and len(auto) > 0
-    for a, b in zip(py, auto):
-        assert a.asDict() == b.asDict(), (a, b)
-
-
-def _page(body_spans: str) -> str:
-    """Minimal well-formed Tesseract-shaped page around given markup."""
-    return (
-        '<html><body><div class="ocr_page" title="bbox 0 0 2480 3508; ppageno 0">'
-        '<div class="ocr_carea" title="bbox 0 0 2480 3508">'
-        '<p class="ocr_par" lang="eng">' + body_spans + "</p></div></div></body></html>"
-    )
-
-
-def _line(words: list[str], li: int = 0) -> str:
-    inner = "".join(
-        f'<span class="ocrx_word" title="bbox {10 + 50 * wi} {10 + 50 * li} '
-        f"{40 + 50 * wi} {40 + 50 * li}; x_wconf 9{wi}\">{w}</span>"
-        for wi, w in enumerate(words)
-    )
-    return (
-        f'<span class="ocr_line" title="bbox 0 {10 + 50 * li} 500 {40 + 50 * li}; '
-        f'baseline 0.005 -18; x_size 42; x_descenders 9; x_ascenders 11">{inner}</span>'
-    )
-
-
-def test_jvm_fast_path_decodes_entities(spark):
-    """ADVICE r2 (high): entity-bearing pages stay on the JVM fast path
-    and decode the five standard XML entities exactly like HTMLParser —
-    including the &amp;lt; double-encode trap (must yield '&lt;', never
-    '<')."""
-    from hocr_de_noising_spark.operators.hocr import (
-        hocr_soundness_probe,
-        parse_hocr,
-        parse_hocr_jvm,
-    )
-
-    words = ["A&amp;B", "&lt;i&gt;", "&quot;q&quot;", "it&#39;s", "&amp;lt;", "M&amp;amp;"]
-    df = spark.createDataFrame([("e1", _page(_line(words)))], "doc_id string, hocr string")
-    assert df.filter(hocr_soundness_probe("hocr")).count() == 1
-    py = parse_hocr(df).orderBy("order").collect()
-    jvm = parse_hocr_jvm(df).orderBy("order").collect()
-    assert [r.token for r in py] == ['A&B', '<i>', '"q"', "it's", '&lt;', 'M&amp;']
-    for a, b in zip(py, jvm):
-        assert a.asDict() == b.asDict(), (a, b)
-
-
-def test_router_sends_nonstandard_pages_to_python(spark):
-    """ADVICE r2 (high+medium): pages the fast path cannot reproduce —
-    headers/captions, pre-line words, bare/unterminated/exotic charrefs,
-    non-canonical class positions — are marked unsound and the auto
-    route still equals a pure-Python parse."""
-    from hocr_de_noising_spark.operators.hocr import (
-        hocr_soundness_probe,
-        parse_hocr,
-        parse_hocr_auto,
-    )
-
-    header_page = (
-        '<html><body><div class="ocr_page" title="bbox 0 0 100 100">'
-        '<div class="ocr_carea" title="bbox 0 0 100 100">'
-        '<span class="ocr_header" title="bbox 0 0 50 10">'
-        '<span class="ocrx_word" title="bbox 1 1 9 9; x_wconf 90">Head</span></span>'
-        '<p class="ocr_par">' + _line(["body"]) + "</p></div></div></body></html>"
-    )
-    caption_page = _page(
-        _line(["pic"]) + '<span class="ocr_caption" title="bbox 0 90 50 99">'
-        '<span class="ocrx_word" title="bbox 1 91 9 98; x_wconf 70">cap</span></span>'
-    )
-    preline_page = _page(
-        '<span class="ocrx_word" title="bbox 1 1 5 5; x_wconf 70">stray</span>'
-        + _line(["normal"])
-    )
-    bare_amp = _page(_line(["AT&T"]))
-    no_semi = _page(_line(["AT&amp T"]))
-    exotic = _page(_line(["caf&eacute;"]))
-    odd_class = _page(
-        '<span class="bold ocr_line" title="bbox 0 10 500 40; baseline 0 0; '
-        'x_size 42; x_descenders 9; x_ascenders 11">'
-        '<span class="ocrx_word" title="bbox 1 11 9 39; x_wconf 80">styled</span></span>'
-    )
-    # line directly under a carea, no par (non-Tesseract nesting): the
-    # fast path's par counter would straddle the carea boundary
-    parless = (
-        '<html><body><div class="ocr_page" title="bbox 0 0 100 100">'
-        '<div class="ocr_carea" title="bbox 0 0 100 100">' + _line(["bare"]) +
-        '</div><div class="ocr_carea" title="bbox 0 0 100 100">'
-        '<p class="ocr_par">' + _line(["ok"], li=1) + "</p></div></div></body></html>"
-    )
-    # stray word AFTER the page's first line: carea2's par holds a word
-    # before its own first line — the chunk decomposition would attach
-    # it to carea1's last line (r3 review finding)
-    midstray = (
-        '<html><body><div class="ocr_page" title="bbox 0 0 100 100">'
-        '<div class="ocr_carea" title="bbox 0 0 100 100"><p class="ocr_par">'
-        + _line(["first"]) + "</p></div>"
-        '<div class="ocr_carea" title="bbox 0 0 100 100"><p class="ocr_par">'
-        '<span class="ocrx_word" title="bbox 1 1 5 5; x_wconf 70">stray</span>'
-        + _line(["second"], li=1) + "</p></div></div></body></html>"
-    )
-    # line before any carea: tolerant parser clamps carea_id to 0, the
-    # fast path's cumulative counter would say -1 (r3 review)
-    precarea = (
-        '<html><body><div class="ocr_page" title="bbox 0 0 100 100">'
-        + _line(["floating"])
-        + '<div class="ocr_carea" title="bbox 0 0 100 100"><p class="ocr_par">'
-        + _line(["anchored"], li=1)
-        + "</p></div></div></body></html>"
-    )
-    pages = [
-        ("n_parless", parless),
-        ("n_midstray", midstray),
-        ("n_precarea", precarea),
-        ("n_header", header_page),
-        ("n_caption", caption_page),
-        ("n_preline", preline_page),
-        ("n_bareamp", bare_amp),
-        ("n_nosemi", no_semi),
-        ("n_exotic", exotic),
-        ("n_oddclass", odd_class),
-    ]
-    df = spark.createDataFrame(pages, "doc_id string, hocr string")
-    assert df.filter(hocr_soundness_probe("hocr")).count() == 0
-    cols = ["doc_id", "order"]
-    py = parse_hocr(df).orderBy(*cols).collect()
-    auto = parse_hocr_auto(df).orderBy(*cols).collect()
-    assert len(py) == len(auto) and len(py) >= len(pages)
-    for a, b in zip(py, auto):
-        assert a.asDict() == b.asDict(), (a, b)
-
-
-def test_auto_router_fuzz_differential(spark):
-    """Differential fuzz: RANDOM page structures mixing canonical and
-    nonstandard features (headers, stray words, pre-carea lines,
-    par-less careas, entity variants, odd class lists, malformed tails)
-    must satisfy parse_hocr_auto == parse_hocr unconditionally — the
-    router may route anything to Python, but whatever it sends to the
-    JVM path must be record-exact."""
-    import random
-
-    from hocr_de_noising_spark.operators.hocr import parse_hocr, parse_hocr_auto
-
-    def rand_page(rng: random.Random) -> str:
-        toks = ["lord", "haue", "AT&amp;T", "caf&eacute;", "&lt;x&gt;", "it&#39;s",
-                "AT&amp T", "pe&ce", "vp", "&amp;lt;",
-                # intra-span whitespace (ADVICE r3): the fast path must
-                # trim exactly like str.strip(), incl. tabs/newlines/nbsp
-                "\tword\n", " sp ", "a b", " em ", "nl\nin"]
-        parts = ['<html><body><div class="ocr_page" title="bbox 0 0 2480 3508">']
-        if rng.random() < 0.15:  # stray word in the preamble
-            parts.append('<span class="ocrx_word" title="bbox 1 1 9 9; x_wconf 10">pre</span>')
-        if rng.random() < 0.1:  # line before any carea
-            parts.append(_line([rng.choice(toks)]))
-        for ci in range(rng.randint(1, 3)):
-            parts.append(f'<div class="ocr_carea" title="bbox {ci} 0 99 99">')
-            if rng.random() < 0.1:  # par-less line directly under carea
-                parts.append(_line([rng.choice(toks)], li=9))
-            for pi in range(rng.randint(1, 2)):
-                parts.append('<p class="ocr_par" lang="eng">')
-                if rng.random() < 0.1:  # stray word before the par's first line
-                    parts.append(
-                        '<span class="ocrx_word" title="bbox 2 2 8 8; x_wconf 20">mid</span>'
-                    )
-                for li in range(rng.randint(1, 4)):
-                    words = [rng.choice(toks) for _ in range(rng.randint(1, 5))]
-                    line = _line(words, li=li)
-                    if rng.random() < 0.08:  # odd class position
-                        line = line.replace('class="ocr_line"', 'class="bold ocr_line"', 1)
-                    if rng.random() < 0.08:  # header instead of line
-                        line = line.replace('class="ocr_line"', 'class="ocr_header"', 1)
-                    parts.append(line)
-                parts.append("</p>")
-            parts.append("</div>")
-        parts.append("</div></body></html>")
-        page = "".join(parts)
-        if rng.random() < 0.08:  # truncate mid-tag (malformed tail)
-            page = page[: rng.randint(len(page) // 2, len(page) - 1)]
-        return page
-
-    rng = random.Random(2026)
-    pages = [(f"fz{i:04d}", rand_page(rng)) for i in range(120)]
-    df = spark.createDataFrame(pages, "doc_id string, hocr string")
-    cols = ["doc_id", "order"]
-    py = parse_hocr(df).orderBy(*cols).collect()
-    auto = parse_hocr_auto(df).orderBy(*cols).collect()
-    # triage="checkpoint" (probe-once materialization) must be
-    # record-identical to the inline two-filter form on the same fuzz
-    ckpt = parse_hocr_auto(df, triage="checkpoint").orderBy(*cols).collect()
-    assert [r.asDict() for r in ckpt] == [r.asDict() for r in auto]
-    assert len(py) == len(auto) and len(py) > 100
-    for a, b in zip(py, auto):
-        assert a.asDict() == b.asDict(), (a, b)
-
-
-def test_jvm_fast_path_tolerates_stray_input(spark):
-    """parse_hocr_jvm is documented for router-sound pages, but stray
-    input (empty page, no lines, line with zero words) must yield zero
-    rows — never an ANSI element_at/sequence error (r3 regression:
-    sequence(1,0) is the DESCENDING [1,0], not empty)."""
-    from hocr_de_noising_spark.fixtures.hocr import MALFORMED
-    from hocr_de_noising_spark.operators.hocr import parse_hocr_jvm
-
-    wordless_line = _page(
-        '<span class="ocr_line" title="bbox 0 10 500 40; baseline 0 0; '
-        'x_size 42; x_descenders 9; x_ascenders 11"> </span>'
-    )
-    pages = [(f"m{i}", h) for i, h in enumerate(MALFORMED)] + [("m9", wordless_line)]
-    df = spark.createDataFrame(pages, "doc_id string, hocr string")
-    assert parse_hocr_jvm(df).count() == 0
-
-
-def test_jvm_fast_path_stays_python_free(spark):
-    from hocr_de_noising_spark.fixtures.hocr import gen_hocr_corpus
-    from hocr_de_noising_spark.operators.hocr import parse_hocr_jvm
-
-    pages, _ = gen_hocr_corpus(5, seed=3)
-    df = spark.createDataFrame(pages[:2], "doc_id string, hocr string")
-    plan = parse_hocr_jvm(df)._jdf.queryExecution().executedPlan().toString()
-    for node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython"):
-        assert node not in plan, plan
-    # r3 HOF rewrite: the whole parse happens within each page row —
-    # no per-doc windows, no shuffle; scan → project → generate only
-    for node in ("Exchange", "Window"):
-        assert node not in plan, plan

@@ -1,10 +1,13 @@
 """Every module of the package, the jobs, the scripts and
 ``__spark_entry__.py`` imports cleanly, so an import left dangling by a
 deleted module fails the suite instead of the first run that reaches
-it."""
+it; and no module of the package or the jobs keeps a module-level
+import it never uses, so one left behind by a deleted code path fails
+too."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib
 import importlib.util
@@ -44,3 +47,40 @@ def test_module_imports(path):
         spec.loader.exec_module(mod)
     finally:
         del sys.modules[name]
+
+
+def _unused_imports(path: str) -> list[str]:
+    """Names a module imports at module level and never mentions again.
+    A name counts as used if it appears as an identifier anywhere in the
+    module, inside a quoted annotation, or in ``__all__``."""
+    with open(os.path.join(REPO, path)) as f:
+        tree = ast.parse(f.read(), path)
+    imported: dict[str, int] = {}
+    for node in tree.body:
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                imported[a.asname or a.name.split(".")[0]] = node.lineno
+    used: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            # quoted annotations ("list[str] | Broadcast") and __all__ entries
+            try:
+                expr = ast.parse(node.value, mode="eval")
+            except SyntaxError:
+                continue
+            used.update(n.id for n in ast.walk(expr) if isinstance(n, ast.Name))
+    return [f"{path}:{line} {name}" for name, line in imported.items() if name not in used]
+
+
+def test_no_unused_module_imports():
+    paths = [
+        p
+        for p in _sources()
+        if p.startswith(("hocr_de_noising_spark", "jobs")) and not p.endswith("__init__.py")
+    ]
+    unused = [u for p in paths for u in _unused_imports(p)]
+    assert not unused, unused

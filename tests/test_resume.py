@@ -5,6 +5,8 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -221,41 +223,6 @@ def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path)
     assert sum(r.n_docs for r in m) == docs.count()
 
 
-def test_hybrid_probe_skips_exploded_branch_without_giants(spark, loaded, tmp_path):
-    """VERDICT r2 item 1: hybrid probes job-level for giant-bearing
-    groups; a giant-free corpus plans zero exploded branches and the
-    output still matches the golden."""
-    docs, lexicon, golden = loaded
-    p = Params(n_buckets=16)
-    summary = run_denoise_job(
-        spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
-        params=p, run_id="r1", n_groups=4, variant="hybrid",
-    )
-    assert summary["giant_groups"] == 0 and summary["groups_run"] == 4
-    out = _read_all(spark, str(tmp_path / "out"))
-    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
-    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
-
-
-def test_hybrid_probe_routes_giant_groups(spark, loaded, tmp_path):
-    """With a low giant threshold the probe finds giant-bearing groups
-    and the hybrid output equals the pure-fused output byte-for-byte."""
-    from hocr_de_noising_spark.operators.pipeline import denoise_fused
-
-    docs, lexicon, _ = loaded
-    lex_tokens = [r.token for r in lexicon.select("token").distinct().collect()]
-    p = Params(n_buckets=16, max_spans_per_doc=30)
-    summary = run_denoise_job(
-        spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
-        params=p, run_id="r1", n_groups=4, variant="hybrid",
-    )
-    assert 1 <= summary["giant_groups"] <= 4
-    out = _read_all(spark, str(tmp_path / "out"))
-    ref = denoise_fused(docs, lex_tokens, p)
-    j = out.alias("o").join(ref.alias("g"), "doc_id", "full_outer")
-    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
-
-
 def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
     """ADVICE r2: a pre-existing bucket column bucketed under a
     different scheme must not be trusted — the job probes a sample and
@@ -303,4 +270,38 @@ def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
     assert summary["groups_run"] == 4
     out = _read_all(spark, str(tmp_path / "out"))
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
+def test_cli_runs_then_resumes_as_noop(spark, unit_dir, tmp_path):
+    """``jobs/run_denoise.py:main`` end to end, twice in one process:
+    the first run writes golden output, the second skips every group.
+    A subprocess, since ``main`` stops its own SparkSession."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out, manifest = str(tmp_path / "out"), str(tmp_path / "m")
+    argv = [
+        "--input", os.path.join(unit_dir, "docs.parquet"),
+        "--lexicon", os.path.join(unit_dir, "lexicon.parquet"),
+        "--output", out, "--manifest", manifest,
+        "--buckets", "16", "--groups", "2", "--cores", "2",
+    ]
+    code = (
+        f"import sys; sys.path.insert(0, {os.path.join(repo, 'jobs')!r})\n"
+        "import run_denoise\n"
+        f"run_denoise.main({argv!r})\n"
+        f"run_denoise.main({argv!r})\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, env=env, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    summaries = [line for line in proc.stdout.splitlines() if line.startswith("run_id=")]
+    assert len(summaries) == 2, proc.stdout
+    assert " groups_run=2 groups_skipped=0 " in summaries[0]
+    assert " groups_run=0 groups_skipped=2 " in summaries[1]
+
+    golden = spark.read.parquet(os.path.join(unit_dir, "golden.parquet"))
+    got = spark.read.parquet(out).drop("bucket")
+    j = got.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0

@@ -1,6 +1,6 @@
 """Skew handling (SURVEY.md §5.4): pathological 100k-span docs among
-normal docs — completes, routes through the JVM (exploded) path via the
-hybrid threshold, and the output is still golden-exact.
+normal docs — the production fused path digests them in-line, completes,
+and the output is still golden-exact.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.operators.pipeline import denoise_exploded, denoise_fused, denoise_hybrid
+from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from hocr_de_noising_spark.params import Params
 
 
@@ -29,16 +29,16 @@ def test_corpus_has_skew_plants(corr):
     assert big.count() == 3
 
 
-def test_hybrid_routing_is_golden_exact_under_skew(spark, corr):
-    """Hybrid: fused (Python) path for normal docs, exploded (JVM
-    window) path for giants — same frozen rule, golden-equal overall."""
+def test_fused_is_golden_exact_under_skew(spark, corr):
+    """The one production path, fused (Arrow batches in a Python
+    worker), takes giants and normal docs alike — golden-equal overall."""
     docs, golden, lexicon = corr
     p = Params()
     tokens = [r.token for r in lexicon.select("token").collect()]
     assert docs.filter(F.size("spans") > p.max_spans_per_doc).count() == 3
 
     t0 = time.time()
-    out = denoise_hybrid(docs, lexicon, tokens, p)
+    out = denoise_fused(docs, tokens, p)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     n_bad = j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count()
     elapsed = time.time() - t0

@@ -90,6 +90,33 @@ def test_stateful_streaming_dedup(spark, sf001_dir, stream_dirs):
     assert out.select("event_id").distinct().count() == events.count()
 
 
+def test_job_and_stream_destroy_their_broadcasts(spark, unit_dir, stream_dirs, tmp_path):
+    """Every PySpark broadcast keeps its pickled value in a file under
+    the driver's temp dir until ``destroy()``: repeated jobs and stream
+    calls must not leave one behind each."""
+    from hocr_de_noising_spark.checkpoint import run_denoise_job
+    from hocr_de_noising_spark.params import Params
+
+    docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
+    lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
+    tokens = [r.token for r in lexicon.select("token").collect()]
+    temp_dir = spark.sparkContext._temp_dir
+    before = sorted(os.listdir(temp_dir))
+
+    for i in range(2):
+        run_denoise_job(
+            spark, docs, lexicon, str(tmp_path / f"out{i}"), str(tmp_path / f"m{i}"),
+            params=Params(n_buckets=4), n_groups=1,
+        )
+    for half in (F.col("doc_id") < "d00000100", F.col("doc_id") >= "d00000100"):
+        docs.filter(half).write.mode("append").parquet(stream_dirs["in"])
+        incremental_denoise_stream(
+            spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens
+        )
+    assert spark.read.parquet(stream_dirs["out"]).count() == docs.count()
+    assert sorted(os.listdir(temp_dir)) == before
+
+
 def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     """A micro-batch re-delivered with the same batch_id (foreachBatch
     retry after partial failure) must overwrite, not duplicate."""
