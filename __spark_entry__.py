@@ -51,7 +51,6 @@ _CHANGED_SINCE_GREEN: list[str] = [
     "decontaminate_overlap",
     "quality_repetition",
     "dedup_lines",
-    "dedup_media_near",
     "url_host_filter",
     # r8 single-buffer percentile aggregates (array of percentages)
     "agg_percentile",
@@ -86,7 +85,7 @@ _LAST_GREEN = dict.fromkeys(
     [
         "agg_approx_percentile", "agg_denoise_rate",
         "bpe_pair_topk", "decontaminate_overlap", "dedup_lines",
-        "dedup_media_near", "dedup_ngram_jaccard", "dedup_semantic",
+        "dedup_ngram_jaccard", "dedup_semantic",
         "dedup_simhash", "dsir_select", "explode_spans",
         "garbage_ratio", "geom_outliers", "html_links",
         "html_main_content", "html_main_content_dom",

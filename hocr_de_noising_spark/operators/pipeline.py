@@ -45,11 +45,7 @@ from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import Lexicon
-
-OUT_SCHEMA = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
 def denoise_exploded(
@@ -133,4 +129,4 @@ def denoise_fused(
         for rb in batches:
             yield denoise_arrow_batch(rb, p, lex)
 
-    return docs.select("doc_id", "spans").mapInArrow(run_arrow, schema=OUT_SCHEMA)
+    return docs.select("doc_id", "spans").mapInArrow(run_arrow, schema=DOCS_DDL)

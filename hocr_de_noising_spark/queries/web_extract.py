@@ -554,8 +554,8 @@ def filter_blocked_hosts_join(
     # non-deterministic, and the exploded-suffix branch and the final
     # left join would otherwise each recompute it — a task retry or
     # speculative copy could assign DIFFERENT ids to the same row
-    # across branches, silently mislabeling blocked/block_rule (the
-    # remap_media_refs pattern)
+    # across branches, silently mislabeling blocked/block_rule; the
+    # checkpoint fixes each row's id once for both branches
     with_id = df.withColumn(
         "_rid", F.monotonically_increasing_id()
     ).localCheckpoint(eager=False)

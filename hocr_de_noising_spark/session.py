@@ -22,13 +22,19 @@ from pyspark.sql import SparkSession
 # the directory holding hocr_de_noising_spark/, for the Python workers
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Arrow batch bounds for every mapInArrow/mapInPandas stage: a batch
+# closes at EITHER limit, so high row counts amortize per-batch Python
+# overhead on small docs while one giant document or binary-heavy row
+# group can never blow up a single Arrow buffer (SURVEY §7.3 hard-part
+# 5). Override per session through get_spark(extra_conf=...).
+ARROW_MAX_RECORDS_PER_BATCH = 1024
+ARROW_MAX_BYTES_PER_BATCH = 16 * 1024 * 1024
+
 
 def get_spark(
     app_name: str = "hocr-de-noising",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records_per_batch: int = 1024,
-    arrow_max_bytes_per_batch: str = "16m",
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the span-denoise workload.
@@ -53,15 +59,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records_per_batch),
+            str(ARROW_MAX_RECORDS_PER_BATCH),
         )
-        # byte-aware batch bound (Spark 4): a batch closes at EITHER
-        # limit, so high row counts amortize per-batch Python overhead
-        # on small docs while one giant document can never blow up a
-        # single Arrow buffer (SURVEY §7.3 hard-part 5)
         .config(
             "spark.sql.execution.arrow.maxBytesPerBatch",
-            arrow_max_bytes_per_batch,
+            str(ARROW_MAX_BYTES_PER_BATCH),
         )
         .config("spark.python.worker.reuse", "true")
         .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the span-document schema: the corpus tables, the stream source and
+# denoise_fused's output all carry it
 DOCS_DDL = (
     "doc_id string, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"

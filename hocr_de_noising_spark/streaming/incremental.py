@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from hocr_de_noising_spark.params import Params
-
-DOCS_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
 def make_denoise_sink(

@@ -8,13 +8,12 @@ oracle-checked registry stages:
   4. line dedup     (--line-dedup   — CCNet repeated-line strip)
   5. dedup          (jobs/run_dedup — exact → LSH → verify → components)
   6. decontaminate  (--decontaminate — train/eval 5-gram leakage report)
-  7. media dedup    (auto on media.parquet — exact + optional near-dup)
-  8. semantic dedup (--semantic-dedup — SemDeDup; --semantic-imi takes
+  7. semantic dedup (--semantic-dedup — SemDeDup; --semantic-imi takes
                      the O(sqrt(nlist)) product-quantizer assignment)
-  9. DSIR selection (--dsir-target/--dsir-keep — importance top-k
+  8. DSIR selection (--dsir-target/--dsir-keep — importance top-k
                      toward a target corpus; --dsir-fast-hash)
- 10. split + shard  (sample_split; --shard-budget equal-token shards)
- 11. pack manifest  (--pack-seq-len — fixed-length training-sequence
+  9. split + shard  (sample_split; --shard-budget equal-token shards)
+ 10. pack manifest  (--pack-seq-len — fixed-length training-sequence
                      layout over the written corpus)
 
 Stage 1-3 output is MATERIALIZED to parquet (documents.parquet layout)
@@ -29,16 +28,6 @@ expensive multi-join stage and should only ever see surviving docs).
 Outputs under --output: filtered/ (scrubbed+gated documents.parquet),
 dedup/ (the dedup job's stage outputs), corpus/ (final rows:
 doc_id, text, lang, split — one row per kept doc).
-
-Media (VERDICT r3 item 4): when the input dir carries a
-``media.parquet`` table (media_ref, media_type, content binary) and
-documents carry a ``media_refs array<string>`` column, the job also
-runs a media stage — fake-codec decode → sha256 fingerprint → exact
-media dedup (min media_ref per digest is canonical) — writes
-media/meta (kept items' metadata) + media/ref_map (every ref →
-canonical), and the final corpus carries each doc's ``media_refs``
-REMAPPED to canonical refs, order preserved. Binary payloads never
-flow through the text dedup joins; only refs and digests shuffle.
 """
 
 from __future__ import annotations
@@ -52,7 +41,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from hocr_de_noising_spark.operators.multimodal import decode_media  # noqa: E402
 from hocr_de_noising_spark.queries.trainprep import (  # noqa: E402
     decon_overlap,
     lang_exprs,
@@ -78,7 +66,6 @@ def gate_stage(docs, min_quality: float, langs: tuple[str, ...]):
     Catalyst does not collapse self-equi-joins of the same table).
     Output is the documents.parquet layout the dedup job consumes."""
     ex = {**scrub_exprs(), **quality_exprs(), **lang_exprs()}
-    media_cols = ["media_refs"] if "media_refs" in docs.columns else []
     return (
         docs.filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .select(
@@ -87,7 +74,6 @@ def gate_stage(docs, min_quality: float, langs: tuple[str, ...]):
             ex["scrubbed"].alias("text"),
             ex["quality"].alias("quality"),
             ex["pred_lang"].alias("lang"),
-            *media_cols,
         )
         .filter(
             (F.col("quality") >= min_quality) & F.col("lang").isin(list(langs))
@@ -98,134 +84,7 @@ def gate_stage(docs, min_quality: float, langs: tuple[str, ...]):
             "lang",
             "source",
             F.length("text").cast("int").alias("n_chars"),
-            *media_cols,
         )
-    )
-
-
-def media_stage(spark, media, media_out_dir: str, near_dedup: bool = False,
-                verify_bytes: bool = False) -> dict:
-    """Media dedup over opaque binary content: fake-codec decode
-    (``operators/multimodal.decode_media`` — the Arrow-batched stage a
-    real codec would replace) → sha256 digest → canonical ref = min
-    media_ref per digest. Writes
-
-      media_out_dir/meta     kept items' metadata (one row per unique
-                             digest; undecodable items kept as-is)
-      media_out_dir/ref_map  (media_ref, canonical_ref) for EVERY input
-                             ref — the join key for remapping documents
-
-    ``near_dedup=True`` (VERDICT r4 item 3) additionally collapses
-    NEAR-duplicates the byte hash misses (re-encoded/resized copies):
-    the decode pass's perceptual band signature (``psig``) feeds the
-    same banded-LSH cap/salt core as ``dedup_media_near``; verified
-    pairs (full-signature L1 ≤ threshold) among the exact-dedup
-    survivors are clustered with O(log n) star connected components,
-    and each exact canonical is re-pointed at its cluster minimum, so
-    ref_map composes exact ∘ near in one map.
-
-    Binary payloads stay in the decode mapInPandas stage; only refs +
-    digests + ≤8-int signatures reach any shuffle, so the stage holds
-    at media volumes where content is TBs. Returns counts."""
-    from hocr_de_noising_spark.queries.media_near import psig_near_pairs
-    from hocr_de_noising_spark.queries.trainprep import connected_components
-
-    # materialize the decode ONCE: the mapInPandas pass scans every
-    # binary payload and hashes it — the dominant cost at TB media
-    # volumes — and the derivations below reference it from four plan
-    # branches Catalyst will NOT collapse (r4 review). The decoded
-    # metadata table is tiny (no binary column), so parquet it first
-    # and build canon/ref_map/meta from the written table.
-    decoded_path = os.path.join(media_out_dir, "decoded")
-    decode_media(media).write.mode("overwrite").parquet(decoded_path)
-    decoded = spark.read.parquet(decoded_path)
-    canon = (
-        decoded.filter("decode_ok")
-        .groupBy("sha256")
-        .agg(F.min("media_ref").alias("canonical_ref"))
-    )
-    ref_map = (
-        decoded.filter("decode_ok")
-        .select("media_ref", "sha256")
-        .join(canon, "sha256")
-        .select("media_ref", "canonical_ref")
-        # undecodable media cannot be fingerprinted — map to itself
-        .unionByName(
-            decoded.filter(~F.col("decode_ok")).select(
-                "media_ref", F.col("media_ref").alias("canonical_ref")
-            )
-        )
-    )
-    if near_dedup:
-        # near clusters over the EXACT-dedup survivors only (every
-        # exact dup already maps to its canonical, so clustering the
-        # survivors covers the whole input at 1/dup-factor the size)
-        sigs = (
-            decoded.filter("decode_ok")
-            .join(canon.select(F.col("canonical_ref").alias("media_ref")), "media_ref")
-            .filter(F.size("psig") > 0)
-            # verify_bytes (VERDICT r5 item 4): carry the fine
-            # unquantized band-sum signature so psig_near_pairs gates
-            # every candidate pair on the byte-derived verify chain —
-            # planted psig collisions between unrelated payloads are
-            # blocked instead of false-merged
-            .select("media_ref", "psig", *(["vsig"] if verify_bytes else []))
-        )
-        pairs = psig_near_pairs(sigs).select(
-            F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b")
-        )
-        comps = connected_components(pairs, algorithm="star")
-        near_map = comps.filter(F.col("doc_id") != F.col("component")).select(
-            F.col("doc_id").alias("canonical_ref"),
-            F.col("component").alias("near_ref"),
-        )
-        ref_map = ref_map.join(near_map, "canonical_ref", "left").select(
-            "media_ref",
-            F.coalesce("near_ref", "canonical_ref").alias("canonical_ref"),
-        )
-    ref_map.write.mode("overwrite").parquet(os.path.join(media_out_dir, "ref_map"))
-    ref_map = spark.read.parquet(os.path.join(media_out_dir, "ref_map"))
-    meta = decoded.join(
-        ref_map.filter(F.col("media_ref") == F.col("canonical_ref")).select("media_ref"),
-        "media_ref",
-    )
-    meta.write.mode("overwrite").parquet(os.path.join(media_out_dir, "meta"))
-    n_in = decoded.count()
-    n_kept = spark.read.parquet(os.path.join(media_out_dir, "meta")).count()
-    return {"media_in": n_in, "media_kept": n_kept, "media_dups": n_in - n_kept}
-
-
-def remap_media_refs(docs, ref_map):
-    """Rewrite each doc's ``media_refs`` array to canonical refs, order
-    preserved: posexplode → equi join on media_ref → re-collect by
-    position. Docs with no media pass through unchanged (null/empty
-    arrays preserved). The ref map is joined, not broadcast — at
-    10^12-doc scale the media dimension is itself huge."""
-    with_media = docs.filter(F.size("media_refs") > 0)
-    no_media = docs.filter(
-        F.col("media_refs").isNull() | (F.size("media_refs") <= 0)
-    )
-    ex = with_media.select(
-        "doc_id", F.posexplode("media_refs").alias("pos", "media_ref")
-    )
-    remapped = (
-        ex.join(ref_map, "media_ref", "left")
-        .select(
-            "doc_id",
-            "pos",
-            F.coalesce("canonical_ref", "media_ref").alias("ref"),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "transform(array_sort(collect_list(struct(pos, ref))), x -> x.ref)"
-            ).alias("media_refs")
-        )
-    )
-    return (
-        with_media.drop("media_refs")
-        .join(remapped, "doc_id", "left")
-        .unionByName(no_media)
     )
 
 
@@ -241,8 +100,6 @@ def run_trainprep_job(
     fail_after_stage: str | None = None,
     decontaminate: bool = False,
     components_algorithm: str = "propagate",
-    media_near_dedup: bool = False,
-    media_verify_bytes: bool = False,
     semantic_dedup: bool = False,
     semantic_nlist: int | None = None,
     semantic_imi: bool = False,
@@ -258,7 +115,7 @@ def run_trainprep_job(
     and per-stage wall seconds.
 
     With ``manifest_dir`` the job is resumable at STAGE granularity
-    (VERDICT r3 item 8): the gate/media/corpus stages commit rows to a
+    (VERDICT r3 item 8): the gate/corpus stages commit rows to a
     ``StageManifest``, the dedup sub-job commits its own five stages to
     the SAME manifest under job='dedup', and a restart with the same
     run_id + parameters skips everything already committed. All summary
@@ -267,22 +124,15 @@ def run_trainprep_job(
     docs = load(spark, sf_dir, "documents")
     n_in = docs.count()
 
-    # media presence decided UP FRONT and folded into the param lineage
-    # (ADVICE r4): if media.parquet appears between resumed runs of the
-    # same run_id, every committed stage is invalidated — otherwise a
-    # skipped final_corpus stage would silently lack remapped
-    # media_refs while the summary reports media counts. Ditto the
-    # decontaminate flag (its report feeds the summary).
-    media_path = os.path.join(sf_dir, "media.parquet")
-    has_media = os.path.exists(media_path) and "media_refs" in docs.columns
-    # same up-front-presence rule for the semantic stage (VERDICT r5
-    # item 8): the flag AND the table's existence are both lineage
+    # the semantic stage is decided UP FRONT and folded into the param
+    # lineage (VERDICT r5 item 8): the flag AND the table's existence
+    # are both lineage, so an embeddings table that appears between
+    # resumed runs of the same run_id invalidates every committed stage
     emb_path = os.path.join(sf_dir, "embeddings.parquet")
     has_embeddings = semantic_dedup and os.path.exists(emb_path)
     if semantic_dedup and not has_embeddings:
-        # unlike media (auto-detected), this stage was explicitly
-        # requested — a silent no-op would look like a successful
-        # SemDeDup run that pruned nothing
+        # this stage was explicitly requested — a silent no-op would
+        # look like a successful SemDeDup run that pruned nothing
         print(
             f"WARNING: --semantic-dedup requested but {emb_path} does not "
             f"exist; the semantic stage is SKIPPED and the corpus is "
@@ -318,10 +168,7 @@ def run_trainprep_job(
         min_quality=min_quality,
         langs=tuple(langs),
         jaccard_threshold=jaccard_threshold,
-        has_media=has_media,
         decontaminate=decontaminate,
-        media_near_dedup=media_near_dedup,
-        media_verify_bytes=media_verify_bytes,
         semantic_dedup=has_embeddings,
         semantic_nlist=semantic_nlist,
         semantic_imi=semantic_imi if has_embeddings else None,
@@ -467,33 +314,6 @@ def run_trainprep_job(
         )
         decon_summary = {"n_contaminated": n_of(os.path.join(out_dir, "decon"))}
 
-    # media stage: runs iff the input carries media.parquet AND docs
-    # carry media_refs (both shapes optional — text-only corpora skip);
-    # has_media was resolved before p_hash so it is part of the lineage
-    media_summary: dict = {}
-    if has_media:
-        media_out = os.path.join(out_dir, "media")
-        sr.run(
-            "media_dedup",
-            lambda: media_stage(
-                spark,
-                spark.read.parquet(media_path),
-                media_out,
-                near_dedup=media_near_dedup,
-                verify_bytes=media_verify_bytes,
-            ),
-            lambda: n_of(os.path.join(media_out, "meta")),
-        )
-        # counts from the WRITTEN outputs — correct whether the stage
-        # ran just now or was skipped on resume
-        m_in = n_of(os.path.join(media_out, "ref_map"))
-        m_kept = n_of(os.path.join(media_out, "meta"))
-        media_summary = {
-            "media_in": m_in,
-            "media_kept": m_kept,
-            "media_dups": m_in - m_kept,
-        }
-
     # optional semantic dedup stage (VERDICT r5 item 8, SemDeDup-shape):
     # embeddings for the SURVIVING docs -> fixed-centroid cells ->
     # capped in-cell cosine -> star components; the prune map (doc_id,
@@ -602,17 +422,6 @@ def run_trainprep_job(
         if has_dsir:
             sel = spark.read.parquet(os.path.join(out_dir, "dsir", "selected"))
             final = final.join(sel.select("doc_id"), "doc_id")
-        if has_media:
-            # remap_media_refs references its input from three plan
-            # branches (with-media / no-media split + the re-join) and
-            # Catalyst does not share subtrees — checkpoint the
-            # keepers⋈filtered join once instead of executing it 3x
-            # (lazy: materializes on the write action; executor-local —
-            # the manifest stage re-run is the recovery on node loss)
-            final = final.localCheckpoint(eager=False)
-            ref_map = spark.read.parquet(os.path.join(out_dir, "media", "ref_map"))
-            final = remap_media_refs(final, ref_map)
-            cols.append("media_refs")
         if shard_budget:
             # equal-token output sharding (the training-file packing
             # step): the distributed prefix sum over the SURVIVING
@@ -682,7 +491,6 @@ def run_trainprep_job(
         **dsir_summary,
         **pack_summary,
         **decon_summary,
-        **media_summary,
         "stage_secs": sr.stage_secs,
         "stages_run": sr.stages_run,
         "stages_skipped": sr.stages_skipped,
@@ -727,12 +535,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="SemDeDup stage: prune cosine-near embedding "
                          "cluster-mates among the dedup keepers (needs "
                          "embeddings.parquet with doc_id in the input dir)")
-    ap.add_argument("--media-verify-bytes", action="store_true",
-                    help="gate near-dup collapse on the fine band-sum "
-                         "verify signature (blocks coarse-psig false merges)")
-    ap.add_argument("--media-near-dedup", action="store_true",
-                    help="also collapse perceptual near-duplicate media "
-                         "(re-encoded copies the byte hash misses)")
     ap.add_argument("--dsir-target", default=None,
                     help="parquet of target-domain docs (doc_id, text): "
                          "enables the DSIR importance-selection stage")
@@ -759,8 +561,6 @@ def main(argv: list[str] | None = None) -> None:
         run_id=args.run_id,
         decontaminate=args.decontaminate,
         components_algorithm=args.components_algorithm,
-        media_near_dedup=args.media_near_dedup,
-        media_verify_bytes=args.media_verify_bytes,
         semantic_dedup=args.semantic_dedup,
         semantic_nlist=args.semantic_nlist,
         semantic_imi=args.semantic_imi,

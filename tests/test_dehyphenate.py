@@ -6,11 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.operators.dehyphenate import dehyphenate
-
-DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
+from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
 def _payload(token, i):
@@ -35,7 +31,7 @@ def _tokens(row):
 
 def test_simple_merge(spark):
     df = spark.createDataFrame(
-        [_doc("d1", [("crea-", "text"), ("ture", "text"), ("next", "text")])], DDL
+        [_doc("d1", [("crea-", "text"), ("ture", "text"), ("next", "text")])], DOCS_DDL
     )
     out = {r.doc_id: r for r in dehyphenate(df).collect()}
     assert _tokens(out["d1"]) == ["creature", "next"]
@@ -44,7 +40,7 @@ def test_simple_merge(spark):
 
 def test_early_modern_double_hyphen(spark):
     df = spark.createDataFrame(
-        [_doc("d1", [("loue⸗", "text"), ("ly", "text")])], DDL
+        [_doc("d1", [("loue⸗", "text"), ("ly", "text")])], DOCS_DDL
     )
     out = dehyphenate(df).collect()[0]
     assert _tokens(out) == ["louely"]
@@ -52,7 +48,7 @@ def test_early_modern_double_hyphen(spark):
 
 def test_chain_is_pairwise_non_overlapping(spark):
     df = spark.createDataFrame(
-        [_doc("d1", [("a-", "text"), ("b-", "text"), ("c", "text")])], DDL
+        [_doc("d1", [("a-", "text"), ("b-", "text"), ("c", "text")])], DOCS_DDL
     )
     out = dehyphenate(df).collect()[0]
     # a- cannot merge into hyphen-ending b-; b- merges c
@@ -61,21 +57,21 @@ def test_chain_is_pairwise_non_overlapping(spark):
 
 def test_media_between_spans_blocks_merge(spark):
     df = spark.createDataFrame(
-        [_doc("d1", [("crea-", "text"), ("img", "image"), ("ture", "text")])], DDL
+        [_doc("d1", [("crea-", "text"), ("img", "image"), ("ture", "text")])], DOCS_DDL
     )
     out = dehyphenate(df).collect()[0]
     assert _tokens(out) == ["crea-", "<image>", "ture"]
 
 
 def test_trailing_hyphen_at_doc_end_kept(spark):
-    df = spark.createDataFrame([_doc("d1", [("crea-", "text")])], DDL)
+    df = spark.createDataFrame([_doc("d1", [("crea-", "text")])], DOCS_DDL)
     out = dehyphenate(df).collect()[0]
     assert _tokens(out) == ["crea-"]
 
 
 def test_merged_span_keeps_first_metadata(spark):
     df = spark.createDataFrame(
-        [_doc("d1", [("crea-", "text"), ("ture", "text")])], DDL
+        [_doc("d1", [("crea-", "text"), ("ture", "text")])], DOCS_DDL
     )
     out = dehyphenate(df).collect()[0]
     assert out.spans[0].text == "creature;bbox 10 10 20 20;x_wconf 90;line 0;col 0"

@@ -13,11 +13,7 @@ from hocr_de_noising_spark.queries.interleaved import (
     caption_pairs,
     media_text_stats,
 )
-
-SPANS_DDL = (
-    "doc_id string, spans array<struct<"
-    "kind:string,text:string,media_ref:string,offset:int>>"
-)
+from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
 def _t(text, off):
@@ -50,7 +46,7 @@ def edge_docs(spark):
                 + [_m(f"pad{i}", i) for i in range(1, CAPTION_WINDOW + 2)]
                 + [_m("m7", CAPTION_WINDOW + 2)]),
     ]
-    return spark.createDataFrame(rows, SPANS_DDL)
+    return spark.createDataFrame(rows, DOCS_DDL)
 
 
 def test_caption_edges(spark, edge_docs):
@@ -80,7 +76,7 @@ def test_caption_edges(spark, edge_docs):
 def test_caption_k_bound(spark):
     # more than CAPTION_K text spans available -> exactly K stitched
     doc = [("k", [_m("mk", 0)] + [_t(f"t{i}", i + 1) for i in range(9)])]
-    df = spark.createDataFrame(doc, SPANS_DDL)
+    df = spark.createDataFrame(doc, DOCS_DDL)
     row = caption_pairs(df).collect()[0]
     assert row["caption"] == " ".join(f"t{i}" for i in range(CAPTION_K))
 
@@ -97,13 +93,13 @@ def test_media_text_stats_gate(spark, edge_docs):
         ("ok", [_t(f"w{i}", i) for i in range(8)] + [_m("mm", 99)]),
     ]
     row = media_text_stats(
-        spark.createDataFrame(keep, SPANS_DDL)
+        spark.createDataFrame(keep, DOCS_DDL)
     ).collect()[0]
     assert row["multimodal_keep"]
 
 
 def test_media_text_stats_covers_empty_spans_doc(spark):
-    df = spark.createDataFrame([("empty", [])], SPANS_DDL)
+    df = spark.createDataFrame([("empty", [])], DOCS_DDL)
     row = media_text_stats(df).collect()[0]
     assert (row["n_text"], row["n_media"], row["n_chars"]) == (0, 0, 0)
     assert not row["multimodal_keep"]

@@ -131,8 +131,8 @@ def test_text_keys_on_adversarial_corpus(spark, tmp_path):
     keys = [
         "lang_id", "quality_score", "text_scrub", "token_count",
         "quality_repetition", "doc_fingerprint", "dedup_exact",
-        "sample_split", "decontaminate_overlap", "dedup_media_near",
-        "pii_scrub", "pii_scrub_strict", "quality_boilerplate",
+        "sample_split", "decontaminate_overlap", "pii_scrub",
+        "pii_scrub_strict", "quality_boilerplate",
         "html_main_content", "dedup_lines", "vocab_topk",
         "quality_perplexity", "url_canonicalize", "bpe_pair_topk",
         "sample_stratified", "shard_token_budget",
@@ -407,6 +407,8 @@ def test_rotation_policy_invariants():
     assert set(order[:n]) == set(entry_mod._CHANGED_SINCE_GREEN), (
         "changed-since-green keys must lead the window"
     )
+    # a key deleted from the registry must leave the rotation too
+    assert set(entry_mod._LAST_GREEN) <= set(QUERIES)
 
 
 def test_dedup_job_end_to_end(spark, tmp_path):
@@ -643,86 +645,6 @@ def test_trainprep_stage_resume(spark, tmp_path):
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-def test_trainprep_media_stage_end_to_end(spark, tmp_path):
-    """VERDICT r3 item 4: media spans flow through the composed
-    pipeline. A media-bearing corpus (documents.media_refs +
-    media.parquet) must survive gates+dedup with refs intact, exact
-    media duplicates collapsed to a canonical ref, and the final
-    corpus's media_refs REMAPPED to canonical refs, order preserved."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    import pyspark.sql.functions as F
-    from run_trainprep import run_trainprep_job
-
-    from hocr_de_noising_spark.operators.multimodal import encode_fake_media
-
-    corpus_dir = tmp_path / "in"
-    corpus_dir.mkdir()
-    texts = [
-        "the merchant entered the green levels near the trees and the "
-        "herd settled there while seven geese crossed the meadow edge",
-        "every evening the lighthouse keeper records the weather then "
-        "sweeps the lenses before the tide recedes beneath the pier",
-        "eleven letters were delivered to the embassy where the envoy "
-        "reviewed each sealed envelope beside the fireplace embers",
-        "the engineers reassembled the engine after replacing severed "
-        "belts and the generator resumed feeding the eastern shelters",
-        "beneath the temple the excavated chamber revealed etched "
-        "verses describing the heavens and the seasons of the river",
-    ]
-    docs = spark.createDataFrame(
-        [
-            (1, texts[0], "en", "src", ["m1", "m3"]),
-            (2, texts[1], "en", "src", ["m2"]),
-            (3, texts[2], "en", "src", []),
-            (4, texts[3], "en", "src", None),
-            (5, texts[4], "en", "src", ["m5", "m1"]),
-        ],
-        "doc_id long, text string, lang string, source string, media_refs array<string>",
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    docs.write.parquet(str(corpus_dir / "documents.parquet"))
-    # m2 and m3 share identical bytes (planted exact dup, m2 canonical);
-    # m5 is undecodable and must be kept mapped to itself
-    media = spark.createDataFrame(
-        [
-            ("m1", "image", encode_fake_media("m1")),
-            ("m2", "image", encode_fake_media("m2")),
-            ("m3", "image", encode_fake_media("m2")),
-            ("m4", "video", encode_fake_media("m4", "video")),
-            ("m5", "image", b"NOTAFAKECONTAINER"),
-        ],
-        "media_ref string, media_type string, content binary",
-    )
-    media.write.parquet(str(corpus_dir / "media.parquet"))
-
-    out = str(tmp_path / "prep")
-    s = run_trainprep_job(
-        spark, str(corpus_dir), out, min_quality=0.2, langs=("en",)
-    )
-    assert s["media_in"] == 5
-    assert s["media_kept"] == 4  # m3 collapsed into m2
-    assert s["media_dups"] == 1
-
-    corpus = spark.read.parquet(os.path.join(out, "corpus"))
-    refs = {r.doc_id: r.media_refs for r in corpus.collect()}
-    assert refs[1] == ["m1", "m2"]  # m3 remapped, order preserved
-    assert refs[2] == ["m2"]
-    assert refs[3] == []
-    assert refs[4] is None
-    assert refs[5] == ["m5", "m1"]  # undecodable kept as itself
-    meta = spark.read.parquet(os.path.join(out, "media", "meta"))
-    kept = {r.media_ref for r in meta.select("media_ref").collect()}
-    assert kept == {"m1", "m2", "m4", "m5"}
-    # every ref the corpus carries is a kept canonical ref
-    used = {
-        r.ref
-        for r in corpus.select(F.explode_outer("media_refs").alias("ref")).collect()
-        if r.ref is not None
-    }
-    assert used <= kept
-
-
 def test_stage_runner_skipped_sentinel(tmp_path):
     """ADVICE r4: a stage skipped on resume must be distinguishable from
     fn() legitimately returning None — it returns the falsy SKIPPED
@@ -832,61 +754,6 @@ def test_barrier_tolerates_post_ready_death(tmp_path):
     release(bdir2, 2, [dead2, live2], timeout_s=30.0)
     t2.join()
     assert os.path.exists(os.path.join(bdir2, "go"))
-
-
-def test_media_arrival_invalidates_resume(spark, tmp_path):
-    """ADVICE r4: media.parquet appearing between resumed runs of the
-    same run_id must invalidate every committed stage (has_media is in
-    params_hash) so the final corpus carries remapped media_refs."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    import pyspark.sql.functions as F
-    from run_trainprep import run_trainprep_job
-
-    from hocr_de_noising_spark.operators.multimodal import encode_fake_media
-
-    corpus_dir = tmp_path / "in"
-    corpus_dir.mkdir()
-    docs = spark.createDataFrame(
-        [
-            (1, "the merchant entered the green levels near the old trees "
-                "and the herd settled while seven geese crossed the meadow",
-             "en", "src", ["m1", "m3"]),
-            (2, "every evening the lighthouse keeper records the weather "
-                "then sweeps the lenses before the tide recedes below",
-             "en", "src", ["m2"]),
-        ],
-        "doc_id long, text string, lang string, source string, "
-        "media_refs array<string>",
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    docs.write.parquet(str(corpus_dir / "documents.parquet"))
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(min_quality=0.2, langs=("en",), manifest_dir=man, run_id="rm")
-    s1 = run_trainprep_job(spark, str(corpus_dir), out, **kwargs)
-    assert "media_in" not in s1  # no media.parquet yet
-
-    # media arrives between runs: m3 is an exact dup of m2
-    media = spark.createDataFrame(
-        [
-            ("m1", "image", encode_fake_media("m1")),
-            ("m2", "image", encode_fake_media("m2")),
-            ("m3", "image", encode_fake_media("m2")),
-        ],
-        "media_ref string, media_type string, content binary",
-    )
-    media.write.parquet(str(corpus_dir / "media.parquet"))
-
-    s2 = run_trainprep_job(spark, str(corpus_dir), out, **kwargs)
-    assert s2["stages_skipped"] == []  # lineage changed -> full re-run
-    assert s2["media_in"] == 3 and s2["media_kept"] == 2
-    refs = {
-        r.doc_id: r.media_refs
-        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
-    }
-    assert refs[1] == ["m1", "m2"]  # m3 remapped in the rewritten corpus
 
 
 def test_trainprep_semantic_stage_and_resume(spark, tmp_path):

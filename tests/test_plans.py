@@ -182,20 +182,6 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
-def test_media_near_is_join_free_single_scan(spark):
-    """dedup_media_near (VERDICT r4 item 3): signatures ride inside the
-    bucket collect_list, pairs + L1 come from array HOFs — no Join, no
-    CartesianProduct, ONE documents scan; the cap window's (tbl,
-    bucket) partitioning satisfies the (tbl, bucket, sub) groupBy
-    clustering, so the plan has exactly two exchanges (cap window +
-    cross-table distinct)."""
-    df = QUERIES["dedup_media_near"]["fn"](spark, SF)
-    p = plan_str(df)
-    assert "Join" not in p and "CartesianProduct" not in p, p
-    assert p.count("Scan parquet") == 1, p
-    assert p.count("Exchange") == 2, p
-
-
 def test_r6_text_keys_plan_shape(spark):
     """pii_scrub is a pure map-side projection (zero exchange, zero
     join, one scan); quality_boilerplate (r7 skew-proof complement

@@ -1,5 +1,6 @@
 """get_spark: Python workers import the package from any working
-directory, without PYTHONPATH set by the caller."""
+directory, without PYTHONPATH set by the caller, and Arrow batches are
+bounded in bytes as well as rows."""
 
 from __future__ import annotations
 
@@ -39,3 +40,36 @@ def test_workers_import_package_from_any_cwd(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert "ROWS 1" in r.stdout, r.stdout[-2000:]
+
+
+def test_arrow_batch_bounds_binary_heavy_rows(spark):
+    """A binary-heavy row group must not become one Arrow batch whose
+    bytes blow worker memory while its row count looks small. Under
+    get_spark's own defaults, 2000 rows of 64 KiB in one partition reach
+    a mapInArrow (the denoise_fused boundary) in batches of at most
+    ARROW_MAX_RECORDS_PER_BATCH rows and ARROW_MAX_BYTES_PER_BATCH bytes
+    plus the one row that crosses the limit; the record bound alone
+    would pass 1024 rows, 64 MiB, in one batch."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from hocr_de_noising_spark.session import (
+        ARROW_MAX_BYTES_PER_BATCH,
+        ARROW_MAX_RECORDS_PER_BATCH,
+    )
+
+    row_bytes = 64 * 1024
+    df = spark.range(0, 2000, numPartitions=1).select(
+        F.expr(f"cast(repeat('x', {row_bytes}) as binary)").alias("content")
+    )
+
+    def shapes(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [b.num_rows], "batch_bytes": [b.nbytes]}
+            )
+
+    got = df.mapInArrow(shapes, "rows long, batch_bytes long").collect()
+    assert sum(r.rows for r in got) == 2000
+    assert max(r.rows for r in got) <= ARROW_MAX_RECORDS_PER_BATCH
+    assert max(r.batch_bytes for r in got) <= ARROW_MAX_BYTES_PER_BATCH + row_bytes
