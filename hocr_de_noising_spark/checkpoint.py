@@ -2,7 +2,7 @@
 
 The production design targets an Iceberg manifest table (snapshot
 lineage per bucket); this sandbox has no Iceberg runtime jar, so the
-manifest is a Parquet directory with atomic temp+rename commits — the
+manifest is a Parquet directory with durable temp+rename commits — the
 protocol (bucket rows, params-hash lineage, anti-join resume) is
 identical (SURVEY.md §7.3 item 3).
 
@@ -20,6 +20,7 @@ idempotent. Per-group metrics ride the write action via df.observe.
 from __future__ import annotations
 
 import os
+import sys
 import time
 import uuid
 
@@ -56,25 +57,44 @@ def bucket_col(doc_col: str, params: Params):
 
 
 class ManifestCheckpoint:
-    """Parquet-backed manifest with atomic appends and resume reads."""
+    """Parquet-backed manifest with durable atomic appends and resume
+    reads. A commit file that does not parse (torn by a host crash
+    before its data reached disk) is renamed to ``.torn-<name>``, which
+    every reader skips, so its buckets recompute on the next run."""
 
     def __init__(self, manifest_dir: str):
         self.dir = manifest_dir
         os.makedirs(manifest_dir, exist_ok=True)
 
     def append_rows(self, rows: list[dict]) -> None:
-        """Atomically commit a batch of bucket rows (temp + rename)."""
+        """Atomically and durably commit a batch of bucket rows: write a
+        temp file, fsync it, rename it into place, fsync the directory."""
         if not rows:
             return
         cols = {f.name: [r[f.name] for r in rows] for f in MANIFEST_SCHEMA}
         table = pa.Table.from_pydict(cols, schema=MANIFEST_SCHEMA)
         tmp = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}.parquet")
         final = os.path.join(self.dir, f"commit-{int(time.time()*1e6)}-{uuid.uuid4().hex[:8]}.parquet")
-        pq.write_table(table, tmp)
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
         os.rename(tmp, final)
+        dir_fd = os.open(self.dir, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
+
+    def _commit_files(self) -> list[str]:
+        return sorted(
+            os.path.join(self.dir, f)
+            for f in os.listdir(self.dir)
+            if f.startswith("commit-") and f.endswith(".parquet")
+        )
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        files = [f for f in os.listdir(self.dir) if f.endswith(".parquet")]
+        files = self._commit_files()
         if not files:
             return None
         return spark.read.schema(
@@ -82,23 +102,31 @@ class ManifestCheckpoint:
             "n_spans_out long, n_noise_dropped long, denoise_rate double, "
             "input_lineage string, params_hash string, status string, "
             "committed_at timestamp"
-        ).parquet(os.path.join(self.dir, "*.parquet"))
+        ).parquet(*files)
 
-    def completed_buckets(self, spark: SparkSession, run_id: str, p_hash: str) -> set[int]:
-        """S7 resume source: buckets already done for this run lineage."""
-        df = self.read(spark)
-        if df is None:
-            return set()
-        rows = (
-            df.filter(
-                (F.col("run_id") == run_id)
-                & (F.col("params_hash") == p_hash)
-                & (F.col("status") == "done")
+    def completed_buckets(self, run_id: str, p_hash: str) -> set[int]:
+        """S7 resume source: buckets already done for this run lineage.
+        Read with pyarrow on the driver, one commit file at a time, so a
+        torn file is quarantined instead of failing the whole read."""
+        done: set[int] = set()
+        for path in self._commit_files():
+            try:
+                t = pq.read_table(path, columns=["run_id", "bucket", "params_hash", "status"])
+            except pa.ArrowInvalid as exc:
+                name = os.path.basename(path)
+                os.rename(path, os.path.join(self.dir, f".torn-{name}"))
+                print(
+                    f"manifest: quarantined torn commit {name} as .torn-{name} "
+                    f"({type(exc).__name__}); its buckets recompute",
+                    file=sys.stderr,
+                )
+                continue
+            done.update(
+                r["bucket"]
+                for r in t.to_pylist()
+                if r["run_id"] == run_id and r["params_hash"] == p_hash and r["status"] == "done"
             )
-            .select("bucket")
-            .collect()
-        )
-        return {r.bucket for r in rows}
+        return done
 
 
 def _bucket_metric_exprs(group_buckets: list[int], spans_sql: str):
@@ -162,7 +190,7 @@ def run_denoise_job(
     p = params or Params()
     ph = params_hash(p)
     ckpt = ManifestCheckpoint(manifest_dir)
-    done = ckpt.completed_buckets(spark, run_id, ph)
+    done = ckpt.completed_buckets(run_id, ph)
 
     if "bucket" in docs.columns:
         # bucketed at rest → scan-time partition pruning; but never

@@ -124,37 +124,6 @@ MALFORMED = [
 ]
 
 
-def write_hocr_corpus(
-    out_dir: str, n_docs: int = 8_000, seed: int = 42, realistic: bool = True
-) -> str:
-    """Cache a raw-hOCR page corpus to parquet for the ingest bench
-    (S2/X1 surface: pages incl. entity-bearing tokens + the malformed
-    tail). ``realistic=True`` sizes pages like actual Tesseract output
-    (~300 words / ~26 KB each). Small row groups keep the file
-    splittable so the scan stage parallelizes at any core count."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    d = os.path.join(out_dir, f"hocr_{n_docs}" + ("_big" if realistic else ""))
-    marker = os.path.join(d, "_DONE")
-    if os.path.exists(marker):
-        return d
-    os.makedirs(d, exist_ok=True)
-    pages, _ = gen_hocr_corpus(n_docs, seed=seed, realistic=realistic)
-    tbl = pa.table(
-        {
-            "doc_id": [p[0] for p in pages],
-            "hocr": [p[1] for p in pages],
-        }
-    )
-    pq.write_table(tbl, os.path.join(d, "pages.parquet"), row_group_size=250)
-    with open(marker, "w") as f:
-        f.write("ok")
-    return d
-
-
 def gen_hocr_corpus(n_docs: int = 30, seed: int = 42, realistic: bool = False):
     """Returns (pages, expected): pages = [(doc_id, hocr)], expected =
     flat list of word records for the well-formed pages."""

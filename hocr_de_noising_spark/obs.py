@@ -30,42 +30,8 @@ def observation_metrics(o: Observation, timeout_s: float = 10.0) -> dict | None:
 
     Never blocks indefinitely. Callers that commit counts must treat
     None as unknown, never as zero.
-
-    The bounded JVM read needs the classic API's ``Observation._jo``;
-    under Spark Connect ``Observation.__new__`` returns a
-    ConnectObservation with no ``_jo`` (ADVICE r3), so that path falls
-    back to ``Observation.get`` on a daemon thread with the same
-    deadline — still never blocking the caller indefinitely. Known
-    trade (r4 review): Python threads cannot be cancelled, so a
-    never-reporting Connect observation leaves its daemon thread
-    parked in ``o.get`` for the process lifetime — one small leaked
-    thread per TIMED-OUT read, only on Connect, only when the node
-    never reports (callers invoke this after the action finished, so
-    the ordinary path returns within milliseconds). The pinned classic
-    session never takes this branch.
     """
     from pyspark.serializers import CPickleSerializer
-
-    if not hasattr(o, "_jo"):  # Spark Connect session
-        import threading
-
-        box: dict = {}
-
-        def _get():
-            # capture, don't swallow (ADVICE r4): a real error from the
-            # Connect query (network failure, cancelled query) must
-            # surface to the caller, not masquerade as a timed-out None
-            try:
-                box["row"] = o.get
-            except Exception as exc:  # noqa: BLE001 — re-raised on join
-                box["exc"] = exc
-
-        t = threading.Thread(target=_get, daemon=True)
-        t.start()
-        t.join(timeout_s)
-        if "exc" in box:
-            raise box["exc"]
-        return dict(box["row"]) if "row" in box else None
 
     deadline = time.monotonic() + timeout_s
     while True:

@@ -53,50 +53,15 @@ def with_survival(df: DataFrame, params: Params | None = None) -> DataFrame:
     return df.withColumn("emitted_text", F.when(is_text, emitted))
 
 
-def with_output_order(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
-    """Reading-order rank + media anchor + final contiguous position."""
-    is_surv_text = (F.col("kind") == "text") & F.col("survives")
-
-    # 1-based reading-order rank among surviving text spans, via a
-    # running conditional count with survivors-first ordering.
-    w_read = (
-        Window.partitionBy(doc_col)
-        .orderBy(
-            F.when(is_surv_text, 0).otherwise(1),
-            F.coalesce(F.col("col_i"), F.lit(_BIG)),
-            F.coalesce(F.col("line_i"), F.lit(_BIG)),
-            F.coalesce(F.col("x0"), F.lit(_BIG)),
-            F.coalesce(F.col("y0"), F.lit(_BIG)),
-            F.col("pos"),
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn(
-        "text_rank", F.sum(F.when(is_surv_text, 1).otherwise(0)).over(w_read)
-    )
-
-    # nearest preceding surviving text span, in input order
-    w_pos = (
-        Window.partitionBy(doc_col)
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    df = df.withColumn(
-        "anchor_rank",
-        F.last(F.when(is_surv_text, F.col("text_rank")), ignorenulls=True).over(w_pos),
-    )
-
-    return df
-
-
 def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
-    """with_output_order + reassemble fused into ONE aggregation with
-    the reading-order sort computed INSIDE the collected array (r8).
+    """Reading-order rank, media anchor and reassembly in ONE
+    aggregation, with the reading-order sort computed INSIDE the
+    collected array (r8).
 
-    The window form paid two full per-partition WindowExec sorts over
-    every exploded span row — the 6-key reading-order sort and the
-    input-order sort for media anchoring — before the reassembly
-    groupBy. Here only ONE cheap window survives (a running count of
+    The earlier window form paid two full per-partition WindowExec
+    sorts over every exploded span row — the 6-key reading-order sort
+    and the input-order sort for media anchoring — before the
+    reassembly groupBy. Here only ONE cheap window survives (a running count of
     surviving text spans in input order, ``acnt``: for any span, the
     1-based input-order index of the nearest preceding-or-self
     surviving text span), and everything else happens per document on
@@ -166,39 +131,3 @@ def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
         "x.media_ref AS media_ref, CAST(i AS int) AS offset))), 1)"
     )
     return rd.select(doc_col, F.expr(spans).alias("spans"))
-
-
-def reassemble(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
-    """Collect surviving spans back into the ordered spans array.
-
-    The final output order is (anchor_rank, text-before-media, input
-    pos) — assigned INSIDE the array: array_sort on the key prefix of
-    the collected structs, then an indexed transform renumbers offsets
-    contiguously. This avoids a third per-doc window sort; the groupBy
-    is an ObjectHashAggregate that needs no sort at all.
-    """
-    k1 = F.coalesce(F.col("anchor_rank"), F.lit(-1))
-    k2 = F.when(F.col("kind") == "text", 0).otherwise(1)
-    span = F.struct(
-        F.col("kind").alias("kind"),
-        F.col("emitted_text").alias("text"),
-        F.col("media_ref").alias("media_ref"),
-    )
-    keyed = F.when(
-        F.col("survives"),
-        F.struct(
-            k1.alias("k1"), k2.alias("k2"), F.col("pos").alias("k3"), span.alias("s")
-        ),
-    )
-    return (
-        df.groupBy(doc_col)
-        .agg(F.array_sort(F.collect_list(keyed)).alias("keyed"))
-        .select(
-            doc_col,
-            F.expr(
-                "transform(keyed, (x, i) -> "
-                "struct(x.s.kind AS kind, x.s.text AS text, "
-                "x.s.media_ref AS media_ref, CAST(i AS int) AS offset))"
-            ).alias("spans"),
-        )
-    )

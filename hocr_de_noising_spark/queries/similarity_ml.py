@@ -98,26 +98,14 @@ def ivf_build_and_search(
     )
 
 
-def ann_ivf(spark, sf):
-    """IVF-Flat ANN: coarse-quantize, probe 3 of 16 cells, exact cosine
-    within candidates.
-
-    Demoted from the driver registry in r7 (VERDICT r6 item 8): KMeans
-    is seed/iteration-dependent so the key was permanently rows-only,
-    while ann_ivf_fixed hash-checks the same assignment/probe/rerank
-    machinery against DuckDB; the recall-vs-bruteforce contract lives
-    in tests/test_similarity_ml.py (>=0.5 at nprobe=nlist/2)."""
-    return ivf_build_and_search(load(spark, sf, "embeddings"))
-
-
 # ---------------------------------------------------------------------------
-# Fixed-centroid IVF (VERDICT r5 item 7): the seed dependence that
-# forces ann_ivf to rows-only vanishes when the coarse quantizer's
+# Fixed-centroid IVF (VERDICT r5 item 7): the seed dependence of the
+# learned-centroid ivf_build_and_search vanishes when the coarse quantizer's
 # centroids are FIXED LITERALS shared with DuckDB — the same trick as
 # ann_lsh_bucketed's literal hyperplanes. Centroids are sparse {+1,-1}
 # directions from the LCG (a data-independent random coarse quantizer;
 # recall quality still comes from nprobe, and the learned-centroid
-# variant remains ann_ivf). Every step is engine-portable: the dot
+# variant remains ivf_build_and_search). Every step is engine-portable: the dot
 # products fold left-to-right over identical literals, the argmax cell
 # uses >= chains with lowest-index ties, cosines are rounded before
 # ranking, and NULL cosines (zero-norm vectors) are filtered before
@@ -436,10 +424,8 @@ def _assigned_blocks(
     else:
         row = e.select(F.size("v").alias("n")).first()
         if row is None:
-            # empty embeddings frame: .n on None would crash the whole
-            # job (reachable from run_trainprep when the keeper-
-            # restricted embeddings join is empty) — any cell id works,
-            # the frame has no rows to mis-assign
+            # empty embeddings frame: .n on None would crash — any
+            # cell id works, the frame has no rows to mis-assign
             assigned = e.withColumn("cell", F.lit(0))
         else:
             assign = (

@@ -160,10 +160,8 @@ def dedup_minhash_lsh(spark, sf):
 
 def minhash_pairs_from_base(hv):
     """Candidate pairs from a (doc_id, hp) frame where ``hp`` is the
-    31-bit base hash of one shingle — the shared tail of
-    ``dedup_minhash_lsh`` (which computes hp from text) and the dedup
-    job's materialized raw-shingle path (which reads hp from parquet
-    and skips the second full text scan + shingle explosion)."""
+    31-bit base hash of one shingle — the signature, banding and
+    pair tail of ``dedup_minhash_lsh``, which computes hp from text."""
     sig = hv.select(
         "doc_id",
         *[
@@ -281,9 +279,8 @@ def capped_shingles(spark, sf, n: int = 3, df_cap: int = JACCARD_DF_CAP):
     tests/test_plans.py), so the join's per-key fan-out is <= df_cap.
 
     The ``shingle`` column is the n-gram's xxhash64 int64: every
-    consumer — jaccard intersection, decon leakage check, the dedup
-    job's materialized shingle stage — needs only EQUALITY of
-    shingles (no hash value ever reaches an output), and 8-byte ints
+    consumer — jaccard intersection, decon leakage check — needs
+    only EQUALITY of shingles (no hash value ever reaches an output), and 8-byte ints
     through the df window + groupBy shuffles beat 30-40-char strings
     ~4x on shuffle bytes (r5). r6: xxhash64 replaces the md5+conv
     trick — the crypto hash was 4.1 s of the 13.1 s map side at 1M
@@ -304,9 +301,8 @@ def capped_from_hashed(
     share: bool = True,
     hot_broadcast: bool = True,
 ):
-    """df-cap over a pre-hashed (doc_id, shingle int64) frame — shared
-    by ``capped_shingles`` and the dedup job's materialized raw-shingle
-    path.
+    """df-cap over a pre-hashed (doc_id, shingle int64) frame — the
+    second half of ``capped_shingles``.
 
     Skew-proof shape (r7, VERDICT r6 item 2): the r6 form computed df
     with ``count() OVER (PARTITION BY shingle)``, and WindowExec
@@ -326,7 +322,7 @@ def capped_from_hashed(
     ``share=True`` lazily localCheckpoints the input so the hot-count
     pass and the anti-join probe compute the (text-scan + shingle)
     subtree once — pass False when ``sh`` is already a materialized
-    table (run_dedup's raw_shingles parquet). ``hot_broadcast=False``
+    table (a parquet read). ``hot_broadcast=False``
     is the escape hatch for a corpus whose over-cap vocabulary
     outgrows a broadcast (AQE skew-join then splits the probe side;
     the anti-join's per-key fan-out is 1 either way)."""
@@ -343,30 +339,10 @@ def capped_from_hashed(
     return sh.join(hot, "shingle", "left_anti")
 
 
-def raw_shingle_table(spark, sf, n: int = 3):
-    """ONE text scan producing both hash views of every distinct
-    shingle: (doc_id, shingle=xxhash64 equality key, hp=31-bit minhash
-    base). The dedup job materializes this ONCE so the LSH stage and
-    the df-cap/jaccard stage stop regenerating shingles from text
-    independently (each regeneration = full corpus scan + split +
-    3-gram transform + array_distinct + explode — 2x ~10 s at 1M docs,
-    and at 100 TB a second full read of the text corpus where the
-    materialized int table is ~7x smaller)."""
-    return _shingles(spark, sf, n).select(
-        "doc_id",
-        F.xxhash64("shingle").alias("shingle"),
-        F.expr(
-            f"cast(conv(substr(md5(shingle), 1, 15), 16, 10) as bigint)"
-            f" % {MINHASH_P}"
-        ).alias("hp"),
-    )
-
-
 @register("dedup_ngram_jaccard", _JACCARD_SQL)
 def dedup_ngram_jaccard(spark, sf):
     """Exact n-gram Jaccard over every pair sharing >=1 bounded-df
-    shingle (the standalone/oracle form; the production pipeline
-    verifies ONLY the LSH candidates via ``jaccard_for_pairs``).
+    shingle.
     Stop-phrase shingles (df > JACCARD_DF_CAP) are dropped up front,
     which bounds the per-shingle member list to df_cap — so the
     intersection counts come from in-array pair combinations
@@ -725,12 +701,10 @@ def ann_lsh_bucketed(spark, sf):
 
 # ---------------------------------------------------------- text analysis --
 
-# Shared Column-expression builders for the corpus gate operators.
-# Factored out of the registry functions (VERDICT r3 item 1) so the
-# composed trainprep job can stack EVERY gate expression over ONE
-# documents scan — Catalyst does NOT collapse self-equi-joins of the
-# same table, so composing the registry DataFrames via join would plan
-# three full-corpus shuffle joins where zero are needed.
+# Shared Column-expression builders for the corpus gate operators,
+# factored out of the registry functions (VERDICT r3 item 1) so a
+# caller can stack every gate expression over ONE documents scan —
+# Catalyst does NOT collapse self-equi-joins of the same table.
 
 
 def lang_exprs(text: str = "text") -> dict:
@@ -928,12 +902,8 @@ GROUP BY e.doc_id, e.split
 """
 
 
-def decon_overlap(spark, sf, keep=None, broadcast_keep=True):
-    """Core of the decontamination check; ``keep`` optionally restricts
-    BOTH sides to a surviving-doc set (a (doc_id) DataFrame) — the
-    composed job passes the dedup keepers so that neither a removed
-    train doc can raise a false leakage flag nor a removed eval doc
-    clutter the report (r4 review).
+def decon_overlap(spark, sf):
+    """Core of the decontamination check.
 
     Skew-proof stats+semi-join shape (r7, VERDICT r6 item 2 — replaces
     the r6 fused window): the r6 form computed df and has_train with
@@ -945,23 +915,19 @@ def decon_overlap(spark, sf, keep=None, broadcast_keep=True):
     comes from ONE hash aggregate with map-side partials (a hot
     shingle contributes at most one partial (count, max) row per map
     task to the shuffle), the qualifying shingle set (df <= cap AND
-    has kept-train member) is left-semi-joined back onto ONLY the
-    kept eval shingle stream (per-key build fan-out exactly 1, so AQE
+    has a train member) is left-semi-joined back onto ONLY the
+    eval shingle stream (per-key build fan-out exactly 1, so AQE
     skew-split can carve a hot probe partition — unlike a window),
-    and the final (doc_id, split) count is unchanged. split/kept are
+    and the final (doc_id, split) count is unchanged. split is
     computed per DOCUMENT before the explode (the r6 form paid the
-    md5 nibble + keeper probe per exploded row — ~100x more calls at
+    md5 nibble per exploded row — ~100x more calls at
     ~100 shingles/doc), which is also why the second scan reads only
     eval docs (~25% of the corpus under the md5-nibble split). Two
     scans by design: sharing the exploded subtree via localCheckpoint
     measured 2.7x SLOWER at 1M docs (deserialized row storage
     dominates — BENCH ab_decon_skewfix), while the second bounded
     scan lands the whole rewrite at ~1.2x the r6 window with the
-    skew class eliminated. df stays defined over the FULL corpus —
-    keepers and non-keepers — exactly as before. The keeper
-    restriction rides as a broadcast-left-join FLAG (map-side, ~16 MB
-    per 1M keeper ids; ``broadcast_keep=False`` is the >100M-keeper
-    escape hatch; it falls back to a shuffle join)."""
+    skew class eliminated. df stays defined over the FULL corpus."""
     n = 5
     toks = F.split("text", " ")
     d = load(spark, sf, "documents").filter(
@@ -972,15 +938,6 @@ def decon_overlap(spark, sf, keep=None, broadcast_keep=True):
         "split",
         F.when(nib < "c", "train").when(nib < "e", "val").otherwise("test"),
     )
-    if keep is not None:
-        keep_side = keep.select("doc_id").withColumn("kept", F.lit(True))
-        if broadcast_keep:
-            keep_side = F.broadcast(keep_side)
-        d = d.join(keep_side, "doc_id", "left").withColumn(
-            "kept", F.coalesce("kept", F.lit(False))
-        )
-    else:
-        d = d.withColumn("kept", F.lit(True))
     # let-bound token array: split once per doc, not once per shingle
     shingle_arr = F.expr(
         let_sql(
@@ -990,7 +947,7 @@ def decon_overlap(spark, sf, keep=None, broadcast_keep=True):
             f" i -> xxhash64(concat_ws(' ', slice(t, i, {n})))))",
         )
     )
-    tk = (F.col("kept") & (F.col("split") == "train")).cast("int")
+    tk = (F.col("split") == "train").cast("int")
     stats = (
         d.select(tk.alias("tk"), F.explode(shingle_arr).alias("shingle"))
         .groupBy("shingle")
@@ -999,7 +956,7 @@ def decon_overlap(spark, sf, keep=None, broadcast_keep=True):
     good = stats.filter(
         (F.col("df") <= JACCARD_DF_CAP) & (F.col("ht") == 1)
     ).select("shingle")
-    ev = d.filter(F.col("kept") & (F.col("split") != "train")).select(
+    ev = d.filter(F.col("split") != "train").select(
         "doc_id", "split", F.explode(shingle_arr).alias("shingle")
     )
     return (
@@ -1500,50 +1457,4 @@ def sample_split(spark, sf):
     return load(spark, sf, "documents").select(
         "doc_id",
         F.when(nib < "c", "train").when(nib < "e", "val").otherwise("test").alias("split"),
-    )
-
-
-def jaccard_for_pairs(spark, sf, pairs, threshold: float = 0.2, n: int = 3,
-                      shingles=None):
-    """Exact n-gram Jaccard for a GIVEN candidate-pair set (the
-    verification stage behind MinHash LSH): intersections come from
-    pairs ⋈ shingles(a) ⋈ shingles(b) equi joins, so the fan-out per
-    pair is bounded by the docs' own shingle counts — never an
-    all-pairs product. Shingles are df-capped like dedup_ngram_jaccard
-    so a stop-phrase cannot inflate the per-shingle join either.
-
-    The shingle relation is referenced FOUR times below (a side, b
-    side, and the two size joins) and Catalyst does not share plan
-    subtrees (r4 review: the plan showed 4 corpus scans + 4 df-cap
-    windows). Pass ``shingles`` (a materialized capped-shingle table —
-    run_dedup_job writes one as its own resumable stage; it MUST have
-    been built with the same n-gram size, since ``n`` only governs the
-    fallback) to compute the subtree once; standalone callers fall
-    back to a LAZY localCheckpoint — computed once on the first
-    action, shared by all four references, and no corpus scan fires
-    from merely constructing the plan. NB localCheckpoint blocks are
-    executor-local (not fault-tolerant); the composed job's manifest
-    stage re-run is the recovery path on executor loss."""
-    sh = (
-        shingles
-        if shingles is not None
-        else capped_shingles(spark, sf, n).localCheckpoint(eager=False)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(a, "doc_a")
-        .join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jac", F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i")))
-        .filter(F.col("jac") >= threshold)
-        .select("doc_a", "doc_b", F.round("jac", 4).alias("jaccard"))
     )

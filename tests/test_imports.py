@@ -1,9 +1,10 @@
 """Every module of the package, the jobs, the scripts and
 ``__spark_entry__.py`` imports cleanly, so an import left dangling by a
 deleted module fails the suite instead of the first run that reaches
-it; and no module of the package or the jobs keeps a module-level
-import it never uses, so one left behind by a deleted code path fails
-too."""
+it; no module of the package or the jobs keeps a module-level import
+it never uses, so one left behind by a deleted code path fails too;
+and every top-level function or class of the package is referenced
+somewhere, so a helper orphaned by a deleted caller fails as well."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import importlib
 import importlib.util
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -84,3 +86,57 @@ def test_no_unused_module_imports():
     ]
     unused = [u for p in paths for u in _unused_imports(p)]
     assert not unused, unused
+
+
+def _is_registered_query(node: ast.AST) -> bool:
+    """``@register(...)``-decorated: reached through the QUERIES
+    registry, never by name."""
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "register"
+        for d in node.decorator_list
+    )
+
+
+def _referenced_names(tree: ast.AST) -> Counter:
+    refs: Counter = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            refs[node.attr] += 1
+        elif isinstance(node, ast.ImportFrom):
+            refs.update(a.name for a in node.names)
+    return refs
+
+
+def test_every_package_definition_is_referenced():
+    """Each top-level ``def``/``class`` of the package must be named
+    (as a Name, an Attribute or an imported alias) somewhere in the
+    package, the jobs, the scripts, the benchmark, the tests or
+    ``__spark_entry__.py``; references inside the definition's own
+    body (recursion) do not count. The function-level twin of
+    test_no_unused_module_imports."""
+    paths = sorted(
+        os.path.relpath(p, REPO)
+        for d in ("hocr_de_noising_spark", "jobs", "scripts", "perfbench", "tests")
+        for p in glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
+    ) + ["__spark_entry__.py"]
+    refs: Counter = Counter()
+    defs: list[tuple[str, ast.AST]] = []
+    for path in paths:
+        with open(os.path.join(REPO, path)) as f:
+            tree = ast.parse(f.read(), path)
+        refs += _referenced_names(tree)
+        if path.startswith("hocr_de_noising_spark"):
+            defs += [
+                (path, node)
+                for node in tree.body
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not _is_registered_query(node)
+            ]
+    orphans = [
+        f"{path}:{node.lineno} {node.name}"
+        for path, node in defs
+        if refs[node.name] <= _referenced_names(node)[node.name]
+    ]
+    assert not orphans, orphans

@@ -42,29 +42,6 @@ def test_empty_row_reads_as_zero_not_timeout():
     assert observation_metrics(classic(None), timeout_s=0.2) is None
 
 
-def test_connect_shaped_observation_fallback():
-    """ADVICE r3: under Spark Connect, Observation has no ``_jo`` —
-    the reader must fall back to a deadline-bounded ``.get`` read
-    instead of crashing with AttributeError."""
-    import time
-
-    class _Delivered:  # ConnectObservation shape: .get property, no _jo
-        @property
-        def get(self):
-            return {"s": 7}
-
-    class _NeverDelivers:
-        @property
-        def get(self):
-            time.sleep(60)
-            return {}
-
-    assert observation_metrics(_Delivered(), timeout_s=2.0) == {"s": 7}
-    t0 = time.time()
-    assert observation_metrics(_NeverDelivers(), timeout_s=0.5) is None
-    assert time.time() - t0 < 5
-
-
 def test_metrics_through_local_checkpoint(spark):
     """The components loops fold their convergence count into the
     localCheckpoint materialization — the listener must deliver through
@@ -74,18 +51,3 @@ def test_metrics_through_local_checkpoint(spark):
     assert df.count() == 50
     m = observation_metrics(o)
     assert m == {"s": 1225}
-
-
-def test_connect_fallback_reraises_real_errors():
-    """ADVICE r4: a real error from the Connect query (network failure,
-    cancelled query) must surface to the caller, not masquerade as a
-    pruned-node None."""
-    import pytest
-
-    class _Raises:  # ConnectObservation shape whose read fails for real
-        @property
-        def get(self):
-            raise ValueError("query was cancelled")
-
-    with pytest.raises(ValueError, match="cancelled"):
-        observation_metrics(_Raises(), timeout_s=2.0)

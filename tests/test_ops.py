@@ -411,258 +411,6 @@ def test_rotation_policy_invariants():
     assert set(entry_mod._LAST_GREEN) <= set(QUERIES)
 
 
-def test_dedup_job_end_to_end(spark, tmp_path):
-    """jobs/run_dedup.py composition: candidate -> cluster -> keepers,
-    with the invariants a dedup pipeline must hold: every cluster keeps
-    exactly one representative, keepers + clustered non-reps == corpus."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_dedup import run_dedup_job
-
-    out = str(tmp_path / "dedup")
-    # threshold 0.05: the sf0.001 corpus has weaker near-dups than
-    # sf0.01; verification must still prune some candidates
-    s = run_dedup_job(spark, SF_DIR, out, jaccard_threshold=0.05)
-    assert s["candidate_pairs"] > 0 and s["clustered_docs"] > 0
-    assert 0 < s["verified_pairs"] <= s["candidate_pairs"]
-    comps = spark.read.parquet(os.path.join(out, "components"))
-    # each component's representative is its own min member
-    import pyspark.sql.functions as F
-
-    bad = comps.groupBy("component").agg(F.min("doc_id").alias("m")).filter(
-        "component <> m"
-    )
-    assert bad.count() == 0
-    n_docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
-    n_dropped = comps.filter("doc_id <> component").count()
-    assert s["keepers"] == n_docs - n_dropped
-
-
-def test_trainprep_job_end_to_end(spark, tmp_path):
-    """jobs/run_trainprep.py composition: scrub -> quality/lang gates ->
-    dedup -> split. Invariants: monotone shrinking counts, only gated
-    languages survive, digits are masked, splits assigned, no doc kept
-    twice."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    import pyspark.sql.functions as F
-
-    out = str(tmp_path / "prep")
-    s = run_trainprep_job(
-        spark, SF_DIR, out, min_quality=0.4, langs=("en",), jaccard_threshold=0.05
-    )
-    assert s["n_input"] >= s["n_after_gates"] >= s["n_final"] > 0
-    assert s["gated_out"] > 0  # the sf corpus plants non-en/low-quality docs
-    assert s["dedup_removed"] == s["n_after_gates"] - s["n_final"]
-    corpus = spark.read.parquet(os.path.join(out, "corpus"))
-    assert corpus.count() == s["n_final"]
-    assert {r.lang for r in corpus.select("lang").distinct().collect()} == {"en"}
-    assert {r.split for r in corpus.select("split").distinct().collect()} <= {
-        "train", "val", "test"
-    }
-    assert corpus.groupBy("doc_id").count().filter("count > 1").count() == 0
-    # scrub ran: no digit runs survive in the final text
-    assert corpus.filter(F.col("text").rlike("[0-9]")).count() == 0
-
-
-def test_dedup_job_star_components_identical(spark, tmp_path):
-    """components_algorithm='star' (O(log n) rounds) must produce a
-    bit-identical components table to the default propagate loop."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_dedup import run_dedup_job
-
-    a = str(tmp_path / "prop")
-    b = str(tmp_path / "star")
-    run_dedup_job(spark, SF_DIR, a, jaccard_threshold=0.05)
-    run_dedup_job(
-        spark, SF_DIR, b, jaccard_threshold=0.05, components_algorithm="star"
-    )
-    ca = spark.read.parquet(os.path.join(a, "components"))
-    cb = spark.read.parquet(os.path.join(b, "components"))
-    assert ca.exceptAll(cb).isEmpty() and cb.exceptAll(ca).isEmpty()
-    assert ca.count() > 0
-
-
-def test_trainprep_decontaminate_stage(spark, tmp_path):
-    """--decontaminate writes a report of SURVIVING val/test docs that
-    share a 5-gram shingle with the train split; every reported doc
-    must be a keeper outside the train split, and the corpus itself is
-    left intact (report-only)."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    out = str(tmp_path / "prep")
-    s = run_trainprep_job(
-        spark, SF_DIR, out, min_quality=0.4, langs=("en",),
-        jaccard_threshold=0.05, decontaminate=True,
-    )
-    assert "n_contaminated" in s
-    rep = spark.read.parquet(os.path.join(out, "decon"))
-    assert rep.count() == s["n_contaminated"]
-    assert set(rep.columns) == {"doc_id", "split", "n_shared"}
-    keepers = spark.read.parquet(os.path.join(out, "dedup", "keepers"))
-    assert rep.filter("split = 'train'").count() == 0
-    assert rep.join(keepers, "doc_id", "left_anti").count() == 0
-    # corpus untouched by the report
-    assert s["n_final"] == spark.read.parquet(os.path.join(out, "corpus")).count()
-
-
-def test_trainprep_decon_ignores_dedup_removed_train_docs(spark, tmp_path):
-    """r4 review: a train doc that dedup REMOVED must not raise a false
-    leakage flag. Doc 0 (eval split by md5 nibble) is an exact dup of
-    doc 4 (train split); dedup keeps 0 and removes 4, so 0 must NOT be
-    reported. Doc 1 (eval) genuinely shares a 5-gram with surviving
-    train doc 6 and MUST be reported."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    shared = "the weavers repaired the enormous tapestry"
-    dup = (
-        "beneath the eaves the restless swallows assembled their nests "
-        "while the keeper swept the terrace every evening before the bells"
-    )
-    fill = [
-        "eleven green lanterns were lighted beside the eastern gate when "
-        "the evening ferry delivered the letters to the sleepy village",
-        "the engineers measured the riverbed then erected the temporary "
-        "bridge before the weather turned and the levels receded again",
-        "every merchant weighed the peppercorns twice because the ledger "
-        "demanded evidence of each measure entered beside the seal",
-    ]
-    rows = [
-        (0, dup),  # eval, exact dup of 4 -> kept, must NOT be flagged
-        (1, shared + " " + fill[0]),  # eval, overlaps train doc 6 -> flagged
-        (4, dup),  # train, removed by dedup
-        (6, shared + " " + fill[1]),  # train, survives
-        (7, fill[2]),  # train, no overlap
-    ]
-    docs = spark.createDataFrame(
-        [(i, t, "en", "src", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    docs.write.parquet(str(src / "documents.parquet"))
-    out = str(tmp_path / "prep")
-    run_trainprep_job(
-        spark, str(src), out, min_quality=0.2, langs=("en",),
-        jaccard_threshold=0.2, decontaminate=True,
-    )
-    keepers = {r.doc_id for r in spark.read.parquet(
-        os.path.join(out, "dedup", "keepers")).collect()}
-    assert 0 in keepers and 4 not in keepers
-    flagged = {r.doc_id for r in spark.read.parquet(
-        os.path.join(out, "decon")).collect()}
-    assert 1 in flagged
-    assert 0 not in flagged  # its only train overlap was removed by dedup
-
-
-def test_trainprep_resume_invalidated_by_gate_params(spark, tmp_path):
-    """r4 review: rerunning a manifested trainprep with DIFFERENT gate
-    params rewrites filtered/ at the same path — the dedup sub-job's
-    stages must re-run (its hash folds in the upstream gate hash), not
-    silently reuse keepers computed against the old corpus."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    run_trainprep_job(
-        spark, SF_DIR, out, manifest_dir=man, run_id="rv",
-        min_quality=0.4, langs=("en",), jaccard_threshold=0.05,
-    )
-    s2 = run_trainprep_job(
-        spark, SF_DIR, out, manifest_dir=man, run_id="rv",
-        min_quality=0.3, langs=("en",), jaccard_threshold=0.05,
-    )
-    assert s2["stages_skipped"] == []  # gate hash changed -> all re-run
-    assert s2["dedup"]["stages_skipped"] == []  # upstream hash propagated
-
-
-def test_stage_manifest_unit(tmp_path):
-    """Atomic commits, lineage scoping: different run_id, job or params
-    hash must not leak completions across runs."""
-    from hocr_de_noising_spark.stage_manifest import StageManifest, params_hash
-
-    m = StageManifest(str(tmp_path / "man"))
-    h = params_hash(input="/x", jaccard_threshold=0.2)
-    m.commit("r1", "dedup", "exact", 100, 1.5, h)
-    m.commit("r1", "dedup", "lsh_candidates", 40, 2.0, h)
-    assert m.completed("r1", "dedup", h) == {"exact", "lsh_candidates"}
-    assert m.completed("r2", "dedup", h) == set()
-    assert m.completed("r1", "trainprep", h) == set()
-    other = params_hash(input="/x", jaccard_threshold=0.3)
-    assert m.completed("r1", "dedup", other) == set()
-
-
-def test_trainprep_stage_resume(spark, tmp_path):
-    """VERDICT r3 item 8 (stretch): kill/restart on the composed
-    trainprep job must skip completed stages. A crash is injected after
-    the dedup sub-job's lsh_candidates stage commits; the restarted run
-    must skip the gate stage and the first two dedup stages, run the
-    rest, and produce the same final corpus as an un-crashed run."""
-    import sys
-
-    import pytest as _pytest
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(min_quality=0.4, langs=("en",), jaccard_threshold=0.05)
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        run_trainprep_job(
-            spark, SF_DIR, out, manifest_dir=man, run_id="rv",
-            fail_after_stage="lsh_candidates", **kwargs,
-        )
-    s2 = run_trainprep_job(spark, SF_DIR, out, manifest_dir=man, run_id="rv", **kwargs)
-    assert s2["stages_skipped"] == ["scrub_and_gates"]
-    assert s2["dedup"]["stages_skipped"] == [
-        "exact", "raw_shingles", "lsh_candidates",
-    ]
-    assert set(s2["dedup"]["stages_run"]) == {
-        "shingles", "jaccard_verify", "components", "keepers_split",
-    }
-    # resumed output equals an un-crashed fresh run
-    s3 = run_trainprep_job(spark, SF_DIR, str(tmp_path / "prep2"), **kwargs)
-    assert s2["n_final"] == s3["n_final"]
-    assert s2["n_after_gates"] == s3["n_after_gates"]
-    a = spark.read.parquet(os.path.join(out, "corpus"))
-    b = spark.read.parquet(str(tmp_path / "prep2" / "corpus"))
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def test_stage_runner_skipped_sentinel(tmp_path):
-    """ADVICE r4: a stage skipped on resume must be distinguishable from
-    fn() legitimately returning None — it returns the falsy SKIPPED
-    sentinel, never None."""
-    from hocr_de_noising_spark.stage_manifest import (
-        SKIPPED, StageManifest, StageRunner, params_hash,
-    )
-
-    m = StageManifest(str(tmp_path / "man"))
-    h = params_hash(x=1)
-    r1 = StageRunner(m, "rid", "job", h)
-    assert r1.run("s1", lambda: None) is None  # ran, fn returned None
-    r2 = StageRunner(m, "rid", "job", h)
-    out = r2.run("s1", lambda: None)
-    assert out is SKIPPED and out is not None and not out
-    assert repr(out) == "<stage skipped on resume>"
-
-
 def test_barrier_fails_fast_on_dead_child(tmp_path):
     """ADVICE r4: a worker that dies before writing its ready file must
     fail the barrier immediately, not after the full timeout."""
@@ -756,195 +504,6 @@ def test_barrier_tolerates_post_ready_death(tmp_path):
     assert os.path.exists(os.path.join(bdir2, "go"))
 
 
-def test_trainprep_semantic_stage_and_resume(spark, tmp_path):
-    """VERDICT r5 item 8: the SemDeDup stage prunes a planted
-    cosine-near embedding pair among the dedup keepers (keeping the
-    min-doc_id representative), commits as its own manifest stage, and
-    a crash right after it resumes with the stage skipped and the same
-    final corpus."""
-    import hashlib as _hashlib
-    import sys
-
-    import pytest as _pytest
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    import pyspark.sql.functions as F
-    from run_trainprep import run_trainprep_job
-
-    kwargs = dict(min_quality=0.4, langs=("en",), jaccard_threshold=0.05)
-
-    # baseline run (no semantic stage) to learn the surviving doc ids
-    base = run_trainprep_job(spark, SF_DIR, str(tmp_path / "base"), **kwargs)
-    survivors = sorted(
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "base" / "corpus"))
-        .select("doc_id")
-        .collect()
-    )
-    assert len(survivors) >= 2
-    near_a, near_b = survivors[0], survivors[1]
-
-    # custom input dir: same documents + embeddings with doc_id — two
-    # survivors share a near-identical embedding, everyone else gets a
-    # deterministic pseudo-random (mutually far) vector
-    inp = str(tmp_path / "inp")
-    spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).write.parquet(
-        os.path.join(inp, "documents.parquet")
-    )
-
-    def vec(doc_id) -> list[float]:
-        h = _hashlib.md5(str(doc_id).encode()).digest() * 4
-        return [float(b) - 127.5 for b in h[:64]]
-
-    rows = []
-    for r in spark.read.parquet(os.path.join(inp, "documents.parquet")).select("doc_id").collect():
-        d = r.doc_id
-        if d == near_b:
-            v = [x + 0.01 for x in vec(near_a)]  # cosine ~1 vs near_a
-        else:
-            v = vec(d)
-        rows.append((d, v))
-    spark.createDataFrame(rows, "doc_id long, embedding array<float>").write.parquet(
-        os.path.join(inp, "embeddings.parquet")
-    )
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        run_trainprep_job(
-            spark, inp, out, manifest_dir=man, run_id="rs",
-            fail_after_stage="semantic_dedup", semantic_dedup=True, **kwargs,
-        )
-    s2 = run_trainprep_job(
-        spark, inp, out, manifest_dir=man, run_id="rs",
-        semantic_dedup=True, **kwargs,
-    )
-    assert "semantic_dedup" in s2["stages_skipped"]
-    assert s2["semantic_pruned"] >= 1
-    prune = {
-        r.doc_id: r.sem_rep
-        for r in spark.read.parquet(
-            os.path.join(out, "semantic", "prune_map")
-        ).collect()
-    }
-    assert prune.get(near_b) == near_a  # min-id representative kept
-    corpus_ids = {
-        r.doc_id
-        for r in spark.read.parquet(os.path.join(out, "corpus"))
-        .select("doc_id")
-        .collect()
-    }
-    assert near_a in corpus_ids and near_b not in corpus_ids
-    assert s2["n_final"] == base["n_final"] - s2["semantic_pruned"]
-
-    # fresh (non-resumed) run agrees
-    s3 = run_trainprep_job(
-        spark, inp, str(tmp_path / "prep2"), semantic_dedup=True, **kwargs
-    )
-    assert s3["semantic_pruned"] == s2["semantic_pruned"]
-    assert s3["n_final"] == s2["n_final"]
-
-
-def test_trainprep_decon_stage_resume(spark, tmp_path):
-    """VERDICT r4 item 8: the decontamination report is its own
-    manifest stage — a crash after it commits must let the restarted
-    run skip it (and everything before it) and still produce the same
-    summary counts."""
-    import sys
-
-    import pytest as _pytest
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(
-        min_quality=0.4, langs=("en",), jaccard_threshold=0.05,
-        decontaminate=True,
-    )
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        run_trainprep_job(
-            spark, SF_DIR, out, manifest_dir=man, run_id="rd",
-            fail_after_stage="decontaminate", **kwargs,
-        )
-    s2 = run_trainprep_job(spark, SF_DIR, out, manifest_dir=man, run_id="rd", **kwargs)
-    assert "decontaminate" in s2["stages_skipped"]
-    assert "scrub_and_gates" in s2["stages_skipped"]
-    assert s2["dedup"]["stages_skipped"] == [
-        "exact", "raw_shingles", "lsh_candidates", "shingles",
-        "jaccard_verify", "components", "keepers_split",
-    ]
-    # the skipped stage's report is read from disk, so the count holds
-    s3 = run_trainprep_job(spark, SF_DIR, str(tmp_path / "prep2"), **kwargs)
-    assert s2["n_contaminated"] == s3["n_contaminated"]
-    assert s2["n_final"] == s3["n_final"]
-
-
-def test_trainprep_line_dedup_stage(spark, tmp_path):
-    """--line-dedup (r7): the CCNet-style line-level stage strips
-    cross-doc boilerplate lines BEFORE document dedup, drops docs
-    emptied by the strip, and is resumable with line_df_cap in the
-    param lineage."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    bp = "subscribe to the evening newsletter delivered every week"
-    fills = [
-        "eleven green lanterns were lighted beside the eastern gate",
-        "the engineers measured the riverbed then erected the bridge",
-        "every merchant weighed the peppercorns twice for the ledger",
-        "the keeper swept the terrace every evening before the bells",
-        "the evening ferry delivered the letters to the sleepy village",
-        "the restless swallows assembled their nests beneath the eaves",
-    ]
-    rows = [(i, f"{t}\n{bp}") for i, t in enumerate(fills)]
-    rows.append((6, bp))  # all-boilerplate doc -> emptied -> dropped
-    rows.append((7, "the severed engine generated embers near the temple"))
-    docs = spark.createDataFrame(
-        [(i, t, "en", "src", len(t)) for i, t in rows],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    docs.write.parquet(str(src / "documents.parquet"))
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(
-        min_quality=0.2, langs=("en",), jaccard_threshold=0.2,
-        line_dedup=True, line_df_cap=2,
-    )
-    s = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ld", **kwargs
-    )
-    assert "line_dedup" in s["stages_run"]
-    assert s["n_after_line_dedup"] == 7  # doc 6 emptied and dropped
-    assert s["docs_emptied_by_line_dedup"] == 1
-    assert s["lines_removed"] == 6  # one bp line per doc 0-5
-    corpus = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
-    }
-    assert 6 not in corpus
-    for i, t in enumerate(fills):
-        assert corpus[i] == t  # bp line stripped, content intact
-    assert corpus[7] == rows[7][1]
-    # resume skips the committed line stage; counts still reported
-    s2 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ld", **kwargs
-    )
-    assert "line_dedup" in s2["stages_skipped"]
-    assert s2["lines_removed"] == 6
-    # a different cap is a different lineage: everything re-runs
-    s3 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ld",
-        **{**kwargs, "line_df_cap": 3},
-    )
-    assert "line_dedup" in s3["stages_run"]
-
-
 def test_html_dom_heuristic_drops_unlikely_candidates(spark):
     """dom_heuristics=True (r7): a verbose link-SPARSE container whose
     class matches the Readability negative set is dropped even though
@@ -972,192 +531,6 @@ def test_html_dom_heuristic_drops_unlikely_candidates(spark):
     assert rules.n_kept == 3 and "promo0" in rules.main_text
     assert dom.main_text == body and dom.n_kept == 1
     assert "promo0" not in dom.main_text and "also read" not in dom.main_text
-
-
-def test_trainprep_shard_budget(spark, tmp_path):
-    """--shard-budget (r7): the final corpus carries an equal-token
-    shard assignment — shard boundaries must equal the global
-    exclusive-prefix rule over the SURVIVING docs in doc_id order, and
-    the column is part of the resume lineage."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    out = str(tmp_path / "prep")
-    s = run_trainprep_job(
-        spark, SF_DIR, out, min_quality=0.4, langs=("en",),
-        jaccard_threshold=0.05, shard_budget=500,
-    )
-    corpus = spark.read.parquet(os.path.join(out, "corpus"))
-    assert "shard" in corpus.columns
-    rows = sorted(
-        corpus.select("doc_id", "text", "shard").collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert len(rows) == s["n_final"]
-    cum, expected_ok = 0, True
-    for r in rows:
-        expected_ok &= r.shard == cum // 500
-        cum += len(r.text.split(" "))
-    assert expected_ok
-    assert rows[-1].shard > 0  # the corpus actually spans shards
-
-
-def test_trainprep_dsir_stage(spark, tmp_path):
-    """--dsir-target/--dsir-keep (r7): the DSIR selection stage keeps
-    the top-k surviving docs by hashed-n-gram importance toward the
-    target corpus, commits (doc_id, n_feats, score) for audit, is
-    resumable with both knobs in the param lineage, and a missing
-    target table warns loudly instead of silently no-opping."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    quantum = [
-        "the quantum detector measured entangled photon states in the laboratory",
-        "entangled photon pairs reached the quantum detector through the interferometer",
-        "laboratory benchmarks aligned the quantum interferometer with entangled photon states",
-    ]
-    junk = [
-        "lottery jackpot seekers entered the betting emporium every evening",
-        "discount voucher codes expire midnight hurry shoppers before closing",
-        "celebrity gossip roundup features dresses parties yachts and champagne",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t, "en", "src", len(t)) for i, t in enumerate(quantum + junk)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    docs.write.parquet(str(src / "documents.parquet"))
-    tgt_path = str(tmp_path / "target.parquet")
-    spark.createDataFrame(
-        [(100, "quantum detector entangled photon states laboratory"
-               " interferometer measurements"),
-         (101, "entangled photon states laboratory quantum detector"
-               " interferometer calibration"),
-         (102, "the quantum detector recorded entangled photon states"
-               " for the interferometer"),
-         (103, "interferometer laboratory detector quantum entangled"
-               " photon states archive")],
-        "doc_id long, text string",
-    ).write.parquet(tgt_path)
-
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(
-        min_quality=0.1, langs=("en",), jaccard_threshold=0.2,
-        dsir_target_dir=tgt_path, dsir_keep=3,
-    )
-    s = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ds", **kwargs
-    )
-    assert "dsir_select" in s["stages_run"]
-    assert s["dsir_selected"] == 3 and s["n_final"] == 3
-    corpus_ids = {
-        r.doc_id
-        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
-    }
-    assert corpus_ids == {0, 1, 2}  # the quantum docs, not the junk
-    sel = spark.read.parquet(os.path.join(out, "dsir", "selected"))
-    assert set(sel.columns) == {"doc_id", "n_feats", "score"}
-    # resume skips the committed stage; counts persist from the output
-    s2 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ds", **kwargs
-    )
-    assert "dsir_select" in s2["stages_skipped"]
-    assert s2["dsir_selected"] == 3 and s2["n_final"] == 3
-    # a different keep budget is a different lineage: stage re-runs
-    s3 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ds",
-        **{**kwargs, "dsir_keep": 5},
-    )
-    assert "dsir_select" in s3["stages_run"]
-    assert s3["dsir_selected"] == 5 and s3["n_final"] == 5
-    # fast-hash flip is a different lineage: the stage re-runs (and on
-    # this planted corpus selects the same quantum docs)
-    s3b = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="ds",
-        **{**kwargs, "dsir_fast_hash": True},
-    )
-    assert "dsir_select" in s3b["stages_run"]
-    assert {
-        r.doc_id
-        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
-    } >= {0, 1, 2}
-    # missing target table: loud warning, stage skipped, corpus whole
-    s4 = run_trainprep_job(
-        spark, str(src), str(tmp_path / "prep2"),
-        **{**kwargs, "dsir_target_dir": str(tmp_path / "nope.parquet")},
-    )
-    assert "dsir_select" not in s4["stages_run"]
-    assert "dsir_selected" not in s4 and s4["n_final"] == 6
-
-
-def test_trainprep_pack_manifest_stage(spark, tmp_path):
-    """--pack-seq-len (r7): the packing stage emits a (seq_id, doc_id,
-    doc_offset, n_tokens) manifest over the WRITTEN corpus — per-doc
-    contributions reassemble each surviving doc exactly, every
-    non-final sequence holds exactly L tokens, and the stage resumes
-    without recomputing the corpus."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    texts = [
-        "eleven green lanterns were lighted beside the eastern gate",
-        "the engineers measured the riverbed then erected the bridge",
-        "every merchant weighed the peppercorns twice for the ledger",
-        "the keeper swept the terrace every evening before the bells",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t, "en", "src", len(t)) for i, t in enumerate(texts)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    src = tmp_path / "in"
-    src.mkdir()
-    docs.write.parquet(str(src / "documents.parquet"))
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    kwargs = dict(min_quality=0.1, langs=("en",), jaccard_threshold=0.2,
-                  pack_seq_len=7)
-    s = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="pk", **kwargs
-    )
-    assert "pack_manifest" in s["stages_run"]
-    corpus = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(os.path.join(out, "corpus")).collect()
-    }
-    manifest = spark.read.parquet(os.path.join(out, "pack", "manifest")).collect()
-    # per-doc contributions cover each surviving doc exactly
-    per_doc: dict[int, int] = {}
-    per_seq: dict[int, int] = {}
-    for r in manifest:
-        per_doc[r["doc_id"]] = per_doc.get(r["doc_id"], 0) + r["n_tokens"]
-        per_seq[r["seq_id"]] = per_seq.get(r["seq_id"], 0) + r["n_tokens"]
-    assert per_doc == {
-        i: len(t.split(" ")) for i, t in corpus.items()
-    }
-    last = max(per_seq)
-    assert s["n_sequences"] == last + 1
-    for k, v in per_seq.items():
-        assert v == 7 or k == last
-    # resume: the stage skips, the count persists
-    s2 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="pk", **kwargs
-    )
-    assert "pack_manifest" in s2["stages_skipped"]
-    assert s2["n_sequences"] == s["n_sequences"]
-    # different L = different lineage: stage re-runs
-    s3 = run_trainprep_job(
-        spark, str(src), out, manifest_dir=man, run_id="pk",
-        **{**kwargs, "pack_seq_len": 11},
-    )
-    assert "pack_manifest" in s3["stages_run"]
 
 
 def test_pii_scrub_spans_preserves_interleaving(spark):
@@ -1204,67 +577,3 @@ def test_pii_scrub_spans_preserves_interleaving(spark):
     # zero shuffle, zero Python in the plan
     p = pii_scrub_spans(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p and "Python" not in p
-
-
-def test_trainprep_semantic_imi_flag(spark, tmp_path):
-    """--semantic-imi (r7): the product-codebook quantizer drives the
-    semantic stage when nlist is set — the planted cosine-near pair is
-    still pruned to its min-id representative, and flipping the flag
-    is a different param lineage (stage re-runs)."""
-    import hashlib as _hashlib
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import run_trainprep_job
-
-    kwargs = dict(min_quality=0.4, langs=("en",), jaccard_threshold=0.05)
-    base = run_trainprep_job(spark, SF_DIR, str(tmp_path / "base"), **kwargs)
-    survivors = sorted(
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "base" / "corpus"))
-        .select("doc_id")
-        .collect()
-    )
-    near_a, near_b = survivors[0], survivors[1]
-    inp = str(tmp_path / "inp")
-    spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).write.parquet(
-        os.path.join(inp, "documents.parquet")
-    )
-
-    def vec(doc_id) -> list[float]:
-        h = _hashlib.md5(str(doc_id).encode()).digest() * 4
-        return [float(b) - 127.5 for b in h[:64]]
-
-    ids = [
-        r.doc_id
-        for r in spark.read.parquet(os.path.join(inp, "documents.parquet"))
-        .select("doc_id")
-        .collect()
-    ]
-    rows = [
-        (d, [x + 0.01 for x in vec(near_a)] if d == near_b else vec(d))
-        for d in ids
-    ]
-    spark.createDataFrame(rows, "doc_id long, embedding array<float>").write.parquet(
-        os.path.join(inp, "embeddings.parquet")
-    )
-    out = str(tmp_path / "prep")
-    man = str(tmp_path / "man")
-    s = run_trainprep_job(
-        spark, inp, out, manifest_dir=man, run_id="imi",
-        semantic_dedup=True, semantic_nlist=16, semantic_imi=True, **kwargs,
-    )
-    assert s["semantic_pruned"] >= 1
-    prune = {
-        r.doc_id: r.sem_rep
-        for r in spark.read.parquet(
-            os.path.join(out, "semantic", "prune_map")
-        ).collect()
-    }
-    assert prune.get(near_b) == near_a  # min-id representative kept
-    # flag flip = new lineage: the stage re-runs instead of resuming
-    s2 = run_trainprep_job(
-        spark, inp, out, manifest_dir=man, run_id="imi",
-        semantic_dedup=True, semantic_nlist=16, semantic_imi=False, **kwargs,
-    )
-    assert "semantic_dedup" in s2["stages_run"]

@@ -110,27 +110,6 @@ def test_new_llm_keys_plan_shape(spark):
     assert p2.count("Scan parquet") == 2, p2
 
 
-def test_trainprep_gate_stage_is_join_free(spark):
-    """VERDICT r3 item 1: the composed trainprep job's gate stage
-    (scrub + quality + lang) must be ONE map-side projection of a
-    single documents scan — no Join nodes, no Exchange. The previous
-    form equi-joined the three registry DataFrames on doc_id, which
-    Catalyst does NOT collapse: three full-corpus shuffle joins at
-    100 TB where zero are needed."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import gate_stage
-
-    docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
-    df = gate_stage(docs, 0.4, ("en",))
-    p = plan_str(df)
-    assert "Join" not in p, p
-    assert "Exchange" not in p, p
-    assert p.count("Scan parquet") == 1, p
-    assert df.count() > 0
-
-
 def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):
     """bench_scaleout.calibrate_mpb must land the scan on EXACTLY
     waves*cores partitions — the rounding-free wave count the r4 scaling

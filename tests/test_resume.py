@@ -31,6 +31,29 @@ def _read_all(spark, out_dir):
     return spark.read.parquet(out_dir).drop("bucket", "group")
 
 
+def _assert_manifest_exact(spark, m_dir, docs, golden, p):
+    """Exactly one 'done' row per bucket, each with the counts taken
+    straight from the input and the golden, bucketed by bucket_col."""
+
+    def per_bucket(df):
+        rows = (
+            df.withColumn("bucket", bucket_col("doc_id", p))
+            .groupBy("bucket")
+            .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
+            .collect()
+        )
+        return {r.bucket: (r.n, r.s) for r in rows}
+
+    want_in, want_out = per_bucket(docs), per_bucket(golden)
+    rows = ManifestCheckpoint(m_dir).read(spark).collect()
+    assert sorted(r.bucket for r in rows) == list(range(p.n_buckets))
+    for r in rows:
+        n_docs, n_in = want_in.get(r.bucket, (0, 0))
+        n_out = want_out.get(r.bucket, (0, 0))[1]
+        assert r.status == "done", r.bucket
+        assert (r.n_docs, r.n_spans_in, r.n_spans_out) == (n_docs, n_in, n_out), r.bucket
+
+
 def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
     docs, lexicon, golden = loaded
     p = Params(n_buckets=16)
@@ -64,23 +87,7 @@ def test_manifest_rows_exact_per_bucket_at_production_layout(spark, loaded, tmp_
         spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
         params=p, run_id="r1",
     )
-
-    def per_bucket(df):
-        rows = (
-            df.withColumn("bucket", bucket_col("doc_id", p))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
-            .collect()
-        )
-        return {r.bucket: (r.n, r.s) for r in rows}
-
-    want_in, want_out = per_bucket(docs), per_bucket(golden)
-    rows = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
-    assert sorted(r.bucket for r in rows) == list(range(p.n_buckets))
-    for r in rows:
-        n_docs, n_in = want_in.get(r.bucket, (0, 0))
-        n_out = want_out.get(r.bucket, (0, 0))[1]
-        assert (r.n_docs, r.n_spans_in, r.n_spans_out) == (n_docs, n_in, n_out), r.bucket
+    _assert_manifest_exact(spark, str(tmp_path / "m"), docs, golden, p)
 
 
 def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
@@ -93,7 +100,7 @@ def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
             spark, docs, lexicon, out_dir, m_dir,
             params=p, run_id="r1", n_groups=4, fail_after_group=1,
         )
-    done_before = ManifestCheckpoint(m_dir).completed_buckets(spark, "r1", params_hash(p))
+    done_before = ManifestCheckpoint(m_dir).completed_buckets("r1", params_hash(p))
     assert 0 < len(done_before) < 16
 
     summary = run_denoise_job(
@@ -102,6 +109,37 @@ def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
     assert summary["groups_skipped"] == 2  # groups 0 and 1 committed pre-crash
     assert summary["groups_run"] == 2
 
+    out = _read_all(spark, out_dir)
+    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
+def test_torn_manifest_commit_is_quarantined_and_recomputed(spark, loaded, tmp_path, capfd):
+    """A commit file torn by a host crash (here: truncated to half its
+    bytes) must not fail every later resume. The resume renames it to
+    ``.torn-<name>``, says so on stderr, and recomputes its buckets;
+    the output and the manifest end up exactly as after a clean run."""
+    docs, lexicon, golden = loaded
+    p = Params(n_buckets=16)
+    out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_denoise_job(
+            spark, docs, lexicon, out_dir, m_dir,
+            params=p, run_id="r1", n_groups=4, fail_after_group=0,
+        )
+    (name,) = os.listdir(m_dir)
+    path = os.path.join(m_dir, name)
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+
+    summary = run_denoise_job(
+        spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
+    )
+    assert (summary["groups_skipped"], summary["groups_run"]) == (0, 4)
+    assert f"quarantined torn commit {name}" in capfd.readouterr().err
+    assert os.path.exists(os.path.join(m_dir, f".torn-{name}"))
+    assert not os.path.exists(path)
+    _assert_manifest_exact(spark, m_dir, docs, golden, p)
     out = _read_all(spark, out_dir)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
@@ -131,7 +169,7 @@ def test_observation_timeout_commits_no_manifest_rows(spark, loaded, tmp_path, m
             spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
         )
     ckpt = ManifestCheckpoint(m_dir)
-    assert ckpt.completed_buckets(spark, "r1", params_hash(p)) == {0, 4, 8, 12}
+    assert ckpt.completed_buckets("r1", params_hash(p)) == {0, 4, 8, 12}
     assert ckpt.read(spark).count() == 4  # group 0's rows only
 
     monkeypatch.setattr(checkpoint, "observation_metrics", real)
@@ -154,7 +192,7 @@ def test_params_change_invalidates_resume(spark, loaded, tmp_path):
     run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p1, run_id="r1", n_groups=4)
     # different params hash → nothing is considered done
     p2 = Params(n_buckets=16, tau_wconf=50)
-    done = ManifestCheckpoint(m_dir).completed_buckets(spark, "r1", params_hash(p2))
+    done = ManifestCheckpoint(m_dir).completed_buckets("r1", params_hash(p2))
     assert done == set()
 
 
@@ -211,7 +249,7 @@ def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                         run_id="r1", n_groups=4, fail_after_group=1)
-    done = ManifestCheckpoint(m_dir).completed_buckets(spark, "r1", params_hash(p))
+    done = ManifestCheckpoint(m_dir).completed_buckets("r1", params_hash(p))
     assert len(done) == 8  # groups 0 and 1 of 4
     # resume with n_groups=2: BOTH new groups contain a mix of
     # committed and pending buckets

@@ -160,9 +160,8 @@ def test_semantic_prune_block_local_matches_star(spark):
 
 def test_semantic_empty_embeddings_no_crash(spark):
     """nlist-set assignment reads the vector dim from the data; an
-    empty embeddings frame (reachable from run_trainprep's keeper-
-    restricted join) must yield empty results, not an AttributeError
-    on .first()."""
+    empty embeddings frame must yield empty results, not an
+    AttributeError on .first()."""
     from pyspark.sql import types as T
 
     from hocr_de_noising_spark.queries.similarity_ml import (
@@ -228,12 +227,12 @@ def test_semantic_imi_quantizer_recall_and_cost_shape(spark):
     # single-assignment collision is the PRODUCT of two per-codebook
     # survival rates — lower than flat's single argmax by design; the
     # scale path cures it with n_assign=2 exactly as the flat
-    # quantizer does (run_trainprep uses n_assign=2 whenever nlist is
-    # set). Pin the measured base rate so a regression is visible.
+    # quantizer does. Pin the measured base rate so a regression is
+    # visible.
     share = sum(cells[a] == cells[b] for a, b in planted)
     assert share >= 0.65 * len(planted), f"{share}/{len(planted)}"
 
-    # end-to-end at the job's own setting (n_assign=2 -> top-2 per
+    # end-to-end at the scale-path setting (n_assign=2 -> top-2 per
     # codebook, 4 OR-amplified cells): semantic_prune under imi
     # recalls the planted pairs
     prune = semantic_prune(emb, 0.98, nlist=nlist, n_assign=2, quantizer="imi")

@@ -136,43 +136,6 @@ def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     assert spark.read.parquet(stream_dirs["out"]).count() == 40
 
 
-def test_streaming_gate_stage_matches_batch(spark, stream_dirs):
-    """r7: the trainprep gate expressions (scrub/quality/lang) are pure
-    Columns, so the SAME gate_stage composes onto a readStream source
-    unmodified — incremental corpus curation. The streamed gate output
-    must equal the batch gate output row-for-row."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from run_trainprep import gate_stage
-
-    rows = [
-        (0, "the keeper recorded seventeen evening measurements beside the pier", "en", "s", 60),
-        (1, "zzz qqq xxx", "xx", "s", 11),  # fails the e-ratio lang gate
-        (2, "every clever weaver sewed seven green sleeves here today", "en", "s", 50),
-        (3, "a1 22 333 4444 55555 666666", "en", "s", 27),  # digit-heavy
-    ]
-    ddl = "doc_id long, text string, lang string, source string, n_chars long"
-    docs = spark.createDataFrame(rows, ddl)
-    docs.write.mode("overwrite").parquet(stream_dirs["in"])
-
-    batch = gate_stage(docs, 0.2, ("en",))
-    stream_src = spark.readStream.schema(ddl).parquet(stream_dirs["in"])
-    q = (
-        gate_stage(stream_src, 0.2, ("en",))
-        .writeStream.format("parquet")
-        .option("path", stream_dirs["out"])
-        .option("checkpointLocation", stream_dirs["ckpt"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.read.parquet(stream_dirs["out"])
-    assert streamed.count() == batch.count() > 0
-    assert streamed.exceptAll(batch).isEmpty()
-    assert batch.exceptAll(streamed).isEmpty()
-
-
 def test_streaming_dsir_score_matches_batch(spark, stream_dirs):
     """r7: DSIR as incremental selection — the importance model
     (dsir_bucket_log_ratios) is trained ONCE on a batch sample, frozen
