@@ -70,9 +70,9 @@ _LAST_GREEN = dict.fromkeys(
     [
         "agg_approx_distinct", "agg_cube", "agg_dedup_first",
         "agg_distinct", "agg_grouping_sets", "agg_percentile",
-        "agg_rollup", "ann_ivf_fixed", "ann_lsh_bucketed",
+        "agg_rollup",
         "dedup_components", "dedup_components_star",
-        "dedup_embed_cosine", "dedup_exact", "dedup_minhash_lsh",
+        "dedup_exact", "dedup_minhash_lsh",
         "dict_join", "doc_fingerprint", "join_anti", "join_asof",
         "join_range", "lag_lead", "lang_id", "quality_repetition",
         "quality_score", "sample_split", "scalar_math",
@@ -85,12 +85,12 @@ _LAST_GREEN = dict.fromkeys(
     [
         "agg_approx_percentile", "agg_denoise_rate",
         "bpe_pair_topk", "decontaminate_overlap", "dedup_lines",
-        "dedup_ngram_jaccard", "dedup_semantic",
+        "dedup_ngram_jaccard",
         "dedup_simhash", "dsir_select", "explode_spans",
         "garbage_ratio", "geom_outliers", "html_links",
         "html_main_content", "html_main_content_dom",
         "join_broadcast", "join_full", "join_inner", "join_left",
-        "join_semi", "knn_bruteforce", "link_domains_topk",
+        "join_semi", "link_domains_topk",
         "longs_normalize", "margin_envelope", "media_caption_pair",
         "media_text_ratio", "pack_sequences", "pii_scrub",
         "pii_scrub_strict", "project_filter", "quality_boilerplate",

@@ -63,7 +63,6 @@ def dedup_repeated_lines(
     text_col: str = "text",
     id_col: str = "doc_id",
     df_cap: int = LINE_DF_CAP,
-    hot_broadcast: bool = True,
 ) -> DataFrame:
     """Remove every line whose corpus document-frequency exceeds
     ``df_cap`` (CCNet line-level dedup). Returns one row per input row:
@@ -75,8 +74,6 @@ def dedup_repeated_lines(
     groupBy(id) reassembly with conditional aggregates (hot/null rows
     count 0 and drop out of the collect_list, which skips nulls) and
     order restored via sort_array on (pos, line).
-    ``hot_broadcast=False`` falls back to a shuffle join for corpora
-    whose over-cap line vocabulary outgrows a broadcast.
 
     r8 shape change (output bit-identical, oracle-verified): the
     previous form anti-joined hot lines away and LEFT-joined a third
@@ -104,9 +101,7 @@ def dedup_repeated_lines(
     hot = line_df.filter(F.col("count") > df_cap).select(
         "line", F.lit(True).alias("_ddl_hot")
     )
-    if hot_broadcast:
-        hot = F.broadcast(hot)
-    flagged = lines.join(hot, "line", "left")
+    flagged = lines.join(F.broadcast(hot), "line", "left")
     keep = F.col("_ddl_hot").isNull() & F.col("line").isNotNull()
     return flagged.groupBy(id_col).agg(
         F.first("n_lines").cast("int").alias("n_lines"),
@@ -743,8 +738,7 @@ def dsir_bucket_log_ratios(
         .localCheckpoint(eager=False)
     )
     # grand totals: one 2-value driver scalar off the tiny checkpointed
-    # aggregate (None-guarded — an empty corpus must not crash, the
-    # ADVICE r6 semantic_pairs lesson)
+    # aggregate (None-guarded — an empty corpus yields NULL sums)
     tot = counts.agg(F.sum("ct"), F.sum("cr")).first()
     n_target_feats = int((tot[0] if tot else 0) or 0)
     if 0 < n_target_feats < DSIR_BUCKETS:

@@ -1,8 +1,7 @@
 """Large-scale training-data pipeline operators over the driver tables.
 
-Deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine), similarity search (brute-force + LSH-bucketed ANN),
-and text analysis (language-ID, quality score, token counting,
+Deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard, connected
+components) and text analysis (language-ID, quality score, token counting,
 fingerprinting). Each is engine-portable by construction: the hash
 primitive is md5 (identical hex output in Spark and DuckDB), so
 signatures, buckets, and candidate pairs agree bit-for-bit across
@@ -13,10 +12,7 @@ Scale notes (100 TB design):
   single shuffle keyed (doc_id, seed) with map-side partial min;
 - candidate-pair generation is star pairing within each (band, bucket)
   — one window, no self-join — so no all-pairs product ever
-  materializes and a hot bucket stays linear;
-- embedding ops keep the dot product inside JVM higher-order
-  functions (zip_with/aggregate), no Python in the hot path;
-- the brute-force kNN broadcasts the (small) query side.
+  materializes and a hot bucket stays linear.
 """
 
 from __future__ import annotations
@@ -295,12 +291,7 @@ def capped_shingles(spark, sf, n: int = 3, df_cap: int = JACCARD_DF_CAP):
     return capped_from_hashed(sh, df_cap)
 
 
-def capped_from_hashed(
-    sh,
-    df_cap: int = JACCARD_DF_CAP,
-    share: bool = True,
-    hot_broadcast: bool = True,
-):
+def capped_from_hashed(sh, df_cap: int = JACCARD_DF_CAP):
     """df-cap over a pre-hashed (doc_id, shingle int64) frame — the
     second half of ``capped_shingles``.
 
@@ -319,24 +310,16 @@ def capped_from_hashed(
     unbounded partitions anywhere in the plan (planted-hot-shingle
     test: tests/test_skew.py).
 
-    ``share=True`` lazily localCheckpoints the input so the hot-count
-    pass and the anti-join probe compute the (text-scan + shingle)
-    subtree once — pass False when ``sh`` is already a materialized
-    table (a parquet read). ``hot_broadcast=False``
-    is the escape hatch for a corpus whose over-cap vocabulary
-    outgrows a broadcast (AQE skew-join then splits the probe side;
-    the anti-join's per-key fan-out is 1 either way)."""
-    if share:
-        sh = sh.localCheckpoint(eager=False)
+    The input is lazily localCheckpointed so the hot-count pass and the
+    anti-join probe compute the (text-scan + shingle) subtree once."""
+    sh = sh.localCheckpoint(eager=False)
     hot = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > df_cap)
         .select("shingle")
     )
-    if hot_broadcast:
-        hot = F.broadcast(hot)
-    return sh.join(hot, "shingle", "left_anti")
+    return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
 @register("dedup_ngram_jaccard", _JACCARD_SQL)
@@ -394,309 +377,6 @@ def dedup_ngram_jaccard(spark, sf):
         .filter(F.col("jac") >= 0.2)
     )
     return j.select("doc_a", "doc_b", F.round("jac", 4).alias("jaccard"))
-
-
-# Pairwise-cosine blocks are capped at EMBED_BLOCK_CAP rows: within a
-# label, vectors are deterministically sub-blocked by their vec_id rank
-# (same overflow-salting rule as ann_lsh_bucketed's ANN_BUCKET_CAP), so
-# a skewed label — one label covering a large corpus fraction — stays
-# O(n * CAP) instead of O(n^2) (VERDICT r3 item 5). Pairs across
-# sub-blocks of an oversized label are not emitted: the same bounded-
-# recall trade JACCARD_DF_CAP / ANN_BUCKET_CAP make; the scalable
-# high-recall route is ann_lsh_bucketed.
-EMBED_BLOCK_CAP = 256
-
-_COSINE_PAIR_SQL = f"""
-WITH s AS (
-    SELECT vec_id, label, embedding,
-           (row_number() OVER (PARTITION BY label ORDER BY vec_id) - 1)
-               // {EMBED_BLOCK_CAP} AS sub
-    FROM embeddings
-),
-pairs AS (
-    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           a.embedding AS ea, b.embedding AS eb
-    FROM s a JOIN s b
-      ON a.label = b.label AND a.sub = b.sub AND a.vec_id < b.vec_id
-),
-vals AS (
-    SELECT vec_a, vec_b, CAST(unnest(ea) AS DOUBLE) AS xa,
-           CAST(unnest(eb) AS DOUBLE) AS xb
-    FROM pairs
-)
-SELECT vec_a, vec_b,
-       round(sum(xa * xb) / nullif(sqrt(sum(xa * xa)) * sqrt(sum(xb * xb)), 0), 4) + 0.0 AS cosine
-FROM vals GROUP BY vec_a, vec_b
-"""
-
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-
-
-def _cos_expr(a: str, b: str):
-    """Cosine with a NULL result for zero-norm vectors: ANSI mode makes
-    a bare division THROW on /0 (r4 adversarial probe: one all-zero
-    embedding — a failed-embedding row any real corpus contains —
-    crashed the whole query), and the DuckDB oracle applies the same
-    nullif so both engines agree on NULL."""
-    dot = _DOT.format(a=a, b=b)
-    na = _DOT.format(a=a, b=a)
-    nb = _DOT.format(a=b, b=b)
-    return F.expr(f"{dot} / nullif(sqrt({na}) * sqrt({nb}), 0D)")
-
-
-def _rounded_cos(a: str, b: str, digits: int = 4):
-    """Rounded cosine normalized to +0.0 — IEEE ``-0.0 + 0.0 = +0.0``,
-    so tiny negative cosines hash identically across engines (DuckDB
-    round() preserves the sign bit, Spark's does not)."""
-    return F.round(_cos_expr(a, b), digits) + F.lit(0.0)
-
-
-@register("dedup_embed_cosine", _COSINE_PAIR_SQL)
-def dedup_embed_cosine(spark, sf):
-    """Embedding near-dup: label-blocked pairwise cosine, JVM-side
-    zip_with/aggregate dot products (no Python in the hot path).
-    Blocks are capped at EMBED_BLOCK_CAP via deterministic rank
-    sub-blocking, so a degenerate label cannot go quadratic; the
-    high-recall production route for huge blocks is ann_lsh_bucketed."""
-    w = Window.partitionBy("label").orderBy("vec_id")
-    e = (
-        load(spark, sf, "embeddings")
-        .select(
-            "vec_id",
-            "label",
-            F.expr("transform(embedding, x -> cast(x AS double))").alias("v"),
-        )
-        .withColumn(
-            "sub", F.floor((F.row_number().over(w) - 1) / EMBED_BLOCK_CAP)
-        )
-    )
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.sub") == F.col("b.sub"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            _rounded_cos("a.v", "b.v").alias("cosine"),
-        )
-    )
-
-
-# ------------------------------------------------------------ similarity --
-
-_KNN_SQL = """
-WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 10),
-pairs AS (
-    SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-           q.embedding AS eq, e.embedding AS ee
-    FROM q JOIN embeddings e ON e.vec_id <> q.vec_id
-),
-vals AS (
-    SELECT query_id, neighbor_id, CAST(unnest(eq) AS DOUBLE) AS xa,
-           CAST(unnest(ee) AS DOUBLE) AS xb
-    FROM pairs
-),
-cos AS (
-    SELECT query_id, neighbor_id,
-           round(sum(xa * xb) / nullif(sqrt(sum(xa * xa)) * sqrt(sum(xb * xb)), 0), 4) + 0.0 AS cosine
-    FROM vals GROUP BY query_id, neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rnk FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine DESC NULLS LAST, neighbor_id) AS rnk
-    FROM cos) WHERE rnk <= 3
-"""
-
-
-@register("knn_bruteforce", _KNN_SQL)
-def knn_bruteforce(spark, sf):
-    """Brute-force cosine top-k: broadcast the query side, rank on the
-    ROUNDED score (cross-engine-stable ordering) with id tiebreak."""
-    e = load(spark, sf, "embeddings").select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _rounded_cos("qv", "v").alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc_nulls_last(), "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-# Multi-table random-hyperplane LSH (sign-random projections with
-# Achlioptas-style sparse {+1, 0, -1} coefficients — public knowledge:
-# Charikar SimHash + Achlioptas sparse random projections). The
-# coefficients come from a hand-rolled LCG so BOTH engines receive the
-# exact same literal hyperplanes; only the SIGN of the projection is
-# used, so the sqrt(3) Achlioptas scale is irrelevant.
-ANN_TABLES, ANN_BITS, ANN_DIM, ANN_BUCKET_CAP = 4, 8, 64, 64
-
-
-def _ann_hyperplanes(seed: int = 1234567):
-    """Deterministic sparse hyperplanes: per (table, bit) a list of
-    (1-based dim index, +1/-1) nonzero coefficients."""
-    state = seed & 0x7FFFFFFF
-    planes = []
-    for _t in range(ANN_TABLES):
-        tbl = []
-        for _j in range(ANN_BITS):
-            terms = []
-            for i in range(1, ANN_DIM + 1):
-                state = (1103515245 * state + 12345) & 0x7FFFFFFF
-                u = state / 0x7FFFFFFF
-                if u < 1 / 6:
-                    terms.append((i, 1))
-                elif u > 5 / 6:
-                    terms.append((i, -1))
-            if not terms:  # astronomically unlikely; keep the bit constant
-                terms.append((1, 1))
-            tbl.append(terms)
-        planes.append(tbl)
-    return planes
-
-
-_ANN_PLANES = _ann_hyperplanes()
-
-
-def _dot_terms(terms, elem):
-    """±v[i] sum with identical left-to-right fold order in both engines
-    (sign parity near zero requires bit-identical arithmetic)."""
-    parts = []
-    for n, (i, s) in enumerate(terms):
-        op = ("" if s > 0 else "-") if n == 0 else (" + " if s > 0 else " - ")
-        parts.append(f"{op}{elem(i)}")
-    return "".join(parts)
-
-
-def _ann_bucket_sql(tbl: int) -> str:
-    bits = [
-        f"CASE WHEN {_dot_terms(_ANN_PLANES[tbl][j], lambda i: f'v[{i}]')} >= 0"
-        " THEN '1' ELSE '0' END"
-        for j in range(ANN_BITS)
-    ]
-    return " || ".join(bits)
-
-
-def _ann_bucket_spark(tbl: int):
-    bits = [
-        F.expr(
-            f"CASE WHEN {_dot_terms(_ANN_PLANES[tbl][j], lambda i: f'element_at(v, {i})')}"
-            " >= 0 THEN '1' ELSE '0' END"
-        )
-        for j in range(ANN_BITS)
-    ]
-    return F.concat(*bits)
-
-
-_ANN_SQL = f"""
-WITH vv AS (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-bands AS (
-    {" UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, {_ann_bucket_sql(t)} AS bucket FROM vv"
-        for t in range(ANN_TABLES)
-    )}
-),
-capped AS (
-    SELECT vec_id, tbl, bucket,
-           (row_number() OVER (PARTITION BY tbl, bucket
-                               ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1)
-               // {ANN_BUCKET_CAP} AS sub
-    FROM bands
-),
-pairs AS (
-    SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-    FROM capped a JOIN capped b
-      ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.sub = b.sub
-         AND a.vec_id < b.vec_id
-),
-vals AS (
-    SELECT vec_a, vec_b, unnest(va.v) AS xa, unnest(vb.v) AS xb
-    FROM pairs JOIN vv va ON va.vec_id = vec_a JOIN vv vb ON vb.vec_id = vec_b
-)
-SELECT vec_a, vec_b,
-       round(sum(xa * xb) / nullif(sqrt(sum(xa * xa)) * sqrt(sum(xb * xb)), 0), 4) + 0.0 AS cosine
-FROM vals GROUP BY vec_a, vec_b
-"""
-
-
-def ann_lsh_pairs(e):
-    """Core of the bucketed ANN over a (vec_id, v: array<double>)
-    DataFrame: L=ANN_TABLES seeded sparse random-hyperplane tables
-    (recall: a near-pair colliding in ANY table becomes a candidate)
-    with a per-bucket size cap — a hot bucket (e.g. a degenerate
-    cluster of identical embeddings) is salted into sub-buckets of
-    <= ANN_BUCKET_CAP rows, so the within-bucket pair fan-out is
-    bounded by cap^2 instead of going quadratic in the bucket size.
-    Candidate pairs are deduped across tables; cosine runs only on
-    candidates."""
-    from pyspark.sql import Window
-
-    # all L table buckets computed in ONE pass over the vectors (an
-    # array of (tbl, bucket) structs, exploded) — a union of L selects
-    # would scan the embeddings table L times
-    table_structs = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"), _ann_bucket_spark(t).alias("bucket")
-            )
-            for t in range(ANN_TABLES)
-        ]
-    )
-    bands = e.select("vec_id", F.explode(table_structs).alias("tb")).select(
-        "vec_id", "tb.tbl", "tb.bucket"
-    )
-    w = Window.partitionBy("tbl", "bucket").orderBy(F.md5(F.col("vec_id").cast("string")))
-    capped = bands.withColumn(
-        "sub", F.floor((F.row_number().over(w) - 1) / ANN_BUCKET_CAP)
-    )
-    # within-sub-bucket pairs generated from the grouped member array
-    # (<= cap ids per group, so <= cap^2 combinations) instead of a
-    # self-join — the join would re-execute the whole bands+window
-    # subtree for each side, doubling the embeddings scans
-    pairs = (
-        capped.groupBy("tbl", "bucket", "sub")
-        .agg(F.collect_list("vec_id").alias("ids"))
-        .select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids,"
-                    " y -> struct(x AS a, y AS b)))), p -> p.a < p.b)"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.a").alias("vec_a"), F.col("p.b").alias("vec_b"))
-        .distinct()
-    )
-    va = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
-    vb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        pairs.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .select("vec_a", "vec_b", _rounded_cos("va", "vb").alias("cosine"))
-    )
-
-
-@register("ann_lsh_bucketed", _ANN_SQL)
-def ann_lsh_bucketed(spark, sf):
-    """Registry entry for ann_lsh_pairs over the embeddings table."""
-    e = load(spark, sf, "embeddings").select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("v")
-    )
-    return ann_lsh_pairs(e)
 
 
 # ---------------------------------------------------------- text analysis --
@@ -1049,7 +729,8 @@ def connected_components(
     small-star [Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14 — public paper] — converges in O(log n) rounds
     regardless of diameter, the 10^12-doc path for deep-chain graphs.
-    Both property-tested equivalent to union-find (test_similarity_ml).
+    Both property-tested equivalent to union-find
+    (tests/test_scale_paths.py::test_connected_components_matches_union_find).
 
     ``localCheckpoint`` truncates the growing lineage so the plan stays
     O(1) per iteration, and the convergence count rides that SAME

@@ -3,8 +3,6 @@ stay non-overlapping; media spans untouched."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from hocr_de_noising_spark.operators.dehyphenate import dehyphenate
 from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.operators.pipeline import denoise_exploded, denoise_fused

@@ -1,7 +1,7 @@
 """Every module of the package, the jobs, the scripts and
 ``__spark_entry__.py`` imports cleanly, so an import left dangling by a
 deleted module fails the suite instead of the first run that reaches
-it; no module of the package or the jobs keeps a module-level import
+it; no module of those, or of the tests, keeps a module-level import
 it never uses, so one left behind by a deleted code path fails too;
 and every top-level function or class of the package is referenced
 somewhere, so a helper orphaned by a deleted caller fails as well."""
@@ -79,11 +79,9 @@ def _unused_imports(path: str) -> list[str]:
 
 
 def test_no_unused_module_imports():
-    paths = [
-        p
-        for p in _sources()
-        if p.startswith(("hocr_de_noising_spark", "jobs")) and not p.endswith("__init__.py")
-    ]
+    paths = [p for p in _sources() if not p.endswith("__init__.py")] + sorted(
+        os.path.relpath(p, REPO) for p in glob.glob(os.path.join(REPO, "tests", "*.py"))
+    )
     unused = [u for p in paths for u in _unused_imports(p)]
     assert not unused, unused
 

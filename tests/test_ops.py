@@ -293,48 +293,6 @@ def test_html_main_content_planted_boilerplate(spark):
     assert out[3].main_text == "" and out[3].n_blocks == 0
 
 
-def test_embedding_keys_on_adversarial_vectors(spark, tmp_path):
-    """r4 probe found a real crash: a zero-norm embedding (the failed-
-    embedding row every real corpus contains) made the bare cosine
-    division THROW under ANSI mode. Cosines now go through
-    nullif(denominator, 0) on BOTH engines → NULL, and ranking is
-    explicitly NULLS LAST. Covers zero vectors, identical/antiparallel
-    pairs, denormal-small and huge norms."""
-    import random
-
-    random.seed(7)
-    rows = [
-        (0, 0, [0.0] * 8),  # zero norm
-        (1, 0, [float(x) for x in range(1, 9)]),
-        (2, 0, [float(x) for x in range(1, 9)]),  # identical -> 1.0
-        (3, 0, [-float(x) for x in range(1, 9)]),  # antiparallel -> -1.0
-        (4, 1, [1e-30] * 8),
-        (5, 1, [1e30] * 8),
-    ] + [
-        (i, i % 3, [random.uniform(-1, 1) for _ in range(8)])
-        for i in range(6, 16)
-    ]
-    sdir = tmp_path / "adv_emb"
-    sdir.mkdir()
-    spark.createDataFrame(
-        rows, "vec_id long, label long, embedding array<float>"
-    ).write.parquet(str(sdir / "embeddings.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{sdir}/embeddings.parquet/*.parquet'"
-    )
-    for name in ("dedup_embed_cosine", "knn_bruteforce"):
-        sdf = QUERIES[name]["fn"](spark, str(sdir)).toPandas()
-        ddf = con.execute(QUERIES[name]["sql"]).df()
-        assert_frames_match(sdf, ddf, f"adversarial:{name}")
-    pairs = QUERIES["dedup_embed_cosine"]["fn"](spark, str(sdir)).toPandas()
-    by_pair = {(r.vec_a, r.vec_b): r.cosine for r in pairs.itertuples()}
-    assert by_pair[(1, 2)] == 1.0
-    assert by_pair[(1, 3)] == -1.0
-    assert pd.isna(by_pair[(0, 1)])  # zero-norm pair -> NULL, not crash
-
-
 def test_approx_distinct_semantic_contract(spark):
     """Rows-only key contract (SURVEY §2): the HLL estimate must land
     within tolerance of the exact distinct count per group — the exact

@@ -7,8 +7,6 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import functions as F
-
 from hocr_de_noising_spark.operators.pipeline import denoise_exploded
 from hocr_de_noising_spark.queries import QUERIES
 
@@ -67,12 +65,6 @@ def test_denoise_patterns_keep_whole_stage_codegen(spark):
     df = QUERIES["wconf_filter"]["fn"](spark, SF)
     p = formatted(df)
     assert "WholeStageCodegen" in p or "codegen id" in p, p
-
-
-def test_knn_broadcasts_query_side(spark):
-    df = QUERIES["knn_bruteforce"]["fn"](spark, SF)
-    p = plan_str(df)
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
 
 
 def test_topk_uses_take_ordered(spark):

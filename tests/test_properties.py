@@ -8,7 +8,6 @@ variant is held to the same behavior by the golden tests.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
 from hocr_de_noising_spark.fixtures.spans import gen_doc

@@ -82,7 +82,7 @@ def test_planted_hot_shingle_no_skew(spark):
     ).unionAll(
         spark.range(n_hot).selectExpr("id AS doc_id", "id + 10 AS shingle")
     )
-    out = capped_from_hashed(sh, share=False)
+    out = capped_from_hashed(sh)
     # correctness: the hot shingle vanished, every unique one survived
     assert out.filter("shingle = 0").count() == 0
     assert out.count() == n_hot

@@ -6,7 +6,6 @@ their batch twins."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
