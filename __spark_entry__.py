@@ -50,14 +50,11 @@ _CHANGED_SINCE_GREEN: list[str] = [
     "dedup_components_star",
     "decontaminate_overlap",
     "quality_repetition",
-    "dedup_lines",
     "url_host_filter",
     # r8 single-buffer percentile aggregates (array of percentages)
     "agg_percentile",
     "agg_approx_percentile",
     "margin_envelope",
-    # r8 NULL-strata default-bucket fix (ADVICE r7)
-    "sample_stratified",
     # r8 collision-proof staging names in extract_main_content
     "html_main_content",
     "html_main_content_dom",
@@ -84,22 +81,22 @@ _LAST_GREEN = dict.fromkeys(
 ) | dict.fromkeys(
     [
         "agg_approx_percentile", "agg_denoise_rate",
-        "bpe_pair_topk", "decontaminate_overlap", "dedup_lines",
+        "decontaminate_overlap",
         "dedup_ngram_jaccard",
-        "dedup_simhash", "dsir_select", "explode_spans",
+        "dedup_simhash", "explode_spans",
         "garbage_ratio", "geom_outliers", "html_links",
         "html_main_content", "html_main_content_dom",
         "join_broadcast", "join_full", "join_inner", "join_left",
         "join_semi", "link_domains_topk",
         "longs_normalize", "margin_envelope", "media_caption_pair",
-        "media_text_ratio", "pack_sequences", "pii_scrub",
+        "media_text_ratio", "pii_scrub",
         "pii_scrub_strict", "project_filter", "quality_boilerplate",
-        "quality_perplexity", "reading_order", "sample_stratified",
+        "reading_order",
         "scalar_array", "scalar_date", "scalar_json",
         "scalar_string", "scalar_xml", "scan_lineitem",
-        "set_intersect", "shard_token_budget", "tpch_q3",
+        "set_intersect", "tpch_q3",
         "udaf_mad", "url_canonicalize", "url_host_filter",
-        "vocab_topk", "wconf_filter", "window_range_frame",
+        "wconf_filter", "window_range_frame",
     ],
     7,
 )

@@ -146,14 +146,14 @@ def parse_doc(doc_id: str, hocr: str) -> list[dict]:
     return p.words
 
 
-def parse_hocr(df: DataFrame, doc_col: str = "doc_id", hocr_col: str = "hocr") -> DataFrame:
+def parse_hocr(df: DataFrame) -> DataFrame:
     """X1: (doc_id, hocr) → word records, Arrow-batched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.split(" ")[0] for f in WORDS_SCHEMA.split(", ")]
         for pdf in batches:
             rows: list[dict] = []
-            for doc_id, hocr in zip(pdf[doc_col], pdf[hocr_col]):
+            for doc_id, hocr in zip(pdf["doc_id"], pdf["hocr"]):
                 rows.extend(parse_doc(doc_id, hocr))
             # column-wise build (r8): DataFrame-from-list-of-dicts does
             # a per-dict key probe per column; one comprehension per

@@ -118,11 +118,7 @@ def parse_pdf_layout(df: DataFrame, strict: bool = False) -> DataFrame:
     return df.mapInPandas(run, schema=BLOCKS_SCHEMA)
 
 
-def blocks_reading_order(
-    blocks: DataFrame,
-    page_width: int = PAGE_WIDTH,
-    column_bands: int = COLUMN_BANDS,
-) -> DataFrame:
+def blocks_reading_order(blocks: DataFrame) -> DataFrame:
     """Column-aware reading order over parsed layout blocks: within a
     document, order by (page, column band of the block's x-midpoint,
     y0, x0) — the two-column scholarly-page heuristic the hOCR
@@ -131,7 +127,7 @@ def blocks_reading_order(
     never corpus-wide), so the operator scales with documents, not the
     corpus."""
     band = F.floor(
-        ((F.col("x0") + F.col("x1")) / 2) / (page_width / column_bands)
+        ((F.col("x0") + F.col("x1")) / 2) / (PAGE_WIDTH / COLUMN_BANDS)
     ).cast("int")
     w = Window.partitionBy("doc_ref").orderBy(
         "page", band.asc(), "y0", "x0"

@@ -90,19 +90,17 @@ def _caption_core(flat: DataFrame) -> DataFrame:
     )
 
 
-def caption_pairs(docs: DataFrame, spans_col: str = "spans") -> DataFrame:
+def caption_pairs(docs: DataFrame) -> DataFrame:
     """Media-caption pairs from north-rule-shaped documents (doc_id,
     spans array<struct<kind,text,media_ref,offset>>): one row per media
     span with its nearest-text caption and which side it came from."""
     flat = docs.select(
-        "doc_id", F.explode(spans_col).alias("s")
+        "doc_id", F.explode("spans").alias("s")
     ).select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset")
     return _caption_core(flat)
 
 
-def media_text_stats(
-    docs: DataFrame, spans_col: str = "spans"
-) -> DataFrame:
+def media_text_stats(docs: DataFrame) -> DataFrame:
     """Per-document interleave statistics + the multimodal keep-gate:
     (n_text, n_media, n_chars, multimodal_keep). Keep requires at
     least one media span and >= MM_TEXT_PER_MEDIA text spans per media
@@ -110,7 +108,7 @@ def media_text_stats(
     doc with an EMPTY spans array still gets a (0, 0, 0, false) row —
     stats must cover every input document."""
     flat = docs.select(
-        "doc_id", F.explode_outer(spans_col).alias("s")
+        "doc_id", F.explode_outer("spans").alias("s")
     ).select("doc_id", "s.kind", "s.text", "s.media_ref")
     return _stats_core(flat)
 

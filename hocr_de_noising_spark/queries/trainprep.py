@@ -1100,15 +1100,15 @@ def pii_scrub_spans(
 
 
 @register("pii_scrub", _pii_sql(PII_PHONE))
-def pii_scrub(spark, sf, strict_phone: bool = False):
+def pii_scrub(spark, sf):
     """PII redaction pass for training corpora: mask emails, IPv4
     addresses and phone-shaped digit runs with typed placeholders and
     count each (the standard pre-training privacy scrub; patterns are
     the engine-portable regex subset). Pure map-side JVM regexp — one
     scan, zero shuffle, composes with text_scrub's digit masking.
-    ``strict_phone`` trades recall for precision (see pii_scrub_strict,
-    the registered oracle-checked form of that mode)."""
-    return _pii_scrub_impl(spark, sf, strict_phone=strict_phone)
+    pii_scrub_strict is the same pass with a phone pattern that trades
+    recall for precision."""
+    return _pii_scrub_impl(spark, sf)
 
 
 @register("pii_scrub_strict", _pii_sql(PII_PHONE_STRICT))

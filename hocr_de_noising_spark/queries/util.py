@@ -8,7 +8,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents"
+    "region nation customer part orders lineitem events documents"
 ).split()
 
 # name -> {"fn": callable(spark, sf_dir) -> DataFrame, "sql": str | None}

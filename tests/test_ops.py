@@ -133,10 +133,7 @@ def test_text_keys_on_adversarial_corpus(spark, tmp_path):
         "quality_repetition", "doc_fingerprint", "dedup_exact",
         "sample_split", "decontaminate_overlap", "pii_scrub",
         "pii_scrub_strict", "quality_boilerplate",
-        "html_main_content", "dedup_lines", "vocab_topk",
-        "quality_perplexity", "url_canonicalize", "bpe_pair_topk",
-        "sample_stratified", "shard_token_budget",
-        "html_main_content_dom", "pack_sequences", "dsir_select",
+        "html_main_content", "url_canonicalize", "html_main_content_dom",
     ]
     for name in keys:
         sdf = QUERIES[name]["fn"](spark, str(sdir)).toPandas()

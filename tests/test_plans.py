@@ -181,82 +181,11 @@ def test_r6_text_keys_plan_shape(spark):
     assert len(rdd_ids) == 1  # totals + uniq share one subtree
 
 
-def test_r7_corpus_stats_plan_shape(spark):
-    """dedup_lines: line df from hash aggregates (map-side partials),
-    hot-list removal via a BROADCAST join (r8: LEFT join carrying a
-    hot FLAG into conditional aggregates — one stream, no base-scan
-    resurrection join), NO window-by-line — the r6 shingle-skew class
-    is structurally excluded. url_canonicalize: pure map-side
-    projection (no exchange/join/Python). quality_perplexity: vocab
-    reaches the token stream by broadcast; vocab_topk's k-cut is a
-    TakeOrdered, not a global sort."""
-    dl = QUERIES["dedup_lines"]["fn"](spark, SF)
-    p = plan_str(dl)
-    assert "Window" not in p and "CartesianProduct" not in p, p
-    assert "BroadcastHashJoin" in p and "LeftOuter" in p, p
-    # exactly ONE join: the hot-flag attach — the r7 shape's second
-    # (base-resurrection) join is gone
-    assert p.count("BroadcastHashJoin") == 1 and "SortMergeJoin" not in p, p
-    assert "partial_count" in p, p
+def test_url_canonicalize_is_map_side(spark):
+    """url_canonicalize: pure map-side projection (no exchange/join/
+    Python)."""
     uc = QUERIES["url_canonicalize"]["fn"](spark, SF)
     pu = plan_str(uc)
     assert "Exchange" not in pu and "Join" not in pu, pu
     assert pu.count("Scan parquet") == 1, pu
     assert "Python" not in pu and "Arrow" not in pu, pu
-    ppl = QUERIES["quality_perplexity"]["fn"](spark, SF)
-    pp = plan_str(ppl)
-    assert "BroadcastHashJoin" in pp, pp
-    assert "SortMergeJoin" not in pp and "CartesianProduct" not in pp, pp
-    vk = QUERIES["vocab_topk"]["fn"](spark, SF)
-    pv = plan_str(vk)
-    assert "TakeOrderedAndProject" in pv, pv
-
-
-def test_r7_sampling_and_bpe_plan_shape(spark):
-    """sample_stratified: pure map-side filter (zero exchange/join,
-    one scan, filter pushdown-safe); bpe_pair_topk: per-row zip_with
-    pair generation (no self-join/window) + hash agg + TakeOrdered."""
-    st = QUERIES["sample_stratified"]["fn"](spark, SF)
-    p = plan_str(st)
-    assert "Exchange" not in p and "Join" not in p, p
-    assert p.count("Scan parquet") == 1, p
-    bp = QUERIES["bpe_pair_topk"]["fn"](spark, SF)
-    pb = plan_str(bp)
-    assert "Join" not in pb and "Window" not in pb, pb
-    assert "TakeOrderedAndProject" in pb and "partial_count" in pb, pb
-
-
-def test_r7_shard_plan_is_distributed_prefix_sum(spark):
-    """shard_token_budget: the only single-task stage is the tiny
-    bucket-offsets table (SinglePartition exchange exactly once, on
-    the aggregated bucket side); the data-scale running sum is a
-    Window PARTITIONED by bucket; offsets reach the docs via
-    broadcast."""
-    df = QUERIES["shard_token_budget"]["fn"](spark, SF)
-    p = plan_str(df)
-    assert p.count("Exchange SinglePartition") == 1, p
-    assert "BroadcastHashJoin" in p and "CartesianProduct" not in p, p
-    # the doc-level window carries a partition spec ([_bkt]) — a global
-    # unpartitioned window over the data would render without one
-    assert re.search(r"windowspecdefinition\(_bkt#\d+L?, doc_id", p), p
-
-
-def test_r7_pack_and_dsir_plan_shape(spark):
-    """pack_sequences: the shared distributed prefix sum (exactly one
-    SinglePartition exchange — the tiny bucket-offsets table; the
-    data-scale window partitions by bucket) plus a per-row JVM span
-    explode — no extra join beyond the offsets broadcast.
-    dsir_select: bucket log-ratios reach the feature stream via
-    BroadcastHashJoin, the per-doc score is a hash agg with map-side
-    partials, the k-cut is a TakeOrdered — no corpus-scale window, no
-    cartesian, zero Python."""
-    pk = QUERIES["pack_sequences"]["fn"](spark, SF)
-    p = plan_str(pk)
-    assert p.count("Exchange SinglePartition") == 1, p
-    assert "BroadcastHashJoin" in p and "CartesianProduct" not in p, p
-    assert re.search(r"windowspecdefinition\(_bkt#\d+L?, doc_id", p), p
-    ds = QUERIES["dsir_select"]["fn"](spark, SF)
-    pd_ = plan_str(ds)
-    assert "BroadcastHashJoin" in pd_ and "CartesianProduct" not in pd_, pd_
-    assert "TakeOrderedAndProject" in pd_ and "partial_count" in pd_, pd_
-    assert "Window" not in pd_ and "Python" not in pd_, pd_

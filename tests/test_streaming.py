@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
+from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.streaming import incremental_denoise_stream
 
 
@@ -26,7 +27,10 @@ def stream_dirs(tmp_path):
     return d
 
 
-def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
+@pytest.mark.parametrize(
+    "params", [Params(), Params(tau_wconf=60)], ids=["default", "tau60"]
+)
+def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs, params):
     docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
     lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
     tokens = [r.token for r in lexicon.select("token").collect()]
@@ -37,7 +41,8 @@ def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
     # batch 1 arrives
     first.write.mode("append").parquet(stream_dirs["in"])
     incremental_denoise_stream(
-        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens
+        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens,
+        params=params,
     )
     n1 = spark.read.parquet(stream_dirs["out"]).count()
     assert n1 == first.count()
@@ -45,16 +50,22 @@ def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
     # restart with batch 2 added: only NEW files are processed
     second.write.mode("append").parquet(stream_dirs["in"])
     incremental_denoise_stream(
-        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens
+        spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens,
+        params=params,
     )
     out = spark.read.parquet(stream_dirs["out"])
     assert out.count() == docs.count()  # no duplicates: exactly-once
     assert out.select("doc_id").distinct().count() == docs.count()
 
-    # stream result equals the batch pipeline on the same input
-    batch = denoise_fused(docs, tokens)
+    # stream result equals the batch pipeline on the same input and params
+    batch = denoise_fused(docs, tokens, params)
     j = out.alias("o").join(batch.alias("b"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("b.spans"))).count() == 0
+    if params != Params():
+        # the stream applied the non-default params, not the defaults
+        default = denoise_fused(docs, tokens).alias("d")
+        j = out.alias("o").join(default, "doc_id")
+        assert j.filter(~F.col("o.spans").eqNullSafe(F.col("d.spans"))).count() > 0
 
 
 def test_stateful_streaming_dedup(spark, sf001_dir, stream_dirs):
@@ -94,7 +105,6 @@ def test_job_and_stream_destroy_their_broadcasts(spark, unit_dir, stream_dirs, t
     the driver's temp dir until ``destroy()``: repeated jobs and stream
     calls must not leave one behind each."""
     from hocr_de_noising_spark.checkpoint import run_denoise_job
-    from hocr_de_noising_spark.params import Params
 
     docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
     lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
@@ -119,7 +129,6 @@ def test_job_and_stream_destroy_their_broadcasts(spark, unit_dir, stream_dirs, t
 def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     """A micro-batch re-delivered with the same batch_id (foreachBatch
     retry after partial failure) must overwrite, not duplicate."""
-    from hocr_de_noising_spark.params import Params
     from hocr_de_noising_spark.streaming.incremental import make_denoise_sink
 
     docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet")).limit(20)
@@ -133,57 +142,3 @@ def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     assert out.select("doc_id").distinct().count() == 20
     sink(docs, 1)  # a new batch appends alongside
     assert spark.read.parquet(stream_dirs["out"]).count() == 40
-
-
-def test_streaming_dsir_score_matches_batch(spark, stream_dirs):
-    """r7: DSIR as incremental selection — the importance model
-    (dsir_bucket_log_ratios) is trained ONCE on a batch sample, frozen
-    to a plain table, and applied to a readStream source inside
-    foreachBatch via dsir_score (static broadcast, no streaming
-    state). Streamed scores must equal batch scores row-for-row."""
-    from hocr_de_noising_spark.queries.corpus_stats import (
-        dsir_bucket_log_ratios,
-        dsir_score,
-    )
-
-    ddl = "doc_id long, text string"
-    seed = spark.createDataFrame(
-        [(100, "the keeper recorded evening measurements beside the pier"),
-         (101, "seventeen letters reached the evening ferry before dusk")],
-        ddl,
-    )
-    target = spark.createDataFrame(
-        [(200, "evening measurements of the keeper beside the pier"),
-         (201, "the evening ferry delivered letters to the keeper")],
-        ddl,
-    )
-    # freeze the model (materialized, as a production run would persist it)
-    lr_path = os.path.join(stream_dirs["in"], "..", "lr.parquet")
-    dsir_bucket_log_ratios(seed, target).write.parquet(lr_path)
-    lr = spark.read.parquet(lr_path)
-
-    arriving = spark.createDataFrame(
-        [(0, "the keeper measured the evening tide beside the pier"),
-         (1, "discount voucher codes expire before midnight closing"),
-         (2, "letters for the keeper reached the ferry that evening")],
-        ddl,
-    )
-    arriving.write.mode("overwrite").parquet(stream_dirs["in"])
-    batch = dsir_score(arriving, lr)
-
-    stream_src = spark.readStream.schema(ddl).parquet(stream_dirs["in"])
-    q = (
-        stream_src.writeStream.foreachBatch(
-            lambda b, _: dsir_score(b, lr)
-            .write.mode("append")
-            .parquet(stream_dirs["out"])
-        )
-        .option("checkpointLocation", stream_dirs["ckpt"])
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.read.parquet(stream_dirs["out"])
-    assert streamed.count() == batch.count() == 3
-    assert streamed.exceptAll(batch).isEmpty()
-    assert batch.exceptAll(streamed).isEmpty()
