@@ -96,7 +96,7 @@ _LAST_GREEN = dict.fromkeys(
         "scalar_string", "scalar_xml", "scan_lineitem",
         "set_intersect", "tpch_q3",
         "udaf_mad", "url_canonicalize", "url_host_filter",
-        "wconf_filter", "window_range_frame",
+        "vocab_topk", "wconf_filter", "window_range_frame",
     ],
     7,
 )

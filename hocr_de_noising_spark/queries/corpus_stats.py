@@ -1,259 +1,20 @@
-"""Corpus-level text statistics and line-granular dedup — the
-training-data curation operators that work on sub-document units
-(lines, tokens) rather than whole documents.
+"""Corpus vocabulary head — the one corpus-statistics key left.
 
-- ``dedup_lines``: repeated-line removal in the CCNet shape (Wenzek et
-  al., arXiv:1911.00359 — public paper: dedup at the line/paragraph
-  level BEFORE document-level dedup, since web boilerplate repeats in
-  otherwise-distinct pages). A line whose corpus document-frequency
-  exceeds ``LINE_DF_CAP`` is dropped from every document.
-- ``vocab_topk``: corpus vocabulary head — top-k tokens by document
-  frequency (the tokenizer-training / stopword-derivation feeder).
-- ``quality_perplexity``: unigram-LM negative log-likelihood per
-  document (the quality-scoring shape CCNet implements with KenLM;
-  here the LM is the corpus's own unigram distribution, which keeps
-  the key exactly oracle-checkable).
+- ``vocab_topk``: top-k tokens by document frequency (the
+  tokenizer-training / stopword-derivation feeder).
 
-Scale design (100 TB):
-- line df and vocab counts are HASH AGGREGATES with map-side partials
-  (groupBy(line,[doc]) -> groupBy(line)); no window ever partitions by
-  a potentially-hot line/token, so the r6 shingle-skew class cannot
-  reappear here (VERDICT r6 item 2 discipline).
-- the over-cap hot-line list is tiny by construction (only lines
-  repeated across > cap docs) and is removed via a BROADCAST left-anti
-  join — map-side, no shuffle of the big exploded stream beyond the
-  one reassembly exchange.
-- perplexity sums are BIGINT micro-nats (round(-ln p * 1e6)): integer
-  addition is exact and order-independent, so the result is
-  bit-identical regardless of partitioning/merge order — float sums
-  across an unordered shuffle would not be.
-- the unigram vocab is an aggregate output small enough to broadcast
-  (|vocab| grows ~Heaps-law sublinearly; the library surface takes a
-  ``top_v`` cap + OOV floor for corpora where it does not).
+Scale design (100 TB): the token counts are a two-level HASH
+AGGREGATE with map-side partials, and the k-cut is a TakeOrdered, so no
+window or global sort ever partitions by a potentially-hot token.
 """
 
 from __future__ import annotations
 
-import math
-import sys
-
-from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hocr_de_noising_spark.queries.util import let_sql, load, register
+from hocr_de_noising_spark.queries.util import load, register
 
-LINE_TOKENS = 8  # synthetic line width (tokens) for the registry keys
-LINE_DF_CAP = 4  # a line present in more docs than this is boilerplate
 VOCAB_K = 50
-
-# planted boilerplate lines (the nav/footer strings a crawler sees on
-# every page of a site) — appended/prepended deterministically in BOTH
-# engines so the registry key's corpus actually contains cross-doc
-# repeated lines
-_BP_HEAD = "cookie notice we use cookies on this site"
-_BP_MID = "subscribe to our newsletter for updates today"
-_BP_TAIL = "all rights reserved by the site owner"
-
-
-# ------------------------------------------------------ library API --
-
-
-def dedup_repeated_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    df_cap: int = LINE_DF_CAP,
-) -> DataFrame:
-    """Remove every line whose corpus document-frequency exceeds
-    ``df_cap`` (CCNet line-level dedup). Returns one row per input row:
-    (id, n_lines, n_kept, clean_text).
-
-    Physical shape: posexplode_outer -> two-level hash aggregate for
-    line df (map-side partials at both levels; NO window-by-line) ->
-    broadcast LEFT join of the tiny hot list as a per-row flag -> one
-    groupBy(id) reassembly with conditional aggregates (hot/null rows
-    count 0 and drop out of the collect_list, which skips nulls) and
-    order restored via sort_array on (pos, line).
-
-    r8 shape change (output bit-identical, oracle-verified): the
-    previous form anti-joined hot lines away and LEFT-joined a third
-    scan of the input back on to resurrect all-hot documents — three
-    evaluations of the (possibly expensive) ``text_col`` expression
-    and two joins. The outer explode keeps every document in the one
-    stream (a doc whose every line is hot, or whose text is NULL,
-    aggregates to (n_kept=0, clean_text='')), so the base subtree and
-    its join disappear: 3 text scans -> 2, 2 joins -> 1 (measured
-    1.42 -> 1.18 s on dedup_lines at sf0.1).
-    """
-    lines = df.select(
-        F.col(id_col),
-        F.size(F.split(text_col, "\n")).alias("n_lines"),
-        F.posexplode_outer(F.split(text_col, "\n")).alias("pos", "line"),
-    )
-    # df per line: dedup (line, doc) then count docs — both stages are
-    # combiner-friendly hash aggregates, no per-line materialization
-    line_df = (
-        lines.groupBy("line", id_col)
-        .agg(F.lit(1).alias("_one"))
-        .groupBy("line")
-        .count()
-    )
-    hot = line_df.filter(F.col("count") > df_cap).select(
-        "line", F.lit(True).alias("_ddl_hot")
-    )
-    flagged = lines.join(F.broadcast(hot), "line", "left")
-    keep = F.col("_ddl_hot").isNull() & F.col("line").isNotNull()
-    return flagged.groupBy(id_col).agg(
-        F.first("n_lines").cast("int").alias("n_lines"),
-        F.count(F.when(keep, 1)).cast("int").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.when(keep, F.struct("pos", "line")))
-                ),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("clean_text"),
-    )
-
-
-def unigram_nll(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_v: int | None = None,
-    oov_floor: float = 1e-9,
-) -> DataFrame:
-    """Per-document mean unigram negative log-likelihood (nats) under
-    the corpus's own unigram LM — the CCNet quality-scoring shape with
-    an exactly-reproducible LM. Returns (id, n_tokens, nll).
-
-    The per-token -ln p is quantized to BIGINT micro-nats before
-    summation so the aggregate is exact and order-independent (float
-    partial sums across an unordered shuffle are not bit-stable).
-    ``top_v`` caps the broadcast vocabulary; out-of-vocab tokens score
-    ``-ln(oov_floor)`` (web-scale corpora; None = exact full vocab).
-    """
-    toks = df.select(F.col(id_col), F.explode(F.split(text_col, " ")).alias("tok"))
-    # checkpoint the (small, Heaps-sublinear) vocab so the corpus is
-    # scanned ONCE for it: the grand total, the top_v cut and the
-    # scoring join all read the checkpointed aggregate instead of
-    # re-deriving it (a separate toks.count() was a third full scan)
-    vocab = toks.groupBy("tok").count().localCheckpoint(eager=False)
-    # total over ALL tokens (LM normalization), even when top_v caps
-    # the broadcast vocabulary — one scalar on the driver
-    total = vocab.agg(F.sum("count")).first()[0] or 0
-    if top_v is not None:
-        vocab = vocab.orderBy(F.col("count").desc(), "tok").limit(top_v)
-    scored = vocab.select(
-        "tok",
-        F.round(-F.log(F.col("count") / F.lit(float(total))) * 1e6)
-        .cast("bigint")
-        .alias("nll_micro"),
-    )
-    oov_micro = int(round(-math.log(oov_floor) * 1e6))
-    joined = toks.join(F.broadcast(scored), "tok", "left")
-    return joined.groupBy(id_col).agg(
-        F.count("*").cast("int").alias("n_tokens"),
-        F.round(
-            F.sum(F.coalesce("nll_micro", F.lit(oov_micro))) / 1e6 / F.count("*"),
-            4,
-        ).alias("nll"),
-    )
-
-
-# --------------------------------------------------- registry keys --
-
-# deterministic lined text, identical in Spark and DuckDB: content
-# tokens chunked into LINE_TOKENS-token lines, plus planted boilerplate
-# lines on doc_id strides (head on %4, mid on %3, tail on %5)
-
-
-def _spark_lined(spark: SparkSession, sf: str) -> DataFrame:
-    t = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    # let-bound token array: split once per doc, not once per line
-    content = F.expr(
-        let_sql(
-            "split(text, ' ')",
-            "t",
-            f"transform(sequence(1, cast(ceil(size(t) / {LINE_TOKENS}.0)"
-            f" as int)), i -> array_join(slice(t,"
-            f" (i-1)*{LINE_TOKENS}+1, {LINE_TOKENS}), ' '))",
-        )
-    )
-    lined = F.concat(
-        F.expr(f"if(doc_id % 4 = 0, array('{_BP_HEAD}'), array())"),
-        content,
-        F.expr(f"if(doc_id % 3 = 0, array('{_BP_MID}'), array())"),
-        F.expr(f"if(doc_id % 5 = 0, array('{_BP_TAIL}'), array())"),
-    )
-    return t.select("doc_id", F.array_join(lined, "\n").alias("text"))
-
-
-_DUCK_LINED = f"""
-lined AS (
-  SELECT doc_id,
-         array_to_string(
-           (CASE WHEN doc_id % 4 = 0 THEN ['{_BP_HEAD}']
-                 ELSE [] END)
-           || list_transform(
-                generate_series(1, CAST(ceil(len(t) / {LINE_TOKENS}.0) AS INT)),
-                i -> array_to_string(
-                       t[(i-1)*{LINE_TOKENS}+1 : least(i*{LINE_TOKENS}, len(t))],
-                       ' '))
-           || (CASE WHEN doc_id % 3 = 0 THEN ['{_BP_MID}'] ELSE [] END)
-           || (CASE WHEN doc_id % 5 = 0 THEN ['{_BP_TAIL}'] ELSE [] END),
-           chr(10)) AS text
-  FROM (SELECT doc_id, string_split(text, ' ') AS t
-        FROM documents WHERE text IS NOT NULL)
-)
-"""
-
-_DEDUP_LINES_SQL = f"""
-WITH {_DUCK_LINED},
-lines AS (
-  SELECT doc_id, len(l) AS n_lines, u.pos AS pos, u.line AS line
-  FROM (
-    SELECT doc_id, l,
-           unnest(list_transform(generate_series(1, len(l)),
-                  i -> struct_pack(pos := i - 1, line := l[i]))) AS u
-    FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM lined))
-),
-hot AS (
-  SELECT line FROM (
-    SELECT line, count(*) AS df
-    FROM (SELECT DISTINCT line, doc_id FROM lines)
-    GROUP BY line)
-  WHERE df > {LINE_DF_CAP}
-),
-kept AS (
-  SELECT * FROM lines WHERE line NOT IN (SELECT line FROM hot)
-),
-reassembled AS (
-  SELECT doc_id, any_value(n_lines) AS n_lines,
-         CAST(count(*) AS INT) AS n_kept,
-         array_to_string(list_transform(
-           list_sort(list(struct_pack(pos := pos, line := line))),
-           s -> s.line), chr(10)) AS clean_text
-  FROM kept GROUP BY doc_id
-)
-SELECT b.doc_id,
-       CAST(coalesce(r.n_lines, b._nl) AS INT) AS n_lines,
-       CAST(coalesce(r.n_kept, 0) AS INT) AS n_kept,
-       coalesce(r.clean_text, '') AS clean_text
-FROM (SELECT doc_id, len(string_split(text, chr(10))) AS _nl FROM lined) b
-LEFT JOIN reassembled r USING (doc_id)
-"""
-
-
-@register("dedup_lines", _DEDUP_LINES_SQL)
-def dedup_lines(spark, sf):
-    """CCNet-style repeated-line removal over deterministically lined
-    documents: the planted head/mid/tail boilerplate lines (df ~ n/4,
-    n/3, n/5 >> cap) must vanish from every document, the unique
-    content lines must survive in order."""
-    return dedup_repeated_lines(_spark_lined(spark, sf))
 
 
 _VOCAB_SQL = f"""
@@ -287,563 +48,4 @@ def vocab_topk(spark, sf):
         )
         .orderBy(F.col("df").desc(), F.col("tf").desc(), "tok")
         .limit(VOCAB_K)
-    )
-
-
-_PPL_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-  FROM documents WHERE text IS NOT NULL
-),
-vocab AS (
-  SELECT tok,
-         CAST(round(-ln(count(*) / (SELECT CAST(count(*) AS DOUBLE)
-                                    FROM toks)) * 1e6) AS BIGINT)
-           AS nll_micro
-  FROM toks GROUP BY tok
-)
-SELECT doc_id,
-       CAST(count(*) AS INT) AS n_tokens,
-       round(sum(nll_micro) / 1e6 / count(*), 4) AS nll
-FROM toks JOIN vocab USING (tok)
-GROUP BY doc_id
-"""
-
-
-@register("quality_perplexity", _PPL_SQL)
-def quality_perplexity(spark, sf):
-    """Unigram-LM quality score: per-document mean negative
-    log-likelihood in nats under the corpus's own unigram
-    distribution. BIGINT micro-nat summation keeps the aggregate
-    bit-stable across partitionings (module docstring)."""
-    docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    return unigram_nll(docs)
-
-
-# --------------------------------------------- BPE pair statistics --
-
-PAIR_K = 50
-
-
-_BPE_SQL = f"""
-SELECT pair, count(*) AS n
-FROM (SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-                    i -> t[i] || ' ' || t[i+1])) AS pair
-      FROM (SELECT string_split(text, ' ') AS t
-            FROM documents WHERE text IS NOT NULL))
-GROUP BY pair ORDER BY n DESC, pair LIMIT {PAIR_K}
-"""
-
-
-@register("bpe_pair_topk", _BPE_SQL)
-def bpe_pair_topk(spark, sf):
-    """Adjacent-token-pair frequency head — the merge-candidate scan at
-    the core of BPE tokenizer training (Sennrich et al.,
-    arXiv:1508.07909: each merge round promotes the most frequent
-    adjacent pair). Pair generation is a per-row JVM zip_with (no
-    self-join, no window); counting is one combiner-friendly hash
-    aggregate; the k-cut is a TakeOrdered. At corpus scale each BPE
-    round is exactly this job over the re-tokenized stream."""
-    t = "split(text, ' ')"
-    pairs = (
-        load(spark, sf, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            F.explode(
-                F.expr(
-                    f"zip_with(slice({t}, 1, greatest(size({t}) - 1, 0)),"
-                    f" slice({t}, 2, greatest(size({t}) - 1, 0)),"
-                    f" (a, b) -> concat(a, ' ', b))"
-                )
-            ).alias("pair")
-        )
-    )
-    return (
-        pairs.groupBy("pair")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), "pair")
-        .limit(PAIR_K)
-    )
-
-
-# ------------------------------------- token-budget corpus sharding --
-
-SHARD_BUDGET = 1000  # tokens per output shard (registry key)
-SHARD_BUCKET = 64  # doc_ids per prefix-sum bucket (registry key)
-
-
-def exclusive_prefix_sum(
-    df: DataFrame,
-    val_col: str,
-    id_col: str = "doc_id",
-    bucket_width: int = 1 << 20,
-) -> DataFrame:
-    """Distributed exclusive prefix sum of ``val_col`` in ``id_col``
-    order — adds a ``_cum`` BIGINT column; exact, deterministic,
-    order-preserving (integer arithmetic throughout).
-
-    Scale shape: a GLOBAL running sum via one Window.orderBy would
-    materialize the whole corpus in a single task. Instead: (1) bucket
-    rows by id range (map-side), (2) one combiner-friendly hash
-    aggregate for per-bucket totals, (3) cumulative offsets over the
-    tiny bucket table (the only unbounded window — n/bucket_width
-    rows, e.g. 10^6 at 10^12 docs; recurse the same trick if that ever
-    overflows a task), (4) broadcast offsets back and run the
-    within-bucket running sum partitioned by bucket — every data-scale
-    window partition is bounded by bucket_width."""
-    b = df.withColumn("_bkt", F.floor(F.col(id_col) / bucket_width))
-    per_bucket = b.groupBy("_bkt").agg(F.sum(val_col).alias("_bsum"))
-    w_b = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = per_bucket.select(
-        "_bkt", F.coalesce(F.sum("_bsum").over(w_b), F.lit(0)).alias("_off")
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.join(F.broadcast(offsets), "_bkt")
-        .withColumn(
-            "_cum",
-            F.col("_off") + F.coalesce(F.sum(val_col).over(w_in), F.lit(0)),
-        )
-        .drop("_bkt", "_off")
-    )
-
-
-def shard_token_budget(
-    df: DataFrame,
-    budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_width: int = 1 << 20,
-) -> DataFrame:
-    """Assign each document to an output shard such that shards hold
-    ~``budget`` tokens in ``id_col`` order — the equal-sized-training-
-    file sharding step that closes a curation pipeline. Returns
-    (id, n_tokens, shard) with shard = floor(exclusive-prefix-sum /
-    budget). Scale shape: the distributed prefix sum
-    (``exclusive_prefix_sum``) — no corpus-scale unbounded window."""
-    toks = df.select(
-        F.col(id_col),
-        F.size(F.split(text_col, " ")).cast("long").alias("n_tokens"),
-    )
-    return exclusive_prefix_sum(toks, "n_tokens", id_col, bucket_width).select(
-        id_col,
-        F.col("n_tokens").cast("int").alias("n_tokens"),
-        (F.col("_cum") / budget).cast("int").alias("shard"),
-    )
-
-
-_SHARD_SQL = f"""
-SELECT doc_id,
-       CAST(n_tokens AS INT) AS n_tokens,
-       CAST((SUM(n_tokens) OVER (ORDER BY doc_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             - n_tokens) // {SHARD_BUDGET} AS INT) AS shard
-FROM (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
-      FROM documents WHERE text IS NOT NULL)
-"""
-
-
-@register("shard_token_budget", _SHARD_SQL)
-def shard_token_budget_key(spark, sf):
-    """Token-budget sharding over the documents table (budget
-    {SHARD_BUDGET} tokens, {SHARD_BUCKET}-doc prefix-sum buckets): the
-    distributed prefix sum must equal the oracle's single global
-    running sum exactly (integer arithmetic throughout)."""
-    docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    return shard_token_budget(
-        docs, SHARD_BUDGET, bucket_width=SHARD_BUCKET
-    )
-
-
-# ------------------------------------------- stratified sampling --
-
-
-def sample_stratified(
-    df: DataFrame,
-    fracs: dict[str, float],
-    default_frac: float = 0.0,
-    strata_col: str = "source",
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """Deterministic per-stratum subsampling — the corpus-mixture
-    weighting step of training-data assembly (keep X% of each source).
-    Keep-decision: first 4 md5 hex chars of (salt || id) compared
-    lexicographically against floor(frac·16⁴) rendered as 4 hex
-    digits — content-independent, stable across reruns and cluster
-    sizes, pure map-side (zero shuffle, no sampling state; the same
-    rule family as ``sample_split``). ``salt`` yields independent
-    re-draws. Granularity is 1/65536; fracs are clamped to [0, 1]."""
-
-    def thresh(f: float) -> str:
-        n = max(0, min(65536, int(f * 65536)))
-        # 'g' sorts after every hex digit: frac=1.0 keeps everything
-        # (a 5-digit "10000" would compare lexicographically WRONG
-        # against the 4-char md5 prefix)
-        return "g" if n == 65536 else format(n, "04x")
-
-    h = F.substring(F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 4)
-    expr = None
-    for s, f in sorted(fracs.items()):
-        c = (F.col(strata_col) == s) & (h < thresh(f))
-        expr = c if expr is None else expr | c
-    # NULL strata must take the default bucket explicitly (ADVICE r7):
-    # `~isin(...)` evaluates NULL for a NULL stratum, which filter()
-    # rejects — while the SQL oracle's CASE falls through to its ELSE
-    # default branch and can keep the row. coalesce(..., True) gives
-    # the engines identical semantics.
-    others = F.coalesce(
-        ~F.col(strata_col).isin(list(fracs)), F.lit(True)
-    ) & (h < thresh(default_frac))
-    return df.filter((expr | others) if expr is not None else others)
-
-
-_STRATA_FRACS = {"src0": 0.5, "src1": 0.25}
-_STRATA_DEFAULT = 0.125
-
-
-def _strat_sql() -> str:
-    def thresh(f: float) -> str:
-        n = int(f * 65536)
-        return "g" if n == 65536 else format(n, "04x")
-
-    whens = " ".join(
-        f"WHEN source = '{s}' THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)"
-        f" < '{thresh(f)}'"
-        for s, f in sorted(_STRATA_FRACS.items())
-    )
-    return f"""
-SELECT doc_id, source
-FROM documents
-WHERE CASE {whens}
-      ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-           < '{thresh(_STRATA_DEFAULT)}' END
-"""
-
-
-@register("sample_stratified", _strat_sql())
-def sample_stratified_key(spark, sf):
-    """Per-source mixture sampling over the documents table: keep 50%
-    of src0, 25% of src1, 12.5% of everything else, deterministically
-    by id hash."""
-    return sample_stratified(
-        load(spark, sf, "documents"),
-        _STRATA_FRACS,
-        default_frac=_STRATA_DEFAULT,
-    ).select("doc_id", "source")
-
-
-# -------------------------------------- training-sequence packing --
-
-SEQ_LEN = 32  # tokens per packed training sequence (registry key)
-
-
-def pack_sequences(
-    df: DataFrame,
-    seq_len: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bucket_width: int = 1 << 20,
-) -> DataFrame:
-    """Concat-and-chunk sequence packing — the manifest that maps each
-    document onto the fixed-length training sequences it fills
-    (sequence k = tokens [k·L, (k+1)·L) of the concatenated corpus in
-    ``id_col`` order, the standard LM pretraining batch layout).
-    Returns one row per (sequence, document) contribution:
-    (seq_id, id, doc_offset, n_tokens) where ``doc_offset`` is the
-    first contributed token's index within the document — so a
-    boundary-straddling document appears once per sequence it spans.
-
-    Scale shape: the global token cursor is ``exclusive_prefix_sum``
-    (no corpus-scale unbounded window); the span explode emits
-    ceil(n/L)+1 ≤ tiny rows per doc (JVM ``sequence``, no join); every
-    downstream column is integer arithmetic, so the manifest is exact
-    and bit-stable under any partitioning."""
-    toks = df.select(
-        F.col(id_col),
-        F.size(F.split(text_col, " ")).cast("long").alias("_n"),
-    )
-    c = exclusive_prefix_sum(toks, "_n", id_col, bucket_width)
-    spanned = c.select(
-        F.col(id_col),
-        "_n",
-        "_cum",
-        F.explode(
-            F.sequence(
-                F.floor(F.col("_cum") / seq_len),
-                F.floor((F.col("_cum") + F.col("_n") - 1) / seq_len),
-            )
-        ).alias("seq_id"),
-    )
-    seg_start = F.greatest(F.col("_cum"), F.col("seq_id") * seq_len)
-    seg_end = F.least(F.col("_cum") + F.col("_n"), (F.col("seq_id") + 1) * seq_len)
-    return spanned.select(
-        F.col("seq_id").cast("int").alias("seq_id"),
-        id_col,
-        (seg_start - F.col("_cum")).cast("int").alias("doc_offset"),
-        (seg_end - seg_start).cast("int").alias("n_tokens"),
-    )
-
-
-_PACK_SQL = f"""
-SELECT CAST(seq_id AS INT) AS seq_id,
-       doc_id,
-       CAST(greatest(cum, seq_id * {SEQ_LEN}) - cum AS INT) AS doc_offset,
-       CAST(least(cum + n, (seq_id + 1) * {SEQ_LEN})
-            - greatest(cum, seq_id * {SEQ_LEN}) AS INT) AS n_tokens
-FROM (
-  SELECT doc_id, n, cum,
-         unnest(generate_series(cum // {SEQ_LEN},
-                                (cum + n - 1) // {SEQ_LEN})) AS seq_id
-  FROM (
-    SELECT doc_id, n,
-           CAST(SUM(n) OVER (ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW)
-                - n AS BIGINT) AS cum
-    FROM (SELECT doc_id, len(string_split(text, ' ')) AS n
-          FROM documents WHERE text IS NOT NULL)))
-"""
-
-
-@register("pack_sequences", _PACK_SQL)
-def pack_sequences_key(spark, sf):
-    """Sequence-packing manifest over the documents table at
-    L={SEQ_LEN}: the distributed prefix-sum + span explode must equal
-    the oracle's single global running sum exactly — every sequence
-    except the last holds exactly L tokens, assembled from the docs
-    and offsets this manifest names."""
-    docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    return pack_sequences(docs, SEQ_LEN, bucket_width=SHARD_BUCKET)
-
-
-# ------------------------------- DSIR importance-weighted selection --
-
-DSIR_BUCKETS = 256  # first two md5 hex chars — portable across engines
-DSIR_K = 100
-
-
-def hashed_ngram_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fast_hash: bool = False,
-) -> DataFrame:
-    """Unigram + bigram feature stream hashed into ``DSIR_BUCKETS``
-    buckets via the first two md5 hex chars of the feature string —
-    the hashed n-gram featurization of DSIR (Xie et al.,
-    arXiv:2302.03169 §3). md5-prefix bucketing is engine-portable
-    (same rule family as ``sample_split``); bigram generation is the
-    per-row JVM zip_with of ``bpe_pair_topk`` (no join, no window).
-
-    ``fast_hash=True`` swaps md5 for ``pmod(xxhash64, 256)`` — a
-    measured 1.6x on the bucket scan at 1M docs (md5 is a crypto
-    hash; the bucketing only needs dispersion). Not DuckDB-portable,
-    so the registry key keeps md5; production at 10^12 docs should
-    take the fast path (only the bucket assignment changes, not the
-    semantics — both are valid DSIR featurizations)."""
-    t = f"split({text_col}, ' ')"
-    feats = F.concat(
-        F.expr(t),
-        F.expr(
-            f"zip_with(slice({t}, 1, greatest(size({t}) - 1, 0)),"
-            f" slice({t}, 2, greatest(size({t}) - 1, 0)),"
-            f" (a, b) -> concat(a, ' ', b))"
-        ),
-    )
-    bkt = (
-        F.pmod(F.xxhash64("feat"), F.lit(DSIR_BUCKETS)).cast("string")
-        if fast_hash
-        else F.substring(F.md5("feat"), 1, 2)
-    )
-    return df.select(F.col(id_col), F.explode(feats).alias("feat")).select(
-        id_col, bkt.alias("bkt")
-    )
-
-
-def dsir_importance(
-    raw: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int | None = None,
-    fast_hash: bool = False,
-) -> DataFrame:
-    """DSIR-shaped data selection (Xie et al., arXiv:2302.03169):
-    score each raw document by its log importance weight
-    log p_target(x)/p_raw(x) under Laplace-smoothed hashed-n-gram
-    bucket models of the two corpora, then keep the ``top_k`` highest
-    (deterministic rank, where the paper samples by weight). Returns
-    (id, n_feats, score) with score in nats.
-
-    Per-feature log-ratios are quantized to BIGINT micro-nats before
-    the per-doc sum (the ``unigram_nll`` bit-stability discipline).
-    Scale shape: bucket stats are one combiner-friendly hash aggregate
-    over the union stream; the 256-row log-ratio table broadcasts;
-    scoring is one more hash aggregate; the k-cut is a TakeOrdered —
-    no corpus-scale window, join, or driver loop anywhere.
-
-    Semantics caveats (measured, not hypothetical): (1) a target
-    corpus whose feature count is small relative to the bucket count
-    leaves the ratios dominated by Laplace smoothing — selection
-    degenerates toward noise, so a loud warning fires when target
-    features < DSIR_BUCKETS; (2) the paper's score is the SUM of
-    per-feature log-ratios over fixed-length chunks — on
-    variable-length docs a mostly-negative ratio field penalizes
-    longer docs, so chunk or length-normalize upstream if doc lengths
-    vary wildly."""
-    # r8 note: sharing the raw featurization between the model and the
-    # scoring pass (aggregate to (doc, bkt, n), localCheckpoint, feed
-    # both consumers) was built and A/B-measured flat at sf0.1
-    # (share 1.52-2.33 s vs split 1.61-1.70 s interleaved) — the
-    # checkpoint materialization pays back exactly the saved scan —
-    # and the (doc, bkt) table outgrows executor storage at 10^12
-    # docs. Two scans stay by design (the decon_overlap trade).
-    lr = dsir_bucket_log_ratios(
-        raw, target, text_col=text_col, id_col=id_col, fast_hash=fast_hash
-    )
-    return dsir_score(
-        raw, lr, text_col=text_col, id_col=id_col, top_k=top_k,
-        fast_hash=fast_hash,
-    )
-
-
-def dsir_bucket_log_ratios(
-    raw: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fast_hash: bool = False,
-) -> DataFrame:
-    """The DSIR importance MODEL: the tiny (bkt, lr_micro) table of
-    Laplace-smoothed log p_target/p_raw per hash bucket. Split out so
-    the model can be trained ONCE on a batch sample and then applied
-    to new data — including a readStream source, where ``dsir_score``
-    with a frozen model is the incremental-selection path (the model
-    table broadcasts into every micro-batch)."""
-    rb = hashed_ngram_buckets(raw, text_col, id_col, fast_hash=fast_hash)
-    tb = hashed_ngram_buckets(target, text_col, id_col, fast_hash=fast_hash)
-    counts = (
-        rb.select("bkt", F.lit(0).alias("is_t"))
-        .unionAll(tb.select("bkt", F.lit(1).alias("is_t")))
-        .groupBy("bkt")
-        .agg(
-            F.sum("is_t").alias("ct"),
-            F.sum(1 - F.col("is_t")).alias("cr"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # grand totals: one 2-value driver scalar off the tiny checkpointed
-    # aggregate (None-guarded — an empty corpus yields NULL sums)
-    tot = counts.agg(F.sum("ct"), F.sum("cr")).first()
-    n_target_feats = int((tot[0] if tot else 0) or 0)
-    if 0 < n_target_feats < DSIR_BUCKETS:
-        print(
-            f"WARNING: DSIR target corpus has only {n_target_feats} "
-            f"features across {DSIR_BUCKETS} hash buckets — importance "
-            f"weights are dominated by smoothing and the selection is "
-            f"close to noise; supply a larger target corpus",
-            file=sys.stderr,
-        )
-    t_tot = float(n_target_feats) + DSIR_BUCKETS
-    r_tot = float((tot[1] if tot else 0) or 0) + DSIR_BUCKETS
-    return counts.select(
-        "bkt",
-        F.round(
-            (
-                F.log((F.col("ct") + 1) / F.lit(t_tot))
-                - F.log((F.col("cr") + 1) / F.lit(r_tot))
-            )
-            * 1e6
-        )
-        .cast("bigint")
-        .alias("lr_micro"),
-    )
-
-
-def dsir_score(
-    df: DataFrame,
-    log_ratios: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int | None = None,
-    fast_hash: bool = False,
-) -> DataFrame:
-    """Score documents against a frozen DSIR model (the
-    ``dsir_bucket_log_ratios`` table): per-doc sum of per-feature
-    micro-nat log-ratios via one broadcast join + one hash aggregate.
-    Works identically on a batch frame or inside a streaming
-    foreachBatch (the model is static and broadcasts; no streaming
-    state needed). Buckets absent from the model score 0 — impossible
-    when the model was trained on a superset corpus, and the neutral
-    choice for genuinely novel buckets on a stream."""
-    fb = hashed_ngram_buckets(df, text_col, id_col, fast_hash=fast_hash)
-    scored = (
-        fb.join(F.broadcast(log_ratios), "bkt", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("int").alias("n_feats"),
-            F.sum(F.coalesce("lr_micro", F.lit(0))).alias("_score_micro"),
-        )
-    )
-    if top_k is not None:
-        # rank on the exact integer sum, never the rounded double
-        scored = scored.orderBy(F.col("_score_micro").desc(), id_col).limit(top_k)
-    return scored.select(
-        id_col,
-        "n_feats",
-        F.round(F.col("_score_micro") / 1e6, 4).alias("score"),
-    )
-
-
-_DSIR_SQL = f"""
-WITH feats AS (
-  SELECT doc_id, doc_id % 10 = 0 AS is_t, substr(md5(f), 1, 2) AS bkt
-  FROM (SELECT doc_id,
-               unnest(t || list_transform(
-                 generate_series(1, len(t) - 1),
-                 i -> t[i] || ' ' || t[i+1])) AS f
-        FROM (SELECT doc_id, string_split(text, ' ') AS t
-              FROM documents WHERE text IS NOT NULL))
-),
-counts AS (
-  SELECT bkt,
-         sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS ct,
-         sum(CASE WHEN is_t THEN 0 ELSE 1 END) AS cr
-  FROM feats GROUP BY bkt
-),
-tot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM counts),
-lr AS (
-  SELECT bkt,
-         CAST(round((ln((ct + 1) / (tt + {DSIR_BUCKETS}.0))
-                   - ln((cr + 1) / (tr + {DSIR_BUCKETS}.0))) * 1e6)
-              AS BIGINT) AS lr_micro
-  FROM counts, tot
-)
-SELECT doc_id,
-       CAST(count(*) AS INT) AS n_feats,
-       round(sum(lr_micro) / 1e6, 4) AS score
-FROM feats JOIN lr USING (bkt)
-WHERE NOT is_t
-GROUP BY doc_id
-ORDER BY sum(lr_micro) DESC, doc_id
-LIMIT {DSIR_K}
-"""
-
-
-@register("dsir_select", _DSIR_SQL)
-def dsir_select(spark, sf):
-    """DSIR selection over the documents table: every doc_id % 10 = 0
-    document plays the high-quality target corpus, the rest are the
-    raw pool; keep the {DSIR_K} raw docs whose hashed-n-gram log
-    importance weight toward the target distribution ranks highest."""
-    docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    return dsir_importance(
-        docs.filter(F.col("doc_id") % 10 != 0),
-        docs.filter(F.col("doc_id") % 10 == 0),
-        top_k=DSIR_K,
     )

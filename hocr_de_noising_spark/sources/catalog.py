@@ -1,9 +1,10 @@
 """Catalog shim: Iceberg tables in production, parquet paths here.
 
-The production deployment reads the interleaved-span corpus as Iceberg
-tables (`spark.read.table`), whose snapshot ids feed the manifest
-lineage. This sandbox has no Iceberg runtime jar (SURVEY.md §7.4), so
-the shim degrades to parquet directories with identical call sites — swap `kind="iceberg"` in a
+The production deployment reads/writes the interleaved-span corpus as
+Iceberg tables (`spark.read.table` / `df.writeTo(...).append()`), whose
+snapshot ids feed the manifest lineage. This sandbox has no Iceberg
+runtime jar (SURVEY.md §7.4), so the shim degrades to parquet
+directories with identical call sites — swap `kind="iceberg"` in a
 cluster deployment and nothing else changes.
 """
 
@@ -40,6 +41,13 @@ class Catalog:
         if self.kind == "iceberg":
             return spark.read.table(target)
         return spark.read.schema(DOCS_DDL).parquet(target)
+
+    def write(self, df: DataFrame, target: str, mode: str = "append") -> None:
+        if self.kind == "iceberg":
+            w = df.writeTo(target)
+            (w.append() if mode == "append" else w.createOrReplace())
+            return
+        df.write.mode("overwrite" if mode == "overwrite" else "append").parquet(target)
 
     def lineage(self, spark: SparkSession, target: str) -> str:
         """Input-lineage string for the manifest: Iceberg snapshot id in

@@ -1,7 +1,7 @@
 """Catalog call-shape tests: the Iceberg branch has no runtime jar in
 this sandbox (SURVEY.md §7.4), so these verify the production path is
-live code with the right DataFrameReader / snapshot-SQL call shapes,
-using mocks instead of a catalog."""
+live code with the right DataFrameReader / writeTo / snapshot-SQL call
+shapes, using mocks instead of a catalog."""
 
 from __future__ import annotations
 
@@ -28,6 +28,17 @@ def test_iceberg_read_uses_catalog_table():
     spark.read.table.assert_called_once_with("lake.docs")
 
 
+def test_iceberg_write_uses_writeTo_append_and_replace():
+    cat = Catalog(kind="iceberg")
+    df = MagicMock()
+    cat.write(df, "lake.docs", mode="append")
+    df.writeTo.assert_called_once_with("lake.docs")
+    df.writeTo.return_value.append.assert_called_once_with()
+    df.reset_mock()
+    cat.write(df, "lake.docs", mode="overwrite")
+    df.writeTo.return_value.createOrReplace.assert_called_once_with()
+
+
 def test_iceberg_lineage_queries_snapshots():
     cat = Catalog(kind="iceberg")
     spark = MagicMock()
@@ -47,7 +58,7 @@ def test_parquet_kind_round_trip(spark, tmp_path):
     cat = Catalog(kind="parquet")
     df = spark.range(5).selectExpr("cast(id AS string) AS doc_id")
     target = str(tmp_path / "t.parquet")
-    df.write.parquet(target)
+    cat.write(df, target, mode="overwrite")
     assert cat.read(spark, target).count() == 5
     assert cat.lineage(spark, target).startswith(f"parquet:{target}@")
 

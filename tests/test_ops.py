@@ -133,7 +133,8 @@ def test_text_keys_on_adversarial_corpus(spark, tmp_path):
         "quality_repetition", "doc_fingerprint", "dedup_exact",
         "sample_split", "decontaminate_overlap", "pii_scrub",
         "pii_scrub_strict", "quality_boilerplate",
-        "html_main_content", "url_canonicalize", "html_main_content_dom",
+        "html_main_content", "vocab_topk", "url_canonicalize",
+        "html_main_content_dom",
     ]
     for name in keys:
         sdf = QUERIES[name]["fn"](spark, str(sdir)).toPandas()

@@ -181,11 +181,14 @@ def test_r6_text_keys_plan_shape(spark):
     assert len(rdd_ids) == 1  # totals + uniq share one subtree
 
 
-def test_url_canonicalize_is_map_side(spark):
+def test_r7_corpus_stats_plan_shape(spark):
     """url_canonicalize: pure map-side projection (no exchange/join/
-    Python)."""
+    Python). vocab_topk's k-cut is a TakeOrdered, not a global sort."""
     uc = QUERIES["url_canonicalize"]["fn"](spark, SF)
     pu = plan_str(uc)
     assert "Exchange" not in pu and "Join" not in pu, pu
     assert pu.count("Scan parquet") == 1, pu
     assert "Python" not in pu and "Arrow" not in pu, pu
+    vk = QUERIES["vocab_topk"]["fn"](spark, SF)
+    pv = plan_str(vk)
+    assert "TakeOrderedAndProject" in pv, pv

@@ -27,10 +27,7 @@ def stream_dirs(tmp_path):
     return d
 
 
-@pytest.mark.parametrize(
-    "params", [Params(), Params(tau_wconf=60)], ids=["default", "tau60"]
-)
-def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs, params):
+def _stream_exactly_once(spark, unit_dir, stream_dirs, params):
     docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
     lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
     tokens = [r.token for r in lexicon.select("token").collect()]
@@ -66,6 +63,15 @@ def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs, params):
         default = denoise_fused(docs, tokens).alias("d")
         j = out.alias("o").join(default, "doc_id")
         assert j.filter(~F.col("o.spans").eqNullSafe(F.col("d.spans"))).count() > 0
+
+
+def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
+    _stream_exactly_once(spark, unit_dir, stream_dirs, Params())
+
+
+def test_incremental_denoise_stream_honours_params(spark, unit_dir, stream_dirs):
+    """A sink that dropped ``params`` would match the default batch."""
+    _stream_exactly_once(spark, unit_dir, stream_dirs, Params(tau_wconf=60))
 
 
 def test_stateful_streaming_dedup(spark, sf001_dir, stream_dirs):
