@@ -43,11 +43,7 @@ _CHANGED_SINCE_GREEN: list[str] = [
     # r8 let_sql rewrite: split/char-array bound once per row instead
     # of once per array element inside HOF lambdas (values unchanged,
     # verified vs DuckDB by scripts/preflight_oracle.py this round)
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
     "doc_fingerprint",
-    "dedup_components",
-    "dedup_components_star",
     "decontaminate_overlap",
     "quality_repetition",
     "url_host_filter",
@@ -68,8 +64,7 @@ _LAST_GREEN = dict.fromkeys(
         "agg_approx_distinct", "agg_cube", "agg_dedup_first",
         "agg_distinct", "agg_grouping_sets", "agg_percentile",
         "agg_rollup",
-        "dedup_components", "dedup_components_star",
-        "dedup_exact", "dedup_minhash_lsh",
+        "dedup_exact",
         "dict_join", "doc_fingerprint", "join_anti", "join_asof",
         "join_range", "lag_lead", "lang_id", "quality_repetition",
         "quality_score", "sample_split", "scalar_math",
@@ -81,9 +76,7 @@ _LAST_GREEN = dict.fromkeys(
 ) | dict.fromkeys(
     [
         "agg_approx_percentile", "agg_denoise_rate",
-        "decontaminate_overlap",
-        "dedup_ngram_jaccard",
-        "dedup_simhash", "explode_spans",
+        "decontaminate_overlap", "explode_spans",
         "garbage_ratio", "geom_outliers", "html_links",
         "html_main_content", "html_main_content_dom",
         "join_broadcast", "join_full", "join_inner", "join_left",
@@ -96,7 +89,7 @@ _LAST_GREEN = dict.fromkeys(
         "scalar_string", "scalar_xml", "scan_lineitem",
         "set_intersect", "tpch_q3",
         "udaf_mad", "url_canonicalize", "url_host_filter",
-        "vocab_topk", "wconf_filter", "window_range_frame",
+        "wconf_filter", "window_range_frame",
     ],
     7,
 )

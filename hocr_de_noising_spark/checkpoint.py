@@ -49,10 +49,10 @@ MANIFEST_SCHEMA = pa.schema(
 )
 
 
-def bucket_col(doc_col: str, params: Params):
+def bucket_col(params: Params):
     """J5 salted bucket: pmod(xxhash64(doc_id, salt), n_buckets)."""
     return F.pmod(
-        F.xxhash64(F.col(doc_col), F.lit(params.salt)), F.lit(params.n_buckets)
+        F.xxhash64(F.col("doc_id"), F.lit(params.salt)), F.lit(params.n_buckets)
     ).cast("int")
 
 
@@ -208,15 +208,15 @@ def run_denoise_job(
         n_bad = (
             docs.select("doc_id", "bucket")
             .limit(1024)
-            .filter(~F.col("bucket").eqNullSafe(bucket_col("doc_id", p)))
+            .filter(~F.col("bucket").eqNullSafe(bucket_col(p)))
             .count()
         )
         if n_bad:
-            docs_b = docs.drop("bucket").withColumn("bucket", bucket_col("doc_id", p))
+            docs_b = docs.drop("bucket").withColumn("bucket", bucket_col(p))
         else:
             docs_b = docs
     else:
-        docs_b = docs.withColumn("bucket", bucket_col("doc_id", p))
+        docs_b = docs.withColumn("bucket", bucket_col(p))
     group_of = F.col("bucket") % n_groups
     summary = {"groups_run": 0, "groups_skipped": 0, "n_docs": 0}
     # ship the lexicon as a broadcast variable, not a task closure:
@@ -249,7 +249,7 @@ def run_denoise_job(
             out = denoise_fused(observed.drop("bucket"), lex_tokens, p)
 
             out_obs = Observation()
-            out = out.withColumn("bucket", bucket_col("doc_id", p)).observe(
+            out = out.withColumn("bucket", bucket_col(p)).observe(
                 out_obs, *_bucket_metric_exprs(pending, "size(spans)")
             )
             (

@@ -53,7 +53,7 @@ def with_survival(df: DataFrame, params: Params | None = None) -> DataFrame:
     return df.withColumn("emitted_text", F.when(is_text, emitted))
 
 
-def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
+def reassemble_ordered(df: DataFrame) -> DataFrame:
     """Reading-order rank, media anchor and reassembly in ONE
     aggregation, with the reading-order sort computed INSIDE the
     collected array (r8).
@@ -89,7 +89,7 @@ def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
     differential tests)."""
     is_surv_text = (F.col("kind") == "text") & F.col("survives")
     w_pos = (
-        Window.partitionBy(doc_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -111,7 +111,7 @@ def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
             F.col("media_ref").alias("media_ref"),
         ),
     )
-    rd = df.groupBy(doc_col).agg(
+    rd = df.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(keyed)).alias("rd")
     )
     # input-order text table (pos, reading rank), let-bound so it is
@@ -130,4 +130,4 @@ def reassemble_ordered(df: DataFrame, doc_col: str = "doc_id") -> DataFrame:
         "(x, i) -> struct(x.kind AS kind, x.text AS text, "
         "x.media_ref AS media_ref, CAST(i AS int) AS offset))), 1)"
     )
-    return rd.select(doc_col, F.expr(spans).alias("spans"))
+    return rd.select("doc_id", F.expr(spans).alias("spans"))

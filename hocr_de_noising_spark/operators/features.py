@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from hocr_de_noising_spark.params import Params
 
 
-def with_doc_stats(df: DataFrame, doc_col: str = "doc_id", params: Params | None = None) -> DataFrame:
+def with_doc_stats(df: DataFrame, params: Params | None = None) -> DataFrame:
     """Per-document robust page statistics (X2/X3) via a single window.
 
     The window carries an ORDER BY pos with an unbounded frame (r8):
@@ -33,7 +33,7 @@ def with_doc_stats(df: DataFrame, doc_col: str = "doc_id", params: Params | None
     full exploded span stream twice."""
     p = params or Params()
     w = (
-        Window.partitionBy(doc_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )

@@ -15,7 +15,6 @@ from hocr_de_noising_spark.queries import relational  # noqa: F401,E402
 from hocr_de_noising_spark.queries import denoise_patterns  # noqa: F401,E402
 from hocr_de_noising_spark.queries import trainprep  # noqa: F401,E402
 from hocr_de_noising_spark.queries import web_extract  # noqa: F401,E402
-from hocr_de_noising_spark.queries import corpus_stats  # noqa: F401,E402
 from hocr_de_noising_spark.queries import interleaved  # noqa: F401,E402
 
 __all__ = ["QUERIES", "register"]

@@ -1,23 +1,24 @@
 """Large-scale training-data pipeline operators over the driver tables.
 
-Deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard, connected
-components) and text analysis (language-ID, quality score, token counting,
-fingerprinting). Each is engine-portable by construction: the hash
-primitive is md5 (identical hex output in Spark and DuckDB), so
-signatures, buckets, and candidate pairs agree bit-for-bit across
-engines — the DuckDB oracle verifies values, not just shapes.
+Exact dedup (normalized-text md5), document fingerprinting, train/eval
+decontamination, the cross-document boilerplate signal, and text
+analysis (language-ID, quality score, token counting, repetition, PII
+scrubbing, the train/val/test split). Outputs are engine-portable: md5
+gives identical hex in Spark and DuckDB, and where Spark hashes shingles
+with xxhash64 for speed only equality of shingles reaches an output, so
+the DuckDB oracle verifies values, not just shapes.
 
 Scale notes (100 TB design):
-- shingle explosion is bounded per doc; the minhash group-by is a
-  single shuffle keyed (doc_id, seed) with map-side partial min;
-- candidate-pair generation is star pairing within each (band, bucket)
-  — one window, no self-join — so no all-pairs product ever
-  materializes and a hot bucket stays linear.
+- shingle explosion is bounded per doc, and the token array is split
+  once per doc (``let_sql``);
+- every per-shingle quantity (document frequency, train membership)
+  comes from a hash aggregate with map-side partials, never a window
+  partitioned by shingle, so a boilerplate shingle shared by a large
+  share of the corpus cannot pin one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.queries.util import let_sql, load, register
@@ -42,68 +43,7 @@ def dedup_exact(spark, sf):
     )
 
 
-N_SEEDS, BAND_ROWS = 16, 2  # 8 bands x 2 rows
-
-# one 60-bit base hash per shingle + N_SEEDS cheap mixings replaces
-# N_SEEDS full md5 computations per shingle row (r5: md5 was ~16x the
-# map-stage CPU of the whole minhash pass). r6 (ADVICE r5): the mixing
-# family is multiply-shift over the Mersenne prime 2^31-1 —
-# mh_i = (a_i * (h mod P) + b_i) mod P — a PAIRWISE-INDEPENDENT
-# universal family [Carter & Wegman 1979], unlike the r5 xor-mixings
-# whose 16 minima all derived from one base ordering with bit flips
-# (correlated band collisions, so the LSH s^r curve deviated from the
-# independent-hash model near the jaccard threshold). Products stay
-# under 2^62 (a_i < 2^31, h mod P < 2^31), so the int64 arithmetic is
-# exact and bit-identical in both engines; 31-bit minhash values are
-# the standard working width (ties within a doc's shingle set are
-# ~n^2/2^32 and affect both engines identically).
-import hashlib as _hashlib
-
-MINHASH_P = (1 << 31) - 1  # Mersenne prime 2^31 - 1
-MINHASH_AB = [
-    (
-        1 + int(_hashlib.md5(f"a:{i}".encode()).hexdigest()[:15], 16) % (MINHASH_P - 1),
-        int(_hashlib.md5(f"b:{i}".encode()).hexdigest()[:15], 16) % MINHASH_P,
-    )
-    for i in range(N_SEEDS)
-]
-
-_SHINGLE_SQL = """
-    SELECT DISTINCT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS shingle
-    FROM (SELECT doc_id, t, unnest(generate_series(1, len(t) - 2)) AS i
-          FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents
-                WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 3))
-"""
-
-_MINHASH_SQL = f"""
-WITH sh AS ({_SHINGLE_SQL}),
-hv AS (
-    SELECT doc_id,
-           CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % {MINHASH_P} AS h
-    FROM sh
-),
-sig AS (
-    SELECT doc_id,
-           {", ".join(f"min(({a} * h + {b}) % {MINHASH_P}) AS mh{i}" for i, (a, b) in enumerate(MINHASH_AB))}
-    FROM hv GROUP BY doc_id
-),
-bands AS (
-    {" UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        f"md5(CAST(mh{b * BAND_ROWS} AS VARCHAR) || '|' || CAST(mh{b * BAND_ROWS + 1} AS VARCHAR)) AS bucket "
-        f"FROM sig"
-        for b in range(N_SEEDS // BAND_ROWS)
-    )}
-),
-reps AS (
-    SELECT doc_id, min(doc_id) OVER (PARTITION BY band, bucket) AS rep
-    FROM bands
-)
-SELECT DISTINCT rep AS doc_a, doc_id AS doc_b FROM reps WHERE doc_id <> rep
-"""
-
-
-def _shingles(spark, sf, n: int = 3):
+def _shingles(spark, sf, n: int):
     """Distinct word n-gram shingles per document (JVM HOFs only).
 
     The token array is let-bound (``let_sql``) so the text is split
@@ -122,261 +62,6 @@ def _shingles(spark, sf, n: int = 3):
         .filter(F.col("text").isNotNull() & (F.size(toks) >= n))
         .select("doc_id", F.explode(F.expr(shingle_arr)).alias("shingle"))
     )
-
-
-@register("dedup_minhash_lsh", _MINHASH_SQL)
-def dedup_minhash_lsh(spark, sf):
-    """MinHash+LSH near-dup candidates: shingle → ONE 60-bit md5-based
-    hash → 16 multiply-shift minhashes mod 2^31-1 (pairwise-independent
-    Carter-Wegman family, ADVICE r5 — the previous xor-mixings shared
-    one base ordering, correlating band collisions near the jaccard
-    threshold, measured for both families against the analytic
-    1-(1-s^2)^8 curve) → 2-row bands → star
-    pairing within each band bucket. conv + exact int64 arithmetic
-    keep signatures engine-portable.
-
-    The 16 minhashes are computed as COLUMNS of one pass over the
-    shingles (one md5 + 16 multiply-add-mod expressions + a single
-    groupBy with 16 min aggregates) — no 16x row explosion, no 16x md5
-    CPU (r5: md5 dominated the map stage), 8-byte ints instead of
-    32-char strings through the map-side partial min.
-
-    Candidate pairs are (bucket representative = min doc_id, member):
-    a hot bucket of n true duplicates emits n-1 pairs instead of the
-    n(n-2)/2 of an all-pairs self-join, while keeping exactly the same
-    connected components for the union-find dedup step — the standard
-    large-corpus MinHash trade. This also removes the self-join
-    entirely: ONE window over (band, bucket) and a distinct."""
-    sh = _shingles(spark, sf, 3)
-    base = F.expr(
-        f"cast(conv(substr(md5(shingle), 1, 15), 16, 10) as bigint) % {MINHASH_P}"
-    )
-    return minhash_pairs_from_base(sh.select("doc_id", base.alias("hp")))
-
-
-def minhash_pairs_from_base(hv):
-    """Candidate pairs from a (doc_id, hp) frame where ``hp`` is the
-    31-bit base hash of one shingle — the signature, banding and
-    pair tail of ``dedup_minhash_lsh``, which computes hp from text."""
-    sig = hv.select(
-        "doc_id",
-        *[
-            ((F.lit(a) * F.col("hp") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{i}")
-            for i, (a, b) in enumerate(MINHASH_AB)
-        ],
-    ).groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"mh{i}") for i in range(N_SEEDS)]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[F.col(f"mh{b * BAND_ROWS + r}") for r in range(BAND_ROWS)],
-                    )
-                ).alias("bucket"),
-            )
-            for b in range(N_SEEDS // BAND_ROWS)
-        ]
-    )
-    bands = sig.select(
-        "doc_id", F.explode(band_structs).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    w = Window.partitionBy("band", "bucket")
-    return (
-        bands.withColumn("rep", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("rep"))
-        .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-_SIMHASH_BITS = 16
-_simhash_cols_sql = ",\n".join(
-    f"CASE WHEN sum(CASE WHEN substr(h, {j + 1}, 1) >= '8' THEN 1 ELSE -1 END) > 0"
-    f" THEN '1' ELSE '0' END AS b{j}"
-    for j in range(_SIMHASH_BITS)
-)
-_SIMHASH_SQL = f"""
-WITH tok AS (
-    SELECT doc_id, md5(unnest(string_split(text, ' '))) AS h
-    FROM documents WHERE text IS NOT NULL
-),
-agg AS (SELECT doc_id, {_simhash_cols_sql} FROM tok GROUP BY doc_id)
-SELECT doc_id, {"||".join(f"b{j}" for j in range(_SIMHASH_BITS))} AS simhash
-FROM agg
-"""
-
-
-@register("dedup_simhash", _SIMHASH_SQL)
-def dedup_simhash(spark, sf):
-    """SimHash: per-token md5, signed bit-vote per position, 16-bit
-    signature string. Identical md5 → identical signatures cross-engine."""
-    tok = (
-        load(spark, sf, "documents")
-        .filter(F.col("text").isNotNull())
-        .select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-        .withColumn("h", F.md5("t"))
-    )
-    votes = [
-        F.when(
-            F.sum(F.when(F.substring("h", j + 1, 1) >= "8", 1).otherwise(-1)) > 0, "1"
-        )
-        .otherwise("0")
-        .alias(f"b{j}")
-        for j in range(_SIMHASH_BITS)
-    ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    return agg.select(
-        "doc_id", F.concat(*[F.col(f"b{j}") for j in range(_SIMHASH_BITS)]).alias("simhash")
-    )
-
-
-# Document-frequency cap: shingles shared by more than this many docs
-# (stop-phrases) are excluded from BOTH the intersection and the set
-# sizes. This is the standard dedup-pipeline bound that keeps the
-# shingle self-join linear-ish at corpus scale: without it one
-# high-df trigram shared by 10^6 docs is a 10^12 pair fan-out before
-# the jaccard filter can reject anything.
-JACCARD_DF_CAP = 100
-
-_JACCARD_SQL = f"""
-WITH sh0 AS ({_SHINGLE_SQL}),
-hv AS (
-    SELECT doc_id,
-           CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) AS shingle
-    FROM sh0
-),
-sh AS (
-    SELECT doc_id, shingle FROM (
-        SELECT doc_id, shingle,
-               count(*) OVER (PARTITION BY shingle) AS df
-        FROM hv
-    ) WHERE df <= {JACCARD_DF_CAP}
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-    FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-)
-SELECT doc_a, doc_b, round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.2
-"""
-
-
-def capped_shingles(spark, sf, n: int = 3, df_cap: int = JACCARD_DF_CAP):
-    """Shingles with document frequency <= df_cap — the bounded input
-    that makes the jaccard self-join safe at scale. The df cap is
-    enforced BEFORE the self-join (plan-asserted in
-    tests/test_plans.py), so the join's per-key fan-out is <= df_cap.
-
-    The ``shingle`` column is the n-gram's xxhash64 int64: every
-    consumer — jaccard intersection, decon leakage check — needs
-    only EQUALITY of shingles (no hash value ever reaches an output), and 8-byte ints
-    through the df window + groupBy shuffles beat 30-40-char strings
-    ~4x on shuffle bytes (r5). r6: xxhash64 replaces the md5+conv
-    trick — the crypto hash was 4.1 s of the 13.1 s map side at 1M
-    docs, and cross-engine VALUE parity is not needed here (unlike
-    minhash, whose output pairs depend on hash ordering): the DuckDB
-    oracle keeps its own deterministic 60-bit md5 hash, and the
-    compared outputs (counts, jaccards, flags) are hash-function-
-    independent up to collisions, ~n²/2^64 ≈ 10⁻⁶ at oracle scale."""
-    sh = _shingles(spark, sf, n).select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
-    )
-    return capped_from_hashed(sh, df_cap)
-
-
-def capped_from_hashed(sh, df_cap: int = JACCARD_DF_CAP):
-    """df-cap over a pre-hashed (doc_id, shingle int64) frame — the
-    second half of ``capped_shingles``.
-
-    Skew-proof shape (r7, VERDICT r6 item 2): the r6 form computed df
-    with ``count() OVER (PARTITION BY shingle)``, and WindowExec
-    materializes each shingle's rows in ONE task with no map-side
-    partial aggregation — a boilerplate 5-gram in 1% of a web corpus
-    puts its entire posting list through a single task before the
-    df-cap filter can discard it. Every over-cap row is DISCARDED
-    anyway, so the window is unnecessary: a plain
-    ``groupBy(shingle).count()`` (combiner-friendly — a hot shingle
-    contributes at most one partial row per map task to the shuffle)
-    yields the tiny over-cap hot list, and a broadcast LEFT ANTI join
-    removes hot shingles map-side. Surviving rows have df <= df_cap by
-    construction — output identical to the window+filter, zero
-    unbounded partitions anywhere in the plan (planted-hot-shingle
-    test: tests/test_skew.py).
-
-    The input is lazily localCheckpointed so the hot-count pass and the
-    anti-join probe compute the (text-scan + shingle) subtree once."""
-    sh = sh.localCheckpoint(eager=False)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cap)
-        .select("shingle")
-    )
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
-
-
-@register("dedup_ngram_jaccard", _JACCARD_SQL)
-def dedup_ngram_jaccard(spark, sf):
-    """Exact n-gram Jaccard over every pair sharing >=1 bounded-df
-    shingle.
-    Stop-phrase shingles (df > JACCARD_DF_CAP) are dropped up front,
-    which bounds the per-shingle member list to df_cap — so the
-    intersection counts come from in-array pair combinations
-    (<= C(df_cap, 2) per shingle) after ONE groupBy, with no shingle
-    self-join at all (a self-join would also re-execute the shingle
-    subtree once per side).
-
-    r8 shape: the set sizes ride WITH each doc's shingle rows into the
-    per-shingle collect (one doc_id-keyed join right after the size
-    aggregate), so the final jaccard needs NO joins at all — the
-    previous form joined the pair table against two aliases of the
-    size table, and Catalyst re-derived the whole shingle subtree for
-    each alias (7 exchanges -> 5, 5 joins -> 3 in the formatted plan). The raw hashed-shingle stream is
-    already localCheckpointed inside ``capped_from_hashed`` — the
-    expensive explode+hash runs once and only the cheap hot-list
-    aggregate re-runs per consumer (a second corpus-scale checkpoint
-    of the capped stream would double executor storage at scale). n
-    is functionally dependent on doc_id, so grouping pairs by (doc,
-    n) pairs is the same grouping; output values unchanged
-    (oracle-verified)."""
-    sh = capped_shingles(spark, sf, 3)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    shn = sh.join(sizes, "doc_id")
-    j = (
-        shn.groupBy("shingle")
-        .agg(
-            F.collect_list(F.struct("doc_id", "n")).alias("ids")
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "filter(flatten(transform(ids, x -> transform(ids,"
-                    " y -> struct(x AS a, y AS b)))),"
-                    " p -> p.a.doc_id < p.b.doc_id)"
-                )
-            ).alias("p")
-        )
-        .groupBy(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.a.n").alias("na"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.b.n").alias("nb"),
-        )
-        .agg(F.count(F.lit(1)).alias("i"))
-        .withColumn(
-            "jac",
-            F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i")),
-        )
-        .filter(F.col("jac") >= 0.2)
-    )
-    return j.select("doc_a", "doc_b", F.round("jac", 4).alias("jaccard"))
 
 
 # ---------------------------------------------------------- text analysis --
@@ -549,6 +234,12 @@ def quality_repetition(spark, sf):
     )
 
 
+# Document-frequency cap of the decontamination check: a 5-gram shared
+# by more than this many docs is a stop-phrase or boilerplate, not a
+# leaked passage, so it is dropped before the train/eval overlap count.
+# This also bounds the per-shingle fan-out of the overlap join.
+DECON_DF_CAP = 100
+
 _DECON_SQL = f"""
 WITH sh0 AS (
     SELECT DISTINCT doc_id,
@@ -565,7 +256,7 @@ hv AS (
 sh AS (
     SELECT doc_id, shingle FROM (
         SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
-        FROM hv) WHERE df <= {JACCARD_DF_CAP}
+        FROM hv) WHERE df <= {DECON_DF_CAP}
 ),
 sp AS (
     SELECT doc_id, shingle,
@@ -634,7 +325,7 @@ def decon_overlap(spark, sf):
         .agg(F.count(F.lit(1)).alias("df"), F.max("tk").alias("ht"))
     )
     good = stats.filter(
-        (F.col("df") <= JACCARD_DF_CAP) & (F.col("ht") == 1)
+        (F.col("df") <= DECON_DF_CAP) & (F.col("ht") == 1)
     ).select("shingle")
     ev = d.filter(F.col("split") != "train").select(
         "doc_id", "split", F.explode(shingle_arr).alias("shingle")
@@ -652,7 +343,7 @@ def decontaminate_overlap(spark, sf):
     own md5-nibble rule) that share at least one 5-gram shingle with
     the train split, with the count of shared shingles — the standard
     n-gram-overlap benchmark-leakage check run before training. Scale
-    shape: shingles are df-capped (JACCARD_DF_CAP) BEFORE the join, so
+    shape: shingles are df-capped (DECON_DF_CAP) BEFORE the join, so
     the per-shingle fan-out is bounded and no stop-phrase can explode
     the equi join; the train side is a distinct shingle set (joined,
     not broadcast — it scales with the corpus)."""
@@ -676,203 +367,6 @@ def doc_fingerprint(spark, sf):
     shingles (rolling window via JVM transform/slice)."""
     sh = _shingles(spark, sf, 5)
     return sh.groupBy("doc_id").agg(F.min(F.md5("shingle")).alias("fingerprint"))
-
-
-_COMPONENTS_SQL = f"""
-WITH RECURSIVE pairs AS ({_MINHASH_SQL}),
-e AS (
-    SELECT doc_a AS a, doc_b AS b FROM pairs
-    UNION SELECT doc_b, doc_a FROM pairs
-),
-walk(a, b) AS (
-    SELECT a, b FROM e
-    UNION
-    SELECT walk.a, e.b FROM walk JOIN e ON walk.b = e.a WHERE e.b <> walk.a
-)
-SELECT a AS doc_id, least(a, min(b)) AS component
-FROM walk GROUP BY a
-"""
-
-
-def _observed_checkpoint(df, metric_col: str) -> tuple:
-    """localCheckpoint a DataFrame while riding an Observation on the
-    SAME materialization action (VERDICT r2: fold the convergence count
-    into the iteration's own action instead of a second count() job).
-    Returns (checkpointed_df, changed_count_or_None); None means the
-    metrics node reported no row (empty or timed out) through this
-    action type — callers fall back to an explicit count."""
-    from pyspark.sql import Observation
-
-    from hocr_de_noising_spark.obs import observation_metrics
-
-    o = Observation()
-    ck = df.observe(o, F.sum(F.col(metric_col).cast("long")).alias("changed")).localCheckpoint()
-    row = observation_metrics(o, timeout_s=5.0)
-    if not row:
-        return ck, None
-    val = row.get("changed")
-    return ck, int(val) if val is not None else 0
-
-
-def connected_components(
-    pairs, max_iters: int | None = None, algorithm: str = "propagate"
-):
-    """Connected components over an undirected (doc_a, doc_b) pair
-    graph: every doc's label converges to the smallest doc_id in its
-    component — the canonical representative the union-find dedup step
-    keeps.
-
-    ``algorithm="propagate"`` (default): iterative min-label
-    propagation — one equi join + groupBy per round; converges in
-    O(diameter) rounds, which is a handful for star-shaped LSH
-    candidate graphs. ``algorithm="star"``: alternating large-star /
-    small-star [Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public paper] — converges in O(log n) rounds
-    regardless of diameter, the 10^12-doc path for deep-chain graphs.
-    Both property-tested equivalent to union-find
-    (tests/test_scale_paths.py::test_connected_components_matches_union_find).
-
-    ``localCheckpoint`` truncates the growing lineage so the plan stays
-    O(1) per iteration, and the convergence count rides that SAME
-    materialization via df.observe (one action per round)."""
-    # per-algorithm defaults resolved HERE so the public API cannot
-    # silently narrow a variant's headroom (ADVICE r3: forwarding
-    # propagate's 20 made _components_star's documented 30 unreachable)
-    if algorithm == "star":
-        return _components_star(pairs, 30 if max_iters is None else max_iters)
-    if max_iters is None:
-        max_iters = 20
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = edges.select("a").distinct().select(
-        F.col("a").alias("doc_id"), F.col("a").alias("component")
-    ).localCheckpoint()
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("b"), F.col("component").alias("nlabel")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("nlabel").alias("min_nbr"))
-        )
-        new_labels = labels.join(nbr, labels.doc_id == nbr.a, "left").select(
-            "doc_id",
-            F.least(
-                F.col("component"), F.coalesce("min_nbr", F.col("component"))
-            ).alias("component"),
-            (
-                F.least(F.col("component"), F.coalesce("min_nbr", F.col("component")))
-                != F.col("component")
-            ).alias("_changed"),
-        )
-        new_labels, changed = _observed_checkpoint(new_labels, "_changed")
-        if changed is None:  # metrics missed the action → explicit count
-            changed = new_labels.filter("_changed").count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            return labels
-    # partially-propagated labels under-merge components → silent
-    # duplicate retention downstream; fail loudly instead (r3 review)
-    raise RuntimeError(
-        f"connected_components(propagate) did not converge in {max_iters} "
-        "iterations — raise max_iters or use algorithm='star' "
-        "(O(log n) rounds at any graph diameter)"
-    )
-
-
-def _components_star(pairs, max_iters: int = 30):
-    """Alternating large-star/small-star over the pair graph
-    [Kiveris et al., SoCC'14]. State is an EDGE SET (never a
-    per-node parent map — collapsing to min-parent mid-algorithm
-    discards connectivity, e.g. a 1-5-2 chain through node 5):
-
-    - large-star(u): link every strictly-larger neighbor of u to
-      m = min(N(u) ∪ {u});
-    - small-star: group by the LARGER endpoint u, link its (smaller)
-      neighbors and u itself to their minimum.
-
-    Both steps preserve connected components; at convergence the edge
-    set is one star per component rooted at the component minimum,
-    reached in O(log n) rounds regardless of graph diameter.
-    Convergence = exact edge-set fixpoint (count + multiset except)."""
-    nodes = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = (
-        pairs.select(F.col("doc_a").alias("child"), F.col("doc_b").alias("parent"))
-        .filter(F.col("child") != F.col("parent"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = edges.count()
-    for _ in range(max_iters):
-        e = edges.select(F.col("child").alias("u"), F.col("parent").alias("v")).unionByName(
-            edges.select(F.col("parent").alias("u"), F.col("child").alias("v"))
-        )
-        # large-star: u's strictly-larger neighbors -> min(N(u) ∪ {u})
-        mins = e.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            e.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("child"), F.col("m").alias("parent"))
-        )
-        # small-star over large's output, grouped by the larger endpoint
-        e2 = large.select(
-            F.greatest("child", "parent").alias("u"),
-            F.least("child", "parent").alias("v"),
-        )
-        m2 = e2.groupBy("u").agg(F.min("v").alias("m"))
-        nxt = (
-            e2.join(m2, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("child"), F.col("m").alias("parent"))
-            .unionByName(m2.select(F.col("u").alias("child"), F.col("m").alias("parent")))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_nxt = nxt.count()
-        if n_nxt == n_edges and nxt.exceptAll(edges).isEmpty():
-            edges = nxt
-            break
-        edges, n_edges = nxt, n_nxt
-    else:
-        # min-parent collapse of a NON-star edge set under-merges
-        # components (the docstring's own hazard) — fail loudly
-        raise RuntimeError(
-            f"connected_components(star) did not reach its edge-set "
-            f"fixpoint in {max_iters} rounds"
-        )
-    comp = edges.groupBy("child").agg(F.min("parent").alias("parent"))
-    return nodes.join(
-        comp.select(F.col("child").alias("doc_id"), "parent"), "doc_id", "left"
-    ).select("doc_id", F.coalesce("parent", "doc_id").alias("component"))
-
-
-@register("dedup_components", _COMPONENTS_SQL)
-def dedup_components(spark, sf):
-    """Dedup cluster assignment: connected components over the MinHash
-    LSH candidate pairs (doc_id -> min doc_id of its near-dup cluster).
-    Iterative — the DuckDB oracle is the equivalent recursive CTE."""
-    return connected_components(dedup_minhash_lsh(spark, sf))
-
-
-@register("dedup_components_star", _COMPONENTS_SQL)
-def dedup_components_star(spark, sf):
-    """Same cluster assignment computed by the alternating large-star/
-    small-star algorithm (O(log n) rounds at any graph diameter — the
-    10^12-doc path for deep candidate graphs). Deterministic, so it
-    shares dedup_components' recursive-CTE oracle bit-for-bit."""
-    return connected_components(dedup_minhash_lsh(spark, sf), algorithm="star")
 
 
 @register(
@@ -931,8 +425,8 @@ def quality_boilerplate(spark, sf):
     cannot see.
 
     Skew-proof complement formulation (r7, VERDICT r6 item 2): unlike
-    decon, every row reaches the output here, so the hot-list
-    anti-join trick cannot bound a ``count() OVER (PARTITION BY
+    decon, every row reaches the output here, so dropping over-cap
+    shingles cannot bound a ``count() OVER (PARTITION BY
     shingle)`` window — one boilerplate shingle would still pin one
     task. But with BOILERPLATE_DF == 2, "shared" is the complement of
     "corpus-unique" (df == 1), and a df==1 shingle's single owner is
@@ -941,8 +435,10 @@ def quality_boilerplate(spark, sf):
     contributes at most one partial (count, min) row per map task to
     the (shingle) shuffle, and the final per-doc join is 1-row-per-key
     on both sides. Shingle keys are 8-byte ints (xxhash64 Spark-side;
-    the oracle counts its own raw strings — equality-only semantics,
-    same independence argument as capped_shingles); the lazy
+    the oracle counts its own raw strings): only equality of shingles
+    reaches the output, so the counts do not depend on the hash
+    function, up to collisions (~n²/2^64, about 10⁻⁶ at oracle scale).
+    The lazy
     localCheckpoint shares the shingle subtree between the totals and
     uniqueness passes."""
     sh = _shingles(spark, sf, 5).select(

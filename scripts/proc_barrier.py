@@ -28,27 +28,14 @@ while not os.path.exists(os.path.join(barrier_dir, "go")):
 
 
 def release(
-    barrier_dir: str, n: int, procs, timeout_s: float = 600.0, ids=None
+    barrier_dir: str, n: int, procs, ids, timeout_s: float = 600.0
 ) -> None:
     """Wait for n ready files then write the go-file. On timeout, kill
     every process in ``procs`` first so no pinned orphan survives.
 
-    ``ids`` (optional) aligns each proc with its worker id so a dead
-    child can be checked EXACTLY for having gone ready; without ids the
-    check is count-conservative (see inline comment) and a pre-ready
-    death can burn the full timeout whenever >= as many peers are
-    already ready — all in-repo callers pass ids; external callers get
-    a one-time warning so the degraded mode is never silent."""
-    if ids is None:
-        import warnings
-
-        warnings.warn(
-            "proc_barrier.release called without ids: dead-child "
-            "detection degrades to the count-conservative heuristic "
-            "(a pre-ready death may burn the full timeout); pass "
-            "ids=[worker_id, ...] aligned with procs",
-            stacklevel=2,
-        )
+    ``ids`` aligns each proc with its worker id, so a dead child is
+    checked exactly for having gone ready: a death before the ready
+    file fails the barrier at once, a death after it does not."""
 
     def _kill_all():
         for p in procs:
@@ -69,9 +56,7 @@ def release(
         # ready file while peers are still arriving — that death does
         # not doom the barrier, so re-list the ready files after
         # observing it and only abort on a death that is provably
-        # pre-ready: with ids, a dead child whose own ready file is
-        # absent; without ids, more dead children than could possibly
-        # all be post-ready (len(dead) > len(ready)).
+        # pre-ready: a dead child whose own ready file is absent.
         dead_idx = [i for i, p in enumerate(procs) if p.poll() is not None]
         if dead_idx:
             ready = {
@@ -79,12 +64,7 @@ def release(
             }
             if len(ready) >= n:
                 break
-            if ids is not None:
-                doomed = [
-                    i for i in dead_idx if f"ready-{ids[i]}" not in ready
-                ]
-            else:
-                doomed = dead_idx if len(dead_idx) > len(ready) else []
+            doomed = [i for i in dead_idx if f"ready-{ids[i]}" not in ready]
             if doomed:
                 _kill_all()
                 raise RuntimeError(

@@ -16,6 +16,12 @@ CACHE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures",
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
 
+def pytest_configure(config):
+    # a pandas/pyarrow deprecation changes what a comparison sees in a
+    # later release; fail on it now instead of adding a summary line
+    config.addinivalue_line("filterwarnings", "error::FutureWarning")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("hocr-denoise-tests", cores=4, shuffle_partitions=8)

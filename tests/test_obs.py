@@ -1,6 +1,5 @@
 """Bounded observation reads (hocr_de_noising_spark/obs.py) — the
-primitive the batch job's manifest metrics and the components
-convergence counts ride on."""
+primitive the batch job's manifest metrics ride on."""
 
 from __future__ import annotations
 
@@ -40,14 +39,3 @@ def test_empty_row_reads_as_zero_not_timeout():
 
     assert observation_metrics(classic(0), timeout_s=0.5) == {}
     assert observation_metrics(classic(None), timeout_s=0.2) is None
-
-
-def test_metrics_through_local_checkpoint(spark):
-    """The components loops fold their convergence count into the
-    localCheckpoint materialization — the listener must deliver through
-    that action type."""
-    o = Observation()
-    df = spark.range(50).observe(o, F.sum("id").alias("s")).localCheckpoint()
-    assert df.count() == 50
-    m = observation_metrics(o)
-    assert m == {"s": 1225}

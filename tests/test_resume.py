@@ -37,7 +37,7 @@ def _assert_manifest_exact(spark, m_dir, docs, golden, p):
 
     def per_bucket(df):
         rows = (
-            df.withColumn("bucket", bucket_col("doc_id", p))
+            df.withColumn("bucket", bucket_col(p))
             .groupBy("bucket")
             .agg(F.count("*").alias("n"), F.sum(F.size("spans")).alias("s"))
             .collect()
@@ -292,7 +292,7 @@ def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
     docs, lexicon, golden = loaded
     p = Params(n_buckets=16)
     at_rest = str(tmp_path / "bucketed")
-    docs.withColumn("bucket", bucket_col("doc_id", p)).write.partitionBy(
+    docs.withColumn("bucket", bucket_col(p)).write.partitionBy(
         "bucket"
     ).parquet(at_rest)
     bucketed = spark.read.parquet(at_rest)
