@@ -97,12 +97,9 @@ class ManifestCheckpoint:
         files = self._commit_files()
         if not files:
             return None
-        return spark.read.schema(
-            "run_id string, bucket int, n_docs long, n_spans_in long, "
-            "n_spans_out long, n_noise_dropped long, denoise_rate double, "
-            "input_lineage string, params_hash string, status string, "
-            "committed_at timestamp"
-        ).parquet(*files)
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA)).parquet(*files)
 
     def completed_buckets(self, run_id: str, p_hash: str) -> set[int]:
         """S7 resume source: buckets already done for this run lineage.

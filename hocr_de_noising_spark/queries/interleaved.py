@@ -17,8 +17,8 @@ Scale design (100 TB):
 - ONE shuffle total: the window partitions by doc_id and every frame
   is ROWS-bounded (±CAPTION_WINDOW spans), so state per row is O(K)
   and per-task memory is bounded by the largest single document —
-  there is no unbounded-frame skew (contrast the shingle-df lesson,
-  VERDICT r6). The per-doc stats aggregate gets map-side partials.
+  there is no unbounded-frame skew. The per-doc stats aggregate gets
+  map-side partials.
 - zero Python: explode + collect_list frames + slice/array_join are
   all JVM expressions inside whole-stage codegen.
 - the media predicate and caption columns are computed in the same

@@ -1,4 +1,4 @@
-"""Generic relational operator surface (SURVEY.md §2.1–§2.8).
+"""Generic relational operator surface (SURVEY.md §2.1–§2.7).
 
 Each query exercises one operator family on the driver's testdata and
 has an exact DuckDB oracle. Spark impls are fully declarative
@@ -479,119 +479,6 @@ def set_intersect(spark, sf):
     return li.intersect(p)
 
 
-# --- §2.8 scalar function families ---------------------------------------
-
-@register(
-    "scalar_string",
-    """SELECT p_partkey,
-              lower(p_name) AS lname,
-              trim(p_name) AS tname,
-              substring(p_name, 1, 4) AS prefix4,
-              concat_ws('|', p_brand, p_type) AS brand_type,
-              lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_pad,
-              regexp_extract(p_brand, 'Brand#([0-9]+)', 1) AS brand_num,
-              length(p_name) AS name_len
-       FROM part""",
-)
-def scalar_string(spark, sf):
-    """String function family (used by X5-X7)."""
-    return load(spark, sf, "part").select(
-        "p_partkey",
-        F.lower("p_name").alias("lname"),
-        F.trim("p_name").alias("tname"),
-        F.substring("p_name", 1, 4).alias("prefix4"),
-        F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
-        F.lpad(F.col("p_size").cast("string"), 4, "0").alias("size_pad"),
-        F.regexp_extract("p_brand", r"Brand#([0-9]+)", 1).alias("brand_num"),
-        F.length("p_name").alias("name_len"),
-    )
-
-
-@register(
-    "scalar_array",
-    """SELECT doc_id,
-              len(string_split(text, ' ')) AS n_tokens,
-              string_split(text, ' ')[1] AS first_token,
-              string_split(text, ' ')[-1] AS last_token,
-              list_sort(string_split(text, ' '))[1] AS min_token
-       FROM documents WHERE text IS NOT NULL""",
-)
-def scalar_array(spark, sf):
-    """Array / higher-order function family (core of span handling)."""
-    toks = F.split("text", " ")
-    return (
-        load(spark, sf, "documents")
-        .filter(F.col("text").isNotNull())
-        .select(
-            "doc_id",
-            F.size(toks).alias("n_tokens"),
-            F.element_at(toks, 1).alias("first_token"),
-            F.element_at(toks, -1).alias("last_token"),
-            F.element_at(F.array_sort(toks), 1).alias("min_token"),
-        )
-    )
-
-
-@register(
-    "scalar_json",
-    """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val
-       FROM events WHERE props IS NOT NULL""",
-)
-def scalar_json(spark, sf):
-    """JSON family: extract typed values from the props JSON string."""
-    return (
-        load(spark, sf, "events")
-        .filter(F.col("props").isNotNull())
-        .select(
-            "event_id",
-            F.get_json_object("props", "$.k").cast("int").alias("k_val"),
-        )
-    )
-
-
-@register(
-    "scalar_date",
-    """SELECT o_orderkey,
-              date_trunc('month', o_orderdate) AS order_month,
-              CAST(year(o_orderdate) AS INTEGER) AS order_year,
-              CAST(datediff('day', DATE '1995-01-01', o_orderdate) AS INTEGER) AS days_since
-       FROM orders""",
-)
-def scalar_date(spark, sf):
-    """Date/time family (manifest timestamps, events demo)."""
-    return load(spark, sf, "orders").select(
-        "o_orderkey",
-        F.date_trunc("month", "o_orderdate").alias("order_month"),
-        F.year("o_orderdate").cast("int").alias("order_year"),
-        F.datediff(F.col("o_orderdate").cast("date"), F.lit("1995-01-01").cast("date"))
-        .cast("int")
-        .alias("days_since"),
-    )
-
-
-@register(
-    "scalar_math",
-    """SELECT l_orderkey, l_linenumber,
-              round(l_extendedprice * (1 - l_discount) * (1 + l_tax), 6) AS charge,
-              round(ln(l_extendedprice + 1), 4) AS log_price,
-              round(pow(l_discount, 2), 6) AS disc_sq,
-              abs(l_quantity - 25) AS qty_dev,
-              l_orderkey % 16 AS bucket
-       FROM lineitem""",
-)
-def scalar_math(spark, sf):
-    """Math family (X2 features, J5 salting arithmetic)."""
-    return load(spark, sf, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax")), 6).alias("charge"),
-        F.round(F.log(F.col("l_extendedprice") + 1), 4).alias("log_price"),
-        F.round(F.pow("l_discount", F.lit(2)), 6).alias("disc_sq"),
-        F.abs(F.col("l_quantity") - 25).alias("qty_dev"),
-        (F.col("l_orderkey") % 16).alias("bucket"),
-    )
-
-
 @register(
     "dict_join",
     """SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
@@ -738,45 +625,6 @@ def window_range_frame(spark, sf):
         "event_id",
         "user_id",
         F.count(F.lit(1)).over(w).alias("n_last_10min"),
-    )
-
-
-@register(
-    "scalar_xml",
-    # The oracle emits the ground-truth values the XML was built from —
-    # DuckDB has no xpath, so correctness means Spark's construct →
-    # xpath-extract round-trips back to the source columns exactly.
-    """SELECT p_partkey,
-              p_name AS xml_name,
-              CAST(p_partkey AS VARCHAR) AS xml_key,
-              p_brand AS tag1,
-              p_type AS tag2,
-              CAST(2 AS INTEGER) AS n_tags
-       FROM part""",
-)
-def scalar_xml(spark, sf):
-    """§2.8 xml family: xpath_string / xpath over a synthesized XML
-    column (element text, attribute, positional predicate, node-set
-    count). The XML is built from part columns so the oracle can check
-    the extraction against the ground truth without an XML engine."""
-    xml = F.concat(
-        F.lit('<part key="'), F.col("p_partkey").cast("string"),
-        F.lit('"><name>'), F.col("p_name"),
-        F.lit('</name><tags><t>'), F.col("p_brand"),
-        F.lit("</t><t>"), F.col("p_type"),
-        F.lit("</t></tags></part>"),
-    )
-    return (
-        load(spark, sf, "part")
-        .withColumn("xml", xml)
-        .select(
-            "p_partkey",
-            F.expr("xpath_string(xml, '//name')").alias("xml_name"),
-            F.expr("xpath_string(xml, '//part/@key')").alias("xml_key"),
-            F.expr("xpath_string(xml, '//tags/t[1]')").alias("tag1"),
-            F.expr("xpath_string(xml, '//tags/t[2]')").alias("tag2"),
-            F.size(F.expr("xpath(xml, '//t/text()')")).alias("n_tags"),
-        )
     )
 
 

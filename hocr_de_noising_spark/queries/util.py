@@ -35,10 +35,10 @@ def let_sql(value_sql: str, var: str, body_sql: str) -> str:
 
     Catalyst's CollapseProject re-inlines single-use Project aliases
     into downstream HOF lambda bodies, where they are re-evaluated PER
-    ARRAY ELEMENT — e.g. a ``split(text)`` feeding a per-element
-    ``slice(split(text), i, n)`` runs the split once per shingle, O(n²)
-    characters per document. Binding the value as a 1-element array's
-    lambda variable introduces a NamedLambdaVariable the optimizer
-    cannot inline through, so the value is computed exactly once per
-    row (measured 3.6x on the 3-gram shingle expression at sf0.1)."""
+    ARRAY ELEMENT — e.g. ``web_extract.host_suffixes`` names the
+    host's label array three times inside its per-suffix lambda, so an
+    inlined ``split(host)`` would run three times per suffix. Binding
+    the value as a 1-element array's lambda variable introduces a
+    NamedLambdaVariable the optimizer cannot inline through, so the
+    value is computed exactly once per row."""
     return f"element_at(transform(array({value_sql}), {var} -> {body_sql}), 1)"

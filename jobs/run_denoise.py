@@ -18,7 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hocr_de_noising_spark.checkpoint import run_denoise_job  # noqa: E402
-from hocr_de_noising_spark.params import Params, params_hash  # noqa: E402
+from hocr_de_noising_spark.params import DEFAULT_PARAMS, Params, params_hash  # noqa: E402
 from hocr_de_noising_spark.session import get_spark  # noqa: E402
 from hocr_de_noising_spark.sources import Catalog  # noqa: E402
 
@@ -60,11 +60,11 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--lexicon", required=True)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--buckets", type=int, default=256)
-    ap.add_argument("--salt", type=int, default=42)
+    ap.add_argument("--buckets", type=int, default=DEFAULT_PARAMS.n_buckets)
+    ap.add_argument("--salt", type=int, default=DEFAULT_PARAMS.salt)
     ap.add_argument("--groups", type=int, default=8)
-    ap.add_argument("--tau-wconf", type=int, default=35)
-    ap.add_argument("--mode", choices=("drop", "rewrite"), default="drop")
+    ap.add_argument("--tau-wconf", type=int, default=DEFAULT_PARAMS.tau_wconf)
+    ap.add_argument("--mode", choices=("drop", "rewrite"), default=DEFAULT_PARAMS.mode)
     ap.add_argument("--catalog", choices=("parquet", "iceberg"), default="parquet")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument(

@@ -72,27 +72,6 @@ def test_topk_uses_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan_str(df)
 
 
-def test_new_llm_keys_plan_shape(spark):
-    """quality_repetition is a pure map-side projection (zero exchange,
-    zero join). decontaminate_overlap (r7 skew-proof shape) is
-    WINDOW-FREE: per-shingle df/has_train come from ONE hash aggregate
-    with map-side partials, the qualifying-shingle set semi-joins back
-    onto the eval-only shingle stream (per-key fan-out 1), and no
-    unbounded per-key materialization exists anywhere in the plan. Two
-    scans by design (BENCH ab_decon_skewfix: sharing the exploded
-    subtree via localCheckpoint was 2.7x slower at 1M docs)."""
-    rep = QUERIES["quality_repetition"]["fn"](spark, SF)
-    p = plan_str(rep)
-    assert "Exchange" not in p and "Join" not in p, p
-    dec = QUERIES["decontaminate_overlap"]["fn"](spark, SF)
-    p2 = plan_str(dec)
-    assert "Window" not in p2, p2
-    assert "LeftSemi" in p2, p2
-    assert "CartesianProduct" not in p2, p2
-    assert "partial_count" in p2, p2  # map-side combine for the df agg
-    assert p2.count("Scan parquet") == 2, p2
-
-
 def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):
     """bench_scaleout.calibrate_mpb must land the scan on EXACTLY
     waves*cores partitions — the rounding-free wave count the r4 scaling
@@ -145,31 +124,15 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
 
 
 def test_r6_text_keys_plan_shape(spark):
-    """pii_scrub is a pure map-side projection (zero exchange, zero
-    join, one scan); quality_boilerplate (r7 skew-proof complement
-    form) is WINDOW-FREE: every per-shingle quantity comes from hash
-    aggregates with map-side partials, the only join is the
-    1-row-per-key per-doc merge, and the totals/uniqueness passes
-    share one lazily-checkpointed shingle subtree."""
-    pii = QUERIES["pii_scrub"]["fn"](spark, SF)
-    p = plan_str(pii)
-    assert "Exchange" not in p and "Join" not in p, p
-    assert p.count("Scan parquet") == 1, p
-    # html_main_content (r7): same contract — the whole boilerplate
-    # strip is one map-side projection, no Python, no shuffle
+    """html_main_content and html_main_content_dom strip boilerplate in
+    one map-side projection: one scan, no exchange, no join, no
+    Python."""
     for k in ("html_main_content", "html_main_content_dom"):
         html = QUERIES[k]["fn"](spark, SF)
         ph = plan_str(html)
         assert "Exchange" not in ph and "Join" not in ph, ph
         assert ph.count("Scan parquet") == 1, ph
         assert "Python" not in ph and "Arrow" not in ph, ph
-    bp = QUERIES["quality_boilerplate"]["fn"](spark, SF)
-    p2 = plan_str(bp)
-    assert "Window" not in p2, p2
-    assert "CartesianProduct" not in p2, p2
-    assert "partial_count" in p2, p2  # map-side combine everywhere
-    rdd_ids = set(re.findall(r"MapPartitionsRDD\[(\d+)\]", formatted(bp)))
-    assert len(rdd_ids) == 1  # totals + uniq share one subtree
 
 
 def test_url_canonicalize_is_map_side(spark):

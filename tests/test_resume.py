@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hocr_de_noising_spark.checkpoint import (
+    MANIFEST_SCHEMA,
     ManifestCheckpoint,
     bucket_col,
     run_denoise_job,
@@ -68,6 +69,7 @@ def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
     m = ManifestCheckpoint(str(tmp_path / "m")).read(spark)
+    assert m.schema.names == MANIFEST_SCHEMA.names
     rows = m.collect()
     assert len(rows) == 16  # one row per bucket
     assert all(r.status == "done" and r.params_hash == params_hash(p) for r in rows)
