@@ -10,10 +10,6 @@ X6 is a pure Column expression chain (JVM-side). X7 is two-tier:
   the Python path (the column is nulled otherwise), so Python work is
   bounded by the OOV rate. No shuffle, exact parity with the numpy
   golden rule.
-
-An alternative fully-relational blocked levenshtein join (length band +
-first/last char blocking) is provided for the driver's oracle-checked
-``dict_join`` query — see __spark_entry__.py.
 """
 
 from __future__ import annotations

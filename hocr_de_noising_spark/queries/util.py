@@ -7,9 +7,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer part orders lineitem events documents"
-).split()
+TABLES = ("lineitem", "documents")
 
 # name -> {"fn": callable(spark, sf_dir) -> DataFrame, "sql": str | None}
 QUERIES: dict[str, dict] = {}

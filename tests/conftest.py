@@ -41,8 +41,3 @@ def correctness_dir() -> str:
 @pytest.fixture(scope="session")
 def sf001_dir() -> str:
     return os.path.join(TESTDATA, "sf0.001")
-
-
-@pytest.fixture(scope="session")
-def sf01_dir() -> str:
-    return os.path.join(TESTDATA, "sf0.01")

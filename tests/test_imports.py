@@ -104,26 +104,28 @@ def _referenced_names(tree: ast.AST) -> Counter:
             refs[node.attr] += 1
         elif isinstance(node, ast.ImportFrom):
             refs.update(a.name for a in node.names)
+        elif isinstance(node, ast.arg):
+            # a test requests a fixture by naming it as a parameter
+            refs[node.arg] += 1
     return refs
 
 
 def _is_entry_point(node: ast.AST) -> bool:
     """Reached by pytest or by running the file, never by name: tests,
-    ``pytest_*`` hooks, ``@pytest.fixture`` functions and ``main``."""
-    decorators = [d.func if isinstance(d, ast.Call) else d for d in node.decorator_list]
-    fixture = any(isinstance(d, ast.Attribute) and d.attr == "fixture" for d in decorators)
-    return fixture or node.name == "main" or node.name.startswith(("test_", "pytest_"))
+    ``pytest_*`` hooks and ``main``."""
+    return node.name == "main" or node.name.startswith(("test_", "pytest_"))
 
 
 def test_every_package_definition_is_referenced():
     """Each top-level ``def``/``class`` of the package, the tests and
-    the scripts must be named (as a Name, an Attribute or an imported
-    alias) somewhere in the package, the jobs, the scripts, the
-    benchmark, the tests or ``__spark_entry__.py``; references inside
-    the definition's own body (recursion) do not count. Registered
-    queries and entry points (``_is_entry_point``) are exempt, so a
-    helper left behind by a deleted test fails here too. The
-    function-level twin of test_no_unused_module_imports."""
+    the scripts must be named (as a Name, an Attribute, an imported
+    alias or a parameter) somewhere in the package, the jobs, the
+    scripts, the benchmark, the tests or ``__spark_entry__.py``;
+    references inside the definition's own body (recursion) do not
+    count. Registered queries and entry points (``_is_entry_point``) are
+    exempt, so a helper left behind by a deleted test fails here too,
+    and so does a fixture no test requests. The function-level twin of
+    test_no_unused_module_imports."""
     paths = sorted(
         os.path.relpath(p, REPO)
         for d in ("hocr_de_noising_spark", "jobs", "scripts", "perfbench", "tests")

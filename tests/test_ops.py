@@ -6,6 +6,7 @@ sf0.001 for speed; the driver runs the same comparison at sf0.01.
 from __future__ import annotations
 
 import os
+import re
 
 import duckdb
 import numpy as np
@@ -234,6 +235,10 @@ def test_contract_shapes():
     # 50-row CORRECTNESS cap: a key past 50 would get no driver row
     assert list(qs) == list(QUERIES)
     assert len(qs) <= 50
+    # every table the oracle fixture creates is read by some oracle, so
+    # a table left behind by its last deleted key fails here
+    unread = [t for t in TABLES if not any(re.search(rf"\b{t}\b", q) for q in oracles.values())]
+    assert not unread, unread
 
 
 def test_barrier_fails_fast_on_dead_child(tmp_path):

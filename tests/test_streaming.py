@@ -1,6 +1,5 @@
-"""Structured Streaming parity tests (ST1, ST5, ST6): incremental
-ingest is exactly-once across restarts and sink retries, re-delivered
-events are dropped within the watermark, and streamed gates match
+"""Structured Streaming parity tests (ST1, ST6): incremental ingest is
+exactly-once across restarts and sink retries, and streamed gates match
 their batch twins."""
 
 from __future__ import annotations
@@ -72,38 +71,6 @@ def test_incremental_denoise_exactly_once(spark, unit_dir, stream_dirs):
 def test_incremental_denoise_stream_honours_params(spark, unit_dir, stream_dirs):
     """A sink that dropped ``params`` would match the default batch."""
     _stream_exactly_once(spark, unit_dir, stream_dirs, Params(tau_wconf=60))
-
-
-def test_stateful_streaming_dedup(spark, sf001_dir, stream_dirs):
-    """ST5: dropDuplicatesWithinWatermark drops re-delivered events."""
-    events = spark.read.parquet(os.path.join(sf001_dir, "events.parquet")).filter(
-        F.col("event_id") < 500
-    )
-    # write the same events twice: at-least-once delivery simulation
-    events.write.mode("append").parquet(stream_dirs["in"])
-    events.write.mode("append").parquet(stream_dirs["in"])
-
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .parquet(stream_dirs["in"])
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", stream_dirs["out"])
-        .option("checkpointLocation", stream_dirs["ckpt"])
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.read.parquet(stream_dirs["out"])
-    assert out.count() == events.count()  # exactly one copy per event_id
-    assert out.select("event_id").distinct().count() == events.count()
 
 
 def test_job_and_stream_destroy_their_broadcasts(spark, unit_dir, stream_dirs, tmp_path):
