@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hocr_de_noising_spark.pyworker import lazy_zip_invalidation
+
 WORDS_SCHEMA = (
     "doc_id string, carea_id int, par_id int, line_id int, word_id int, "
     "order int, token string, x0 int, y0 int, x1 int, y1 int, wconf int, "
@@ -150,6 +152,7 @@ def parse_hocr(df: DataFrame) -> DataFrame:
     """X1: (doc_id, hocr) → word records, Arrow-batched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lazy_zip_invalidation()
         cols = [f.split(" ")[0] for f in WORDS_SCHEMA.split(", ")]
         for pdf in batches:
             rows: list[dict] = []

@@ -44,6 +44,7 @@ from hocr_de_noising_spark.operators.features import (
 from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
+from hocr_de_noising_spark.pyworker import lazy_zip_invalidation
 from hocr_de_noising_spark.rules_np import Lexicon
 from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
@@ -123,6 +124,7 @@ def denoise_fused(
     # Explicit select: Spark cannot see which columns an opaque map
     # touches, so project before it.
     def run_arrow(batches):
+        lazy_zip_invalidation()
         from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
 
         lex = Lexicon(bc.value) if p.use_dictionary else None

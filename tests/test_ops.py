@@ -17,19 +17,17 @@ import __spark_entry__ as entry_mod
 from hocr_de_noising_spark.queries import QUERIES
 from hocr_de_noising_spark.queries.util import TABLES
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
-
 SQL_KEYS = sorted(k for k, v in QUERIES.items() if v["sql"] is not None)
 ROWS_ONLY_KEYS = sorted(k for k, v in QUERIES.items() if v["sql"] is None)
 
 
 @pytest.fixture(scope="module")
-def duck():
+def duck(sf001_dir):
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf001_dir}/{t}.parquet'"
         )
     yield con
     con.close()
@@ -70,16 +68,16 @@ def assert_frames_match(sdf: pd.DataFrame, ddf: pd.DataFrame, name: str):
 
 
 @pytest.mark.parametrize("name", SQL_KEYS)
-def test_query_vs_oracle(spark, duck, name):
+def test_query_vs_oracle(spark, duck, name, sf001_dir):
     spec = QUERIES[name]
-    sdf = spec["fn"](spark, SF_DIR).toPandas()
+    sdf = spec["fn"](spark, sf001_dir).toPandas()
     ddf = duck.execute(spec["sql"]).df()
     assert_frames_match(sdf, ddf, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_KEYS)
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name]["fn"](spark, SF_DIR)
+def test_rows_only_queries_run(spark, name, sf001_dir):
+    df = QUERIES[name]["fn"](spark, sf001_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
 
@@ -183,18 +181,18 @@ def test_html_main_content_planted_boilerplate(spark):
     assert out[3].main_text == "" and out[3].n_blocks == 0
 
 
-def test_approx_distinct_semantic_contract(spark):
+def test_approx_distinct_semantic_contract(spark, sf001_dir):
     """Rows-only key contract (SURVEY §2): the HLL estimate must land
     within tolerance of the exact distinct count per group — the exact
     side is the oracle-checked `agg_distinct` twin, so this transitively
     anchors the sketch to the DuckDB oracle."""
     exact = {
         r.l_returnflag: r.n_parts
-        for r in QUERIES["agg_distinct"]["fn"](spark, SF_DIR).collect()
+        for r in QUERIES["agg_distinct"]["fn"](spark, sf001_dir).collect()
     }
     approx = {
         r.l_returnflag: r.approx_parts
-        for r in QUERIES["agg_approx_distinct"]["fn"](spark, SF_DIR).collect()
+        for r in QUERIES["agg_approx_distinct"]["fn"](spark, sf001_dir).collect()
     }
     assert set(exact) == set(approx)
     for k, n in exact.items():
@@ -202,17 +200,17 @@ def test_approx_distinct_semantic_contract(spark):
         assert abs(approx[k] - n) <= max(0.10 * n, 5), (k, approx[k], n)
 
 
-def test_approx_percentile_semantic_contract(spark):
+def test_approx_percentile_semantic_contract(spark, sf001_dir):
     """Rows-only key contract (SURVEY §2): the quantile sketch (accuracy
     10k) must track the exact interpolated percentiles from the
     oracle-checked `agg_percentile` twin within 2% relative error."""
     exact = {
         r.l_returnflag: (r.p50, r.p95)
-        for r in QUERIES["agg_percentile"]["fn"](spark, SF_DIR).collect()
+        for r in QUERIES["agg_percentile"]["fn"](spark, sf001_dir).collect()
     }
     approx = {
         r.l_returnflag: (r.p50_price, r.p95_price)
-        for r in QUERIES["agg_approx_percentile"]["fn"](spark, SF_DIR).collect()
+        for r in QUERIES["agg_approx_percentile"]["fn"](spark, sf001_dir).collect()
     }
     assert set(exact) == set(approx)
     for k in exact:

@@ -10,8 +10,6 @@ import re
 from hocr_de_noising_spark.operators.pipeline import denoise_exploded
 from hocr_de_noising_spark.queries import QUERIES
 
-SF = "/root/testdata/sf0.001"
-
 
 def plan_str(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -27,8 +25,8 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
-def test_filter_and_projection_pushed_to_scan(spark):
-    df = QUERIES["scan_lineitem"]["fn"](spark, SF)
+def test_filter_and_projection_pushed_to_scan(spark, sf001_dir):
+    df = QUERIES["scan_lineitem"]["fn"](spark, sf001_dir)
     p = formatted(df)
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in p
     m = re.search(r"ReadSchema: struct<([^>]*)>", p)
@@ -52,16 +50,16 @@ def test_exploded_pipeline_has_single_wide_exchange(spark, unit_dir):
     assert "BroadcastHashJoin" in p
 
 
-def test_denoise_patterns_keep_whole_stage_codegen(spark):
+def test_denoise_patterns_keep_whole_stage_codegen(spark, sf001_dir):
     # the flag/filter/project stages compile to whole-stage codegen
     # (windows themselves never codegen; the surrounding stages must)
-    df = QUERIES["wconf_filter"]["fn"](spark, SF)
+    df = QUERIES["wconf_filter"]["fn"](spark, sf001_dir)
     p = formatted(df)
     assert "WholeStageCodegen" in p or "codegen id" in p, p
 
 
-def test_topk_uses_take_ordered(spark):
-    df = QUERIES["topk_noisy"]["fn"](spark, SF)
+def test_topk_uses_take_ordered(spark, sf001_dir):
+    df = QUERIES["topk_noisy"]["fn"](spark, sf001_dir)
     assert "TakeOrderedAndProject" in plan_str(df)
 
 
@@ -90,22 +88,22 @@ def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_r6_text_keys_plan_shape(spark):
+def test_r6_text_keys_plan_shape(spark, sf001_dir):
     """html_main_content and html_main_content_dom strip boilerplate in
     one map-side projection: one scan, no exchange, no join, no
     Python."""
     for k in ("html_main_content", "html_main_content_dom"):
-        html = QUERIES[k]["fn"](spark, SF)
+        html = QUERIES[k]["fn"](spark, sf001_dir)
         ph = plan_str(html)
         assert "Exchange" not in ph and "Join" not in ph, ph
         assert ph.count("Scan parquet") == 1, ph
         assert "Python" not in ph and "Arrow" not in ph, ph
 
 
-def test_url_canonicalize_is_map_side(spark):
+def test_url_canonicalize_is_map_side(spark, sf001_dir):
     """url_canonicalize: pure map-side projection (no exchange/join/
     Python)."""
-    uc = QUERIES["url_canonicalize"]["fn"](spark, SF)
+    uc = QUERIES["url_canonicalize"]["fn"](spark, sf001_dir)
     pu = plan_str(uc)
     assert "Exchange" not in pu and "Join" not in pu, pu
     assert pu.count("Scan parquet") == 1, pu
