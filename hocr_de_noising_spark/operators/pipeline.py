@@ -44,8 +44,7 @@ from hocr_de_noising_spark.operators.features import (
 from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
-from hocr_de_noising_spark.pyworker import lazy_zip_invalidation
-from hocr_de_noising_spark.rules_np import Lexicon
+from hocr_de_noising_spark.pyworker import lazy_zip_invalidation, lexicon
 from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
@@ -127,7 +126,7 @@ def denoise_fused(
         lazy_zip_invalidation()
         from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
 
-        lex = Lexicon(bc.value) if p.use_dictionary else None
+        lex = lexicon(bc.value) if p.use_dictionary else None
         for rb in batches:
             yield denoise_arrow_batch(rb, p, lex)
 

@@ -8,12 +8,31 @@ on the path, about 0.2 s of every task on a 4-vCPU host. Python 3.12
 made the invalidation lazy: the cached directory is dropped, and an
 archive is re-read only on its next lookup. ``lazy_zip_invalidation`` backports
 that, so a reused worker pays the eager re-read on its first task only.
+
+``lexicon`` keeps the last ``Lexicon`` built in the process, so a reused
+worker does not rebuild it on every task (about 0.05 s for 5,000 tokens on
+a 4-vCPU host).
 """
 
 from __future__ import annotations
 
 import sys
 import zipimport
+
+from hocr_de_noising_spark.rules_np import Lexicon
+
+# (tokens, Lexicon(tokens)) of the last call to lexicon()
+_last_lexicon: "tuple[list[str], Lexicon] | None" = None
+
+
+def lexicon(tokens: list[str]) -> Lexicon:
+    """``Lexicon(tokens)``, reused while the token list stays equal. Keyed
+    by value, not by broadcast id: the job and the stream broadcast a
+    fresh copy of the same list on every call."""
+    global _last_lexicon
+    if _last_lexicon is None or _last_lexicon[0] != tokens:
+        _last_lexicon = (list(tokens), Lexicon(tokens))
+    return _last_lexicon[1]
 
 
 def lazy_zip_invalidation() -> None:
@@ -50,3 +69,8 @@ def lazy_zip_invalidation() -> None:
 
     zi._files = property(get_files, set_files)
     zi.invalidate_caches = invalidate_caches
+    # importers built before now hold their directory in __dict__, where
+    # the property shadows it: a second copy once the archive is re-read
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zi):
+            vars(finder).pop("_files", None)

@@ -1,6 +1,7 @@
 """get_spark: Python workers import the package from any working
-directory, without PYTHONPATH set by the caller, and Arrow batches are
-bounded in bytes as well as rows."""
+directory, without PYTHONPATH set by the caller, Arrow batches are
+bounded in bytes as well as rows, and file: paths go through Hadoop's
+raw local file system."""
 
 from __future__ import annotations
 
@@ -73,3 +74,20 @@ def test_arrow_batch_bounds_binary_heavy_rows(spark):
     assert sum(r.rows for r in got) == 2000
     assert max(r.rows for r in got) <= ARROW_MAX_RECORDS_PER_BATCH
     assert max(r.batch_bytes for r in got) <= ARROW_MAX_BYTES_PER_BATCH + row_bytes
+
+
+def test_local_paths_use_the_raw_local_file_system(spark):
+    """Both Hadoop file APIs resolve file: to the raw local file system
+    (no .crc sidecar, one chmod per create), and streaming checkpoints
+    rename through FileSystem, not FileContext's link-resolving rename."""
+    from hocr_de_noising_spark.session import LOCAL_FS_CONF
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    uri = jvm.java.net.URI("file:///")
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+    afs = jvm.org.apache.hadoop.fs.AbstractFileSystem.get(uri, conf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    assert afs.getClass().getName() == "org.apache.hadoop.fs.local.RawLocalFs"
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == LOCAL_FS_CONF[key]

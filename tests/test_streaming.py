@@ -115,3 +115,24 @@ def test_sink_retry_is_idempotent(spark, unit_dir, stream_dirs):
     assert out.select("doc_id").distinct().count() == 20
     sink(docs, 1)  # a new batch appends alongside
     assert spark.read.parquet(stream_dirs["out"]).count() == 40
+
+
+def test_stream_leaves_no_checksum_or_temp_files(spark, unit_dir, stream_dirs):
+    """Under get_spark's local file system defaults the checkpoint logs and
+    the sink's batch directories hold no .crc sidecar and no temp file
+    left from a rename."""
+    docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
+    lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
+    tokens = [r.token for r in lexicon.select("token").collect()]
+    for half in (F.col("doc_id") < "d00000100", F.col("doc_id") >= "d00000100"):
+        docs.filter(half).write.mode("append").parquet(stream_dirs["in"])
+        incremental_denoise_stream(
+            spark, stream_dirs["in"], stream_dirs["out"], stream_dirs["ckpt"], tokens
+        )
+    batches = [os.path.join(stream_dirs["out"], f"batch_id={i}") for i in (0, 1)]
+    logs = [os.path.join(stream_dirs["ckpt"], d) for d in ("offsets", "commits", "sources/0")]
+    for d in logs + batches:
+        names = os.listdir(d)
+        assert names, d
+        bad = [n for n in names if n.endswith((".crc", ".tmp")) or n == "_temporary"]
+        assert not bad, (d, bad)
