@@ -11,7 +11,6 @@ sides so order-insensitive value hashes agree.
 from hocr_de_noising_spark.queries.util import QUERIES, register  # noqa: F401
 
 # import order defines registry population
-from hocr_de_noising_spark.queries import relational  # noqa: F401,E402
 from hocr_de_noising_spark.queries import denoise_patterns  # noqa: F401,E402
 from hocr_de_noising_spark.queries import web_extract  # noqa: F401,E402
 from hocr_de_noising_spark.queries import interleaved  # noqa: F401,E402

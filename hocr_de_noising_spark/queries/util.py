@@ -9,12 +9,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 TABLES = ("lineitem", "documents")
 
-# name -> {"fn": callable(spark, sf_dir) -> DataFrame, "sql": str | None}
+# name -> {"fn": callable(spark, sf_dir) -> DataFrame, "sql": str}
 QUERIES: dict[str, dict] = {}
 
 
-def register(name: str, sql: str | None):
-    """Decorator: register a query with its DuckDB oracle (None = rows-only)."""
+def register(name: str, sql: str):
+    """Decorator: register a query with its DuckDB oracle SQL."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = {"fn": fn, "sql": sql}

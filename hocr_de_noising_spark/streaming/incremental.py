@@ -1,4 +1,4 @@
-"""ST1, ST5, ST6 — incremental / streaming processing (SURVEY.md §2.9).
+"""ST1, ST6 — incremental / streaming processing (SURVEY.md §2.9).
 
 The production resumability story is the checkpoint manifest
 (checkpoint.py); this module provides the Structured Streaming parity
@@ -53,12 +53,13 @@ def incremental_denoise_stream(
     lexicon_tokens: list[str],
     params: Params | None = None,
 ):
-    """ST1+ST5+ST6: readStream file source → exactly-once de-noising.
+    """ST1+ST6: readStream file source → exactly-once de-noising.
 
     New parquet files dropped into ``input_dir`` are picked up
     incrementally (offset log in ``checkpoint_dir`` — the streaming
     twin of the S7 manifest anti-join); each micro-batch is de-noised
-    with the same frozen rule and appended atomically via foreachBatch.
+    with the same frozen rule and written by foreachBatch, overwriting
+    its own ``batch_id=N`` directory (``make_denoise_sink``).
     The lexicon is broadcast once per call and destroyed when the
     stream ends. Returns the finished StreamingQuery.
     """

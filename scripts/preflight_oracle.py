@@ -3,7 +3,7 @@ DuckDB oracle at sf0.01 with the driver's own comparison (sort columns
 by name, big-endian-hex floats, sorted rows, md5) — the bit-level
 check that catches -0.0 / tie-break / rounding drift `isclose` misses.
 
-Prints one line per key (OK / ROWS-ONLY / FAIL) and a summary line.
+Prints one line per key (OK / FAIL) and a summary line.
 
 Usage: python scripts/preflight_oracle.py [--sf /root/testdata/sf0.01]
            [--cores 32] [--keys k1 k2 ...]
@@ -60,14 +60,10 @@ def main() -> None:
 
     qs, oracles = entry.queries(), entry.oracle_sql()
     keys = args.keys or list(qs)
-    ok = rows_only = fail = 0
+    ok = fail = 0
     for name in keys:
         try:
             sdf = qs[name](spark, args.sf).toPandas()
-            if name not in oracles:
-                print(f"ROWS-ONLY {name} rows={len(sdf)}", flush=True)
-                rows_only += 1
-                continue
             ddf = con.execute(oracles[name]).df()
             a, b = norm(sdf), norm(ddf)
             ha = hashlib.md5(a.to_csv(index=False).encode()).hexdigest()
@@ -85,7 +81,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — report and continue
             print(f"FAIL      {name} exception: {e!r:.300}", flush=True)
             fail += 1
-    print(f"SUMMARY ok={ok} rows_only={rows_only} fail={fail} total={len(keys)}")
+    print(f"SUMMARY ok={ok} fail={fail} total={len(keys)}")
     spark.stop()
     sys.exit(1 if fail else 0)
 

@@ -17,9 +17,6 @@ import __spark_entry__ as entry_mod
 from hocr_de_noising_spark.queries import QUERIES
 from hocr_de_noising_spark.queries.util import TABLES
 
-SQL_KEYS = sorted(k for k, v in QUERIES.items() if v["sql"] is not None)
-ROWS_ONLY_KEYS = sorted(k for k, v in QUERIES.items() if v["sql"] is None)
-
 
 @pytest.fixture(scope="module")
 def duck(sf001_dir):
@@ -67,19 +64,12 @@ def assert_frames_match(sdf: pd.DataFrame, ddf: pd.DataFrame, name: str):
             assert eq.all(), f"{name}.{c}: {int((~eq).sum())} mismatches, first: {a[c][~eq][:3].tolist()} vs {b[c][~eq][:3].tolist()}"
 
 
-@pytest.mark.parametrize("name", SQL_KEYS)
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(spark, duck, name, sf001_dir):
     spec = QUERIES[name]
     sdf = spec["fn"](spark, sf001_dir).toPandas()
     ddf = duck.execute(spec["sql"]).df()
     assert_frames_match(sdf, ddf, name)
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY_KEYS)
-def test_rows_only_queries_run(spark, name, sf001_dir):
-    df = QUERIES[name]["fn"](spark, sf001_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 _NASTY_TEXTS = [
@@ -181,54 +171,18 @@ def test_html_main_content_planted_boilerplate(spark):
     assert out[3].main_text == "" and out[3].n_blocks == 0
 
 
-def test_approx_distinct_semantic_contract(spark, sf001_dir):
-    """Rows-only key contract (SURVEY §2): the HLL estimate must land
-    within tolerance of the exact distinct count per group — the exact
-    side is the oracle-checked `agg_distinct` twin, so this transitively
-    anchors the sketch to the DuckDB oracle."""
-    exact = {
-        r.l_returnflag: r.n_parts
-        for r in QUERIES["agg_distinct"]["fn"](spark, sf001_dir).collect()
-    }
-    approx = {
-        r.l_returnflag: r.approx_parts
-        for r in QUERIES["agg_approx_distinct"]["fn"](spark, sf001_dir).collect()
-    }
-    assert set(exact) == set(approx)
-    for k, n in exact.items():
-        # rsd=0.02 → 3-sigma ≈ 6%; allow 10% plus small-count slack
-        assert abs(approx[k] - n) <= max(0.10 * n, 5), (k, approx[k], n)
-
-
-def test_approx_percentile_semantic_contract(spark, sf001_dir):
-    """Rows-only key contract (SURVEY §2): the quantile sketch (accuracy
-    10k) must track the exact interpolated percentiles from the
-    oracle-checked `agg_percentile` twin within 2% relative error."""
-    exact = {
-        r.l_returnflag: (r.p50, r.p95)
-        for r in QUERIES["agg_percentile"]["fn"](spark, sf001_dir).collect()
-    }
-    approx = {
-        r.l_returnflag: (r.p50_price, r.p95_price)
-        for r in QUERIES["agg_approx_percentile"]["fn"](spark, sf001_dir).collect()
-    }
-    assert set(exact) == set(approx)
-    for k in exact:
-        for e, a in zip(exact[k], approx[k]):
-            assert abs(a - e) <= 0.02 * abs(e), (k, a, e)
-
-
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
-    assert set(df.columns) >= {"l_returnflag", "sum_qty", "count_order"}
+    assert df.columns == ["lang", "n_docs", "denoise_rate"]
 
 
 def test_contract_shapes():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    assert set(oracles) <= set(qs)
+    # every key has an oracle: a key registered without one fails here
+    assert set(oracles) == set(qs)
     # registry order, every key exactly once, and within the driver's
     # 50-row CORRECTNESS cap: a key past 50 would get no driver row
     assert list(qs) == list(QUERIES)

@@ -1,6 +1,6 @@
-"""Physical-plan shape assertions (SURVEY.md §4): pushdown reaches the
-parquet scan, the exploded pipeline keeps exactly one wide exchange,
-and hot stages stay in whole-stage codegen."""
+"""Physical-plan shape assertions (SURVEY.md §4): the exploded pipeline
+keeps exactly one wide exchange, hot stages stay in whole-stage codegen,
+and the text keys stay map-side."""
 
 from __future__ import annotations
 
@@ -25,17 +25,6 @@ def formatted(df) -> str:
     return buf.getvalue()
 
 
-def test_filter_and_projection_pushed_to_scan(spark, sf001_dir):
-    df = QUERIES["scan_lineitem"]["fn"](spark, sf001_dir)
-    p = formatted(df)
-    assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in p
-    m = re.search(r"ReadSchema: struct<([^>]*)>", p)
-    assert m, p
-    read_cols = {c.split(":")[0] for c in m.group(1).split(",")}
-    # column pruning: only the 5 needed columns are read, not all 16
-    assert read_cols == {"l_orderkey", "l_partkey", "l_linenumber", "l_quantity", "l_shipdate"}
-
-
 def test_exploded_pipeline_has_single_wide_exchange(spark, unit_dir):
     docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
     lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
@@ -56,11 +45,6 @@ def test_denoise_patterns_keep_whole_stage_codegen(spark, sf001_dir):
     df = QUERIES["wconf_filter"]["fn"](spark, sf001_dir)
     p = formatted(df)
     assert "WholeStageCodegen" in p or "codegen id" in p, p
-
-
-def test_topk_uses_take_ordered(spark, sf001_dir):
-    df = QUERIES["topk_noisy"]["fn"](spark, sf001_dir)
-    assert "TakeOrderedAndProject" in plan_str(df)
 
 
 def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):

@@ -345,3 +345,64 @@ def test_cli_runs_then_resumes_as_noop(spark, unit_dir, tmp_path):
     got = spark.read.parquet(out).drop("bucket")
     j = got.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+
+
+# Runs in its own process: local[2,2] gives a failed task one retry,
+# which the shared local[N] session never does. 50-record Arrow batches
+# let the failed attempt's first rows reach the kernel and the output
+# observe before it raises (at 1024, its 200 docs would make one batch
+# that never reaches the kernel). Arguments: repo root, unit corpus
+# dir, output dir, manifest dir, marker file.
+_RETRY_PROBE = """
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import TaskContext
+from hocr_de_noising_spark.checkpoint import run_denoise_job
+from hocr_de_noising_spark.params import Params
+from hocr_de_noising_spark.session import get_spark
+
+unit_dir, out_dir, m_dir, marker = sys.argv[2:]
+spark = get_spark("retry-probe", cores=2, extra_conf={
+    "spark.master": "local[2,2]",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "50",
+})
+docs = spark.read.parquet(os.path.join(unit_dir, "docs.parquet"))
+lexicon = spark.read.parquet(os.path.join(unit_dir, "lexicon.parquet"))
+
+def fail_first_attempt(batches):
+    # the failed attempt streams its rows past the observe nodes
+    # before it raises; only the retry's may count
+    ctx = TaskContext.get()
+    for b in batches:
+        yield b
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        open(marker, "w").close()
+        raise RuntimeError("injected first-attempt failure")
+
+flaky = docs.mapInArrow(fail_first_attempt, docs.schema)
+run_denoise_job(spark, flaky, lexicon, out_dir, m_dir,
+                params=Params(n_buckets=16), run_id="r1", n_groups=2)
+spark.stop()
+"""
+
+
+def test_retried_task_counts_once_in_manifest(spark, loaded, unit_dir, tmp_path):
+    """observe counts each successful task once: a kernel task that
+    fails after streaming its rows and is retried leaves the output
+    equal to the golden and exactly one 'done' row per bucket with
+    exact counts, not the failed attempt's rows on top."""
+    docs, _, golden = loaded
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    marker = str(tmp_path / "attempt0-failed")
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_PROBE, repo, unit_dir, out_dir, m_dir, marker],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert os.path.exists(marker)  # a first attempt really failed
+    out = _read_all(spark, out_dir)
+    j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
+    assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
+    _assert_manifest_exact(spark, m_dir, docs, golden, Params(n_buckets=16))
