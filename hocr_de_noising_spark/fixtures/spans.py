@@ -53,7 +53,7 @@ LABELS_SCHEMA = pa.schema(
     [("doc_id", pa.string()), ("offset", pa.int32()), ("noise_class", pa.string()), ("rule_class", pa.string())]
 )
 
-SIZES = {"unit": 200, "correctness": 5000, "bench": 200000}
+SIZES = {"unit": 200, "correctness": 5000}
 
 
 def payload(token: str, x0: int, y0: int, x1: int, y1: int, wconf: int, line: int, col: int) -> str:
@@ -286,14 +286,13 @@ def gen_corpus(
 def write_corpus(out_dir: str, size: str = "unit", seed: int = 42, params: Params = DEFAULT_PARAMS) -> str:
     """Write docs_spans/golden/lexicon parquet for a named size; cached."""
     n_docs = SIZES[size]
-    skew = size in ("correctness", "bench")
-    with_golden = size != "bench"
+    skew = size == "correctness"
     d = os.path.join(out_dir, size)
     marker = os.path.join(d, "_DONE")
     if os.path.exists(marker):
         return d
     os.makedirs(d, exist_ok=True)
-    tables = gen_corpus(n_docs, seed=seed, skew=skew, params=params, with_golden=with_golden)
+    tables = gen_corpus(n_docs, seed=seed, skew=skew, params=params)
     for name, tbl in tables.items():
         # small row groups keep the file splittable: Spark's scan stage
         # can then parallelize by row-group byte ranges (one giant row

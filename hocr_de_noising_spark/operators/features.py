@@ -42,14 +42,6 @@ def with_doc_stats(df: DataFrame, params: Params | None = None) -> DataFrame:
     df = df.withColumn("w_px", (F.col("x1") - F.col("x0")).cast("double"))
 
     def pct(col: str, q: float):
-        if p.approx_stats:
-            # scale mode: sketch-based percentile — no per-doc sort,
-            # partial-aggregable. Not golden-exact (returns an actual
-            # element instead of interpolating); see Params.approx_stats.
-            return F.expr(
-                f"approx_percentile(CASE WHEN parse_ok THEN {col} END,"
-                f" {q!r}, {p.approx_stats_accuracy})"
-            ).over(w).cast("double")
         return F.expr(f"percentile(CASE WHEN parse_ok THEN {col} END, {q!r})").over(w)
 
     # single select → all five aggregates land in ONE WindowExec (one

@@ -1,10 +1,9 @@
 """PDF / layout parse — the north-rule's "PDF/layout parse" clause as
 a first-class operator with a stubbed codec. No PDF library is a
 dependency, so the byte-level decode reads a deterministic fake
-container format, and ``strict=True`` raises NotImplementedError where
-pdfminer/PyMuPDF would run. ALL the Spark-side plumbing — schema, Arrow
-binary transfer, mapInPandas batch shape, the layout heuristics
-downstream of the decode — is real and tested.
+container format in place of pdfminer/PyMuPDF. ALL the Spark-side
+plumbing — schema, Arrow binary transfer, mapInPandas batch shape, the
+layout heuristics downstream of the decode — is real and tested.
 
 Fake PDF container (deterministic, for fixtures):
 
@@ -80,22 +79,12 @@ def _parse_one(content: bytes):
         return [], False
 
 
-def parse_pdf_layout(df: DataFrame, strict: bool = False) -> DataFrame:
+def parse_pdf_layout(df: DataFrame) -> DataFrame:
     """(doc_ref, content binary) -> one row per layout block
     (BLOCKS_SCHEMA). Map-side mapInPandas over the binary column — the
     block table lands partitioned like its source scan, exactly like
     the hOCR ingest; unparseable documents yield a single
-    parse_ok=false row so corrupt inputs are countable, not silent.
-
-    ``strict=True`` marks where a real PDF library (pdfminer /
-    PyMuPDF) would run — intentionally NotImplementedError, since no
-    PDF library is a dependency."""
-    if strict:
-        raise NotImplementedError(
-            "real PDF parsing libraries are not available in this "
-            "container; use strict=False for the deterministic "
-            "fake-container parse path"
-        )
+    parse_ok=false row so corrupt inputs are countable, not silent."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

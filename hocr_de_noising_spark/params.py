@@ -53,13 +53,6 @@ class Params:
     # normalized token for dictionary-recoverable words, drops the rest.
     mode: str = "drop"
 
-    # X2/X3 at 100 TB: exact percentile forces a per-group sort; the
-    # approx mode swaps in approx_percentile (t-digest-style sketch,
-    # no sort, map-side combinable). Exact stays the default because
-    # the goldens are defined against exact linear interpolation.
-    approx_stats: bool = False
-    approx_stats_accuracy: int = 10_000
-
     # J5 / S5 — scale machinery.
     n_buckets: int = 256
     salt: int = 42

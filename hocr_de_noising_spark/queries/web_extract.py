@@ -495,12 +495,9 @@ def url_canonicalize(spark, sf):
 # exact host AND every subdomain of it ("example.com" blocks
 # "ads.example.com"), matched only at dot boundaries ("notexample.com"
 # passes). Implemented by expanding each host into its dot-boundary
-# suffix chain map-side and intersecting with the blocklist — for the
-# literal in-query list this is pure map-side (arrays_overlap against
-# a literal array, zero shuffle, zero Python); for a production-sized
-# blocklist the same expansion feeds a broadcast LEFT SEMI join on the
-# exploded suffixes (a host has ~3-5 suffixes, so the explode is
-# bounded and the fact side never shuffles).
+# suffix chain map-side and intersecting with the blocklist — pure
+# map-side (arrays_overlap against a literal array, zero shuffle, zero
+# Python).
 
 _BLOCKLIST = ("spam-net.com", "ads.site3.com", "site7.org")
 
@@ -533,51 +530,6 @@ def filter_blocked_hosts(df: DataFrame, host_col: str = "host",
         # get() not [0]: null-safe under ANSI mode when nothing matches
         F.expr(f"get(filter(sufs, s -> array_contains(array({bl}), s)), 0)")
         .alias("block_rule"),
-    )
-
-
-def filter_blocked_hosts_join(
-    df: DataFrame, blocklist_df: DataFrame, host_col: str = "host"
-) -> DataFrame:
-    """Production-blocklist variant of :func:`filter_blocked_hosts`
-    for lists too large to inline (millions of entries): explode each
-    host's ≤5-suffix chain and broadcast-join the blocklist on the
-    suffix key. The fact side never shuffles (broadcast hash join on
-    the exploded rows, then a groupBy on the host row's own key would
-    be needed only if a host could match twice — avoided here by
-    taking min(entry) per input row via a join + aggregate on a
-    row-local id, which AQE keeps local). ``blocklist_df`` must have a
-    single ``entry`` string column. Returns the input plus (blocked,
-    block_rule); when several entries match, the longest (most
-    specific) wins — same tie rule as the literal path."""
-    # localCheckpoint before the fan-out (ADVICE r7): _rid is
-    # non-deterministic, and the exploded-suffix branch and the final
-    # left join would otherwise each recompute it — a task retry or
-    # speculative copy could assign DIFFERENT ids to the same row
-    # across branches, silently mislabeling blocked/block_rule; the
-    # checkpoint fixes each row's id once for both branches
-    with_id = df.withColumn(
-        "_rid", F.monotonically_increasing_id()
-    ).localCheckpoint(eager=False)
-    sufs = with_id.select(
-        "_rid", F.explode(host_suffixes(host_col)).alias("suf")
-    )
-    hits = (
-        sufs.join(
-            F.broadcast(blocklist_df.withColumnRenamed("entry", "suf")),
-            "suf",
-        )
-        # longest match = most specific; one row per input host
-        .groupBy("_rid")
-        .agg(F.max_by("suf", F.length("suf")).alias("block_rule"))
-    )
-    return (
-        with_id.join(hits, "_rid", "left")
-        .select(
-            *df.columns,
-            F.col("block_rule").isNotNull().alias("blocked"),
-            "block_rule",
-        )
     )
 
 

@@ -4,7 +4,9 @@ deleted module fails the suite instead of the first run that reaches
 it; no module of those, or of the tests, keeps a module-level import
 it never uses, so one left behind by a deleted code path fails too;
 and every top-level function or class of the package is referenced
-somewhere, so a helper orphaned by a deleted caller fails as well."""
+somewhere, so a helper orphaned by a deleted caller fails as well.
+Every repo ``.py`` path the user-facing docs name exists, so a doc left
+pointing at a deleted script fails too."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import glob
 import importlib
 import importlib.util
 import os
+import re
 import sys
 from collections import Counter
 
@@ -151,3 +154,19 @@ def test_every_package_definition_is_referenced():
         if refs[node.name] <= _referenced_names(node)[node.name]
     ]
     assert not orphans, orphans
+
+
+_DOC_PATH = re.compile(r"\b(?:hocr_de_noising_spark|jobs|scripts|perfbench|tests)/[\w/]+\.py\b")
+
+
+def test_docs_name_existing_files():
+    """Every repo ``.py`` path that the user-facing docs name exists, so
+    a doc left pointing at a deleted script fails here. ROADMAP.md and
+    CHANGES.md are exempt: they name deleted files on purpose."""
+    named = set()
+    for doc in ("README.md", "FIXTURES.md", os.path.join(".claude", "skills", "verify", "SKILL.md")):
+        with open(os.path.join(REPO, doc)) as f:
+            named.update((doc, m) for m in _DOC_PATH.findall(f.read()))
+    assert named
+    missing = sorted(f"{doc}: {path}" for doc, path in named if not os.path.exists(os.path.join(REPO, path)))
+    assert not missing, missing

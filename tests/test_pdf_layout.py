@@ -1,10 +1,7 @@
 """PDF/layout parse (north-rule clause): fake-container round-trip,
-malformed tolerance, strict-mode stub contract, and the two-column
-reading-order heuristic."""
+malformed tolerance, and the two-column reading-order heuristic."""
 
 from __future__ import annotations
-
-import pytest
 
 from hocr_de_noising_spark.operators.pdf_layout import (
     blocks_reading_order,
@@ -42,12 +39,6 @@ def test_pdf_roundtrip_and_malformed(spark):
     # every corrupt doc is countable as exactly one parse_ok=false row
     assert bad == {"bad", "null", "trunc"}
     assert len(out) == 5 + 3
-
-
-def test_pdf_strict_mode_is_stubbed(spark):
-    df = spark.createDataFrame([("d", None)], "doc_ref string, content binary")
-    with pytest.raises(NotImplementedError):
-        parse_pdf_layout(df, strict=True)
 
 
 def test_pdf_reading_order_two_columns(spark):

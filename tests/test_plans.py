@@ -47,31 +47,6 @@ def test_denoise_patterns_keep_whole_stage_codegen(spark, sf001_dir):
     assert "WholeStageCodegen" in p or "codegen id" in p, p
 
 
-def test_calibrate_mpb_hits_exact_wave_parity(spark, correctness_dir):
-    """bench_scaleout.calibrate_mpb must land the scan on EXACTLY
-    waves*cores partitions — the rounding-free wave count the r4 scaling
-    evidence relies on (uses the 5000-doc corpus: multi-file layout with
-    the giants part, like the bench corpus)."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from bench_scaleout import calibrate_mpb
-
-    # NB: pins the CURRENT fixture layout (multi-file, 500-row groups).
-    # calibrate_mpb's contract allows a nearest-count fallback when
-    # packing granularity can't hit the target; if a fixture/writer
-    # change makes these exact targets unreachable, loosen this to a
-    # +/-1-partition tolerance rather than treating it as a regression.
-    docs_path = os.path.join(correctness_dir, "docs.parquet")
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        for cores in (2, 4):
-            _, n = calibrate_mpb(spark, docs_path, cores, waves=2)
-            assert n == 2 * cores, (cores, n)
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-
 def test_r6_text_keys_plan_shape(spark, sf001_dir):
     """html_main_content and html_main_content_dom strip boilerplate in
     one map-side projection: one scan, no exchange, no join, no

@@ -52,6 +52,8 @@ def test_host_blocklist_suffix_semantics(spark):
         ("exact.only.net", True, "exact.only.net"), # full-host entry
         ("sub.exact.only.net", True, "exact.only.net"),
         ("com", False, None),
+        # two entries match one host: the longer (more specific) wins
+        ("img.cdn.example.com", True, "cdn.example.com"),
     ]
     df = spark.createDataFrame(
         [(h,) for h, _, _ in hosts], "host string"
@@ -59,7 +61,7 @@ def test_host_blocklist_suffix_semantics(spark):
     out = {
         r["host"]: r
         for r in filter_blocked_hosts(
-            df, "host", blocklist=("example.com", "exact.only.net")
+            df, "host", blocklist=("example.com", "cdn.example.com", "exact.only.net")
         ).collect()
     }
     for h, blocked, rule in hosts:
@@ -74,33 +76,3 @@ def test_host_blocklist_plan_map_side_only(spark, sf001_dir):
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p  # literal-blocklist path: zero shuffle
     assert "Python" not in p
-
-
-def test_host_blocklist_join_path_agrees_with_literal(spark):
-    from hocr_de_noising_spark.queries.web_extract import (
-        filter_blocked_hosts,
-        filter_blocked_hosts_join,
-    )
-
-    bl = ("example.com", "ads.example.com", "exact.only.net")
-    hosts = [
-        "ads.example.com",      # TWO entries match -> longest wins
-        "x.ads.example.com",
-        "example.com",
-        "notexample.com",
-        "sub.exact.only.net",
-        "com",
-    ]
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    lit = {
-        r["host"]: (r["blocked"], r["block_rule"])
-        for r in filter_blocked_hosts(df, "host", blocklist=bl).collect()
-    }
-    bdf = spark.createDataFrame([(e,) for e in bl], "entry string")
-    join = {
-        r["host"]: (r["blocked"], r["block_rule"])
-        for r in filter_blocked_hosts_join(df, bdf, "host").collect()
-    }
-    assert lit == join
-    assert lit["ads.example.com"] == (True, "ads.example.com")
-    assert lit["x.ads.example.com"] == (True, "ads.example.com")
