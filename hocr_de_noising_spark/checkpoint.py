@@ -93,22 +93,14 @@ class ManifestCheckpoint:
             if f.startswith("commit-") and f.endswith(".parquet")
         )
 
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        files = self._commit_files()
-        if not files:
-            return None
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        return spark.read.schema(from_arrow_schema(MANIFEST_SCHEMA)).parquet(*files)
-
-    def completed_buckets(self, run_id: str, p_hash: str) -> set[int]:
-        """S7 resume source: buckets already done for this run lineage.
-        Read with pyarrow on the driver, one commit file at a time, so a
-        torn file is quarantined instead of failing the whole read."""
-        done: set[int] = set()
+    def rows(self) -> list[dict]:
+        """Every manifest row, read with pyarrow on the driver one
+        commit file at a time, so a torn file is quarantined instead of
+        failing the whole read."""
+        rows: list[dict] = []
         for path in self._commit_files():
             try:
-                t = pq.read_table(path, columns=["run_id", "bucket", "params_hash", "status"])
+                t = pq.read_table(path)
             except pa.ArrowInvalid as exc:
                 name = os.path.basename(path)
                 os.rename(path, os.path.join(self.dir, f".torn-{name}"))
@@ -118,30 +110,31 @@ class ManifestCheckpoint:
                     file=sys.stderr,
                 )
                 continue
-            done.update(
-                r["bucket"]
-                for r in t.to_pylist()
-                if r["run_id"] == run_id and r["params_hash"] == p_hash and r["status"] == "done"
-            )
-        return done
+            rows += t.to_pylist()
+        return rows
+
+    def completed_buckets(self, run_id: str, p_hash: str) -> set[int]:
+        """S7 resume source: buckets already done for this run lineage."""
+        return {
+            r["bucket"]
+            for r in self.rows()
+            if r["run_id"] == run_id and r["params_hash"] == p_hash and r["status"] == "done"
+        }
 
 
-def _bucket_metric_exprs(group_buckets: list[int], spans_sql: str):
-    """Per-bucket conditional aggregates for df.observe: (n_docs_b,
-    n_spans_b) for each bucket of the group. observe cannot groupBy, so
-    group-local buckets become |group| conditional sums — 32 buckets per
-    group at production defaults, well within aggregate-expression
-    limits — evaluated DURING the write action (zero extra scans). Each
-    is one SQL string, so it costs one py4j call to build; composing
-    it from Column functions takes several per expression, about 0.3 s
-    per observe at 32 buckets."""
-    exprs = []
-    for b in group_buckets:
-        exprs.append(F.expr(f"coalesce(sum(CASE WHEN bucket = {b} THEN 1 END), 0) AS docs_{b}"))
-        exprs.append(
-            F.expr(f"coalesce(sum(CASE WHEN bucket = {b} THEN {spans_sql} END), 0) AS spans_{b}")
-        )
-    return exprs
+def _bucket_sums(buckets: list[int], name: str, value_sql: str):
+    """Per-bucket conditional sums for df.observe, ``{name}_{b}`` for
+    each bucket b. observe cannot groupBy, so the group's buckets become
+    one conditional sum each — 32 buckets per group at production
+    defaults, well within aggregate-expression limits — evaluated DURING
+    the write action (zero extra scans). Each is one SQL string, so it
+    costs one py4j call to build; composing it from Column functions
+    takes several per expression, about 0.3 s per observe at 32
+    buckets."""
+    return [
+        F.expr(f"coalesce(sum(CASE WHEN bucket = {b} THEN {value_sql} END), 0) AS {name}_{b}")
+        for b in buckets
+    ]
 
 
 def run_denoise_job(
@@ -154,13 +147,11 @@ def run_denoise_job(
     run_id: str = "run-0",
     n_groups: int = 8,
     input_lineage: str = "",
-    fail_after_group: int | None = None,
 ) -> dict:
     """The resumable batch job (SURVEY.md §3.2 bucket loop).
 
     Processes n_groups bucket groups; skips groups whose buckets are all
-    committed 'done' in the manifest. ``fail_after_group`` injects a
-    crash for the resume test. Returns summary metrics.
+    committed 'done' in the manifest. Returns summary metrics.
 
     Scale design (one action, one scan per group):
     - metrics come from ``df.observe`` (CollectMetrics) nodes on the
@@ -214,7 +205,6 @@ def run_denoise_job(
             docs_b = docs
     else:
         docs_b = docs.withColumn("bucket", bucket_col(p))
-    group_of = F.col("bucket") % n_groups
     summary = {"groups_run": 0, "groups_skipped": 0, "n_docs": 0}
     # ship the lexicon as a broadcast variable, not a task closure:
     # one torrent distribution per job instead of re-serializing the
@@ -225,29 +215,30 @@ def run_denoise_job(
     lex_tokens = spark.sparkContext.broadcast(tokens)
     try:
         for g in range(n_groups):
-            group_buckets = [b for b in range(p.n_buckets) if b % n_groups == g]
-            # only the buckets NOT yet committed: re-running a partial group
-            # must neither recompute nor re-append manifest rows for its
-            # already-done buckets (ADVICE r2 — double-count on resume with
-            # a different n_groups)
-            pending = [b for b in group_buckets if b not in done]
+            # only the group's buckets NOT yet committed: re-running a
+            # partial group must neither recompute nor re-append manifest
+            # rows for its already-done buckets (ADVICE r2 — double-count
+            # on resume with a different n_groups)
+            pending = [b for b in range(g, p.n_buckets, n_groups) if b not in done]
             if not pending:
                 summary["groups_skipped"] += 1
                 continue
 
-            part = docs_b.filter(group_of == g)
-            if len(pending) < len(group_buckets):
-                part = part.filter(F.col("bucket").isin(pending))
+            # an IN list prunes at the scan (PartitionFilters) when the
+            # input is bucketed at rest
+            part = docs_b.filter(F.col("bucket").isin(pending))
 
             in_obs = Observation()
             observed = part.observe(
-                in_obs, *_bucket_metric_exprs(pending, "coalesce(size(spans), 0)")
+                in_obs,
+                *_bucket_sums(pending, "docs", "1"),
+                *_bucket_sums(pending, "spans", "coalesce(size(spans), 0)"),
             )
             out = denoise_fused(observed.drop("bucket"), lex_tokens, p)
 
             out_obs = Observation()
             out = out.withColumn("bucket", bucket_col(p)).observe(
-                out_obs, *_bucket_metric_exprs(pending, "size(spans)")
+                out_obs, *_bucket_sums(pending, "spans", "size(spans)")
             )
             (
                 out.repartition(F.col("bucket"))
@@ -298,9 +289,6 @@ def run_denoise_job(
             ckpt.append_rows(rows)
             summary["groups_run"] += 1
             summary["n_docs"] += sum(r["n_docs"] for r in rows)
-
-            if fail_after_group is not None and g >= fail_after_group:
-                raise RuntimeError(f"injected failure after group {g}")
 
         return summary
     finally:

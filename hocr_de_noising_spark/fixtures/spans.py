@@ -20,7 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
-from hocr_de_noising_spark.params import DEFAULT_PARAMS, Params
+from hocr_de_noising_spark.params import DEFAULT_PARAMS
 from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc, noise_class, parse_payload, doc_flags
 
 PAGE_W, PAGE_H = 2480, 3508
@@ -207,15 +207,13 @@ def gen_corpus(
     n_docs: int,
     seed: int = 42,
     skew: bool = False,
-    params: Params = DEFAULT_PARAMS,
     with_golden: bool = True,
-    lexicon: list[tuple[str, int]] | None = None,
 ):
     """Generate the corpus; returns dict of pyarrow tables.
 
     Keys: docs, lexicon, and (with_golden) golden, golden_flat, labels.
     """
-    lexicon = lexicon if lexicon is not None else gen_lexicon()
+    lexicon = gen_lexicon()
     lex_tokens = [t for t, _ in lexicon]
     lex = Lexicon(lex_tokens) if with_golden else None
     rng = np.random.default_rng(seed)
@@ -235,7 +233,7 @@ def gen_corpus(
         docs_spans.append(spans)
 
         if with_golden:
-            out = denoise_doc(spans, params, lex)
+            out = denoise_doc(spans, DEFAULT_PARAMS, lex)
             golden_ids.append(doc_id)
             golden_spans.append(out)
             for s in out:
@@ -243,7 +241,7 @@ def gen_corpus(
             # diagnostics: planted intent + rule-assigned class
             text_idx = [i for i, s in enumerate(spans) if s["kind"] == "text"]
             parsed = [parse_payload(spans[i]["text"]) for i in text_idx]
-            flags = doc_flags(parsed, params, lex)
+            flags = doc_flags(parsed, DEFAULT_PARAMS, lex)
             rule_cls = {i: noise_class(f) for i, f in zip(text_idx, flags)}
             for i, c in enumerate(classes):
                 if c is not None or rule_cls.get(i) is not None:
@@ -283,8 +281,9 @@ def gen_corpus(
     return out
 
 
-def write_corpus(out_dir: str, size: str = "unit", seed: int = 42, params: Params = DEFAULT_PARAMS) -> str:
-    """Write docs_spans/golden/lexicon parquet for a named size; cached."""
+def write_corpus(out_dir: str, size: str = "unit") -> str:
+    """Write docs_spans/golden/lexicon parquet for a named size; cached
+    by size (seed 42, default params)."""
     n_docs = SIZES[size]
     skew = size == "correctness"
     d = os.path.join(out_dir, size)
@@ -292,7 +291,7 @@ def write_corpus(out_dir: str, size: str = "unit", seed: int = 42, params: Param
     if os.path.exists(marker):
         return d
     os.makedirs(d, exist_ok=True)
-    tables = gen_corpus(n_docs, seed=seed, skew=skew, params=params)
+    tables = gen_corpus(n_docs, skew=skew)
     for name, tbl in tables.items():
         # small row groups keep the file splittable: Spark's scan stage
         # can then parallelize by row-group byte ranges (one giant row

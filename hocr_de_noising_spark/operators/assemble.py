@@ -26,8 +26,6 @@ from hocr_de_noising_spark.params import Params
 
 _BIG = 2_147_483_647  # null-ordering sentinel for media rows
 
-OUT_SPAN_DDL = "kind string, text string, media_ref string, offset int"
-
 
 def with_survival(df: DataFrame, params: Params | None = None) -> DataFrame:
     """Decide keep/drop/rewrite per span (X10 mode flag)."""

@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 _MAGIC = b"FPDF"
 
-PDF_SCHEMA = "doc_ref string, content binary"
 BLOCKS_SCHEMA = (
     "doc_ref string, page int, block_idx int, x0 int, y0 int, "
     "x1 int, y1 int, text string, parse_ok boolean"

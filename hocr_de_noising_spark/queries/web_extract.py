@@ -41,7 +41,7 @@ from hocr_de_noising_spark.queries.util import let_sql, load, register
 
 MIN_WORDS = 8  # Boilerpipe's "number of words" rule threshold
 # link density <= 1/3, kept as integer math: lw * 3 <= nw
-LINK_DENSITY_NUM, LINK_DENSITY_DEN = 1, 3
+LINK_DENSITY_DEN = 3
 
 # every pattern below is in the RE2 ∩ java.util.regex portable subset:
 # no backreferences, no lookaround; (?is) inline flags and non-greedy

@@ -116,7 +116,7 @@ def has_repeat_run(token: str, run_len: int = 4) -> bool:
 
 
 class Lexicon:
-    """Exact + edit-distance-1 membership over a token list.
+    """Edit-distance <= 1 membership over a token list.
 
     Distance-1 test via the symmetric-delete method: lev(t, w) <= 1 iff
     t == w, or t is w minus one char, or w is t minus one char, or t and
@@ -134,9 +134,6 @@ class Lexicon:
                 d = w[:i] + w[i + 1 :]
                 self.del_variants.add(d)
                 self.del_at.add((i, d))
-
-    def contains_exact(self, token: str) -> bool:
-        return token in self.exact
 
     def within_one(self, token: str) -> bool:
         if token in self.exact:
@@ -230,10 +227,7 @@ def doc_flags(
             or p["y1"] > p95_y1 + tol
         )
         if lexicon is not None and params.use_dictionary:
-            if params.max_edit_distance >= 1:
-                dict_hit = lexicon.within_one(norm)
-            else:
-                dict_hit = lexicon.contains_exact(norm)
+            dict_hit = lexicon.within_one(norm)
             dict_miss = not dict_hit
         else:
             dict_hit = False

@@ -4,10 +4,10 @@ Semantically identical to rules_np.denoise_doc applied to every doc of
 a batch, but vectorized across the whole Arrow batch: one RE2 extract
 for all spans, code-point arithmetic for the string flags, one
 groupby-quantile for the page stats, and numpy sorts for reading order
-and anchoring. This is what ``denoise_fused`` executes per
-``mapInArrow`` batch; equality with rules_np is property-tested
-(tests/test_vectorized.py) and both are held to the constructive
-goldens.
+and anchoring. Its one entry point, :func:`denoise_arrow_batch`, is
+what ``denoise_fused`` executes per ``mapInArrow`` batch; equality with
+rules_np is property-tested through it (tests/test_vectorized.py) and
+both are held to the constructive goldens.
 
 Parity notes (verified by tests):
 - the payload is parsed by ``pc.extract_regex`` with an RE2 form of
@@ -102,44 +102,6 @@ def has_repeat_run(cps: np.ndarray, offs: np.ndarray, k: int) -> np.ndarray:
     # rows share their start with the next row)
     out[np.searchsorted(offs, np.flatnonzero(run), side="right") - 1] = True
     return out
-
-
-def denoise_batch(
-    doc_ids: list, spans_lists: list, params: Params, lexicon: Lexicon | None
-) -> list[list[dict]]:
-    """De-noise a batch of documents; returns output span lists aligned
-    with the input doc order (the list-of-dicts reference surface; the
-    Spark fused path goes through :func:`denoise_arrow_batch`)."""
-    n_docs = len(doc_ids)
-    didx, pos, kind, text, media_ref = [], [], [], [], []
-    for d, spans in enumerate(spans_lists):
-        for i, s in enumerate(spans):
-            didx.append(d)
-            pos.append(i)
-            kind.append(s["kind"])
-            text.append(s["text"])
-            media_ref.append(s["media_ref"])
-    results: list[list[dict]] = [[] for _ in range(n_docs)]
-    if not didx:
-        return results
-
-    out_didx, kinds, texts, refs = _denoise_flat(
-        np.asarray(didx, dtype=np.int64),
-        np.asarray(pos, dtype=np.int64),
-        pa.array(kind, type=pa.string()),
-        pa.array(text, type=pa.string()),
-        pa.array(media_ref, type=pa.string()),
-        params,
-        lexicon,
-    )
-    for d, kd, txt, mref in zip(
-        out_didx.tolist(), kinds.to_pylist(), texts.to_pylist(), refs.to_pylist()
-    ):
-        spans_out = results[d]
-        spans_out.append(
-            {"kind": kd, "text": txt, "media_ref": mref, "offset": len(spans_out)}
-        )
-    return results
 
 
 def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
@@ -307,9 +269,8 @@ def _denoise_flat(
     if lexicon is not None and p.use_dictionary:
         enc = pc.dictionary_encode(token)
         norms = [normalize_token(t) for t in enc.dictionary.to_pylist()]
-        lookup = lexicon.within_one if p.max_edit_distance >= 1 else lexicon.contains_exact
         # a null token (parse failure) takes the trailing miss entry
-        hit_of = np.array([lookup(t) for t in norms] + [False], dtype=bool)
+        hit_of = np.array([lexicon.within_one(t) for t in norms] + [False], dtype=bool)
         codes = pc.fill_null(enc.indices, len(norms)).to_numpy(zero_copy_only=False)
         dict_hit = hit_of[codes]
         f_dict_miss = parse_ok & ~dict_hit

@@ -54,7 +54,6 @@ LOCAL_FS_CONF = {
 def get_spark(
     app_name: str = "hocr-de-noising",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the span-denoise workload.
@@ -66,13 +65,11 @@ def get_spark(
         env = os.environ.get("SPARK_GRAFT_CPUS")
         cores = int(env) if env else 0
     master = f"local[{cores}]" if cores else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8) if cores else 32
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8) if cores else 32))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -24,7 +24,7 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("hocr-denoise-tests", cores=4, shuffle_partitions=8)
+    s = get_spark("hocr-denoise-tests", cores=4)
     yield s
 
 

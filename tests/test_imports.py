@@ -3,8 +3,9 @@
 deleted module fails the suite instead of the first run that reaches
 it; no module of those, or of the tests, keeps a module-level import
 it never uses, so one left behind by a deleted code path fails too;
-and every top-level function or class of the package is referenced
-somewhere, so a helper orphaned by a deleted caller fails as well.
+and every top-level function, class or assigned name of the package is
+referenced somewhere, so a helper or constant orphaned by a deleted
+caller fails as well.
 Every repo ``.py`` path the user-facing docs name exists, so a doc left
 pointing at a deleted script fails too."""
 
@@ -119,39 +120,54 @@ def _is_entry_point(node: ast.AST) -> bool:
     return node.name == "main" or node.name.startswith(("test_", "pytest_"))
 
 
+def _top_level_definitions(tree: ast.Module) -> list[tuple[str, ast.AST]]:
+    """(name, node) for each module-level ``def``/``class`` that is not
+    a registered query or an entry point, and for each name a
+    module-level assignment binds, dunders (``__all__``) excepted."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if not _is_registered_query(node) and not _is_entry_point(node):
+                out.append((node.name, node))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [
+                (n.id, node)
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name) and not n.id.startswith("__")
+            ]
+    return out
+
+
 def test_every_package_definition_is_referenced():
-    """Each top-level ``def``/``class`` of the package, the tests and
-    the scripts must be named (as a Name, an Attribute, an imported
-    alias or a parameter) somewhere in the package, the jobs, the
-    scripts, the benchmark, the tests or ``__spark_entry__.py``;
-    references inside the definition's own body (recursion) do not
-    count. Registered queries and entry points (``_is_entry_point``) are
-    exempt, so a helper left behind by a deleted test fails here too,
-    and so does a fixture no test requests. The function-level twin of
-    test_no_unused_module_imports."""
+    """Each top-level ``def``/``class`` and module-level assigned name
+    of the package, the tests and the scripts must be named (as a Name,
+    an Attribute, an imported alias or a parameter) somewhere in the
+    package, the jobs, the scripts, the benchmark, the tests or
+    ``__spark_entry__.py``; references inside the definition's own
+    statement (recursion, the assignment target) do not count.
+    Registered queries, entry points (``_is_entry_point``) and dunders
+    are exempt, so a helper or constant left behind by a deleted test
+    fails here too, and so does a fixture no test requests. The
+    definition-level twin of test_no_unused_module_imports."""
     paths = sorted(
         os.path.relpath(p, REPO)
         for d in ("hocr_de_noising_spark", "jobs", "scripts", "perfbench", "tests")
         for p in glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
     ) + ["__spark_entry__.py"]
     refs: Counter = Counter()
-    defs: list[tuple[str, ast.AST]] = []
+    defs: list[tuple[str, str, ast.AST]] = []
     for path in paths:
         with open(os.path.join(REPO, path)) as f:
             tree = ast.parse(f.read(), path)
         refs += _referenced_names(tree)
         if path.startswith(("hocr_de_noising_spark", "tests", "scripts")):
-            defs += [
-                (path, node)
-                for node in tree.body
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-                and not _is_registered_query(node)
-                and not _is_entry_point(node)
-            ]
+            defs += [(path, name, node) for name, node in _top_level_definitions(tree)]
     orphans = [
-        f"{path}:{node.lineno} {node.name}"
-        for path, node in defs
-        if refs[node.name] <= _referenced_names(node)[node.name]
+        f"{path}:{node.lineno} {name}"
+        for path, name, node in defs
+        if refs[name] <= _referenced_names(node)[name]
     ]
     assert not orphans, orphans
 

@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 
@@ -32,7 +33,24 @@ def _read_all(spark, out_dir):
     return spark.read.parquet(out_dir).drop("bucket", "group")
 
 
-def _assert_manifest_exact(spark, m_dir, docs, golden, p):
+def _crash_after_commits(monkeypatch, n):
+    """Make the job raise once its n-th manifest commit has returned:
+    the crash point of a host that dies right after group n-1's
+    manifest append. ``monkeypatch.undo()`` restores the real
+    ``append_rows`` for the resume."""
+    real = ManifestCheckpoint.append_rows
+    commits = []
+
+    def append_then_crash(self, rows):
+        real(self, rows)
+        commits.append(rows)
+        if len(commits) == n:
+            raise RuntimeError(f"injected failure after commit {n}")
+
+    monkeypatch.setattr(ManifestCheckpoint, "append_rows", append_then_crash)
+
+
+def _assert_manifest_exact(m_dir, docs, golden, p):
     """Exactly one 'done' row per bucket, each with the counts taken
     straight from the input and the golden, bucketed by bucket_col."""
 
@@ -46,13 +64,14 @@ def _assert_manifest_exact(spark, m_dir, docs, golden, p):
         return {r.bucket: (r.n, r.s) for r in rows}
 
     want_in, want_out = per_bucket(docs), per_bucket(golden)
-    rows = ManifestCheckpoint(m_dir).read(spark).collect()
-    assert sorted(r.bucket for r in rows) == list(range(p.n_buckets))
+    rows = ManifestCheckpoint(m_dir).rows()
+    assert sorted(r["bucket"] for r in rows) == list(range(p.n_buckets))
     for r in rows:
-        n_docs, n_in = want_in.get(r.bucket, (0, 0))
-        n_out = want_out.get(r.bucket, (0, 0))[1]
-        assert r.status == "done", r.bucket
-        assert (r.n_docs, r.n_spans_in, r.n_spans_out) == (n_docs, n_in, n_out), r.bucket
+        b = r["bucket"]
+        n_docs, n_in = want_in.get(b, (0, 0))
+        n_out = want_out.get(b, (0, 0))[1]
+        assert r["status"] == "done", b
+        assert (r["n_docs"], r["n_spans_in"], r["n_spans_out"]) == (n_docs, n_in, n_out), b
 
 
 def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
@@ -68,14 +87,13 @@ def test_job_writes_manifest_and_matches_golden(spark, loaded, tmp_path):
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark)
-    assert m.schema.names == MANIFEST_SCHEMA.names
-    rows = m.collect()
+    rows = ManifestCheckpoint(str(tmp_path / "m")).rows()
+    assert all(list(r) == MANIFEST_SCHEMA.names for r in rows)
     assert len(rows) == 16  # one row per bucket
-    assert all(r.status == "done" and r.params_hash == params_hash(p) for r in rows)
-    assert sum(r.n_docs for r in rows) == docs.count()
-    assert all(r.n_noise_dropped == r.n_spans_in - r.n_spans_out for r in rows)
-    rates = [r.denoise_rate for r in rows if r.n_spans_in]
+    assert all(r["status"] == "done" and r["params_hash"] == params_hash(p) for r in rows)
+    assert sum(r["n_docs"] for r in rows) == docs.count()
+    assert all(r["n_noise_dropped"] == r["n_spans_in"] - r["n_spans_out"] for r in rows)
+    rates = [r["denoise_rate"] for r in rows if r["n_spans_in"]]
     assert all(0.0 <= x <= 1.0 for x in rates) and any(x > 0 for x in rates)
 
 
@@ -89,19 +107,20 @@ def test_manifest_rows_exact_per_bucket_at_production_layout(spark, loaded, tmp_
         spark, docs, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
         params=p, run_id="r1",
     )
-    _assert_manifest_exact(spark, str(tmp_path / "m"), docs, golden, p)
+    _assert_manifest_exact(str(tmp_path / "m"), docs, golden, p)
 
 
-def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
+def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path, monkeypatch):
     docs, lexicon, golden = loaded
     p = Params(n_buckets=16)
     out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
 
+    _crash_after_commits(monkeypatch, 2)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_denoise_job(
-            spark, docs, lexicon, out_dir, m_dir,
-            params=p, run_id="r1", n_groups=4, fail_after_group=1,
+            spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
         )
+    monkeypatch.undo()
     done_before = ManifestCheckpoint(m_dir).completed_buckets("r1", params_hash(p))
     assert 0 < len(done_before) < 16
 
@@ -116,7 +135,9 @@ def test_kill_and_resume_skips_done_buckets(spark, loaded, tmp_path):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
 
-def test_torn_manifest_commit_is_quarantined_and_recomputed(spark, loaded, tmp_path, capfd):
+def test_torn_manifest_commit_is_quarantined_and_recomputed(
+    spark, loaded, tmp_path, capfd, monkeypatch
+):
     """A commit file torn by a host crash (here: truncated to half its
     bytes) must not fail every later resume. The resume renames it to
     ``.torn-<name>``, says so on stderr, and recomputes its buckets;
@@ -124,11 +145,12 @@ def test_torn_manifest_commit_is_quarantined_and_recomputed(spark, loaded, tmp_p
     docs, lexicon, golden = loaded
     p = Params(n_buckets=16)
     out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    _crash_after_commits(monkeypatch, 1)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_denoise_job(
-            spark, docs, lexicon, out_dir, m_dir,
-            params=p, run_id="r1", n_groups=4, fail_after_group=0,
+            spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
         )
+    monkeypatch.undo()
     (name,) = os.listdir(m_dir)
     path = os.path.join(m_dir, name)
     with open(path, "r+b") as f:
@@ -141,7 +163,7 @@ def test_torn_manifest_commit_is_quarantined_and_recomputed(spark, loaded, tmp_p
     assert f"quarantined torn commit {name}" in capfd.readouterr().err
     assert os.path.exists(os.path.join(m_dir, f".torn-{name}"))
     assert not os.path.exists(path)
-    _assert_manifest_exact(spark, m_dir, docs, golden, p)
+    _assert_manifest_exact(m_dir, docs, golden, p)
     out = _read_all(spark, out_dir)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
@@ -172,16 +194,16 @@ def test_observation_timeout_commits_no_manifest_rows(spark, loaded, tmp_path, m
         )
     ckpt = ManifestCheckpoint(m_dir)
     assert ckpt.completed_buckets("r1", params_hash(p)) == {0, 4, 8, 12}
-    assert ckpt.read(spark).count() == 4  # group 0's rows only
+    assert len(ckpt.rows()) == 4  # group 0's rows only
 
     monkeypatch.setattr(checkpoint, "observation_metrics", real)
     summary = run_denoise_job(
         spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
     )
     assert (summary["groups_skipped"], summary["groups_run"]) == (1, 3)
-    rows = ckpt.read(spark).collect()
-    assert sorted(r.bucket for r in rows) == list(range(16))
-    assert sum(r.n_docs for r in rows) == docs.count()
+    rows = ckpt.rows()
+    assert sorted(r["bucket"] for r in rows) == list(range(16))
+    assert sum(r["n_docs"] for r in rows) == docs.count()
     out = _read_all(spark, out_dir)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
@@ -210,10 +232,10 @@ def test_sparse_input_empty_groups_do_not_crash(spark, loaded, tmp_path):
         params=p, run_id="r1", n_groups=4,
     )
     assert summary["groups_run"] == 4 and summary["n_docs"] == 1
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
+    m = ManifestCheckpoint(str(tmp_path / "m")).rows()
     assert len(m) == 16
-    assert sum(r.n_docs for r in m) == 1
-    assert all(r.n_spans_out <= r.n_spans_in for r in m)
+    assert sum(r["n_docs"] for r in m) == 1
+    assert all(r["n_spans_out"] <= r["n_spans_in"] for r in m)
     assert spark.read.parquet(str(tmp_path / "out")).count() == 1
 
 
@@ -240,7 +262,7 @@ def test_regroup_resume_is_idempotent(spark, loaded, tmp_path):
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
 
 
-def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path):
+def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path, monkeypatch):
     """ADVICE r2: resuming with a DIFFERENT n_groups used to re-run a
     group's already-committed buckets and append duplicate 'done' rows
     — manifest consumers summing n_docs would double-count. Now only
@@ -248,19 +270,21 @@ def test_partial_group_resume_appends_no_duplicate_rows(spark, loaded, tmp_path)
     docs, lexicon, _ = loaded
     p = Params(n_buckets=16)
     out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
+    _crash_after_commits(monkeypatch, 2)
     with pytest.raises(RuntimeError, match="injected failure"):
         run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
-                        run_id="r1", n_groups=4, fail_after_group=1)
+                        run_id="r1", n_groups=4)
+    monkeypatch.undo()
     done = ManifestCheckpoint(m_dir).completed_buckets("r1", params_hash(p))
     assert len(done) == 8  # groups 0 and 1 of 4
     # resume with n_groups=2: BOTH new groups contain a mix of
     # committed and pending buckets
     run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                     run_id="r1", n_groups=2)
-    m = ManifestCheckpoint(m_dir).read(spark).collect()
+    m = ManifestCheckpoint(m_dir).rows()
     assert len(m) == 16  # exactly one row per bucket — no duplicates
-    assert len({r.bucket for r in m}) == 16
-    assert sum(r.n_docs for r in m) == docs.count()
+    assert len({r["bucket"] for r in m}) == 16
+    assert sum(r["n_docs"] for r in m) == docs.count()
 
 
 def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
@@ -280,17 +304,15 @@ def test_mismatched_bucket_column_is_recomputed(spark, loaded, tmp_path):
     assert out.count() == docs.count()
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
-    m = ManifestCheckpoint(str(tmp_path / "m")).read(spark).collect()
-    assert sum(r.n_docs for r in m) == docs.count()
-    assert len({r.bucket for r in m if r.n_docs > 0}) > 1
+    m = ManifestCheckpoint(str(tmp_path / "m")).rows()
+    assert sum(r["n_docs"] for r in m) == docs.count()
+    assert len({r["bucket"] for r in m if r["n_docs"] > 0}) > 1
 
 
 def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
-    """Input bucketed at rest (bucket partition column) → the per-group
-    filter reaches the parquet scan as a PartitionFilter instead of
-    rescanning the full corpus once per group."""
-    from hocr_de_noising_spark.checkpoint import bucket_col
-
+    """Input bucketed at rest (bucket partition column) → the job's
+    per-group IN filter reaches the parquet scan as a PartitionFilter
+    instead of rescanning the full corpus once per group."""
     docs, lexicon, golden = loaded
     p = Params(n_buckets=16)
     at_rest = str(tmp_path / "bucketed")
@@ -299,9 +321,10 @@ def test_bucketed_input_prunes_at_scan(spark, loaded, tmp_path):
     ).parquet(at_rest)
     bucketed = spark.read.parquet(at_rest)
 
-    part = bucketed.filter(F.col("bucket") % 4 == 1)
+    part = bucketed.filter(F.col("bucket").isin([1, 5, 9, 13]))
     plan = part._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "% 4" in plan
+    pruned = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert pruned and "IN (" in pruned.group(1), plan
 
     summary = run_denoise_job(
         spark, bucketed, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
@@ -405,4 +428,4 @@ def test_retried_task_counts_once_in_manifest(spark, loaded, unit_dir, tmp_path)
     out = _read_all(spark, out_dir)
     j = out.alias("o").join(golden.alias("g"), "doc_id", "full_outer")
     assert j.filter(~F.col("o.spans").eqNullSafe(F.col("g.spans"))).count() == 0
-    _assert_manifest_exact(spark, m_dir, docs, golden, Params(n_buckets=16))
+    _assert_manifest_exact(m_dir, docs, golden, Params(n_buckets=16))

@@ -1,8 +1,7 @@
 """rules_vec (Arrow/numpy batch engine) ≡ rules_np (reference), over
-the generator space, adversarial inputs, and both modes, through both
-entry points: ``denoise_batch`` (Python lists) and
-``denoise_arrow_batch`` (the record batches the fused operator runs
-on). Pure Python — no Spark session needed."""
+the generator space, adversarial inputs, and both modes, through its
+one entry point, ``denoise_arrow_batch`` (the record batches the fused
+operator runs on). Pure Python — no Spark session needed."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc
 from hocr_de_noising_spark.rules_vec import (
     code_points,
     denoise_arrow_batch,
-    denoise_batch,
     has_repeat_run,
     letter_counts,
 )
@@ -35,11 +33,18 @@ def _batch(n=80, seed=19):
     return ids, spans
 
 
+def _record_batch(ids, spans_lists):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(ids, pa.string()), pa.array(spans_lists, pa.list_(SPAN_STRUCT))],
+        names=["doc_id", "spans"],
+    )
+
+
 @pytest.mark.parametrize("mode", ["drop", "rewrite"])
 def test_vec_equals_np_on_generator_space(mode):
     ids, spans_lists = _batch()
     p = Params(mode=mode)
-    vec = denoise_batch(ids, spans_lists, p, LEX)
+    vec = denoise_arrow_batch(_record_batch(ids, spans_lists), p, LEX).column(1).to_pylist()
     ref = [denoise_doc(s, p, LEX) for s in spans_lists]
     assert vec == ref
 
@@ -47,9 +52,8 @@ def test_vec_equals_np_on_generator_space(mode):
 def test_vec_equals_np_without_dictionary():
     ids, spans_lists = _batch(n=30, seed=23)
     p = Params(use_dictionary=False)
-    assert denoise_batch(ids, spans_lists, p, None) == [
-        denoise_doc(s, p, None) for s in spans_lists
-    ]
+    vec = denoise_arrow_batch(_record_batch(ids, spans_lists), p, None).column(1).to_pylist()
+    assert vec == [denoise_doc(s, p, None) for s in spans_lists]
 
 
 def test_vec_adversarial_inputs():
@@ -74,14 +78,15 @@ def test_vec_adversarial_inputs():
         ],
     ]
     ids = [f"a{i}" for i in range(len(adversarial))]
-    vec = denoise_batch(ids, adversarial, p, LEX)
+    vec = denoise_arrow_batch(_record_batch(ids, adversarial), p, LEX).column(1).to_pylist()
     ref = [denoise_doc(s, p, LEX) for s in adversarial]
     assert vec == ref
 
 
 def test_vec_batch_of_empty_docs():
     p = Params()
-    assert denoise_batch(["a", "b"], [[], []], p, LEX) == [[], []]
+    out = denoise_arrow_batch(_record_batch(["a", "b"], [[], []]), p, LEX)
+    assert out.column(1).to_pylist() == [[], []]
 
 
 def test_alpha_count_predicate_parity():
@@ -125,15 +130,8 @@ def test_vec_equals_np_on_numeric_non_letters():
         ]
     ]
     ref = [denoise_doc(s, p, None) for s in docs]
-    assert denoise_batch(["n0"], docs, p, None) == ref
+    assert denoise_arrow_batch(_record_batch(["n0"], docs), p, None).column(1).to_pylist() == ref
     assert [s["text"].split(";")[0] for s in ref[0]] == ["x½", "abcd", "²a", "ſtraße"]
-
-
-def _record_batch(ids, spans_lists):
-    return pa.RecordBatch.from_arrays(
-        [pa.array(ids, pa.string()), pa.array(spans_lists, pa.list_(SPAN_STRUCT))],
-        names=["doc_id", "spans"],
-    )
 
 
 def _text(token, x0, wconf=90, digits=str):
