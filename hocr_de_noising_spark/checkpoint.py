@@ -14,7 +14,11 @@ resumes by skipping fully-committed groups and reprocessing at most
 one partial group. Output is laid out by bucket only (dynamic
 partition overwrite), so group membership — a function of n_groups —
 never appears on disk and resuming with a different n_groups stays
-idempotent. Per-group metrics ride the write action via df.observe.
+idempotent. Per-group metrics ride the write action via one df.observe
+on its output edge: the kernel carries each doc's bucket and input span
+count through, so docs, spans in and spans out are all summed there.
+The pending groups are planned from the manifest alone, before any
+Spark work, so a resume with nothing pending runs no Spark job.
 """
 
 from __future__ import annotations
@@ -153,10 +157,19 @@ def run_denoise_job(
     Processes n_groups bucket groups; skips groups whose buckets are all
     committed 'done' in the manifest. Returns summary metrics.
 
+    The plan of pending groups is read from the manifest before any
+    Spark work: when every group is done the job returns without
+    probing the input or collecting the lexicon, so it runs no Spark
+    job at all.
+
     Scale design (one action, one scan per group):
-    - metrics come from ``df.observe`` (CollectMetrics) nodes on the
-      input and output edges of the SAME write action — no re-read of
-      written output, no second aggregation pass over the input;
+    - ``bucket`` is hashed once, on the input side, and carried through
+      the kernel with each doc's input span count ``n_in``
+      (``denoise_fused`` passes every column but ``spans`` through);
+      one ``df.observe`` (CollectMetrics) node on the output edge of
+      the write action sums docs, spans in and spans out per bucket —
+      no re-read of written output, no second aggregation pass over
+      the input;
     - output is partitioned by ``bucket`` ONLY (no group= layer) and
       written with dynamic partition overwrite, so re-running a partial
       group — or resuming with a DIFFERENT n_groups — replaces exactly
@@ -179,6 +192,19 @@ def run_denoise_job(
     ph = params_hash(p)
     ckpt = ManifestCheckpoint(manifest_dir)
     done = ckpt.completed_buckets(run_id, ph)
+    # only each group's buckets NOT yet committed: re-running a partial
+    # group must neither recompute nor re-append manifest rows for its
+    # already-done buckets (ADVICE r2 — double-count on resume with a
+    # different n_groups). The plan reads the manifest alone, so a
+    # resume with nothing pending returns before any Spark work.
+    plan = [
+        (g, pending)
+        for g in range(n_groups)
+        if (pending := [b for b in range(g, p.n_buckets, n_groups) if b not in done])
+    ]
+    summary = {"groups_run": 0, "groups_skipped": n_groups - len(plan), "n_docs": 0}
+    if not plan:
+        return summary
 
     if "bucket" in docs.columns:
         # bucketed at rest → scan-time partition pruning; but never
@@ -205,7 +231,6 @@ def run_denoise_job(
             docs_b = docs
     else:
         docs_b = docs.withColumn("bucket", bucket_col(p))
-    summary = {"groups_run": 0, "groups_skipped": 0, "n_docs": 0}
     # ship the lexicon as a broadcast variable, not a task closure:
     # one torrent distribution per job instead of re-serializing the
     # token list into every task (VERDICT r2 item 7)
@@ -214,31 +239,27 @@ def run_denoise_job(
     tokens = [r.token for r in lexicon_df.select("token").collect()]
     lex_tokens = spark.sparkContext.broadcast(tokens)
     try:
-        for g in range(n_groups):
-            # only the group's buckets NOT yet committed: re-running a
-            # partial group must neither recompute nor re-append manifest
-            # rows for its already-done buckets (ADVICE r2 — double-count
-            # on resume with a different n_groups)
-            pending = [b for b in range(g, p.n_buckets, n_groups) if b not in done]
-            if not pending:
-                summary["groups_skipped"] += 1
-                continue
-
+        for g, pending in plan:
             # an IN list prunes at the scan (PartitionFilters) when the
-            # input is bucketed at rest
-            part = docs_b.filter(F.col("bucket").isin(pending))
-
-            in_obs = Observation()
-            observed = part.observe(
-                in_obs,
-                *_bucket_sums(pending, "docs", "1"),
-                *_bucket_sums(pending, "spans", "coalesce(size(spans), 0)"),
+            # input is bucketed at rest. The kernel carries bucket and
+            # n_in through, so all three counts are read off its output.
+            # Null spans count 0: size(null) is -1 when ANSI mode is off.
+            n_in = F.when(F.col("spans").isNull(), 0).otherwise(F.size("spans"))
+            part = (
+                docs_b.select("doc_id", "spans", "bucket")
+                .filter(F.col("bucket").isin(pending))
+                .withColumn("n_in", n_in)
             )
-            out = denoise_fused(observed.drop("bucket"), lex_tokens, p)
-
-            out_obs = Observation()
-            out = out.withColumn("bucket", bucket_col(p)).observe(
-                out_obs, *_bucket_sums(pending, "spans", "size(spans)")
+            obs = Observation()
+            out = (
+                denoise_fused(part, lex_tokens, p)
+                .observe(
+                    obs,
+                    *_bucket_sums(pending, "docs", "1"),
+                    *_bucket_sums(pending, "spans_in", "n_in"),
+                    *_bucket_sums(pending, "spans_out", "size(spans)"),
+                )
+                .drop("n_in")
             )
             (
                 out.repartition(F.col("bucket"))
@@ -258,9 +279,8 @@ def run_denoise_job(
             # distinguishes late delivery from a pruned node (r3 review).
             # A read that timed out leaves the counts unknown: commit
             # nothing for this group, so a resume recomputes it.
-            in_vals = observation_metrics(in_obs)
-            out_vals = observation_metrics(out_obs)
-            if in_vals is None or out_vals is None:
+            vals = observation_metrics(obs)
+            if vals is None:
                 raise RuntimeError(
                     f"group {g}: observed metrics never arrived; "
                     "no manifest rows committed"
@@ -268,9 +288,9 @@ def run_denoise_job(
             now = int(time.time() * 1e6)
             rows = []
             for b in pending:
-                n_docs = int(in_vals.get(f"docs_{b}", 0))
-                n_in = int(in_vals.get(f"spans_{b}", 0))
-                n_out = int(out_vals.get(f"spans_{b}", 0))
+                n_docs = int(vals.get(f"docs_{b}", 0))
+                n_in = int(vals.get(f"spans_in_{b}", 0))
+                n_out = int(vals.get(f"spans_out_{b}", 0))
                 rows.append(
                     {
                         "run_id": run_id,

@@ -22,6 +22,7 @@ import pyarrow.parquet as pq
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
 from hocr_de_noising_spark.params import DEFAULT_PARAMS
 from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc, noise_class, parse_payload, doc_flags
+from hocr_de_noising_spark.sources.catalog import DOCS_SCHEMA
 
 PAGE_W, PAGE_H = 2480, 3508
 COLS = [(200, 1150), (1330, 2280)]
@@ -31,15 +32,6 @@ NOISE_CLASSES = ["lowconf", "garbage", "repeat", "speck", "margin"]
 LIG_PATTERNS = ["ffi", "ffl", "ff", "fi", "fl", "st"]
 _LIG_FOR = {"ffi": "ﬃ", "ffl": "ﬄ", "ff": "ﬀ", "fi": "ﬁ", "fl": "ﬂ", "st": "ﬆ"}
 
-SPAN_STRUCT = pa.struct(
-    [
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("offset", pa.int32()),
-    ]
-)
-DOCS_SCHEMA = pa.schema([("doc_id", pa.string()), ("spans", pa.list_(SPAN_STRUCT))])
 FLAT_SCHEMA = pa.schema(
     [
         ("doc_id", pa.string()),

@@ -21,7 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import LIGATURES, LONG_S, Lexicon
 
 
@@ -33,19 +32,9 @@ def normalize_col(token: Column) -> Column:
     return F.replace(out, F.lit(LONG_S), F.lit("s"))
 
 
-def with_dictionary_check(
-    df: DataFrame,
-    lexicon_df: DataFrame,
-    params: Params | None = None,
-) -> DataFrame:
+def with_dictionary_check(df: DataFrame, lexicon_df: DataFrame) -> DataFrame:
     """Adds norm_token, f_dict_hit, f_dict_miss columns."""
-    p = params or Params()
     df = df.withColumn("norm_token", F.when(F.col("parse_ok"), normalize_col(F.col("token"))))
-    if not p.use_dictionary:
-        return df.withColumn("f_dict_hit", F.lit(False)).withColumn(
-            "f_dict_miss", F.lit(False)
-        )
-
     lex = F.broadcast(lexicon_df.select(F.col("token").alias("lex_token")).distinct())
     df = df.join(lex, df["norm_token"] == lex["lex_token"], "left")
     df = df.withColumn("f_exact_hit", F.col("lex_token").isNotNull()).drop("lex_token")

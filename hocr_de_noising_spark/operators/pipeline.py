@@ -16,7 +16,9 @@ of the fused path.
 ``mapInArrow`` pass running the vectorized batch rule
 (rules_vec.denoise_arrow_batch) — zero shuffles, zero per-span Python
 objects at the boundary (spans are read flat off the Arrow list
-buffers; r8). Batch size bounded via
+buffers; r8). It replaces ``spans`` and carries every other input
+column through unchanged, so the batch job carries its ``bucket`` and
+input span count past the kernel. Batch size bounded via
 spark.sql.execution.arrow.maxRecordsPerBatch / maxBytesPerBatch so one
 giant document cannot blow a batch.
 
@@ -45,7 +47,6 @@ from hocr_de_noising_spark.operators.lexicon import with_dictionary_check
 from hocr_de_noising_spark.operators.parse import with_parsed_fields
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.pyworker import lazy_zip_invalidation, lexicon
-from hocr_de_noising_spark.sources.catalog import DOCS_DDL
 
 
 def denoise_exploded(
@@ -72,7 +73,7 @@ def denoise_exploded(
     # exchange (ArrowEvalPython does not propagate partitioning), and
     # (b) token/norm_token/wconf are pruned before the shuffle —
     # only the payload, geometry ints and boolean flags cross the wire
-    ex = with_dictionary_check(ex, lexicon_df, params=p)
+    ex = with_dictionary_check(ex, lexicon_df)
     ex = with_text_flags(ex, params=p)
     ex = ex.select(
         "doc_id", "pos", "kind", "text", "media_ref", "parse_ok",
@@ -102,6 +103,12 @@ def denoise_fused(
     per Arrow batch). Its oracle is rules_np, compared directly in
     tests/test_vectorized.py.
 
+    It acts like ``withColumn("spans", ...)``: ``spans`` is replaced,
+    every other column passes through unchanged, and the output schema
+    is ``docs.schema``. Spark cannot see which columns an opaque map
+    touches, so every column of ``docs`` is shipped through Python:
+    callers project what they want carried before calling.
+
     ``lexicon_tokens`` may be a plain list (broadcast here, once per
     plan) or a pre-made ``sparkContext.broadcast`` shared across calls —
     either way tasks deserialize the token list from the broadcast
@@ -120,14 +127,12 @@ def denoise_fused(
     # rebuilt from flat survivor columns — no per-span Python dicts in
     # either direction (a mapInPandas form built ~n_spans dicts on
     # ingest AND emit per batch, the dominant Python cost at 200k docs).
-    # Explicit select: Spark cannot see which columns an opaque map
-    # touches, so project before it.
     def run_arrow(batches):
         lazy_zip_invalidation()
         from hocr_de_noising_spark.rules_vec import denoise_arrow_batch
 
-        lex = lexicon(bc.value) if p.use_dictionary else None
+        lex = lexicon(bc.value)
         for rb in batches:
             yield denoise_arrow_batch(rb, p, lex)
 
-    return docs.select("doc_id", "spans").mapInArrow(run_arrow, schema=DOCS_DDL)
+    return docs.mapInArrow(run_arrow, schema=docs.schema)

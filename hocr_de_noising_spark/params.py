@@ -45,10 +45,6 @@ class Params:
     # of a page never false-positive as margin noise.
     envelope_tol_px: int = 60
 
-    # X7 — dictionary check: a token within edit distance 1 of a
-    # lexicon word is a hit.
-    use_dictionary: bool = True
-
     # X10 — rewrite mode: "drop" removes noise spans; "rewrite" keeps the
     # normalized token for dictionary-recoverable words, drops the rest.
     mode: str = "drop"

@@ -61,21 +61,6 @@ def normalize_token(token: str) -> str:
     return token
 
 
-def em_alternates(token: str) -> list[str]:
-    """Early-modern u/v, i/j, vv→w dictionary-lookup alternates (X6).
-
-    Not used by the frozen v1 noise rule (fixtures don't plant these),
-    but part of the public normalization surface.
-    """
-    alts = {token}
-    alts.add(token.replace("vv", "w"))
-    alts.add(token.replace("v", "u"))
-    alts.add(token.replace("u", "v"))
-    alts.add(token.replace("j", "i"))
-    alts.add(token.replace("i", "j"))
-    return sorted(alts)
-
-
 def parse_payload(text: str) -> dict | None:
     """Parse the flat word-record serialization (FIXTURES.md §2).
 
@@ -226,7 +211,7 @@ def doc_flags(
             or p["y0"] < p5_y0 - tol
             or p["y1"] > p95_y1 + tol
         )
-        if lexicon is not None and params.use_dictionary:
+        if lexicon is not None:
             dict_hit = lexicon.within_one(norm)
             dict_miss = not dict_hit
         else:

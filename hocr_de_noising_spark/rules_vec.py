@@ -40,15 +40,6 @@ from hocr_de_noising_spark.rules_np import (
 
 _PAYLOAD_RE2 = _PAYLOAD_RE.pattern.replace(r"\d", "[0-9]")
 
-_OUT_SPAN = pa.struct(
-    [
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("offset", pa.int32()),
-    ]
-)
-
 
 def code_points(strings: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """The code points of every row of a string array, concatenated,
@@ -105,17 +96,21 @@ def has_repeat_run(cps: np.ndarray, offs: np.ndarray, k: int) -> np.ndarray:
 
 
 def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
-    """De-noise one Arrow record batch of (doc_id, spans) rows and
-    return the output record batch — the zero-dict boundary the fused
-    operator runs per ``mapInArrow`` batch.
+    """De-noise the ``spans`` column of one Arrow record batch and return
+    the batch with that column replaced — the zero-dict boundary the
+    fused operator runs per ``mapInArrow`` batch. Every other column
+    passes through unchanged, one row per input row, and the output
+    spans keep the input's span type, so the output schema is the input
+    schema.
 
     The span columns are read FLAT off the list array's offsets/values
     buffers and the output list array is rebuilt from the flat survivor
     columns + a bincount of per-doc lengths: no per-span Python object
     in either direction."""
-    doc_arr = rb.column(rb.schema.get_field_index("doc_id"))
-    spans_arr = rb.column(rb.schema.get_field_index("spans"))
-    n_docs = len(doc_arr)
+    i_spans = rb.schema.get_field_index("spans")
+    spans_arr = rb.column(i_spans)
+    span_type = spans_arr.type.value_type
+    n_docs = rb.num_rows
     offs = spans_arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     # values is the UNSLICED child array: positions offs[0]..offs[-1]
     # cover this batch's lists contiguously (offsets are monotone)
@@ -127,11 +122,9 @@ def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     if total == 0:
         spans_out = pa.ListArray.from_arrays(
             pa.array(np.zeros(n_docs + 1, dtype=np.int32), type=pa.int32()),
-            pa.array([], type=_OUT_SPAN),
+            pa.array([], type=span_type),
         )
-        return pa.RecordBatch.from_arrays(
-            [doc_arr, spans_out], names=["doc_id", "spans"]
-        )
+        return rb.set_column(i_spans, "spans", spans_out)
 
     didx = np.repeat(np.arange(n_docs, dtype=np.int64), lengths)
     pos = np.arange(total, dtype=np.int64) - offs[:-1][didx]
@@ -151,14 +144,12 @@ def denoise_arrow_batch(rb, params: Params, lexicon: Lexicon | None):
     within = np.arange(len(out_didx), dtype=np.int64) - out_offs[:-1][out_didx]
     struct_out = pa.StructArray.from_arrays(
         [kinds, texts, refs, pa.array(within.astype(np.int32), type=pa.int32())],
-        fields=list(_OUT_SPAN),
+        fields=list(span_type),
     )
     spans_out = pa.ListArray.from_arrays(
         pa.array(out_offs.astype(np.int32), type=pa.int32()), struct_out
     )
-    return pa.RecordBatch.from_arrays(
-        [doc_arr, spans_out], names=["doc_id", "spans"]
-    )
+    return rb.set_column(i_spans, "spans", spans_out)
 
 
 def _page_stat(didx: np.ndarray, per_doc: pd.Series) -> np.ndarray:
@@ -266,7 +257,7 @@ def _denoise_flat(
     )
 
     # --- dictionary: normalize and look up once per distinct token ---
-    if lexicon is not None and p.use_dictionary:
+    if lexicon is not None:
         enc = pc.dictionary_encode(token)
         norms = [normalize_token(t) for t in enc.dictionary.to_pylist()]
         # a null token (parse failure) takes the trailing miss entry

@@ -11,14 +11,22 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
-# the span-document schema: the corpus tables, the stream source and
-# denoise_fused's output all carry it
-DOCS_DDL = (
-    "doc_id string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+# the span-document schema, written once in Arrow: the corpus tables,
+# the fixtures and the stream source all carry it
+SPAN_STRUCT = pa.struct(
+    [
+        ("kind", pa.string()),
+        ("text", pa.string()),
+        ("media_ref", pa.string()),
+        ("offset", pa.int32()),
+    ]
 )
+DOCS_SCHEMA = pa.schema([("doc_id", pa.string()), ("spans", pa.list_(SPAN_STRUCT))])
+DOCS_STRUCT = from_arrow_schema(DOCS_SCHEMA)
 
 
 class Catalog:
@@ -39,7 +47,7 @@ class Catalog:
         production path)."""
         if self.kind == "iceberg":
             return spark.read.table(target)
-        return spark.read.schema(DOCS_DDL).parquet(target)
+        return spark.read.schema(DOCS_STRUCT).parquet(target)
 
     def lineage(self, spark: SparkSession, target: str) -> str:
         """Input-lineage string for the manifest: Iceberg snapshot id in

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hocr_de_noising_spark.operators.pipeline import denoise_fused
 from hocr_de_noising_spark.params import Params
-from hocr_de_noising_spark.sources.catalog import DOCS_DDL
+from hocr_de_noising_spark.sources.catalog import DOCS_STRUCT
 
 
 def make_denoise_sink(
@@ -64,7 +64,7 @@ def incremental_denoise_stream(
     stream ends. Returns the finished StreamingQuery.
     """
     p = params or Params()
-    stream = spark.readStream.schema(DOCS_DDL).parquet(input_dir)
+    stream = spark.readStream.schema(DOCS_STRUCT).parquet(input_dir)
     bc = spark.sparkContext.broadcast(list(lexicon_tokens))
     try:
         q = (

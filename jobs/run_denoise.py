@@ -23,36 +23,6 @@ from hocr_de_noising_spark.session import get_spark  # noqa: E402
 from hocr_de_noising_spark.sources import Catalog  # noqa: E402
 
 
-def caption_stage(spark, cleaned_dir: str, captions_dir: str) -> dict:
-    """Interleaved-curation tail stage: mine media-caption pairs and
-    the per-doc multimodal keep-gate from the CLEANED spans output.
-    Runs AFTER denoising by design — noise spans must not leak into
-    captions, and the gate's text counts must reflect surviving text.
-    One pass over the cleaned corpus: map-side explode + a single
-    bounded-frame window (see queries/interleaved.py scale notes)."""
-    from pyspark.sql import functions as F  # noqa: E402
-
-    from hocr_de_noising_spark.queries.interleaved import (  # noqa: E402
-        caption_pairs,
-        media_text_stats,
-    )
-
-    cleaned = spark.read.parquet(cleaned_dir)
-    if "bucket" in cleaned.columns:
-        cleaned = cleaned.drop("bucket")
-    caps_path = os.path.join(captions_dir, "captions.parquet")
-    stats_path = os.path.join(captions_dir, "media_stats.parquet")
-    caption_pairs(cleaned).write.mode("overwrite").parquet(caps_path)
-    media_text_stats(cleaned).write.mode("overwrite").parquet(stats_path)
-    caps_out = spark.read.parquet(caps_path)
-    stats_out = spark.read.parquet(stats_path)
-    return {
-        "captions": caps_out.count(),
-        "paired": caps_out.filter(F.col("caption_src") != "none").count(),
-        "multimodal_keep": stats_out.filter("multimodal_keep").count(),
-    }
-
-
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
@@ -67,16 +37,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--mode", choices=("drop", "rewrite"), default=DEFAULT_PARAMS.mode)
     ap.add_argument("--catalog", choices=("parquet", "iceberg"), default="parquet")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument(
-        "--captions",
-        default=None,
-        metavar="DIR",
-        help="after denoising, also mine media-caption pairs and the"
-        " per-doc multimodal keep-gate from the CLEANED spans (OBELICS"
-        "-style interleaved curation) into DIR/{captions,media_stats}"
-        ".parquet — one extra pass over the (smaller) cleaned output,"
-        " map-side + one bounded-frame window",
-    )
     args = ap.parse_args(argv)
 
     params = Params(
@@ -107,12 +67,6 @@ def main(argv: list[str] | None = None) -> None:
         f"groups_run={summary['groups_run']} groups_skipped={summary['groups_skipped']} "
         f"n_docs={summary['n_docs']}"
     )
-    if args.captions:
-        cs = caption_stage(spark, args.output, args.captions)
-        print(
-            f"captions={cs['captions']} paired={cs['paired']} "
-            f"multimodal_keep={cs['multimodal_keep']}"
-        )
     spark.stop()
 
 

@@ -13,7 +13,7 @@ from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
 from hocr_de_noising_spark.fixtures.spans import gen_doc
 from hocr_de_noising_spark.operators.pipeline import denoise_exploded, denoise_fused
 from hocr_de_noising_spark.params import Params
-from hocr_de_noising_spark.sources.catalog import DOCS_DDL
+from hocr_de_noising_spark.sources.catalog import DOCS_STRUCT
 
 LEX = gen_lexicon(800, seed=101)
 LEX_TOKENS = [t for t, _ in LEX]
@@ -41,7 +41,7 @@ def _corpus(seed, n=120, shuffle_p=0.6, noise_p=0.4):
 @pytest.mark.parametrize("seed", [7, 77])
 @pytest.mark.parametrize("mode", ["drop", "rewrite"])
 def test_variants_agree_on_fresh_seeds(spark, seed, mode):
-    docs = spark.createDataFrame(_corpus(seed), DOCS_DDL)
+    docs = spark.createDataFrame(_corpus(seed), DOCS_STRUCT)
     lexicon = spark.createDataFrame(LEX, "token string, freq int")
     p = Params(mode=mode)
     a = denoise_exploded(docs, lexicon, params=p)

@@ -13,7 +13,7 @@ from hocr_de_noising_spark.queries.interleaved import (
     caption_pairs,
     media_text_stats,
 )
-from hocr_de_noising_spark.sources.catalog import DOCS_DDL
+from hocr_de_noising_spark.sources.catalog import DOCS_STRUCT
 
 
 def _t(text, off):
@@ -46,7 +46,7 @@ def edge_docs(spark):
                 + [_m(f"pad{i}", i) for i in range(1, CAPTION_WINDOW + 2)]
                 + [_m("m7", CAPTION_WINDOW + 2)]),
     ]
-    return spark.createDataFrame(rows, DOCS_DDL)
+    return spark.createDataFrame(rows, DOCS_STRUCT)
 
 
 def test_caption_edges(spark, edge_docs):
@@ -76,7 +76,7 @@ def test_caption_edges(spark, edge_docs):
 def test_caption_k_bound(spark):
     # more than CAPTION_K text spans available -> exactly K stitched
     doc = [("k", [_m("mk", 0)] + [_t(f"t{i}", i + 1) for i in range(9)])]
-    df = spark.createDataFrame(doc, DOCS_DDL)
+    df = spark.createDataFrame(doc, DOCS_STRUCT)
     row = caption_pairs(df).collect()[0]
     assert row["caption"] == " ".join(f"t{i}" for i in range(CAPTION_K))
 
@@ -93,13 +93,13 @@ def test_media_text_stats_gate(spark, edge_docs):
         ("ok", [_t(f"w{i}", i) for i in range(8)] + [_m("mm", 99)]),
     ]
     row = media_text_stats(
-        spark.createDataFrame(keep, DOCS_DDL)
+        spark.createDataFrame(keep, DOCS_STRUCT)
     ).collect()[0]
     assert row["multimodal_keep"]
 
 
 def test_media_text_stats_covers_empty_spans_doc(spark):
-    df = spark.createDataFrame([("empty", [])], DOCS_DDL)
+    df = spark.createDataFrame([("empty", [])], DOCS_STRUCT)
     row = media_text_stats(df).collect()[0]
     assert (row["n_text"], row["n_media"], row["n_chars"]) == (0, 0, 0)
     assert not row["multimodal_keep"]
@@ -133,15 +133,10 @@ def test_caption_pairs_on_fixture_corpus(spark, unit_dir):
     assert sample["caption"] == " ".join(texts)
 
 
-def test_caption_stage_composes_on_cleaned_output(spark, unit_dir, tmp_path):
-    """Denoise -> caption_stage composition (the run_denoise --captions
-    path): noise spans must not leak into captions, so the gate must be
+def test_captions_compose_on_cleaned_output(spark, unit_dir, tmp_path):
+    """Denoise -> caption mining on the job's cleaned output: noise
+    spans must not leak into captions, so the gate must be
     at-most-as-permissive on cleaned spans as on raw."""
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_denoise import caption_stage
-
     from hocr_de_noising_spark.checkpoint import run_denoise_job
     from hocr_de_noising_spark.params import Params
 
@@ -152,15 +147,15 @@ def test_caption_stage_composes_on_cleaned_output(spark, unit_dir, tmp_path):
         spark, docs, lex, out, str(tmp_path / "m"),
         params=Params(n_buckets=8), run_id="cap", n_groups=2,
     )
-    cs = caption_stage(spark, out, str(tmp_path / "caps"))
+    cleaned = spark.read.parquet(out).drop("bucket")
+    caps = caption_pairs(cleaned)
     n_media_raw = docs.select(F.explode("spans").alias("s")).filter(
         F.col("s.media_ref").isNotNull()
     ).count()
     # every media span survives denoising and gets a caption row
-    assert cs["captions"] == n_media_raw > 0
+    assert caps.count() == n_media_raw > 0
     raw_keep = media_text_stats(docs).filter("multimodal_keep").count()
-    assert cs["multimodal_keep"] <= raw_keep
-    caps = spark.read.parquet(str(tmp_path / "caps" / "captions.parquet"))
+    assert media_text_stats(cleaned).filter("multimodal_keep").count() <= raw_keep
     assert caps.columns == [
         "doc_id", "media_ref", "media_offset", "kind",
         "caption", "caption_src",

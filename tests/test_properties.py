@@ -15,7 +15,6 @@ from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import (
     Lexicon,
     denoise_doc,
-    em_alternates,
     normalize_token,
 )
 
@@ -101,11 +100,6 @@ def test_normalize_inverts_early_modern_forms():
         if "s" in em[:-1]:
             em = em[:-1].replace("s", "ſ") + em[-1]
         assert normalize_token(em) == tok
-
-
-def test_em_alternates_contains_identity():
-    for tok in LEX_TOKENS[:50]:
-        assert tok in em_alternates(tok)
 
 
 def _brute_lev_le1(a: str, b: str) -> bool:

@@ -181,13 +181,13 @@ def test_observation_timeout_commits_no_manifest_rows(spark, loaded, tmp_path, m
     real = checkpoint.observation_metrics
     reads = []
 
-    def times_out_on_group_1_output(o, *args, **kwargs):
-        # the fused job reads each group's input then its output
-        # observation: the 4th read is group 1's output side
+    def times_out_on_group_1(o, *args, **kwargs):
+        # the job reads one observation per group, on its output edge:
+        # the 2nd read is group 1's
         reads.append(o)
-        return None if len(reads) == 4 else real(o, *args, **kwargs)
+        return None if len(reads) == 2 else real(o, *args, **kwargs)
 
-    monkeypatch.setattr(checkpoint, "observation_metrics", times_out_on_group_1_output)
+    monkeypatch.setattr(checkpoint, "observation_metrics", times_out_on_group_1)
     with pytest.raises(RuntimeError, match="group 1: observed metrics never arrived"):
         run_denoise_job(
             spark, docs, lexicon, out_dir, m_dir, params=p, run_id="r1", n_groups=4
@@ -223,20 +223,34 @@ def test_params_change_invalidates_resume(spark, loaded, tmp_path):
 def test_sparse_input_empty_groups_do_not_crash(spark, loaded, tmp_path):
     """ADVICE r1: a bucket group with zero docs used to crash the
     metrics read-back (UNABLE_TO_INFER_SCHEMA). With observe-based
-    metrics the group commits zero rows instead."""
+    metrics the group commits zero rows instead. A doc with null spans
+    and one with empty spans each count as a doc with 0 spans in, with
+    ANSI mode on or off (``size(null)`` is NULL with it, -1 without)."""
     docs, lexicon, _ = loaded
-    one = docs.limit(1)
-    p = Params(n_buckets=16)
-    summary = run_denoise_job(
-        spark, one, lexicon, str(tmp_path / "out"), str(tmp_path / "m"),
-        params=p, run_id="r1", n_groups=4,
+    first = docs.limit(1)
+    n_spans = first.select(F.size("spans")).first()[0]
+    edge = spark.createDataFrame(
+        [("null-spans", None), ("empty-spans", [])], docs.schema
     )
-    assert summary["groups_run"] == 4 and summary["n_docs"] == 1
-    m = ManifestCheckpoint(str(tmp_path / "m")).rows()
-    assert len(m) == 16
-    assert sum(r["n_docs"] for r in m) == 1
-    assert all(r["n_spans_out"] <= r["n_spans_in"] for r in m)
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 1
+    sparse = first.unionByName(edge)
+    p = Params(n_buckets=16)
+    for ansi in ("true", "false"):
+        out_dir, m_dir = str(tmp_path / f"out-{ansi}"), str(tmp_path / f"m-{ansi}")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            summary = run_denoise_job(
+                spark, sparse, lexicon, out_dir, m_dir,
+                params=p, run_id="r1", n_groups=4,
+            )
+        finally:
+            spark.conf.unset("spark.sql.ansi.enabled")
+        assert summary["groups_run"] == 4 and summary["n_docs"] == 3
+        m = ManifestCheckpoint(m_dir).rows()
+        assert len(m) == 16
+        assert sum(r["n_docs"] for r in m) == 3
+        assert sum(r["n_spans_in"] for r in m) == n_spans, ansi
+        assert all(r["n_spans_out"] <= r["n_spans_in"] for r in m)
+        assert spark.read.parquet(out_dir).count() == 3
 
 
 def test_regroup_resume_is_idempotent(spark, loaded, tmp_path):
@@ -247,10 +261,17 @@ def test_regroup_resume_is_idempotent(spark, loaded, tmp_path):
     out_dir, m_dir = str(tmp_path / "out"), str(tmp_path / "m")
     run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
                     run_id="r1", n_groups=4)
-    # same lineage, different grouping: all buckets done → all skipped
-    s2 = run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
-                         run_id="r1", n_groups=2)
+    # same lineage, different grouping: all buckets done → all skipped,
+    # decided from the manifest alone, so no Spark job runs
+    sc = spark.sparkContext
+    sc.setJobGroup("regroup-noop", "all groups done")
+    try:
+        s2 = run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,
+                             run_id="r1", n_groups=2)
+    finally:
+        sc.setJobGroup(None, None)
     assert s2["groups_skipped"] == 2 and s2["groups_run"] == 0
+    assert list(sc.statusTracker().getJobIdsForGroup("regroup-noop")) == []
     # force re-run under the new grouping (fresh run id): buckets are
     # dynamically overwritten in place, never duplicated
     run_denoise_job(spark, docs, lexicon, out_dir, m_dir, params=p,

@@ -10,7 +10,7 @@ import pyarrow as pa
 import pytest
 
 from hocr_de_noising_spark.fixtures.lexicon import gen_lexicon
-from hocr_de_noising_spark.fixtures.spans import SPAN_STRUCT, gen_doc
+from hocr_de_noising_spark.fixtures.spans import gen_doc
 from hocr_de_noising_spark.params import Params
 from hocr_de_noising_spark.rules_np import Lexicon, denoise_doc
 from hocr_de_noising_spark.rules_vec import (
@@ -19,6 +19,7 @@ from hocr_de_noising_spark.rules_vec import (
     has_repeat_run,
     letter_counts,
 )
+from hocr_de_noising_spark.sources.catalog import SPAN_STRUCT
 
 LEX_TOKENS = [t for t, _ in gen_lexicon(1000, seed=7)]
 LEX = Lexicon(LEX_TOKENS)
@@ -51,7 +52,7 @@ def test_vec_equals_np_on_generator_space(mode):
 
 def test_vec_equals_np_without_dictionary():
     ids, spans_lists = _batch(n=30, seed=23)
-    p = Params(use_dictionary=False)
+    p = Params()
     vec = denoise_arrow_batch(_record_batch(ids, spans_lists), p, None).column(1).to_pylist()
     assert vec == [denoise_doc(s, p, None) for s in spans_lists]
 
@@ -116,7 +117,7 @@ def test_vec_equals_np_on_numeric_non_letters():
     """Tokens built from characters that are numeric but not letters
     (½, Ⅻ, ²) are mostly non-alphabetic by str.isalpha, so rules_np
     drops them; the batch engine must drop them too."""
-    p = Params(use_dictionary=False)
+    p = Params()
     tokens = ["½½x", "Ⅻ²a", "x½", "ⅫⅫⅫab", "abcd", "²a", "ſtraße", "Ⅻ"]
     docs = [
         [
@@ -180,16 +181,20 @@ def test_arrow_batch_equals_np_on_sliced_adversarial_batch(mode):
     """The production entry point, on a record batch sliced out of a
     larger one (list offsets that do not start at 0) that mixes
     generator docs with empty docs, null text, null kind, and payloads
-    with Arabic-Indic digits or a trailing newline."""
+    with Arabic-Indic digits or a trailing newline. A column beside
+    ``spans`` (the job's ``bucket``) comes back unchanged."""
     ids, gen_spans = _batch(n=30, seed=31)
     adversarial = _arrow_adversarial_docs()
     spans_lists = gen_spans[:10] + adversarial + gen_spans[10:]
     ids = ids[:10] + [f"a{i}" for i in range(len(adversarial))] + ids[10:]
-    rb = _record_batch(ids, spans_lists).slice(4, 25)
+    full = _record_batch(ids, spans_lists)
+    bucket = pa.array(np.arange(len(ids)) % 16, pa.int32())
+    rb = full.append_column("bucket", bucket).slice(4, 25)
     assert rb.column(1).offsets[0].as_py() > 0
     p = Params(mode=mode)
     out = denoise_arrow_batch(rb, p, LEX)
     assert out.column(0).to_pylist() == ids[4:29]
+    assert out.column(2).equals(rb.column(2))
     ref = [denoise_doc(s, p, LEX) for s in spans_lists[4:29]]
     assert out.column(1).to_pylist() == ref
 
